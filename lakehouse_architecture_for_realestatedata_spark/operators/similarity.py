@@ -22,6 +22,7 @@ import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from lakehouse_architecture_for_realestatedata_spark.functions.vectors import cosine_similarity, dot
 
@@ -637,7 +638,12 @@ def ivf_sync_changes(
     # sync pays one write-job latency instead of two (§2.6). Crash
     # safety is unchanged: whichever subset lands, the retry's higher
     # generation re-tombstones and re-appends (the crash-idempotence
-    # argument above covers partial appends in either order).
+    # argument above covers partial appends in either order). The
+    # window is visible, though: a reader between a crash and the retry
+    # can see a stale assignment as live (new rows landed without their
+    # tombstones: an updated key is live in its old and its new cell, a
+    # deleted key stays live), or miss an updated key (tombstones landed
+    # without the new rows). The retry closes both.
     from concurrent.futures import ThreadPoolExecutor
 
     def _write_tombstones() -> None:
@@ -807,7 +813,8 @@ def assign_cells_frozen_quantized(
     the division/sqrt tree is the identical IEEE expression, and a
     first-max argmax over cells sorted ascending IS the
     max(struct(sim, -cell)) tie rule. Requires integer ids and cells
-    (the family contract — see ``knn_quantized_blas``).
+    (the family contract — see ``knn_quantized_blas``); null or
+    non-integer ids raise ``ValueError``, like malformed vectors do.
     The shared first stage of ``ivf_knn_frozen_quantized`` and
     ``semantic_dedup_frozen``."""
     import numpy as np
@@ -820,9 +827,20 @@ def assign_cells_frozen_quantized(
     )
     dim = qc.shape[1]
     out_schema = f"{id_col} long, __qv array<bigint>, __qn long, cell long"
+    id_type = corpus.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise ValueError(
+            f"corpus ids {id_col!r} are {id_type.simpleString()}, not integers; "
+            "use knn_quantized for other id types"
+        )
 
     def _assign(batches):
         for batch in batches:
+            if batch.column(0).null_count:
+                raise ValueError(
+                    f"corpus ids {id_col!r} contain nulls "
+                    f"({batch.column(0).null_count} in batch); drop or key them first"
+                )
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             if len(ids) == 0:
                 continue

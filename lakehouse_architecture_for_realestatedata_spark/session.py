@@ -44,8 +44,8 @@ _DEFAULT_CONF: dict[str, str] = {
     # Write timestamps as TIMESTAMP_MICROS instead of the legacy INT96
     # default (r14 opt, guide §6): INT96 chunks carry NO parquet statistics
     # — no row-group pruning for timestamp predicates, no footer-derived
-    # zonemaps (ParquetTable._dir_stats) or Delta per-file stats
-    # (_footer_stats_json) on ts columns. MICROS is what delta-spark and
+    # zonemaps or Delta per-file stats (sources/skipping.py's
+    # fold_footers) on ts columns. MICROS is what delta-spark and
     # every modern engine (DuckDB included) writes and reads; the stored
     # values are identical instants, only the physical encoding changes.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
@@ -79,10 +79,10 @@ _DEFAULT_CONF: dict[str, str] = {
     # committers use. v2's OTHER failure mode — an uncommitted zombie
     # attempt's files left under _temporary/ alongside the committed
     # copy — is handled where files are ingested:
-    # delta_lite._is_committed_output path-filters the walk before any
-    # add action is minted (committed attempts share filenames, so
-    # renames collapse them; a part-number heuristic would drop
-    # legitimate -c000/-c001 multi-file task outputs).
+    # skipping.is_committed_output path-filters both formats' footer
+    # walks before any stats or add action is minted (committed attempts
+    # share filenames, so renames collapse them; a part-number heuristic
+    # would drop legitimate -c000/-c001 multi-file task outputs).
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 

@@ -103,6 +103,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
+from lakehouse_architecture_for_realestatedata_spark.sources import skipping
+
 #: Highest reader protocol this module implements (v3 only with the
 #: supported readerFeatures below; anything else is refused, per spec
 #: intent — feature flags exist precisely so old readers refuse).
@@ -539,7 +541,7 @@ def _json_stat(v):
     protocol stores in ``add.stats`` (None = not representable → the
     column's stats are omitted, which readers treat as 'no pruning')."""
     if isinstance(v, bool):
-        return None  # min/max of a flag prunes nothing (tables.py rule)
+        return None  # min/max of a flag prunes nothing (skipping.coerce)
     if isinstance(v, float):
         # NaN/Infinity would serialize as non-standard JSON tokens that
         # strict parsers (delta-spark's Jackson) reject wholesale, and NaN
@@ -556,9 +558,7 @@ def _json_stat(v):
             return v.decode("utf-8")
         except UnicodeDecodeError:
             return None
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is not None:  # normalize: naive-UTC, comparable cross-side
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    if isinstance(v, datetime.datetime):  # naive UTC (skipping.fold_footers)
         return v.isoformat(sep=" ")
     if isinstance(v, datetime.date):
         return v.isoformat()
@@ -567,58 +567,30 @@ def _json_stat(v):
 
 def _footer_stats_json(md) -> str | None:
     """Delta per-file ``stats`` (numRecords / minValues / maxValues /
-    nullCount) computed from the parquet FOOTER of a just-written file —
-    metadata-scale, no data re-read (the footer is already open for the
-    zero-row check). Top-level leaf columns only (nested stats prune
-    nothing in this reader). Bounds stay conservative even when parquet
-    truncated long binary stats: parquet-mr adjusts a truncated max
-    upward, so [min, max] remains a valid cover — exactly what skipping
-    needs. A column whose chunks lack stats (and are not provably
-    all-null) is omitted, per protocol (stats are optional per column)."""
+    nullCount) of a just-written file: the shared footer fold
+    (``skipping.fold_footers``, metadata-scale, no data re-read) converted
+    to the log's JSON scalars. A column whose bounds are unreadable or not
+    JSON-representable has them omitted, per protocol (stats are optional
+    per column)."""
+    folded = skipping.fold_footers([md])
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-    bad_minmax: set[str] = set()
-    bad_null: set[str] = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:
-                continue  # nested leaf
-            st = col.statistics
-            nc = st.null_count if st is not None else None
-            if nc is None:
-                bad_null.add(name)
-            else:
-                nulls[name] = nulls.get(name, 0) + nc
-            if st is not None and st.has_min_max:
-                lo, hi = _json_stat(st.min), _json_stat(st.max)
-                if lo is None or hi is None:
-                    bad_minmax.add(name)
-                else:
-                    mins[name] = lo if name not in mins else min(mins[name], lo)
-                    maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-            elif not (nc is not None and nc == g.num_rows):
-                # no min/max and not provably an all-null chunk: the file's
-                # true range is unknowable — drop the column's bounds
-                bad_minmax.add(name)
-    out = {
-        "numRecords": md.num_rows,
-        "minValues": {c: v for c, v in mins.items() if c not in bad_minmax},
-        "maxValues": {c: v for c, v in maxs.items() if c not in bad_minmax},
-        "nullCount": {c: n for c, n in nulls.items() if c not in bad_null},
-    }
-    if not (out["minValues"] or out["nullCount"]):
+    for c, s in folded.items():
+        lo, hi = _json_stat(s.lo), _json_stat(s.hi)
+        if s.bounded and lo is not None and hi is not None:
+            mins[c], maxs[c] = lo, hi
+    nulls = {c: s.nulls for c, s in folded.items() if s.nulls is not None}
+    if not (mins or nulls):
         return None
+    out = {"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs,
+           "nullCount": nulls}
     return json.dumps(out, separators=(",", ":"))
 
 
 def _file_zonemap(add: dict) -> dict:
     """``{physical col: [min, max]}`` from an add action's ``stats`` JSON —
     the per-file zonemap. All-null columns (nullCount == numRecords) map to
-    ``[None, None]`` (tables.py's 'no comparison ever matches' marker).
+    ``[None, None]`` (``sources/skipping.py``'s all-NULL marker).
     Absent/foreign/nested stats simply don't prune."""
     raw = add.get("stats")
     if not raw:
@@ -642,33 +614,31 @@ def _file_zonemap(add: dict) -> dict:
     return out
 
 
-def _file_may_match(
-    add: dict, conds, l2p: dict[str, str], phys_parts: list[str]
-) -> bool:
-    """Conservative per-file test for the AND of ``(col, op, value)``
-    conditions: False only when the add action's partitionValues or stats
-    PROVE no row can satisfy them. Reuses the engine's zonemap comparator
-    (``ParquetTable._dir_may_match``) so delta skipping and manifest
-    skipping share one correctness surface."""
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
-    zm = None
-    pv = add.get("partitionValues") or {}
-    for col, op, value in conds:
-        pc = l2p.get(col, col)
-        if pc in phys_parts:
-            if pc not in pv:
-                continue  # foreign log w/o the value: cannot prune
-            stats = {pc: [pv[pc], pv[pc]]}
-        else:
-            if zm is None:
-                zm = _file_zonemap(add)
-            stats = zm
-        if not ParquetTable._dir_may_match(stats, pc, op, value):
-            return False
-    return True
+def _file_zonemaps(snap: _Snapshot, cols):
+    """``(path, zonemap)`` of every active file over the LOGICAL ``cols``:
+    partition columns from ``partitionValues`` (``[v, v]``), the rest from
+    the add action's ``stats``. A column with neither is absent, so it
+    never prunes (``skipping.may_match``, shared with ``ParquetTable``)."""
+    l2p = {
+        lf.name: pf.name
+        for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
+    }
+    phys_parts = snap.physical_partition_columns
+    for p, add in snap.files.items():
+        pv = add.get("partitionValues") or {}
+        stats = None
+        out = {}
+        for col in cols:
+            pc = l2p.get(col, col)
+            if pc in phys_parts:
+                if pc in pv:  # foreign log w/o the value: cannot prune
+                    out[col] = [pv[pc], pv[pc]]
+                continue
+            if stats is None:
+                stats = _file_zonemap(add)
+            if pc in stats:
+                out[col] = stats[pc]
+        yield p, out
 
 
 def _apply_action(snap: dict, action: dict, from_checkpoint: bool = False) -> None:
@@ -1183,13 +1153,13 @@ def delta_read(
 
     ``where`` (optional) is a list of ``(col, op, value)`` conditions —
     ``op`` in ``= < <= > >= between`` (between takes a ``(lo, hi)``
-    value), ANDed — in LOGICAL column names, the ``read_where`` contract
-    from ``sources/tables.py``. Files whose add-action ``stats``
+    value), ANDed — in LOGICAL column names, the condition grammar of
+    ``sources/skipping.py``. Files whose add-action ``stats``
     (min/max/nullCount, written by this module and by delta-spark) or
-    ``partitionValues`` PROVE the conjunction empty are dropped before
-    Spark ever lists them — Delta data skipping, the reason a 100 TB
-    table's log carries per-file stats. The same conditions are applied
-    as a real filter, so the result is identical to
+    ``partitionValues`` PROVE the conjunction empty (``skipping.may_match``)
+    are dropped before Spark ever lists them — Delta data skipping, the
+    reason a 100 TB table's log carries per-file stats. The same
+    conditions are applied as a real filter, so the result is identical to
     ``delta_read(...).filter(...)``; files without stats simply don't
     prune.
 
@@ -1227,11 +1197,7 @@ def delta_read(
         else _scan_files(spark, path, snap, active)
     )
     if where:
-        from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-            ParquetTable,
-        )
-
-        df = df.filter(ParquetTable._conds_filter(where))
+        df = df.filter(skipping.conds_filter(where))
     return df
 
 
@@ -1252,17 +1218,14 @@ _DV_ISIN_CAP = 100_000
 _FILE_INFO_MAP_CAP = 256
 
 
-def _dv_pairs_literal_hit(
-    path: str, dv_files: dict[str, dict], base_of: dict[str, str]
-):
+def _dv_pairs_literal_hit(deleted_of: dict[str, list], base_of: dict[str, str]):
     """Predicate: this row's (file basename, row index) is deletion-vector
     marked — spelled as per-file row-index ARRAY LITERALS behind one
     basename-keyed map lookup, so small DV sets apply as a codegen'd
-    filter with no pair relation and no broadcast anti-join. Caller caps
-    total marked rows (``_DV_ISIN_CAP``)."""
+    filter with no pair relation and no broadcast anti-join. None when a
+    basename cannot be a SQL literal."""
     entries = []
-    for p, a in sorted(dv_files.items()):
-        deleted = _load_deletion_vector(path, a["deletionVector"])
+    for p, deleted in deleted_of.items():
         if not deleted:  # cardinality-0 descriptor: nothing to mark (and an
             continue  # empty array literal would break the map's value type)
         fb = base_of[p]
@@ -1281,6 +1244,36 @@ def _dv_pairs_literal_hit(
         + ", ".join(entries)
         + ")[`__fb`], `__ri`), false)"
     )
+
+
+def _dv_anti_filter(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    dv_files: dict[str, dict],
+    base_of: dict[str, str],
+    total_marked: int,
+) -> DataFrame:
+    """``df`` (carrying ``__fb``/``__ri``) without its DV-marked rows. A
+    small DV set — at most ``_DV_ISIN_CAP`` marked rows over at most
+    ``_FILE_INFO_MAP_CAP`` files — applies as the literal map filter;
+    otherwise as ONE broadcast anti-join against the (file, row) pairs.
+    Each bitmap is loaded once, whichever path takes it."""
+    deleted_of = {
+        p: _load_deletion_vector(path, a["deletionVector"])
+        for p, a in sorted(dv_files.items())
+    }
+    if total_marked <= _DV_ISIN_CAP and len(dv_files) <= _FILE_INFO_MAP_CAP:
+        hit = _dv_pairs_literal_hit(deleted_of, base_of)
+        if hit is not None:
+            return df.filter(~hit)
+    pairs = [
+        (base_of[p], int(i)) for p, deleted in deleted_of.items() for i in deleted
+    ]
+    dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
+    return df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+
+
 #: Total-marked-rows budget for the single-scan DV read path, which unions
 #: every touched file's bitmap into one driver-side (file, row) pair list
 #: before broadcasting it. Above the budget the scan falls back to per-file
@@ -1695,21 +1688,8 @@ def _scan_files(
                     [(i,) for i in deleted], "__ri bigint"
                 )
                 df = df.join(F.broadcast(dv_df), "__ri", "left_anti")
-        elif total_marked <= _DV_ISIN_CAP and (
-            hit := _dv_pairs_literal_hit(path, dv_files, base_of)
-        ) is not None:
-            # small multi-file DV set: literal per-file row-index arrays —
-            # a codegen'd filter, no pair relation, no broadcast anti-join
-            # (r15, guide §4; the single-file branch above already isins)
-            df = df.filter(~hit)
         else:
-            pairs = [
-                (base_of[p], int(i))
-                for p, add in sorted(dv_files.items())
-                for i in _load_deletion_vector(path, add["deletionVector"])
-            ]
-            dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
-            df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+            df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
         # partition restore: per-file partitionValues keyed by basename (a
         # map lookup expression, not a per-file plan branch)
         if phys_parts:
@@ -1918,24 +1898,8 @@ def _scan_files_rowids(
         int((a["deletionVector"] or {}).get("cardinality") or 0)
         for a in dv_files.values()
     )
-    dv_hit = (
-        _dv_pairs_literal_hit(path, dv_files, base_of)
-        if dv_files and total_marked <= _DV_ISIN_CAP
-        else None
-    )
-    if dv_hit is not None:
-        # small DV set: per-file row-index array literals keyed by
-        # basename — a codegen'd filter, no pair relation, no broadcast
-        # anti-join (r15; the single-file main read already used isin)
-        df = df.filter(~dv_hit)
-    elif dv_files and total_marked <= _DV_READ_PAIRS_CAP:
-        pairs = [
-            (base_of[p], int(i))
-            for p, a in sorted(dv_files.items())
-            for i in _load_deletion_vector(path, a["deletionVector"])
-        ]
-        dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
-        df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+    if dv_files and total_marked <= _DV_READ_PAIRS_CAP:
+        df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
     elif dv_files:
         # over the pairs budget: one file's bitmap in (Python) driver
         # memory at a time, applied as its own anti-join — same bounded
@@ -1974,16 +1938,8 @@ def _pruned_files(snap: _Snapshot, where: list[tuple] | None) -> dict[str, dict]
     prove ``where`` empty (all of it when ``where`` is None/empty)."""
     if not where:
         return snap.files
-    l2p = {
-        lf.name: pf.name
-        for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
-    }
-    phys_parts = snap.physical_partition_columns
-    return {
-        p: a
-        for p, a in snap.files.items()
-        if _file_may_match(a, where, l2p, phys_parts)
-    }
+    zonemaps = _file_zonemaps(snap, [col for col, _op, _v in where])
+    return {p: snap.files[p] for p, zm in zonemaps if skipping.may_match(zm, where)}
 
 
 def delta_matching_files(
@@ -2549,30 +2505,6 @@ def _write_version_checksum(log: str, version: int, payload: str) -> None:
     os.replace(tmp, crc_path)
 
 
-def _is_committed_output(root: str, fname: str) -> bool:
-    """Committer-v2 hygiene: should this walked file be ingested?
-
-    Two committed attempts of the same task carry IDENTICAL filenames
-    (part number + the job's write UUID + file counter), so the final
-    rename can leave at most one — within a directory, name uniqueness
-    already guarantees no duplicate committed output. What v2 CAN leave
-    behind is an uncommitted zombie: a speculative or failed attempt's
-    files still sitting under a ``_temporary/.../attempt_*/`` subtree
-    when the job finishes — walking those alongside the committed copy
-    of the same file would double the task's rows. So the guard is a
-    PATH test (skip anything inside ``_temporary`` and dot-hidden
-    files), never an mtime heuristic: keying on the part number alone
-    would silently DROP legitimate multi-file task outputs
-    (``-c000``/``-c001`` splits from spark.sql.files.maxRecordsPerFile),
-    which is data loss."""
-    if fname.startswith(".") or fname.startswith("_"):
-        return False
-    parts = root.replace(os.sep, "/").split("/")
-    return "_temporary" not in parts and not any(
-        p.startswith("attempt_") for p in parts
-    )
-
-
 def _write_data_files(
     df: DataFrame, path: str, partition_cols: list[str]
 ) -> list[dict]:
@@ -2584,58 +2516,51 @@ def _write_data_files(
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(tmp)
-    import pyarrow.parquet as _pq
-
     adds: list[dict] = []
     now = int(time.time() * 1000)
-    for root, _dirs, files in os.walk(tmp):
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            if not _is_committed_output(root, f):
-                continue  # zombie attempt output / hidden file
-            # Spark can emit zero-row part files for empty partitions; a
-            # zero-row add pollutes the log (and foreign readers' stats)
-            # for nothing — skip them (footer read: metadata-scale; the
-            # same open footer also yields the per-file skipping stats)
-            meta = _pq.ParquetFile(os.path.join(root, f)).metadata
-            if meta.num_rows == 0:
-                continue
-            stats = _footer_stats_json(meta)
-            rel_dir = os.path.relpath(root, tmp)
-            pv: dict[str, Any] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    # Spark's layout encodes NULL partitions as the default
-                    # __HIVE_DEFAULT_PARTITION__; protocol uses JSON null.
-                    # Directory names carry Hive %XX escapes for special
-                    # characters (space, '/', ':', '%', ...) — the protocol
-                    # stores the UNESCAPED value, so unquote both sides
-                    # (VERDICT r8: the escaped form silently corrupted
-                    # partition values for foreign readers)
-                    pv[unquote(k)] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                    )
-            new_name = f"part-{uuid.uuid4().hex}.parquet"
-            rel_path = (
-                os.path.join(rel_dir, new_name) if rel_dir != "." else new_name
-            )
-            os.makedirs(os.path.dirname(os.path.join(path, rel_path)) or path, exist_ok=True)
-            src = os.path.join(root, f)
-            size = os.path.getsize(src)
-            os.rename(src, os.path.join(path, rel_path))
-            add = {
-                # protocol: path is a percent-encoded URI of the disk path
-                "path": _encode_path(rel_path.replace(os.sep, "/")),
-                "partitionValues": pv,
-                "size": size,
-                "modificationTime": now,
-                "dataChange": True,
-            }
-            if stats:
-                add["stats"] = stats
-            adds.append(add)
+    # committed outputs only: zombie attempt files would double a task's rows
+    for root, f, meta in skipping.committed_footers(tmp):
+        # Spark can emit zero-row part files for empty partitions; a
+        # zero-row add pollutes the log (and foreign readers' stats)
+        # for nothing — skip them (footer read: metadata-scale; the
+        # same open footer also yields the per-file skipping stats)
+        if meta.num_rows == 0:
+            continue
+        stats = _footer_stats_json(meta)
+        rel_dir = os.path.relpath(root, tmp)
+        pv: dict[str, Any] = {}
+        if rel_dir != ".":
+            for seg in rel_dir.split(os.sep):
+                k, _, v = seg.partition("=")
+                # Spark's layout encodes NULL partitions as the default
+                # __HIVE_DEFAULT_PARTITION__; protocol uses JSON null.
+                # Directory names carry Hive %XX escapes for special
+                # characters (space, '/', ':', '%', ...) — the protocol
+                # stores the UNESCAPED value, so unquote both sides
+                # (VERDICT r8: the escaped form silently corrupted
+                # partition values for foreign readers)
+                pv[unquote(k)] = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+                )
+        new_name = f"part-{uuid.uuid4().hex}.parquet"
+        rel_path = (
+            os.path.join(rel_dir, new_name) if rel_dir != "." else new_name
+        )
+        os.makedirs(os.path.dirname(os.path.join(path, rel_path)) or path, exist_ok=True)
+        src = os.path.join(root, f)
+        size = os.path.getsize(src)
+        os.rename(src, os.path.join(path, rel_path))
+        add = {
+            # protocol: path is a percent-encoded URI of the disk path
+            "path": _encode_path(rel_path.replace(os.sep, "/")),
+            "partitionValues": pv,
+            "size": size,
+            "modificationTime": now,
+            "dataChange": True,
+        }
+        if stats:
+            add["stats"] = stats
+        adds.append(add)
     # clean the now-empty temp tree (best effort)
     for root, dirs, files in os.walk(tmp, topdown=False):
         for f in files:
@@ -3752,87 +3677,14 @@ def delta_optimize(
     return version
 
 
-_KEY_PRUNE_CAP = 100_000  # collected distinct merge keys; beyond → envelope
-
-
 def _files_overlapping_keys(
     snap: _Snapshot, keys: list[str], source: DataFrame
 ) -> list[str]:
     """Active files whose stats/partitionValues may hold a source key —
-    the files a keyed MERGE must read and rewrite (the ``tables.py``
-    ``_dirs_overlapping_keys`` policy at Delta file granularity).
-    Single-key merges collect the distinct source keys (capped
-    driver-side — merge sources are the small side by construction) and
-    bisect each file's [min, max] against the actual key set, so an
-    upsert of {day-1 keys, one far-away fresh key} does not smear into an
-    envelope covering the whole table. Multi-key or over-cap sources fall
-    back to the per-column min/max envelope (conservative, still exact).
-    NULL keys never equi-join → all-NULL files and NULL source keys are
-    ignored; files without stats must be assumed overlapping."""
-    import bisect
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
-    l2p = {
-        lf.name: pf.name
-        for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
-    }
-    phys_parts = snap.physical_partition_columns
-
-    def bounds(add: dict, pc: str):
-        if pc in phys_parts:
-            v = (add.get("partitionValues") or {}).get(pc)
-            return [v, v] if pc in (add.get("partitionValues") or {}) else None
-        return _file_zonemap(add).get(pc)
-
-    if len(keys) == 1:
-        k = keys[0]
-        pc = l2p.get(k, k)
-        rows = (
-            source.select(k)
-            .where(F.col(k).isNotNull())
-            .distinct()
-            .limit(_KEY_PRUNE_CAP + 1)
-            .collect()
-        )
-        vals = sorted(r[0] for r in rows)
-        if not vals:
-            return []  # no non-null source key → pure insert
-        if len(vals) <= _KEY_PRUNE_CAP and not isinstance(vals[0], bool):
-            cvals = sorted(ParquetTable._coerce(v, vals[0]) for v in vals)
-            out = []
-            for p, add in snap.files.items():
-                b = bounds(add, pc)
-                if b is None:
-                    out.append(p)  # no stats → must assume overlap
-                    continue
-                lo = ParquetTable._coerce(b[0], vals[0])
-                hi = ParquetTable._coerce(b[1], vals[0])
-                if lo is None and hi is None:
-                    continue  # all-NULL file: equi-join can't match
-                if lo is None or hi is None:
-                    out.append(p)
-                    continue
-                i = bisect.bisect_left(cvals, lo)
-                if i < len(cvals) and cvals[i] <= hi:
-                    out.append(p)
-            return out
-    row = source.agg(
-        *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-        *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-    ).collect()[0]
-    conds = [
-        (k, "between", (row[f"__lo_{i}"], row[f"__hi_{i}"]))
-        for i, k in enumerate(keys)
-        if row[f"__lo_{i}"] is not None and row[f"__hi_{i}"] is not None
-    ]
-    return [
-        p
-        for p, add in snap.files.items()
-        if _file_may_match(add, conds, l2p, phys_parts)
-    ]
+    the files a keyed MERGE must read and rewrite. The pruning is
+    ``skipping.overlapping_units`` (shared with ``ParquetTable.merge``)
+    over each file's zonemap of the key columns."""
+    return skipping.overlapping_units(_file_zonemaps(snap, keys), keys, source)
 
 
 def _commit_rewrite(
@@ -4117,23 +3969,8 @@ def _scan_with_rowpos(
         int((a["deletionVector"] or {}).get("cardinality") or 0)
         for a in dv_files.values()
     )
-    dv_hit = (
-        _dv_pairs_literal_hit(path, dv_files, base_of)
-        if dv_files and total_marked <= _DV_ISIN_CAP
-        else None
-    )
-    if dv_hit is not None:
-        # small DV set: literal per-file row-index arrays, a codegen'd
-        # filter — no pair relation, no broadcast anti-join (r15, guide §4)
-        df = df.filter(~dv_hit)
-    elif dv_files:
-        old_pairs = [
-            (base_of[p], int(i))
-            for p, a in sorted(dv_files.items())
-            for i in _load_deletion_vector(path, a["deletionVector"])
-        ]
-        dv_df = spark.createDataFrame(old_pairs, "__fb string, __ri bigint")
-        df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+    if dv_files:
+        df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
     if with_row_ids:
         if len(files) <= _FILE_INFO_MAP_CAP:
             # literal basename→baseRowId map: pure projection, no
@@ -4360,13 +4197,9 @@ def _delete_with_dvs(
     still gets precise row-level deletes. Returns None when the matched
     counts exceed the DV write budget (broad predicate → the caller's
     rewrite path is the right physics)."""
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
     files = {p: snap.files[p] for p in touched}
     scan = _scan_with_rowpos(spark, path, snap, files)
-    cond = ParquetTable._conds_filter(list(conds))
+    cond = skipping.conds_filter(list(conds))
     matched = scan.filter(cond)
     # matched ⊆ the touched files' rows (a pure filter), so the files'
     # numRecords — already on the driver via stats — bound the probe
@@ -4431,16 +4264,12 @@ def _update_with_dvs(
     never a rewrite of the touched files' unmatched rows. Returns None
     when the matched counts exceed the DV write budget (the caller's
     rewrite path takes over)."""
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
     files = {p: snap.files[p] for p in touched}
     tracked = _row_tracking_enabled(snap)
     if tracked:
         _require_stamped(files, path, "UPDATE")
     scan = _scan_with_rowpos(spark, path, snap, files, with_row_ids=tracked)
-    cond = ParquetTable._conds_filter(list(conds))
+    cond = skipping.conds_filter(list(conds))
     matched = scan.filter(cond)
     # matched ⊆ the touched files' rows (a pure filter) — see _delete_with_dvs
     by_file = _collect_dv_marks(matched, row_bound=_files_row_bound(path, files))
@@ -4723,10 +4552,6 @@ def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
     version (unchanged when nothing can match)."""
     if not conds:
         raise ValueError("delta_delete_where needs at least one condition")
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
     latest = _latest_version(path)
     snap = _replay(path, latest)
     touched = sorted(_pruned_files(snap, list(conds)))
@@ -4742,7 +4567,7 @@ def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
     scan = _scan_files(spark, path, snap, {p: snap.files[p] for p in touched})
-    cond = ParquetTable._conds_filter(list(conds))
+    cond = skipping.conds_filter(list(conds))
     survivors = scan.filter(~cond)
     return _commit_rewrite(
         spark,
@@ -4778,10 +4603,6 @@ def delta_update_where(
     Returns the committed version (unchanged when nothing can match)."""
     if not conds:
         raise ValueError("delta_update_where needs at least one condition")
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
-        ParquetTable,
-    )
-
     latest = _latest_version(path)
     snap = _replay(path, latest)
     known = {f.name for f in snap.schema.fields}
@@ -4810,7 +4631,7 @@ def delta_update_where(
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
     scan = _scan_files(spark, path, snap, {p: snap.files[p] for p in touched})
-    cond = ParquetTable._conds_filter(list(conds))
+    cond = skipping.conds_filter(list(conds))
     df = scan
     for name, expr in assignments.items():
         df = df.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))

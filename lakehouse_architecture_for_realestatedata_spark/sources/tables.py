@@ -48,7 +48,11 @@ Scale notes (100 TB):
     manifest are used to REWRITE ONLY the data dirs whose key range
     overlaps the source's: on a time-keyed 100 TB table an upsert of one
     day's keys touches one day's files, not the table. ``delete_where``
-    with ``(col, op, value)`` conditions prunes the same way.
+    with ``(col, op, value)`` conditions prunes the same way. The footer
+    stats, the zonemap test and the key-overlap pruning live in
+    ``sources/skipping.py``, shared with the Delta format
+    (``sources/delta_lite.py``); this module keeps only its manifest-side
+    rules (all-or-nothing dir zonemaps, the aggregate-job fallback).
   - ``partition_by`` lays out data for partition pruning on read; the
     reference never partitions its tables (SURVEY §4 calls this out as perf
     left on the table) — we do.
@@ -72,12 +76,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from lakehouse_architecture_for_realestatedata_spark.sources import skipping
+
 _LATEST = "_latest"
 
-#: Driver-side footer-walk budget for ``_dir_stats_footers`` (VERDICT r14
-#: #7): per-file footer reads are serial driver Python — bounded for a
-#: fresh write's file set, a stall on a large accumulated dir. Past this
-#: many files the distributed aggregate job is the right physics.
+#: Driver-side footer-walk budget for ``_footer_pass``: per-file footer
+#: reads are serial driver Python — bounded for a fresh write's file set, a
+#: stall on a large accumulated dir. Past this many files the distributed
+#: aggregate job is the right physics.
 _FOOTER_WALK_CAP = 1024
 
 
@@ -247,60 +253,6 @@ class ParquetTable:
             )
         return out
 
-    @staticmethod
-    def _coerce(stored, like):
-        """Parse a JSON-round-tripped stat value back into ``like``'s type
-        family so comparisons are meaningful."""
-        import datetime
-        import decimal
-
-        if stored is None:
-            return None
-        if isinstance(like, bool):
-            return None  # bools: no pruning — min/max of a flag is useless
-        if isinstance(like, (int, float, decimal.Decimal)):
-            return float(stored)
-        if isinstance(like, datetime.datetime):
-            return datetime.datetime.fromisoformat(str(stored))
-        if isinstance(like, datetime.date):
-            parsed = datetime.datetime.fromisoformat(str(stored))
-            return parsed.date() if isinstance(parsed, datetime.datetime) else parsed
-        return str(stored)
-
-    @classmethod
-    def _dir_may_match(cls, stats: dict, col: str, op: str, value) -> bool:
-        """Conservative zonemap test: False only when [min,max] PROVES no row
-        in the dir can satisfy ``col op value``. Missing stats → True."""
-        if col not in stats:
-            return True
-        like = value[0] if op == "between" else value
-        if isinstance(like, bool):
-            return True
-        lo = cls._coerce(stats[col][0], like)
-        hi = cls._coerce(stats[col][1], like)
-        if lo is None and hi is None:
-            return False  # all-NULL dir: no comparison ever matches
-        if lo is None or hi is None:
-            return True
-        if isinstance(like, (int, float)):
-            value = (
-                tuple(float(v) for v in value) if op == "between" else float(value)
-            )
-        if op == "=":
-            return lo <= value <= hi
-        if op == "<":
-            return lo < value
-        if op == "<=":
-            return lo <= value
-        if op == ">":
-            return hi > value
-        if op == ">=":
-            return hi >= value
-        if op == "between":
-            a, b = value
-            return not (hi < a or lo > b)
-        raise ValueError(f"unsupported op {op!r}")
-
     def read_where(self, *conds: tuple) -> DataFrame:
         """Data-skipping scan (Delta zonemap analogue): each condition is a
         ``(col, op, value)`` tuple with op in ``= < <= > >= between``
@@ -319,7 +271,7 @@ class ParquetTable:
         m = self._manifest(v)
         kept = self._matching_dirs(m, conds)
         df = self._read_rel_dirs(m, kept)
-        return df.filter(self._conds_filter(conds))
+        return df.filter(skipping.conds_filter(conds))
 
     def _matching_dirs(self, manifest: dict, conds) -> list[str]:
         """Rel dirs the zonemaps CANNOT prove empty for the AND of ``conds``
@@ -328,10 +280,7 @@ class ParquetTable:
         return [
             rel
             for rel in manifest["dirs"]
-            if all(
-                self._dir_may_match(stats.get(rel, {}), col, op, value)
-                for col, op, value in conds
-            )
+            if skipping.may_match(stats.get(rel, {}), conds)
         ]
 
     def _read_rel_dirs(self, manifest: dict, rels: list[str]) -> DataFrame:
@@ -378,201 +327,70 @@ class ParquetTable:
         new = [rel for rel in m["dirs"] if rel not in old]
         return self._read_rel_dirs(m, new)
 
-    @staticmethod
-    def _conds_filter(conds) -> Column:
-        """AND of ``(col, op, value)`` conditions as a real Column filter."""
-        out = F.lit(True)
-        for col, op, value in conds:
-            c = F.col(col)
-            out = out & (
-                c.between(*value)
-                if op == "between"
-                else {"=": c == value, "<": c < value, "<=": c <= value,
-                      ">": c > value, ">=": c >= value}[op]
-            )
-        return out
-
     # --------------------------------------------------------------- write
-    def _write_data(self, df: DataFrame) -> str | None:
-        """Write ``df`` into a fresh immutable data dir; returns its
-        root-relative path, or None if the frame was empty (parquet emits no
-        readable files for zero rows — an empty write must not poison the
-        manifest with an unreadable dir)."""
+    def _write_data(self, df: DataFrame) -> tuple[str | None, dict | None]:
+        """Write ``df`` into a fresh immutable data dir. Returns its
+        root-relative path — None if the frame was empty (parquet emits no
+        readable files for zero rows; an empty write must not poison the
+        manifest with an unreadable dir) — and its zonemap ``{col: [min,
+        max]}`` over every orderable scalar column, the write-time stats
+        Delta keeps in its log for data skipping (None with no dir)."""
         rel = os.path.join("data", uuid.uuid4().hex)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         path = os.path.join(self.root, rel)
         writer.parquet(path)
-        # A zero-row write still emits a (schema-only) parquet file; the
-        # footer metadata already carries the exact row count, so probe it
-        # locally (pyarrow) instead of paying a whole Spark job for
-        # ``isEmpty()`` — one fewer job on EVERY table write (r14 opt,
-        # guide §6: metadata-scale probes). Dropping the dir keeps
-        # idempotent no-op appends from growing the manifest by one empty
-        # dir per re-run.
-        import pyarrow.parquet as _pq
-
-        has_rows = any(
-            f.endswith(".parquet")
-            and _pq.ParquetFile(os.path.join(dirpath, f)).metadata.num_rows > 0
-            for dirpath, _dirs, files in os.walk(path)
-            for f in files
+        # Partition columns live in directory names, not footers, so a
+        # partitioned dir's zonemap always comes from the aggregate job.
+        has_rows, zonemap = self._footer_pass(
+            path, None if self.partition_by else skipping.stats_cols(df.schema)
         )
         if has_rows:
-            return rel
+            return rel, zonemap if zonemap is not None else self._dir_stats(rel)
+        # Dropping the dir keeps idempotent no-op appends from growing the
+        # manifest by one empty dir per re-run.
         shutil.rmtree(path, ignore_errors=True)
-        return None
+        return None, None
 
-    _STATS_TYPES = ("int", "bigint", "smallint", "tinyint", "float", "double",
-                    "string", "date") # + timestamp*, decimal* by prefix
-
-    @classmethod
-    def _stats_cols(cls, df: DataFrame) -> list[str]:
-        """Columns eligible for zonemap stats (orderable scalars)."""
-        return [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.simpleString() in cls._STATS_TYPES
-            or f.dataType.simpleString().startswith(("timestamp", "decimal"))
-        ]
+    @staticmethod
+    def _footer_pass(
+        path: str, cols: list[str] | None
+    ) -> tuple[bool, dict | None]:
+        """One walk over a fresh dir's parquet footers (no Spark job): does
+        any file hold rows, and, when ``cols`` is given, the dir's zonemap
+        over them. A zero-row write still emits a schema-only file, and its
+        footer carries the exact row count, so this replaces an
+        ``isEmpty()`` job on every table write. The zonemap is
+        all-or-nothing: None when any column's stats are missing or
+        unreadable, or past ``_FOOTER_WALK_CAP`` files (serial driver reads;
+        the distributed aggregate is then the right physics)."""
+        footers, has_rows = [], False
+        for _dir, _name, md in skipping.committed_footers(path):
+            footers.append(md)
+            has_rows = has_rows or md.num_rows > 0
+            if has_rows and (cols is None or len(footers) > _FOOTER_WALK_CAP):
+                return True, None
+        if not has_rows:
+            return False, None
+        folded = skipping.fold_footers(footers)
+        zonemap = {}
+        for c in cols:
+            s = folded.get(c)
+            if s is None or not s.bounded or s.nulls is None:
+                return True, None
+            zonemap[c] = [s.lo, s.hi]  # [None, None]: an all-NULL column
+        return True, zonemap
 
     def _dir_stats(self, rel: str) -> dict:
-        """Zonemap for a freshly-written data dir: ``{col: [min, max]}`` over
-        every orderable scalar column — the write-time stats Delta stores in
-        its log for data skipping. Served from the just-written files'
-        parquet FOOTERS (metadata-scale, no Spark job — r14 opt, guide §6:
-        the footer already holds exact chunk min/max for every type Spark
-        writes with MICROS timestamps); falls back to the original narrow
-        aggregate job only when a footer lacks usable stats (foreign INT96
-        files, stats dropped for oversized binaries) or the dir is
-        hive-partitioned (partition columns live in directory names, not
-        footers). Truncated string bounds stay a valid COVER (parquet-mr
-        adjusts a truncated max upward), which is all pruning needs."""
-        footer = None if self.partition_by else self._dir_stats_footers(rel)
-        if footer is not None:
-            return footer
+        """A data dir's zonemap from one narrow aggregate job over the dir:
+        the fallback when its footers cannot serve it (same values)."""
         df = self.spark.read.parquet(os.path.join(self.root, rel))
-        cols = self._stats_cols(df)
+        cols = skipping.stats_cols(df.schema)
         if not cols:
             return {}
-        row = df.agg(
-            *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(cols)],
-            *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(cols)],
-        ).collect()[0]
-        return {c: [row[f"__lo_{i}"], row[f"__hi_{i}"]] for i, c in enumerate(cols)}
-
-    def _dir_stats_footers(self, rel: str) -> dict | None:
-        """``_dir_stats`` from parquet footers alone, or None when any
-        eligible column's stats are missing/undecodable (caller falls back
-        to the aggregate job — correctness never depends on this path).
-        Matches the aggregate's semantics: min/max over non-null values
-        folded across files, all-null columns → [None, None] (the 'no
-        comparison matches' marker), tz-aware timestamp stats normalized to
-        the naive session-UTC values the Spark collect produced."""
-        import datetime as _dt
-        import decimal as _dec
-
-        import pyarrow.parquet as _pq
-
-        root = os.path.join(self.root, rel)
-        mins: dict[str, object] = {}
-        maxs: dict[str, object] = {}
-        nulls: dict[str, int] = {}
-        rows: dict[str, int] = {}
-        eligible: set[str] | None = None
-        dec_scale: dict[str, int] = {}
-        n_files = 0
-
-        def norm(v):
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return v
-
-        try:
-            for dirpath, _dirs, files in os.walk(root):
-                for fname in files:
-                    if not fname.endswith(".parquet"):
-                        continue
-                    # Bounded walk (VERDICT r14 #7): per-file footer reads are
-                    # serial driver Python — fine for a fresh write's bounded
-                    # file set, a stall on a large accumulated dir. Past the
-                    # cap the distributed aggregate is the right physics.
-                    n_files += 1
-                    if n_files > _FOOTER_WALK_CAP:
-                        return None
-                    md = _pq.ParquetFile(os.path.join(dirpath, fname)).metadata
-                    if eligible is None:
-                        sch = md.schema.to_arrow_schema()
-                        from pyspark.sql.pandas.types import from_arrow_type
-
-                        eligible = set()
-                        for fld in sch:
-                            try:
-                                st = from_arrow_type(fld.type).simpleString()
-                            except Exception:
-                                continue
-                            if st in self._STATS_TYPES or st.startswith(
-                                ("timestamp", "decimal")
-                            ):
-                                eligible.add(fld.name)
-                                if st.startswith("decimal"):
-                                    dec_scale[fld.name] = fld.type.scale
-                    for rg in range(md.num_row_groups):
-                        g = md.row_group(rg)
-                        for ci in range(g.num_columns):
-                            col = g.column(ci)
-                            name = col.path_in_schema
-                            if "." in name or name not in (eligible or ()):
-                                continue
-                            st = col.statistics
-                            nc = st.null_count if st is not None else None
-                            if nc is None:
-                                return None
-                            nulls[name] = nulls.get(name, 0) + nc
-                            rows[name] = rows.get(name, 0) + g.num_rows
-                            if st.has_min_max:
-                                try:
-                                    lo, hi = norm(st.min), norm(st.max)
-                                except Exception:
-                                    # pyarrow 16 cannot decode the LOGICAL
-                                    # min/max of INT32/INT64-backed decimals
-                                    # (Spark writes decimal(<=18) that way);
-                                    # the RAW stat is the unscaled integer,
-                                    # so rescale it exactly (ADVICE r14 —
-                                    # one undecodable column must not kick
-                                    # the whole dir back to the agg job)
-                                    if name in dec_scale and isinstance(
-                                        st.min_raw, int
-                                    ):
-                                        s = dec_scale[name]
-                                        lo = _dec.Decimal(st.min_raw).scaleb(-s)
-                                        hi = _dec.Decimal(st.max_raw).scaleb(-s)
-                                    else:
-                                        return None
-                                if lo is None or hi is None:
-                                    return None
-                                mins[name] = (
-                                    lo if name not in mins else min(mins[name], lo)
-                                )
-                                maxs[name] = (
-                                    hi if name not in maxs else max(maxs[name], hi)
-                                )
-                            elif nc != g.num_rows:
-                                return None  # stats dropped on real data
-        except Exception:
-            return None  # unreadable/foreign footer: the agg job decides
-        if eligible is None:
-            return {}  # no files: caller's has_rows probe already handled
-        out: dict[str, list] = {}
-        for name in eligible:
-            if name in mins:
-                out[name] = [mins[name], maxs[name]]
-            elif name in nulls and nulls[name] == rows.get(name):
-                out[name] = [None, None]  # all-null dir, as the agg reported
-            else:
-                return None
-        return out
+        row = df.agg(*skipping.minmax_aggs(cols)).collect()[0]
+        return skipping.zonemap_of(row, cols)
 
     # ---------------------------------------------------------- properties
     _PROPS = "_props.json"
@@ -819,9 +637,9 @@ class ParquetTable:
         """S8: full replace, new schema wins (overwriteSchema semantics).
         A blind write: on commit conflict it just claims the next slot —
         the data dir is already on disk, so a retry is metadata-only."""
-        rel = self._write_data(df)
+        rel, zonemap = self._write_data(df)
         self._validate_rel(rel)
-        stats = {rel: self._dir_stats(rel)} if rel else {}
+        stats = {rel: zonemap} if rel else {}
         blooms = {rel: self._dir_blooms(rel)} if rel else {}
         while True:
             try:
@@ -854,9 +672,9 @@ class ParquetTable:
                     f"append schema mismatch without merge_schema: table has "
                     f"{sorted(cur)}, frame has {sorted(new)}"
                 )
-        rel = self._write_data(df)
+        rel, zonemap = self._write_data(df)
         self._validate_rel(rel)
-        new_stats = {rel: self._dir_stats(rel)} if rel else {}
+        new_stats = {rel: zonemap} if rel else {}
         new_blooms = {rel: self._dir_blooms(rel)} if rel else {}
         while True:
             # Rebase onto whatever snapshot is newest RIGHT NOW: carry its
@@ -895,10 +713,10 @@ class ParquetTable:
         instead of silently dropping the other writer's rows. ``validate``
         only for ops that can INTRODUCE constraint violations (UPDATE) —
         DELETE/OPTIMIZE re-emit rows that already passed."""
-        rel = self._write_data(df)
+        rel, zonemap = self._write_data(df)
         if validate:
             self._validate_rel(rel)
-        stats = {rel: self._dir_stats(rel)} if rel else {}
+        stats = {rel: zonemap} if rel else {}
         blooms = {rel: self._dir_blooms(rel)} if rel else {}
         try:
             self._commit(
@@ -949,7 +767,10 @@ class ParquetTable:
         base = self._next_version() - 1
         m = self._manifest(base)
 
-        touched = self._dirs_overlapping_keys(m, keys, source)
+        stats = m.get("stats", {})
+        touched = skipping.overlapping_units(
+            ((rel, stats.get(rel, {})) for rel in m["dirs"]), keys, source
+        )
         untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
         target = self._read_rel_dirs(m, touched)
 
@@ -1000,7 +821,7 @@ class ParquetTable:
             return  # zonemaps prove no row matches: nothing to do
         untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
         survivors = self._read_rel_dirs(m, touched).filter(
-            ~self._conds_filter(conds)
+            ~skipping.conds_filter(conds)
         )
         self._commit_rewrite(base, m, untouched, survivors, m["schema"], op="DELETE")
 
@@ -1039,69 +860,10 @@ class ParquetTable:
         if not touched:
             return
         untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
-        out = apply(self._read_rel_dirs(m, touched), self._conds_filter(conds))
+        out = apply(self._read_rel_dirs(m, touched), skipping.conds_filter(conds))
         self._commit_rewrite(
             base, m, untouched, out, m["schema"], op="UPDATE", validate=True
         )
-
-    _KEY_PRUNE_CAP = 100_000  # collected distinct keys; beyond → envelope
-
-    def _dirs_overlapping_keys(
-        self, m: dict, keys: list[str], source: DataFrame
-    ) -> list[str]:
-        """Data dirs whose zonemap may hold a source key — the dirs a keyed
-        MERGE must read/rewrite. Single-key merges collect the distinct
-        source keys (capped driver-side — merge sources are the small side
-        by construction) and test each dir's [min,max] against the actual
-        key set, so an upsert of {day-1 keys, one fresh key far away} does
-        not smear into an envelope covering the whole table. Multi-key or
-        over-cap sources fall back to the per-column min/max envelope
-        (conservative, still exact). NULL keys never equi-join → all-NULL
-        dirs and NULL source keys are ignored."""
-        import bisect
-
-        stats = m.get("stats", {})
-        if len(keys) == 1:
-            k = keys[0]
-            rows = (
-                source.select(k)
-                .where(F.col(k).isNotNull())
-                .distinct()
-                .limit(self._KEY_PRUNE_CAP + 1)
-                .collect()
-            )
-            vals = sorted(r[0] for r in rows)
-            if not vals:
-                return []  # no non-null source key → pure insert
-            if len(vals) <= self._KEY_PRUNE_CAP and not isinstance(vals[0], bool):
-                out = []
-                for rel in m["dirs"]:
-                    st = stats.get(rel, {})
-                    if k not in st:
-                        out.append(rel)  # no stats → must assume overlap
-                        continue
-                    lo = self._coerce(st[k][0], vals[0])
-                    hi = self._coerce(st[k][1], vals[0])
-                    if lo is None and hi is None:
-                        continue  # all-NULL dir: equi-join can't match
-                    if lo is None or hi is None:
-                        out.append(rel)
-                        continue
-                    i = bisect.bisect_left(vals, lo)
-                    if i < len(vals) and vals[i] <= hi:
-                        out.append(rel)
-                return out
-        bounds = source.agg(
-            *[F.min(k).alias(f"__lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"__hi_{i}") for i, k in enumerate(keys)],
-        ).collect()[0]
-        conds = [
-            (k, "between", (bounds[f"__lo_{i}"], bounds[f"__hi_{i}"]))
-            for i, k in enumerate(keys)
-        ]
-        if any(lo is None and hi is None for _, _, (lo, hi) in conds):
-            return []
-        return self._matching_dirs(m, conds)
 
     def _commit_rewrite(
         self,
@@ -1119,7 +881,7 @@ class ParquetTable:
         and GCs its orphaned output dir, like ``_overwrite_expecting``.
         ``validate`` enforces CHECK constraints on the rewritten dir (MERGE /
         UPDATE — ops whose output contains NEW values)."""
-        rel = self._write_data(rewritten)
+        rel, zonemap = self._write_data(rewritten)
         if validate:
             self._validate_rel(rel)
         old_stats = manifest.get("stats", {})
@@ -1127,7 +889,7 @@ class ParquetTable:
         old_blooms = manifest.get("blooms", {})
         blooms = {r: old_blooms[r] for r in untouched if r in old_blooms}
         if rel:
-            stats[rel] = self._dir_stats(rel)
+            stats[rel] = zonemap
             blooms[rel] = self._dir_blooms(rel)
         try:
             self._commit(
@@ -1229,19 +991,11 @@ class ParquetTable:
 
         # One pass over the written output for all per-bucket zonemaps.
         written = self.spark.read.parquet(staging)
-        cols = self._stats_cols(written.drop("__zb"))
+        cols = skipping.stats_cols(written.drop("__zb").schema)
         by_bucket: dict[int, dict] = {}
         if cols:
-            rows = written.groupBy("__zb").agg(
-                *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(cols)],
-                *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(cols)],
-            ).collect()
-            by_bucket = {
-                r["__zb"]: {
-                    c: [r[f"__lo_{i}"], r[f"__hi_{i}"]] for i, c in enumerate(cols)
-                }
-                for r in rows
-            }
+            rows = written.groupBy("__zb").agg(*skipping.minmax_aggs(cols)).collect()
+            by_bucket = {r["__zb"]: skipping.zonemap_of(r, cols) for r in rows}
 
         rels: list[str] = []
         dir_stats: dict[str, dict] = {}

@@ -2911,6 +2911,77 @@ def test_dv_read_pairs_budget_per_file_fallback(spark, tmp_path, monkeypatch):
     assert got2 == expect
 
 
+def test_dv_literal_map_capped_by_file_count(spark, tmp_path, monkeypatch):
+    """The literal (file, row-index) map filter is gated on the file count
+    (``_FILE_INFO_MAP_CAP``) as well as on total marked rows. Past the file
+    cap the read takes the broadcast pairs path, returns the same rows, and
+    loads each deletion vector once."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "dvfilecap")
+    for lo in (0, 10):
+        rows = [(i,) for i in range(lo, lo + 10)]
+        dl.delta_write(
+            spark.createDataFrame(rows, "id bigint").coalesce(1), t
+        )
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "between", (4, 13)))
+    snap = dl._replay(t, None)
+    assert sum(1 for a in snap.files.values() if a.get("deletionVector")) == 2
+    expect = sorted(r["id"] for r in dl.delta_read(spark, t).collect())
+    assert expect == [i for i in range(20) if not 4 <= i <= 13]
+
+    literal_calls, loads = [], []
+    real_hit, real_load = dl._dv_pairs_literal_hit, dl._load_deletion_vector
+    monkeypatch.setattr(
+        dl, "_dv_pairs_literal_hit",
+        lambda *a: literal_calls.append(1) or real_hit(*a),
+    )
+    monkeypatch.setattr(
+        dl, "_load_deletion_vector", lambda *a: loads.append(1) or real_load(*a)
+    )
+    monkeypatch.setattr(dl, "_FILE_INFO_MAP_CAP", 1)
+    got = dl.delta_read(spark, t)
+    assert literal_calls == [] and len(loads) == 2  # pairs path, one load each
+    assert sorted(r["id"] for r in got.collect()) == expect
+
+
+def test_decimal_columns_write_stats_and_skip(spark, tmp_path):
+    """Decimals of precision <= 18 are INT32/INT64-backed in Spark's parquet
+    layout, and pyarrow cannot decode their logical footer stats. The shared
+    footer fold rescales the raw integers, so ``delta_write`` succeeds, the
+    add action carries the column's bounds, and a ``where`` on it skips a
+    disjoint file."""
+    from decimal import Decimal
+
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "dec")
+    schema = "id int, amt decimal(10,2)"
+    dl.delta_write(
+        spark.createDataFrame([(1, Decimal("1.50")), (2, Decimal("9.25"))], schema)
+        .coalesce(1),
+        t,
+    )
+    (add,) = dl._replay(t, None).files.values()
+    stats = json.loads(add["stats"])
+    assert stats["minValues"]["amt"] == 1.5
+    assert stats["maxValues"]["amt"] == 9.25
+    assert stats["nullCount"]["amt"] == 0
+    dl.delta_write(
+        spark.createDataFrame([(3, Decimal("0.10")), (4, None)], schema).coalesce(1),
+        t,
+        mode="append",
+    )
+    where = [("amt", ">", Decimal("5"))]
+    assert len(dl.delta_matching_files(spark, t, where)) == 1  # 2nd file skipped
+    got = [tuple(r) for r in dl.delta_read(spark, t, where=where).collect()]
+    assert got == [(2, Decimal("9.25"))]
+    # a bound stored as the float 0.1 must not prune an exact Decimal("0.1")
+    got = dl.delta_read(spark, t, where=[("amt", "=", Decimal("0.1"))]).collect()
+    assert [r["id"] for r in got] == [3]
+
+
 def test_dv_write_requires_protocol_features(spark, tmp_path):
     """ADVICE r10: delta.enableDeletionVectors=true WITHOUT the protocol
     actually listing deletionVectors (reader 3 + writer 7 features) must
@@ -4221,7 +4292,10 @@ def test_write_data_files_skips_zombie_attempts_keeps_multifile_tasks(
     heuristic would silently DROP legitimate multi-file task outputs
     (-c000/-c001 from maxRecordsPerFile), which is data loss."""
     dl = _rt_imports()
-    ok = dl._is_committed_output
+    from lakehouse_architecture_for_realestatedata_spark.sources.skipping import (
+        is_committed_output as ok,
+    )
+
     # multi-file task outputs all ingest
     assert ok("/tmp/x", "part-00000-8f3c-c000.snappy.parquet")
     assert ok("/tmp/x", "part-00000-8f3c-c001.snappy.parquet")
@@ -4249,6 +4323,22 @@ def test_write_data_files_skips_zombie_attempts_keeps_multifile_tasks(
     snap = dl._replay(t, None)
     assert len(snap.files) == 3  # 100 + 100 + 50
     assert delta_read(spark, t).count() == 250
+
+
+def test_attempt_named_partitions_and_roots_are_committed(spark, tmp_path):
+    """Only components below the fresh write dir are tested, with Spark's
+    own hidden-path rule: partition dirs such as ``attempt_no=3`` and a
+    table under an ``attempt_*`` directory are committed output."""
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "attempt_no int, val string"
+    )
+    for t, parts in [
+        (str(tmp_path / "attempt_part"), ["attempt_no"]),
+        (str(tmp_path / "attempt_7" / "t"), None),
+    ]:
+        delta_write(df, t, mode="overwrite", partition_by=parts)
+        rows = delta_read(spark, t).select("attempt_no", "val").collect()
+        assert sorted(map(tuple, rows)) == [(1, "a"), (2, "b"), (3, "c")]
 
 
 

@@ -1000,3 +1000,33 @@ def test_assign_cells_frozen_ties_lowest_cell_and_zero_norm(spark):
     assert got[1][0] == 3  # tie between 3 and 7 -> lowest
     assert got[2] == (3, 0)  # zero norm -> 0.0 everywhere -> lowest cell
     assert got[3][0] == 9
+
+
+def test_assign_cells_frozen_quantized_rejects_null_and_non_integer_ids(spark):
+    """Null ids fail with a descriptive ValueError from the scoring batch
+    (not an opaque cast error), and non-integer id columns are refused
+    before any job runs, like malformed vectors in ``_quantize_batch``."""
+    import pytest
+
+    from lakehouse_architecture_for_realestatedata_spark.operators.similarity import (
+        assign_cells_frozen_quantized,
+    )
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell bigint, embedding array<double>"
+    )
+    vec = "embedding array<double>"
+    ok = spark.createDataFrame([(7, [1.0, 0.1])], f"vec_id int, {vec}")
+    assert [(r["vec_id"], r["cell"]) for r in assign_cells_frozen_quantized(
+        ok, cents
+    ).collect()] == [(7, 0)]
+    nulls = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (None, [0.0, 1.0])], f"vec_id bigint, {vec}"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ValueError: corpus ids 'vec_id' contain nulls"):
+        assign_cells_frozen_quantized(nulls, cents).collect()
+    for id_type in ("string", "double"):
+        bad = spark.createDataFrame([("1", [1.0, 0.0])], f"vec_id string, {vec}")
+        bad = bad.select(F.col("vec_id").cast(id_type), "embedding")
+        with pytest.raises(ValueError, match=f"are {id_type}, not integers"):
+            assign_cells_frozen_quantized(bad, cents)

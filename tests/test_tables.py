@@ -95,6 +95,13 @@ def test_merge_upsert_update_and_insert(spark, tmp_path):
     assert rows == {1: "new", 2: "keep", 3: "ins"}
     # PK stays unique after merge (the invariant the reference's dbt tests assert)
     assert t.read().groupBy("id").count().filter(F.col("count") > 1).count() == 0
+    # a bigint key past 2**53 must not be pruned against its dir's
+    # float-rounded bounds: the row is updated, not duplicated
+    big = 2**53 + 1
+    t = ParquetTable(spark, str(tmp_path / "t3big"))
+    t.overwrite(spark.createDataFrame([(big, "old")], "id bigint, val string"))
+    t.merge(spark.createDataFrame([(big, "new")], "id bigint, val string"), key="id")
+    assert [tuple(r) for r in t.read().collect()] == [(big, "new")]
 
 
 def test_merge_idempotent(spark, tmp_path):
@@ -335,6 +342,23 @@ def test_merge_all_null_source_keys_is_pure_insert(spark, tmp_path):
     t.merge(_df(spark, [(None, "nullkey", None)]), key="id")
     assert before <= set(t.data_dirs())  # every dir carried by reference
     assert t.read().count() == 31
+
+
+def test_nan_bounds_never_prune(spark, tmp_path):
+    """Spark writes a NaN max into the parquet footer, and its max()
+    aggregate returns NaN, so a dir holding NaN gets a NaN bound. It proves
+    nothing (NaN sorts above every number): neither a filtered read nor
+    a keyed MERGE may skip the dir."""
+    t = ParquetTable(spark, str(tmp_path / "nan"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, 1.0), (2, float("nan")), (3, 5.0)], "id int, x double"
+        ).coalesce(1)
+    )
+    assert t.read_where(("x", "=", 5.0)).count() == 1
+    assert t.read_where(("x", ">", 3.0)).count() == 2  # 5.0 and NaN
+    t.merge(spark.createDataFrame([(30, 5.0)], "id int, x double"), key="x")
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 30]
 
 
 def test_delete_where_conds_prunes_dirs(spark, tmp_path):
@@ -698,6 +722,27 @@ def test_merge_schema_drift_update_all_with_constraints(spark, tmp_path):
     assert out[8] == (None, "x") and out[6] == (3.0, None)
 
 
+def test_attempt_named_partitions_and_roots_keep_their_rows(spark, tmp_path):
+    """Only path components below a fresh dir are tested for uncommitted
+    ``attempt_*`` output: a partition column named ``attempt_*`` and a
+    table under an ``attempt_*`` directory are committed data, and an
+    overwrite must keep every row of them."""
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "attempt_no int, val string"
+    )
+    for root, parts in [
+        (tmp_path / "attempt_part", ["attempt_no"]),
+        (tmp_path / "attempt_7" / "t", None),
+    ]:
+        t = ParquetTable(spark, str(root), partition_by=parts)
+        t.overwrite(df)
+        t.overwrite(df)
+        assert sorted(map(tuple, t.read().select("attempt_no", "val").collect())) == [
+            (1, "a"), (2, "b"), (3, "c")
+        ]
+        assert t.read_where(("attempt_no", "=", 2)).count() == 1
+
+
 def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
     """r15: (a) narrow decimals (INT32/INT64-backed in Spark's layout) must
     not kick the whole dir's footer zonemap back to the aggregate job —
@@ -708,6 +753,9 @@ def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
     import decimal
 
     from lakehouse_architecture_for_realestatedata_spark.sources import tables as T
+    from lakehouse_architecture_for_realestatedata_spark.sources.skipping import (
+        stats_cols,
+    )
 
     t = ParquetTable(spark, str(tmp_path / "tdec"))
     df = spark.createDataFrame(
@@ -717,14 +765,17 @@ def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
         "id int, p decimal(9,2), q decimal(18,3)",
     )
     t.overwrite(df)
-    rel = t.data_dirs()[0].replace(str(tmp_path / "tdec"), "").lstrip("/")
-    footer = t._dir_stats_footers(rel)
+    path = t.data_dirs()[0]
+    rel = path.replace(str(tmp_path / "tdec"), "").lstrip("/")
+    has_rows, footer = t._footer_pass(path, stats_cols(df.schema))
+    assert has_rows
     assert footer is not None, "footer path must serve decimal dirs"
     assert footer["p"] == [decimal.Decimal("12.34"), decimal.Decimal("99.99")]
     assert footer["q"] == [decimal.Decimal("-3.500"), decimal.Decimal("1.500")]
     # footer path agrees with the aggregate fallback bit-for-bit
     monkeypatch.setattr(T, "_FOOTER_WALK_CAP", 0)
-    assert t._dir_stats_footers(rel) is None  # cap: yields to the agg job
+    has_rows, capped = t._footer_pass(path, stats_cols(df.schema))
+    assert has_rows and capped is None  # cap: yields to the agg job
     agg = t._dir_stats(rel)
     assert agg["p"] == footer["p"] and agg["q"] == footer["q"]
     assert agg["id"] == footer["id"] == [1, 3]
