@@ -1930,7 +1930,7 @@ def q_delta_identity_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b2
     """,
     doc="Row tracking end to end (sources/delta_lite.py "
-    "delta_enable_row_tracking / _stamp_row_ids / _scan_files_rowids — "
+    "delta_enable_row_tracking / _stamp_row_ids / _scan(row_ids=True) — "
     "PROTOCOL.md Row Tracking): orders keys <= 500 land as v0 in ONE "
     "ordered file, enablement (v1) backfills baseRowId 0..n1-1 onto it "
     "from its stats' numRecords, an ordered append of keys 501..800 "

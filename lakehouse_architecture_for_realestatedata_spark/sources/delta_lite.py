@@ -96,12 +96,13 @@ import time
 import uuid
 import zlib
 from dataclasses import dataclass, replace as _dc_replace
+from functools import reduce
 from typing import Any
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, MapType, StructField, StructType
 
 from lakehouse_architecture_for_realestatedata_spark.sources import skipping
 
@@ -477,7 +478,7 @@ def _to_physical_frame(
 ) -> DataFrame:
     """Project a LOGICAL-named frame onto the PHYSICAL names stored in a
     column-mapped table's data files — the write-side inverse of
-    ``_scan_files``' logical rename. ``annotated`` is the schema carrying
+    ``_scan_to_logical``. ``annotated`` is the schema carrying
     the physicalName metadata that governs this write (the table's, or
     the widened schema committed in the same transaction). Nested struct
     fields rename through the positional struct cast. Frame columns with
@@ -1166,10 +1167,11 @@ def delta_read(
     Replays the transaction log to the active file set, then hands that
     list to the ordinary parquet reader — pushdown/pruning untouched.
     Partition columns (not stored in the data files, per protocol) are
-    restored from each add action's ``partitionValues`` and cast to the
-    schema's declared types; files sharing partition values are read
-    together, so the plan has one parquet relation per partition tuple,
-    unioned — fine for the low-cardinality partitioning Delta tables use.
+    restored from each add action's ``partitionValues``, cast to the
+    schema's declared types: by Spark's own partition discovery when the
+    files sit in Hive directories that agree with the log (one parquet
+    relation for the whole table), else by per-file values (see
+    ``_scan``).
 
     Column-mapped tables (mode ``name`` — what the reference's bronze
     writer produces, load_bronze_to_table.py:93) scan under the
@@ -1191,11 +1193,7 @@ def delta_read(
         version = version_at_timestamp(path, timestamp_millis)
     snap = _replay(path, version)
     active = _pruned_files(snap, where)
-    df = (
-        _scan_files_rowids(spark, path, snap, active)
-        if with_row_ids
-        else _scan_files(spark, path, snap, active)
-    )
+    df = _scan(spark, path, snap, active, row_ids=with_row_ids)
     if where:
         df = df.filter(skipping.conds_filter(where))
     return df
@@ -1218,7 +1216,7 @@ _DV_ISIN_CAP = 100_000
 _FILE_INFO_MAP_CAP = 256
 
 
-def _dv_pairs_literal_hit(deleted_of: dict[str, list], base_of: dict[str, str]):
+def _dv_pairs_literal_hit(deleted_of: dict[str, list]):
     """Predicate: this row's (file basename, row index) is deletion-vector
     marked — spelled as per-file row-index ARRAY LITERALS behind one
     basename-keyed map lookup, so small DV sets apply as a codegen'd
@@ -1228,7 +1226,7 @@ def _dv_pairs_literal_hit(deleted_of: dict[str, list], base_of: dict[str, str]):
     for p, deleted in deleted_of.items():
         if not deleted:  # cardinality-0 descriptor: nothing to mark (and an
             continue  # empty array literal would break the map's value type)
-        fb = base_of[p]
+        fb = _basename(p)
         if "'" in fb or "\\" in fb:  # foreign layout with a hostile
             return None  # basename: caller keeps the relation path
         arr = ",".join(f"{int(i)}L" for i in deleted)
@@ -1247,38 +1245,47 @@ def _dv_pairs_literal_hit(deleted_of: dict[str, list], base_of: dict[str, str]):
 
 
 def _dv_anti_filter(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    dv_files: dict[str, dict],
-    base_of: dict[str, str],
-    total_marked: int,
+    spark: SparkSession, df: DataFrame, path: str, dv_files: dict[str, dict]
 ) -> DataFrame:
     """``df`` (carrying ``__fb``/``__ri``) without its DV-marked rows. A
     small DV set — at most ``_DV_ISIN_CAP`` marked rows over at most
     ``_FILE_INFO_MAP_CAP`` files — applies as the literal map filter;
     otherwise as ONE broadcast anti-join against the (file, row) pairs.
-    Each bitmap is loaded once, whichever path takes it."""
-    deleted_of = {
-        p: _load_deletion_vector(path, a["deletionVector"])
-        for p, a in sorted(dv_files.items())
-    }
-    if total_marked <= _DV_ISIN_CAP and len(dv_files) <= _FILE_INFO_MAP_CAP:
-        hit = _dv_pairs_literal_hit(deleted_of, base_of)
-        if hit is not None:
-            return df.filter(~hit)
-    pairs = [
-        (base_of[p], int(i)) for p, deleted in deleted_of.items() for i in deleted
-    ]
-    dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
-    return df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+    Past ``_DV_READ_PAIRS_CAP`` marked rows in total each file's bitmap
+    applies on its own (literal filter or anti-join), so peak driver
+    memory is ONE file's bitmap instead of the union of all of them —
+    bounded physics on a table whose DVs have grown huge between OPTIMIZE
+    runs. Each bitmap is loaded once, whichever path takes it."""
+    total = sum(
+        int((a["deletionVector"] or {}).get("cardinality") or 0)
+        for a in dv_files.values()
+    )
+    groups = (
+        [dv_files]
+        if total <= _DV_READ_PAIRS_CAP
+        else [{p: a} for p, a in sorted(dv_files.items())]
+    )
+    for group in groups:
+        deleted_of = {
+            p: _load_deletion_vector(path, a["deletionVector"])
+            for p, a in sorted(group.items())
+        }
+        marked = sum(len(d) for d in deleted_of.values())
+        if marked <= _DV_ISIN_CAP and len(group) <= _FILE_INFO_MAP_CAP:
+            hit = _dv_pairs_literal_hit(deleted_of)
+            if hit is not None:
+                df = df.filter(~hit)
+                continue
+        pairs = [(_basename(p), int(i)) for p, d in deleted_of.items() for i in d]
+        if pairs:
+            dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
+            df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
+    return df
 
 
-#: Total-marked-rows budget for the single-scan DV read path, which unions
-#: every touched file's bitmap into one driver-side (file, row) pair list
-#: before broadcasting it. Above the budget the scan falls back to per-file
-#: application (one bitmap in driver memory at a time) — bounded physics on
-#: a table whose DVs have grown huge between OPTIMIZE runs.
+#: Total-marked-rows budget for applying every touched file's bitmap as
+#: one driver-side (file, row) pair set; above it ``_dv_anti_filter``
+#: applies the bitmaps one file at a time.
 _DV_READ_PAIRS_CAP = 2_000_000
 
 
@@ -1569,368 +1576,230 @@ def _load_deletion_vector(table_path: str, desc: dict) -> list[int]:
     return _parse_rbm_array(data)
 
 
-def _scan_to_logical(df: DataFrame, snap: _Snapshot) -> DataFrame:
-    """Rename a PHYSICAL-named scan to the snapshot's logical names;
-    nested fields rename through the positional struct cast (Spark
-    matches struct cast fields by position, so same-shape types rename
-    for free). Identity when the table is not column-mapped."""
-    if snap.column_mapping == "none":
-        return df
-    logical = _strip_metadata(snap.schema)
+def _basename(p: str) -> str:
+    """A log path's file basename — the key row-addressed scans match
+    ``_metadata.file_path`` on (UUID-named part files: unique by
+    construction for this writer and delta-spark; the URI spelling of
+    ``_metadata.file_path`` is never reproduced driver-side)."""
+    return unquote(p).rsplit("/", 1)[-1]
+
+
+def _scan_to_logical(df: DataFrame, snap: _Snapshot, *extra: str) -> DataFrame:
+    """Project a PHYSICAL-named scan onto the snapshot's logical columns,
+    in schema order, followed by the ``extra`` columns. Column-mapped
+    names rename through a positional struct cast (Spark matches struct
+    cast fields by position, so same-shape nested types rename for free).
+    Identity when the table is not column-mapped and ``df`` already is
+    that projection."""
     phys = snap.physical_schema
+    if snap.column_mapping == "none":
+        names = [f.name for f in phys.fields] + list(extra)
+        return df if df.columns == names else df.select(*names)
+    logical = _strip_metadata(snap.schema)
     return df.select(
         *[
             F.col(pf.name).cast(lf.dataType).alias(lf.name)
             for pf, lf in zip(phys.fields, logical.fields)
-        ]
+        ],
+        *extra,
     )
 
 
-def _scan_files(
-    spark: SparkSession, path: str, snap: _Snapshot, active: dict[str, dict]
+def _attach_file_info(
+    spark: SparkSession,
+    df: DataFrame,
+    fbs: list[str],
+    info: dict[str, tuple[str, list]],
 ) -> DataFrame:
-    """Scan of exactly ``active`` (a subset of the snapshot's file set)
-    under the snapshot's LOGICAL schema — partition-column restore,
-    Hive-layout fast path, and column-mapping rename all included. The
-    shared read engine under ``delta_read`` and the file-pruned
-    ``delta_merge`` / ``delta_delete_where`` rewrites."""
+    """Attach per-file values to a row-addressed scan, keyed by its
+    ``__fb`` basename: ``info`` maps a column name to (SQL type, one value
+    per basename in ``fbs``). Up to ``_FILE_INFO_MAP_CAP`` files the
+    values are LITERAL map lookups — a pure projection, no parallelize
+    job, no broadcast exchange (r15, guide §4). A larger file set joins a
+    broadcast relation of one row per file: a 10⁶-file table must not
+    become a create_map literal that size."""
+    if len(fbs) > _FILE_INFO_MAP_CAP:
+        schema = ", ".join(["__fb string"] + [f"{c} {t}" for c, (t, _) in info.items()])
+        rows = list(zip(fbs, *[vals for _, vals in info.values()]))
+        return df.join(F.broadcast(spark.createDataFrame(rows, schema)), "__fb")
+    for c, (t, vals) in info.items():
+        lookup = F.create_map(
+            *[x for fb, v in zip(fbs, vals) for x in (F.lit(fb), F.lit(v).cast(t))]
+        )
+        df = df.withColumn(c, lookup[F.col("__fb")])
+    return df
+
+
+def _scan(
+    spark: SparkSession,
+    path: str,
+    snap: _Snapshot,
+    files: dict[str, dict],
+    address: bool = False,
+    row_ids: bool = False,
+) -> DataFrame:
+    """Scan of exactly ``files`` (a subset of the snapshot's file set)
+    under the snapshot's LOGICAL schema, deletion vectors applied — the
+    one read engine under ``delta_read``, OPTIMIZE, the change feed, the
+    rewrite paths and the deletion-vector writers.
+
+    ``address`` appends ``__fb`` / ``__ri`` (file basename, parquet row
+    index): the row addressing DV writes mark by. ``row_ids`` (row-tracked
+    tables, every file stamped) appends ``_row_id`` /
+    ``_row_commit_version`` by PROTOCOL.md's Row Tracking read rule: the
+    file's MATERIALIZED value when the row was copied in by OPTIMIZE or a
+    DV UPDATE/MERGE, else ``baseRowId + row_index`` /
+    ``defaultRowCommitVersion``. Either asks for the ROW-ADDRESSED form:
+    ONE scan relation over every file carrying ``_metadata.file_path``'s
+    basename and ``_metadata.row_index``, per-file partitionValues /
+    baseRowId / defaultRowCommitVersion attached by ``_attach_file_info``,
+    DV-marked rows removed by ``_dv_anti_filter`` — a 10⁴-file table stays
+    a single FileScan node, never a 10⁴-way union. Files are keyed by
+    basename, so a layout with colliding basenames is refused.
+
+    Otherwise files WITHOUT a deletion vector take the plain scan, and
+    DV'd files the row-addressed form with the address dropped (one piece
+    per file when a foreign layout's basenames collide — the one input a
+    basename key cannot address). The plain scan of a partitioned table
+    hands the whole file list to one relation with basePath partition
+    discovery when every file's directory re-derives exactly the log's
+    partitionValues (the layout Spark and delta-spark both write: native
+    partition pruning, one FileScan node regardless of partition count);
+    foreign layouts whose directory names are not authoritative (e.g.
+    relocated files) read one relation per partition tuple with the
+    values restored as typed literals, unioned."""
     if snap.column_mapping == "id":
         # mode=id: bind parquet columns by field id, not name — Spark's
         # native resolution (SPARK-38094) keyed off the parquet.field.id
-        # metadata physical_schema carries; scoped to schemas that carry
+        # metadata physical_schema carries; without it the name-based
+        # binding silently NULL-fills every column (the file's column
+        # names are opaque under mode=id). Scoped to schemas that carry
         # it, so every other read is untouched by this session conf.
         # Set-and-leave is deliberate: the scan is lazy, restoring before
         # the caller collects would NULL-fill every column (session.py
         # pins the conf at build for our own sessions).
         _ensure_conf(spark, "spark.sql.parquet.fieldId.read.enabled")
-    logical = _strip_metadata(snap.schema)
+    extra = ["__fb", "__ri"] if address else []
+    extra += ["_row_id", "_row_commit_version"] if row_ids else []
+    if not files:
+        return spark.createDataFrame([], _strip_metadata(snap.schema)).select(
+            "*",
+            *[
+                F.lit(None).cast("string" if c == "__fb" else "bigint").alias(c)
+                for c in extra
+            ],
+        )
     phys = snap.physical_schema
     phys_parts = snap.physical_partition_columns
-    data_schema = StructType([f for f in phys.fields if f.name not in phys_parts])
-
-    if not active:
-        return spark.createDataFrame([], logical)
-
-    dv_files = {p: a for p, a in active.items() if a.get("deletionVector")}
-    if dv_files:
-        # Reader protocol 3 deletionVectors: ALL DV'd files go through ONE
-        # scan relation carrying (_metadata.file_path, _metadata.row_index)
-        # and ONE broadcast anti-join against the deleted (file, row) pairs
-        # — never a per-file union, so 10⁴ DV'd files stay a single
-        # FileScan node. One file's small DV short-circuits to an isin
-        # literal (whole-stage-codegen'd, no join at all). The DV bitmaps
-        # themselves are log-metadata-scale (bounded by the descriptors'
-        # sizeInBytes), loaded driver-side exactly once per query. Files
-        # are keyed by BASENAME (UUID-named part files — unique by
-        # construction for both this writer and delta-spark); the URI
-        # spelling of _metadata.file_path is never reproduced driver-side.
-        # No union against an empty relation when EVERY file carries a DV:
-        # createDataFrame([], schema) is a defaultParallelism-partition
-        # PYTHON RDD, so the union added ~32 empty Python-worker partition
-        # evaluations to every DV read — and serialized them through ONE
-        # task under a downstream coalesce(1) (r15: delta_dv_purge_vacuum's
-        # OPTIMIZE went 0.3 → 8.5 s from exactly that).
-        plain = {p: a for p, a in active.items() if p not in dv_files}
-        out = _scan_files(spark, path, snap, plain) if plain else None
-        types = {f.name: f.dataType for f in phys.fields}
-        base_of = {p: unquote(p).rsplit("/", 1)[-1] for p in dv_files}
-        total_marked = sum(
-            int((a["deletionVector"] or {}).get("cardinality") or 0)
-            for a in dv_files.values()
-        )
-        if (
-            len(set(base_of.values())) != len(base_of)
-            or total_marked > _DV_READ_PAIRS_CAP
-        ):
-            # Per-file application: correct for ANY naming (colliding
-            # foreign basenames) and the bounded-driver path when the
-            # descriptors' total cardinality exceeds the pairs budget —
-            # peak driver memory is ONE file's bitmap at a time instead
-            # of the union of all of them. Each file's marks apply as an
-            # isin literal when small, a broadcast anti-join otherwise.
-            for p, add in sorted(dv_files.items()):
-                deleted = _load_deletion_vector(path, add["deletionVector"])
-                one = spark.read.schema(data_schema).parquet(
-                    _abs_data_path(path, p)
-                )
-                one = one.withColumn("__ri", F.col("_metadata.row_index"))
-                if len(deleted) <= _DV_ISIN_CAP:
-                    one = one.filter(~F.col("__ri").isin(deleted))
-                else:
-                    dv_df = spark.createDataFrame(
-                        [(int(i),) for i in deleted], "__ri bigint"
-                    )
-                    one = one.join(F.broadcast(dv_df), "__ri", "left_anti")
-                one = one.drop("__ri")
-                pv = add.get("partitionValues") or {}
-                for c in phys_parts:
-                    one = one.withColumn(c, F.lit(pv.get(c)).cast(types[c]))
-                piece = _scan_to_logical(
-                    one.select(*[f.name for f in phys.fields]), snap
-                )
-                out = piece if out is None else out.unionByName(piece)
-            return out
-        files = [_abs_data_path(path, p) for p in sorted(dv_files)]
-        df = spark.read.schema(data_schema).parquet(*files).select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__fb"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        if len(dv_files) == 1:
-            ((p, add),) = dv_files.items()
-            deleted = _load_deletion_vector(path, add["deletionVector"])
-            if len(deleted) <= _DV_ISIN_CAP:
-                df = df.filter(~F.col("__ri").isin(deleted))
-            else:
-                dv_df = spark.createDataFrame(
-                    [(i,) for i in deleted], "__ri bigint"
-                )
-                df = df.join(F.broadcast(dv_df), "__ri", "left_anti")
-        else:
-            df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
-        # partition restore: per-file partitionValues keyed by basename (a
-        # map lookup expression, not a per-file plan branch)
-        if phys_parts:
-            for c in phys_parts:
-                mapping = F.create_map(
-                    *[
-                        x
-                        for p, a in sorted(dv_files.items())
-                        for x in (
-                            F.lit(base_of[p]),
-                            F.lit((a.get("partitionValues") or {}).get(c)),
-                        )
-                    ]
-                )
-                df = df.withColumn(c, mapping[F.col("__fb")].cast(types[c]))
-        df = df.drop("__fb", "__ri").select(*[f.name for f in phys.fields])
-        dv_side = _scan_to_logical(df, snap)
-        return dv_side if out is None else out.unionByName(dv_side)
-
-    def to_logical(df: DataFrame) -> DataFrame:
-        return _scan_to_logical(df, snap)
-
-    if not phys_parts:
-        files = [_abs_data_path(path, p) for p in active]
-        return to_logical(spark.read.schema(data_schema).parquet(*files))
-    # Hive-layout fast path: when every file's directory name re-derives
-    # exactly the log's partitionValues (the layout Spark and delta-spark
-    # both write), hand the WHOLE file list to one scan relation with
-    # basePath partition discovery — one FileScan node regardless of
-    # partition count, with native partition pruning. A 100 TB table with
-    # 10⁴ partition tuples must not become a 10⁴-way union plan.
-    if _hive_layout_consistent(snap, phys_parts, active):
-        files = [_abs_data_path(path, p) for p in active]
-        return to_logical(
-            spark.read.schema(phys)
-            .option("basePath", path)
-            .parquet(*files)
-            .select(*[f.name for f in phys.fields])
-        )
-    # Fallback (foreign layouts where partitionValues are authoritative but
-    # dir names are not, e.g. relocated files): group files by partition
-    # tuple and restore values as typed literals — one relation per tuple,
-    # unioned; correct for any layout, sized for low-cardinality tables.
-    by_pv: dict[tuple, list[str]] = {}
-    for p, add in active.items():
-        pv = add.get("partitionValues") or {}
-        key = tuple(pv.get(c) for c in phys_parts)
-        by_pv.setdefault(key, []).append(_abs_data_path(path, p))
     types = {f.name: f.dataType for f in phys.fields}
-    parts = []
-    for key, files in sorted(by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        df = spark.read.schema(data_schema).parquet(*files)
-        for c, raw in zip(phys_parts, key):
-            df = df.withColumn(
-                c, F.lit(raw).cast(types[c])  # protocol stores strings; null stays null
+    data_fields = [f for f in phys.fields if f.name not in phys_parts]
+
+    if not extra:
+        dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
+        plain = {p: a for p, a in files.items() if p not in dv_files}
+        pieces: list[DataFrame] = []
+        if plain:
+            paths = [_abs_data_path(path, p) for p in plain]
+            if not phys_parts:
+                df = spark.read.schema(StructType(data_fields)).parquet(*paths)
+            elif _hive_layout_consistent(snap, phys_parts, plain):
+                df = spark.read.schema(phys).option("basePath", path).parquet(*paths)
+            else:
+                by_pv: dict[tuple, list[str]] = {}
+                for p, add in plain.items():
+                    pv = add.get("partitionValues") or {}
+                    key = tuple(pv.get(c) for c in phys_parts)
+                    by_pv.setdefault(key, []).append(_abs_data_path(path, p))
+                parts = []
+                for key, group in sorted(
+                    by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))
+                ):
+                    one = spark.read.schema(StructType(data_fields)).parquet(*group)
+                    for c, raw in zip(phys_parts, key):
+                        # protocol stores strings; null stays null
+                        one = one.withColumn(c, F.lit(raw).cast(types[c]))
+                    parts.append(one)
+                df = reduce(DataFrame.unionByName, parts)
+            pieces.append(_scan_to_logical(df, snap))
+        if dv_files:
+            # No union against an empty relation when EVERY file carries
+            # a DV: createDataFrame([], schema) is a defaultParallelism-
+            # partition PYTHON RDD, serialized through ONE task under a
+            # downstream coalesce(1) (r15: an OPTIMIZE went 0.3 → 8.5 s).
+            groups = (
+                [dv_files]
+                if len({_basename(p) for p in dv_files}) == len(dv_files)
+                else [{p: a} for p, a in sorted(dv_files.items())]
             )
-        parts.append(df.select(*[f.name for f in phys.fields]))
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionByName(df)
-    return to_logical(out)
+            pieces += [
+                _scan(spark, path, snap, g, address=True).drop("__fb", "__ri")
+                for g in groups
+            ]
+        return reduce(DataFrame.unionByName, pieces)
 
-
-def _scan_files_rowids(
-    spark: SparkSession, path: str, snap: _Snapshot, active: dict[str, dict]
-) -> DataFrame:
-    """Scan of ``active`` under the LOGICAL schema plus the row-tracking
-    columns ``_row_id`` / ``_row_commit_version`` (PROTOCOL.md Row
-    Tracking read rule: the file's MATERIALIZED value when the row was
-    copied in by OPTIMIZE, else ``baseRowId + row_index`` /
-    ``defaultRowCommitVersion``). ONE scan relation for every file and
-    ONE broadcast join against the per-file (baseRowId,
-    defaultRowCommitVersion, partitionValues) table — a 10⁶-file table
-    joins a 10⁶-row broadcast side, never a 10⁶-way union plan or a
-    create_map literal that size. Deletion vectors apply exactly like
-    the main path (pair anti-join under the budget, per-file application
-    above it)."""
-    from pyspark.sql.types import LongType
-
-    logical = _strip_metadata(snap.schema)
-    empty = spark.createDataFrame([], logical)
-    if not active:
-        return empty.select(
-            "*",
-            F.lit(None).cast("bigint").alias("_row_id"),
-            F.lit(None).cast("bigint").alias("_row_commit_version"),
-        )
-    missing = sorted(
-        p for p, a in active.items() if a.get("baseRowId") is None
-    )
-    if missing:
+    ordered = sorted(files)
+    fbs = [_basename(p) for p in ordered]
+    if len(set(fbs)) != len(fbs):
         raise DeltaProtocolError(
-            f"{path}: row-id read needs baseRowId on every active file; "
-            f"missing on {missing[:3]}{'...' if len(missing) > 3 else ''} "
-            "(enable row tracking with delta_enable_row_tracking — its "
-            "backfill stamps existing files)"
-        )
-    if snap.column_mapping == "id":
-        # mode=id: bind parquet columns by field id, exactly like
-        # _scan_files — the physical_schema fields below carry the
-        # parquet.field.id metadata, so without this conf the name-based
-        # binding silently NULL-fills every data column (the file's
-        # column names are opaque under mode=id) while the plain read
-        # and the Arrow format path return correct data. Set-and-leave
-        # (lazy scan — see _scan_files); session.py pins it at build.
-        _ensure_conf(spark, "spark.sql.parquet.fieldId.read.enabled")
-    conf = snap.configuration or {}
-    rid_col = conf.get(_ROW_ID_COL_KEY)
-    rcv_col = conf.get(_ROW_CV_COL_KEY)
-    phys = snap.physical_schema
-    phys_parts = snap.physical_partition_columns
-    scan_fields = [f for f in phys.fields if f.name not in phys_parts]
-    # absent in pre-materialization files → Spark fills NULL, exactly the
-    # coalesce the protocol's read rule wants
-    if rid_col:
-        scan_fields.append(StructField(rid_col, LongType(), True))
-    if rcv_col:
-        scan_fields.append(StructField(rcv_col, LongType(), True))
-    base_of = {p: unquote(p).rsplit("/", 1)[-1] for p in active}
-    if len(set(base_of.values())) != len(base_of):
-        raise DeltaProtocolError(
-            f"{path}: row-id read addresses files by basename; this "
+            f"{path}: a row-addressed read keys files by basename; this "
             "layout has colliding basenames"
         )
-    df = spark.read.schema(StructType(scan_fields)).parquet(
-        *[_abs_data_path(path, p) for p in sorted(active)]
+    adds = [files[p] for p in ordered]
+    info = {
+        f"__pv{i}": ("string", [(a.get("partitionValues") or {}).get(c) for a in adds])
+        for i, c in enumerate(phys_parts)
+    }
+    rid_col = rcv_col = None
+    if row_ids:
+        missing = sorted(p for p, a in files.items() if a.get("baseRowId") is None)
+        if missing:
+            raise DeltaProtocolError(
+                f"{path}: row-id read needs baseRowId on every active file; "
+                f"missing on {missing[:3]}{'...' if len(missing) > 3 else ''} "
+                "(enable row tracking with delta_enable_row_tracking — its "
+                "backfill stamps existing files)"
+            )
+        conf = snap.configuration or {}
+        rid_col, rcv_col = conf.get(_ROW_ID_COL_KEY), conf.get(_ROW_CV_COL_KEY)
+        # absent in pre-materialization files → Spark fills NULL, exactly
+        # the coalesce the protocol's read rule wants
+        data_fields += [
+            StructField(c, LongType(), True) for c in (rid_col, rcv_col) if c
+        ]
+        info["__base"] = ("bigint", [int(a["baseRowId"]) for a in adds])
+        info["__dcv"] = (
+            "bigint",
+            [
+                None if a.get("defaultRowCommitVersion") is None
+                else int(a["defaultRowCommitVersion"])
+                for a in adds
+            ],
+        )
+    df = spark.read.schema(StructType(data_fields)).parquet(
+        *[_abs_data_path(path, p) for p in ordered]
     ).select(
         "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-            "__fb"
-        ),
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__fb"),
         F.col("_metadata.row_index").alias("__ri"),
     )
-    if len(active) <= _FILE_INFO_MAP_CAP:
-        # Bounded file set: attach (baseRowId, defaultRowCommitVersion,
-        # partitionValues) as LITERAL basename-keyed map lookups — a pure
-        # projection, no local-relation build, no broadcast exchange, no
-        # join (r15, guide §4: the createDataFrame + broadcast attach paid
-        # a parallelize job + a broadcast stage per read). The big-table
-        # path below is unchanged: a 10⁶-file table still joins a
-        # 10⁶-row broadcast side, never a create_map literal that size.
-        base_map = F.create_map(
-            *[
-                x
-                for p, a in sorted(active.items())
-                for x in (
-                    F.lit(base_of[p]),
-                    F.lit(int(a["baseRowId"])).cast("bigint"),
-                )
-            ]
-        )
-        dcv_map = F.create_map(
-            *[
-                x
-                for p, a in sorted(active.items())
-                for x in (
-                    F.lit(base_of[p]),
-                    F.lit(
-                        int(a["defaultRowCommitVersion"])
-                        if a.get("defaultRowCommitVersion") is not None
-                        else None
-                    ).cast("bigint"),
-                )
-            ]
-        )
-        df = df.withColumn("__base", base_map[F.col("__fb")]).withColumn(
-            "__dcv", dcv_map[F.col("__fb")]
-        )
-        for i, c in enumerate(phys_parts):
-            pv_map = F.create_map(
-                *[
-                    x
-                    for p, a in sorted(active.items())
-                    for x in (
-                        F.lit(base_of[p]),
-                        F.lit((a.get("partitionValues") or {}).get(c)),
-                    )
-                ]
-            )
-            df = df.withColumn(f"__pv{i}", pv_map[F.col("__fb")])
-    else:
-        info_schema = "__fb string, __base bigint, __dcv bigint" + "".join(
-            f", __pv{i} string" for i in range(len(phys_parts))
-        )
-        info_rows = [
-            (
-                base_of[p],
-                int(a["baseRowId"]),
-                (
-                    int(a["defaultRowCommitVersion"])
-                    if a.get("defaultRowCommitVersion") is not None
-                    else None
-                ),
-                *[
-                    (a.get("partitionValues") or {}).get(c)
-                    for c in phys_parts
-                ],
-            )
-            for p, a in sorted(active.items())
-        ]
-        df = df.join(
-            F.broadcast(spark.createDataFrame(info_rows, info_schema)), "__fb"
-        )
-    dv_files = {p: a for p, a in active.items() if a.get("deletionVector")}
-    total_marked = sum(
-        int((a["deletionVector"] or {}).get("cardinality") or 0)
-        for a in dv_files.values()
-    )
-    if dv_files and total_marked <= _DV_READ_PAIRS_CAP:
-        df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
-    elif dv_files:
-        # over the pairs budget: one file's bitmap in (Python) driver
-        # memory at a time, applied as its own anti-join — same bounded
-        # discipline as the main DV read's per-file fallback
-        for p, a in sorted(dv_files.items()):
-            deleted = _load_deletion_vector(path, a["deletionVector"])
-            dv_df = spark.createDataFrame(
-                [(base_of[p], int(i)) for i in deleted],
-                "__fb string, __ri bigint",
-            )
-            df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
-    rid = F.col("__base") + F.col("__ri")
-    if rid_col:
-        rid = F.coalesce(F.col(rid_col), rid)
-    rcv = F.col("__dcv")
-    if rcv_col:
-        rcv = F.coalesce(F.col(rcv_col), rcv)
-    df = df.withColumn("_row_id", rid.cast("bigint")).withColumn(
-        "_row_commit_version", rcv.cast("bigint")
-    )
-    types = {f.name: f.dataType for f in phys.fields}
+    if info:
+        df = _attach_file_info(spark, df, fbs, info)
+    dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
+    if dv_files:
+        df = _dv_anti_filter(spark, df, path, dv_files)
     for i, c in enumerate(phys_parts):
         df = df.withColumn(c, F.col(f"__pv{i}").cast(types[c]))
-    if snap.column_mapping != "none":
-        cols = [
-            F.col(pf.name).cast(lf.dataType).alias(lf.name)
-            for pf, lf in zip(phys.fields, logical.fields)
-        ]
-    else:
-        cols = [F.col(f.name) for f in phys.fields]
-    return df.select(*cols, "_row_id", "_row_commit_version")
+    if row_ids:
+        rid = F.col("__base") + F.col("__ri")
+        rcv = F.col("__dcv")
+        if rid_col:
+            rid = F.coalesce(F.col(rid_col), rid)
+        if rcv_col:
+            rcv = F.coalesce(F.col(rcv_col), rcv)
+        df = df.withColumn("_row_id", rid.cast("bigint")).withColumn(
+            "_row_commit_version", rcv.cast("bigint")
+        )
+    return _scan_to_logical(df, snap, *extra)
 
 
 def _pruned_files(snap: _Snapshot, where: list[tuple] | None) -> dict[str, dict]:
@@ -2031,76 +1900,31 @@ def delta_restore(spark: SparkSession, path: str, version: int) -> int:
             f"were vacuumed ({missing[:3]}...)"
         )
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": "RESTORE",
-        "operationParameters": {"version": version},
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
+    actions: list[dict] = []
     if target.schema.json() != snap.schema.json() or (
         target.configuration or {}
     ) != (snap.configuration or {}):
         actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": target.schema.json(),
-                    "partitionColumns": target.partition_columns,
-                    "configuration": target.configuration,
-                }
-            }
+            _metadata_action(
+                target.schema.json(), target.partition_columns, target.configuration
+            )
         )
     for p2, add_action in sorted(snap.files.items()):
         t_add = target.files.get(p2)
         if t_add is None:
-            actions.append(
-                {
-                    "remove": _carry_row_ids(
-                        {
-                            "path": p2,
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": add_action.get(
-                                "partitionValues", {}
-                            ),
-                        },
-                        add_action,
-                    )
-                }
-            )
+            actions.append(_remove_action(p2, add_action, now))
         elif t_add.get("deletionVector") != add_action.get("deletionVector"):
             # same file, different (or no) DV at the target version: the
             # restored state must carry the TARGET's bitmap
-            actions.append(
-                {
-                    "remove": _carry_row_ids(
-                        {
-                            "path": p2,
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": add_action.get(
-                                "partitionValues", {}
-                            ),
-                        },
-                        add_action,
-                    )
-                }
-            )
+            actions.append(_remove_action(p2, add_action, now))
             actions.append({"add": t_add | {"dataChange": True}})
     for p2, t_add in sorted(target.files.items()):
         if p2 not in snap.files:
             actions.append({"add": t_add | {"dataChange": True}})
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path, latest + 1, now, "RESTORE", {"version": version}, actions,
+        snap.configuration,
     )
-    new_version = latest + 1
-    _claim_version(_log_dir(path), new_version, payload)
-    return new_version
 
 
 def delta_clone(spark: SparkSession, src: str, dst: str) -> int:
@@ -2120,29 +1944,12 @@ def delta_clone(spark: SparkSession, src: str, dst: str) -> int:
     now = int(time.time() * 1000)
     actions: list[dict] = [
         {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src,
-                    "sourceVersion": latest,
-                },
-                "engineInfo": "delta-lite",
-            }
-        },
-        {
             "protocol": snap.protocol
             or {"minReaderVersion": 1, "minWriterVersion": 2}
         },
-        {
-            "metaData": {
-                "id": uuid.uuid4().hex,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": snap.configuration,
-            }
-        },
+        _metadata_action(
+            snap.schema.json(), snap.partition_columns, snap.configuration
+        ),
     ]
     for p2, add_action in sorted(snap.files.items()):
         abs_uri = Path(_abs_data_path(src, p2)).as_uri()
@@ -2170,11 +1977,12 @@ def delta_clone(spark: SparkSession, src: str, dst: str) -> int:
         }
         for dom, cfg in sorted((snap.domains or {}).items())
     ]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    # no table configuration passed: the clone's v0 stamps no
+    # inCommitTimestamp
+    return _commit(
+        dst, 0, now, "CLONE", {"source": src, "sourceVersion": latest}, actions,
+        None,
     )
-    _claim_version(_log_dir(dst), 0, payload)
-    return 0
 
 
 #: dtypes delta_profile serves exactly from add-action stats. Strings are
@@ -2375,6 +2183,56 @@ def _claim_version(log: str, version: int, payload: str) -> None:
         # because its advisory checksum could not be computed — e.g. a
         # test fixture claiming a deliberately-corrupt payload
         pass
+
+
+def _commit(
+    path: str,
+    version: int,
+    now: int,
+    op: str,
+    params: dict,
+    actions: list[dict],
+    conf: dict | None,
+    metrics: dict[str, str] | None = None,
+    ict: int | None = None,
+    spark: SparkSession | None = None,
+    checkpoint_interval: int = 0,
+) -> int:
+    """The one commit writer: ``commitInfo`` (operation, parameters,
+    optional ``operationMetrics``, ``engineInfo``, and the
+    ``inCommitTimestamp`` when ``conf`` enables
+    ``delta.enableInCommitTimestamps`` — ``ict`` pins it when the caller
+    already derived it) followed by ``actions`` in order, one JSON line
+    each, claimed put-if-absent as ``version`` (``_claim_version``). A
+    lost race raises ``ConcurrentDeltaCommitError``; whether to rebase
+    and retry is the caller's call. ``checkpoint_interval`` (0: never)
+    checkpoints every N-th version, overridden by the table's
+    ``delta.checkpointInterval`` — validated BEFORE the claim, so a
+    nonsense value fails the write cleanly instead of committing and then
+    raising (a retrying caller would append twice). Returns ``version``."""
+    ci: dict[str, Any] = {
+        "timestamp": now,
+        "operation": op,
+        "operationParameters": params,
+    }
+    if metrics is not None:
+        ci["operationMetrics"] = metrics
+    ci["engineInfo"] = "delta-lite"
+    if ict is None:
+        ict = _ict_for_commit(path, conf, version - 1 if version else None, now)
+    if ict is not None:
+        ci["inCommitTimestamp"] = ict
+    every = (
+        _checkpoint_interval(conf, checkpoint_interval) if checkpoint_interval else 0
+    )
+    payload = "".join(
+        json.dumps(a, separators=(",", ":")) + "\n"
+        for a in [{"commitInfo": ci}, *actions]
+    )
+    _claim_version(_log_dir(path), version, payload)
+    if every and version and version % every == 0:
+        _write_checkpoint(spark, path, version)
+    return version
 
 
 def _write_version_checksum(log: str, version: int, payload: str) -> None:
@@ -2726,14 +2584,42 @@ def _op_metrics(
     return m
 
 
-def _carry_row_ids(rm: dict, add: dict) -> dict:
-    """remove actions on row-tracked tables carry the removed file's
+def _remove_action(p: str, add: dict, now: int, data_change: bool = True) -> dict:
+    """The ``remove`` action retiring active file ``p`` (whose add action
+    is ``add``). On row-tracked tables it carries the file's
     baseRowId/defaultRowCommitVersion (the spec's recommendation, so
     vacuum-window readers can still address the rows)."""
+    rm = {
+        "path": p,
+        "deletionTimestamp": now,
+        "dataChange": data_change,
+        "partitionValues": add.get("partitionValues", {}),
+    }
     if "baseRowId" in add:
         rm["baseRowId"] = add["baseRowId"]
         rm["defaultRowCommitVersion"] = add.get("defaultRowCommitVersion")
-    return rm
+    return {"remove": rm}
+
+
+def _metadata_action(
+    schema_json: str,
+    partition_columns: list[str],
+    configuration: dict | None,
+    created_time: int | None = None,
+) -> dict:
+    """A ``metaData`` action under a fresh table-metadata id (every
+    schema/configuration change mints one, as delta-spark does);
+    ``created_time`` is stamped on the creating commit only."""
+    md: dict[str, Any] = {
+        "id": uuid.uuid4().hex,
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": schema_json,
+        "partitionColumns": partition_columns,
+        "configuration": configuration,
+    }
+    if created_time is not None:
+        md["createdTime"] = created_time
+    return {"metaData": md}
 
 
 def _write_checkpoint(spark: SparkSession, path: str, version: int) -> None:
@@ -2765,19 +2651,11 @@ def _write_checkpoint(spark: SparkSession, path: str, version: int) -> None:
         "readerFeatures": proto.get("readerFeatures"),
         "writerFeatures": proto.get("writerFeatures"),
     }
-    rows = [
-        base | {"protocol": proto_row},
-        base
-        | {
-            "metaData": {
-                "id": "delta-lite",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": snap.configuration,
-            }
-        },
-    ]
+    meta = _metadata_action(
+        snap.schema.json(), snap.partition_columns, snap.configuration
+    )
+    meta["metaData"]["id"] = "delta-lite"  # the snapshot keeps no metadata id
+    rows = [base | {"protocol": proto_row}, base | meta]
     rows += [
         base
         | {
@@ -3395,66 +3273,23 @@ def delta_write(
                 "while committing already-written files"
             )
         now = int(time.time() * 1000)
-        ci: dict[str, Any] = {
-            "timestamp": now,
-            "operation": "WRITE",
-            "operationParameters": {"mode": mode.upper()},
-            "operationMetrics": _op_metrics(
-                adds,
-                removed=len(prior_files) if mode == "overwrite" else 0,
-            ),
-            "engineInfo": "delta-lite",
-        }
-        ict = _ict_for_commit(path, meta_configuration, latest, now)
-        if ict is not None:
-            ci["inCommitTimestamp"] = ict
-        actions = [{"commitInfo": ci}]
+        actions: list[dict] = []
         if version == 0:
             actions.append({"protocol": create_protocol})
             actions.append(
-                {
-                    "metaData": {
-                        "id": uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": annotated.json(),
-                        "partitionColumns": pcols,
-                        "configuration": meta_configuration,
-                        "createdTime": now,
-                    }
-                }
+                _metadata_action(
+                    annotated.json(), pcols, meta_configuration, created_time=now
+                )
             )
         elif meta_schema_json is not None:
             # schema evolution rides the same commit (mergeSchema widen on
             # append; implicit overwriteSchema on overwrite) — table
             # configuration (incl. constraints) is preserved
             actions.append(
-                {
-                    "metaData": {
-                        "id": uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": meta_schema_json,
-                        "partitionColumns": pcols,
-                        "configuration": meta_configuration,
-                    }
-                }
+                _metadata_action(meta_schema_json, pcols, meta_configuration)
             )
-        if mode == "overwrite" and prior_files:
-            for p, add in prior_files.items():
-                actions.append(
-                    {
-                        "remove": _carry_row_ids(
-                            {
-                                "path": p,
-                                "deletionTimestamp": now,
-                                "dataChange": True,
-                                "partitionValues": add.get(
-                                    "partitionValues", {}
-                                ),
-                            },
-                            add,
-                        )
-                    }
-                )
+        if mode == "overwrite":
+            actions += [_remove_action(p, a, now) for p, a in prior_files.items()]
         # row tracking: every add on a tracked table gets a fresh row-id
         # range; the high-water-mark domain action rides the same commit.
         # Stamped per attempt — a lost race re-reads the winner's mark.
@@ -3464,28 +3299,22 @@ def delta_write(
         if dm is not None:
             actions.append(dm)
         actions += [{"add": a} for a in adds]
-        payload = (
-            "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-        )
-        # delta.checkpointInterval (the property delta-spark honors)
-        # overrides the caller's default when the table sets it —
-        # validated BEFORE the claim, so a nonsense value fails the
-        # write cleanly instead of committing and then raising (a
-        # retrying caller would append twice)
-        eff_interval = (
-            _checkpoint_interval(meta_configuration, checkpoint_interval)
-            if checkpoint_interval
-            else 0
-        )
         try:
-            _claim_version(_log_dir(path), version, payload)
+            # delta.checkpointInterval (the property delta-spark honors)
+            # overrides the caller's default when the table sets it
+            return _commit(
+                path, version, now, "WRITE", {"mode": mode.upper()}, actions,
+                meta_configuration,
+                metrics=_op_metrics(
+                    adds, removed=len(prior_files) if mode == "overwrite" else 0
+                ),
+                spark=spark,
+                checkpoint_interval=checkpoint_interval,
+            )
         except ConcurrentDeltaCommitError:
             if mode != "append" or attempt == max_retries:
                 raise
-            continue  # blind append: rebase on the winner's state and re-claim
-        if eff_interval and version and version % eff_interval == 0:
-            _write_checkpoint(spark, path, version)
-        return version
+            # blind append: rebase on the winner's state and re-claim
     raise ConcurrentDeltaCommitError(f"gave up after {max_retries} retries")
 
 
@@ -3587,11 +3416,11 @@ def delta_optimize(
         # files under the table's recorded physical column names (the
         # protocol's preservation rule; readers coalesce these first)
         rid_col, rcv_col = _materialized_rt_cols(snap, path, "OPTIMIZE")
-        df = _scan_files_rowids(spark, path, snap, rewrite).withColumnRenamed(
+        df = _scan(spark, path, snap, rewrite, row_ids=True).withColumnRenamed(
             "_row_id", rid_col
         ).withColumnRenamed("_row_commit_version", rcv_col)
     else:
-        df = _scan_files(spark, path, snap, rewrite)
+        df = _scan(spark, path, snap, rewrite)
     if cluster_cols:
         from lakehouse_architecture_for_realestatedata_spark.plans.layout import (
             cluster_by,
@@ -3624,38 +3453,8 @@ def delta_optimize(
         # skip already-clustered files
         adds = [a | {"clusteringProvider": "liquid"} for a in adds]
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": "OPTIMIZE",
-        "operationParameters": {
-            "targetBytes": target_bytes,
-            "clusterBy": list(cluster_cols or []),
-            "zOrder": bool(zorder and cluster_cols),
-            "curve": curve if cluster_cols else None,
-            "incremental": bool(incremental),
-        },
-        "operationMetrics": _op_metrics(adds, removed=len(rewrite)),
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
     version = latest + 1
-    actions: list[dict] = [{"commitInfo": ci}]
-    actions += [
-        {
-            "remove": _carry_row_ids(
-                {
-                    "path": p,
-                    "deletionTimestamp": now,
-                    "dataChange": False,
-                    "partitionValues": add.get("partitionValues", {}),
-                },
-                add,
-            )
-        }
-        for p, add in rewrite.items()
-    ]
+    actions = [_remove_action(p, a, now, data_change=False) for p, a in rewrite.items()]
     # the compacted files still need fresh baseRowId ranges (every add on
     # a tracked table must carry one, and materialized values take
     # precedence on read — the fresh range is never observed)
@@ -3663,18 +3462,24 @@ def delta_optimize(
     if dm is not None:
         actions.append(dm)
     actions += [{"add": a | {"dataChange": False}} for a in adds]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path,
+        version,
+        now,
+        "OPTIMIZE",
+        {
+            "targetBytes": target_bytes,
+            "clusterBy": list(cluster_cols or []),
+            "zOrder": bool(zorder and cluster_cols),
+            "curve": curve if cluster_cols else None,
+            "incremental": bool(incremental),
+        },
+        actions,
+        snap.configuration,
+        metrics=_op_metrics(adds, removed=len(rewrite)),
+        spark=spark,
+        checkpoint_interval=checkpoint_interval,
     )
-    eff_interval = (  # validated before the claim — see delta_write
-        _checkpoint_interval(snap.configuration, checkpoint_interval)
-        if checkpoint_interval
-        else 0
-    )
-    _claim_version(_log_dir(path), version, payload)
-    if eff_interval and version % eff_interval == 0:
-        _write_checkpoint(spark, path, version)
-    return version
 
 
 def _files_overlapping_keys(
@@ -3734,64 +3539,33 @@ def _commit_rewrite(
         else []
     )
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": op,
-        "operationParameters": operation_parameters or {},
-        "operationMetrics": _op_metrics(adds, removed=len(touched)),
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
+    actions: list[dict] = []
     if schema_json is not None and schema_json != snap.schema.json():
         actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_json,
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": (
-                        configuration
-                        if configuration is not None
-                        else snap.configuration
-                    ),
-                }
-            }
-        )
-    actions += [
-        {
-            "remove": _carry_row_ids(
-                {
-                    "path": p,
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                    "partitionValues": snap.files[p].get(
-                        "partitionValues", {}
-                    ),
-                },
-                snap.files[p],
+            _metadata_action(
+                schema_json,
+                snap.partition_columns,
+                configuration if configuration is not None else snap.configuration,
             )
-        }
-        for p in touched
-    ]
+        )
+    actions += [_remove_action(p, snap.files[p], now) for p in touched]
     version = latest + 1
-    # row tracking: rewritten rows get FRESH ids (protocol-legal — this
-    # writer does not preserve ids through data-changing rewrites; the
-    # DV paths, which delta.enableDeletionVectors routes these ops to,
-    # preserve untouched rows' ids by construction)
+    # row tracking: every row this rewrite writes, carried or changed,
+    # gets a FRESH id from the new files' baseRowId ranges (protocol-
+    # legal; ids are not preserved here). The DV paths preserve them —
+    # unmatched rows stay in their files and DV UPDATE/MERGE materialize
+    # matched rows' old ids — so a DV table loses ids only when an
+    # operation falls back here (over the DV write budget, colliding
+    # basenames, or DVs past the read-pairs budget).
     dm = _stamp_row_ids(path, snap, adds, version)
     if dm is not None:
         actions.append(dm)
     actions += [{"add": a} for a in adds]
     actions += [{"cdc": c} for c in cdcs]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path, version, now, op, operation_parameters or {}, actions,
+        snap.configuration, metrics=_op_metrics(adds, removed=len(touched)),
     )
-    _claim_version(_log_dir(path), version, payload)
-    return version
 
 
 def delta_merge(
@@ -3848,24 +3622,16 @@ def delta_merge(
         if v is not None:
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
-    target = _scan_files(spark, path, snap, {p: snap.files[p] for p in touched})
+    target = _scan(spark, path, snap, {p: snap.files[p] for p in touched})
     changes = None
     if when_matched == "update_all":
         kept = target.join(source.select(*keys), on=keys, how="left_anti")
         if _cdf_enabled(snap):
-            pre = target.join(source.select(*keys), on=keys, how="left_semi")
-            post = source.join(target.select(*keys), on=keys, how="left_semi")
-            ins = source.join(target.select(*keys), on=keys, how="left_anti")
-            changes = (
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post.withColumn("_change_type", F.lit("update_postimage")),
-                    allowMissingColumns=True,
-                )
-                .unionByName(
-                    ins.withColumn("_change_type", F.lit("insert")),
-                    allowMissingColumns=True,
-                )
+            changes = _merge_changes(
+                target.join(source.select(*keys), on=keys, how="left_semi"),
+                target,
+                source,
+                keys,
             )
     elif when_matched == "keep_target":  # insert-only merge
         source = source.join(target.select(*keys), on=keys, how="left_anti")
@@ -3874,157 +3640,27 @@ def delta_merge(
             changes = source.withColumn("_change_type", F.lit("insert"))
     else:
         raise ValueError(f"unknown when_matched={when_matched!r}")
-    out = kept.unionByName(source, allowMissingColumns=True)
-    # Widen by APPENDING genuinely-new source columns to the original
-    # snap.schema — never re-derive the whole schema from the union, which
-    # would strip field metadata (delta.invariants) and erase NOT NULL
-    # markers on a plain merge with no new columns. Existing columns are
-    # cast back to their declared types (Delta casts source → target).
-    existing = {f.name: f for f in snap.schema.fields}
-    new_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in out.schema.fields
-        if f.name not in existing
-    ]
-    conf_override = None
-    if new_fields and snap.column_mapping != "none":
-        # new columns on a column-mapped table mint physicalName/id
-        # annotations and bump maxColumnId, exactly like a widening append
-        start = int((snap.configuration or {}).get(_MAX_ID_KEY, 0))
-        minted, max_id = _mint_column_mapping(StructType(new_fields), start)
-        new_fields = list(minted.fields)
-        conf_override = dict(snap.configuration or {})
-        conf_override[_MAX_ID_KEY] = str(max_id)
-    merged_schema = StructType(list(snap.schema.fields) + new_fields)
-    proj = [
-        F.col(f.name).cast(existing[f.name].dataType).alias(f.name)
-        if f.name in existing
-        else F.col(f.name)
-        for f in merged_schema.fields
-    ]
+    widened, conf_override, out, changes = _merge_schema(
+        snap, kept.unionByName(source, allowMissingColumns=True), changes
+    )
     return _commit_rewrite(
         spark,
         path,
         latest,
         snap,
         touched,
-        out.select(*proj),
+        out,
         op="MERGE",
         # metaData is emitted ONLY when the merge actually added columns;
         # a no-new-columns merge must leave schemaString byte-identical
-        schema_json=merged_schema.json() if new_fields else None,
+        schema_json=widened.json() if widened is not None else None,
         operation_parameters={
             "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
             "matchedAction": when_matched,
         },
-        changes=(
-            # conform the change frame to the merged schema (a source-only
-            # insert frame may lack old target columns and vice versa)
-            spark.createDataFrame([], _strip_metadata(merged_schema))
-            .withColumn("_change_type", F.lit(None).cast("string"))
-            .unionByName(changes, allowMissingColumns=True)
-            if changes is not None
-            else None
-        ),
+        changes=changes,
         configuration=conf_override,
     )
-
-
-def _scan_with_rowpos(
-    spark: SparkSession,
-    path: str,
-    snap: _Snapshot,
-    files: dict[str, dict],
-    with_row_ids: bool = False,
-) -> DataFrame:
-    """Logical-named scan of exactly ``files`` carrying ``__fb`` (file
-    basename) and ``__ri`` (parquet row index), with any EXISTING deletion
-    vectors already applied — the row-addressing scan DV writes build on.
-    One scan relation for all files, like the DV read path.
-
-    ``with_row_ids`` (row-tracked tables, every file stamped) adds a
-    ``__rowid`` column — the protocol's coalesce(materialized,
-    baseRowId + row_index) — so DV UPDATE/MERGE can PRESERVE matched
-    rows' ids by materializing them into the new image files."""
-    from pyspark.sql.types import LongType
-
-    phys = snap.physical_schema
-    phys_parts = snap.physical_partition_columns
-    data_fields = [f for f in phys.fields if f.name not in phys_parts]
-    rid_col = (snap.configuration or {}).get(_ROW_ID_COL_KEY)
-    if with_row_ids and rid_col:
-        data_fields = data_fields + [StructField(rid_col, LongType(), True)]
-    data_schema = StructType(data_fields)
-    base_of = {p: unquote(p).rsplit("/", 1)[-1] for p in files}
-    flist = [_abs_data_path(path, p) for p in sorted(files)]
-    df = spark.read.schema(data_schema).parquet(*flist).select(
-        "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-            "__fb"
-        ),
-        F.col("_metadata.row_index").alias("__ri"),
-    )
-    dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
-    total_marked = sum(
-        int((a["deletionVector"] or {}).get("cardinality") or 0)
-        for a in dv_files.values()
-    )
-    if dv_files:
-        df = _dv_anti_filter(spark, df, path, dv_files, base_of, total_marked)
-    if with_row_ids:
-        if len(files) <= _FILE_INFO_MAP_CAP:
-            # literal basename→baseRowId map: pure projection, no
-            # parallelize job, no broadcast exchange (r15, guide §4)
-            base_map = F.create_map(
-                *[
-                    x
-                    for p in sorted(files)
-                    for x in (
-                        F.lit(base_of[p]),
-                        F.lit(int(files[p]["baseRowId"])).cast("bigint"),
-                    )
-                ]
-            )
-            df = df.withColumn("__base", base_map[F.col("__fb")])
-        else:
-            info = spark.createDataFrame(
-                [
-                    (base_of[p], int(files[p]["baseRowId"]))
-                    for p in sorted(files)
-                ],
-                "__fb string, __base bigint",
-            )
-            df = df.join(F.broadcast(info), "__fb")
-        rid = F.col("__base") + F.col("__ri")
-        if rid_col:
-            rid = F.coalesce(F.col(rid_col), rid)
-        df = df.withColumn("__rowid", rid.cast("bigint")).drop("__base")
-        if rid_col:
-            df = df.drop(rid_col)
-    types = {f.name: f.dataType for f in phys.fields}
-    for c in phys_parts:
-        mapping = F.create_map(
-            *[
-                x
-                for p, a in sorted(files.items())
-                for x in (
-                    F.lit(base_of[p]),
-                    F.lit((a.get("partitionValues") or {}).get(c)),
-                )
-            ]
-        )
-        df = df.withColumn(c, mapping[F.col("__fb")].cast(types[c]))
-    logical = _strip_metadata(snap.schema)
-    if snap.column_mapping != "none":
-        cols = [
-            F.col(pf.name).cast(lf.dataType).alias(lf.name)
-            for pf, lf in zip(phys.fields, logical.fields)
-        ]
-    else:
-        cols = [F.col(f.name) for f in phys.fields]
-    if with_row_ids:
-        return df.select(*cols, "__fb", "__ri", "__rowid")
-    return df.select(*cols, "__fb", "__ri")
 
 
 def _dv_mark_actions(
@@ -4041,7 +3677,7 @@ def _dv_mark_actions(
     the whole snapshot could attach a DV to an untouched file that
     happens to share a basename (``_dv_write_path_ok`` only checks
     uniqueness among the touched set)."""
-    fb_to_rel = {unquote(p).rsplit("/", 1)[-1]: p for p in touched}
+    fb_to_rel = {_basename(p): p for p in touched}
     actions: list[dict] = []
     for fb in sorted(by_file):
         rel = fb_to_rel[fb]
@@ -4053,19 +3689,7 @@ def _dv_mark_actions(
         )
         union = sorted(set(old) | set(by_file[fb]))
         desc = _write_dv_file(path, union)
-        actions.append(
-            {
-                "remove": _carry_row_ids(
-                    {
-                        "path": rel,
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues", {}),
-                    },
-                    add,
-                )
-            }
-        )
+        actions.append(_remove_action(rel, add, now))
         actions.append(
             {
                 "add": add
@@ -4108,11 +3732,11 @@ def _dv_write_path_ok(snap: _Snapshot, touched: list[str]) -> bool:
         proto.get("readerFeatures") or []
     ) or "deletionVectors" not in (proto.get("writerFeatures") or []):
         return False  # the delta_enable_dvs invariant: config AND features
-    # existing DVs on the touched files are unioned driver-side by the
-    # row-addressing scan (_scan_with_rowpos); when they have grown past
-    # the read-pairs budget, take the rewrite path instead — it reads
-    # through the bitmaps via the budget-guarded _scan_files and resets
-    # the files' DV state to empty
+    # existing DVs on the touched files are unioned driver-side when
+    # marks are added to them (_dv_mark_actions); when they have grown
+    # past the read-pairs budget, take the rewrite path instead — it
+    # reads through the bitmaps one file at a time (_dv_anti_filter) and
+    # resets the files' DV state to empty
     if (
         sum(
             int((snap.files[p].get("deletionVector") or {}).get("cardinality") or 0)
@@ -4121,64 +3745,61 @@ def _dv_write_path_ok(snap: _Snapshot, touched: list[str]) -> bool:
         > _DV_READ_PAIRS_CAP
     ):
         return False
-    return len({unquote(p).rsplit("/", 1)[-1] for p in touched}) == len(touched)
+    return len({_basename(p) for p in touched}) == len(touched)
 
 
 def _files_row_bound(path: str, files: dict[str, dict]) -> tuple[int, int]:
     """(max rows in any file, total rows) of ``files`` from their add
     actions' stats (one driver-local footer read per stats-less add —
     this writer and delta-spark always record numRecords). An upper
-    bound on anything a pure FILTER over these files can match."""
+    bound on anything a filter or semi-join of these files' rows can
+    match."""
     counts = [_num_records(path, a) for a in files.values()]
     return (max(counts) if counts else 0, sum(counts))
 
 
 def _collect_dv_marks(
-    matched: DataFrame, row_bound: tuple[int, int] | None = None
+    matched: DataFrame, row_bound: tuple[int, int]
 ) -> dict[str, list[int]] | None:
     """Collect the matched rows' (file basename, row index) positions for
-    DV marking, GUARDED: a per-file count aggregate (one row per touched
-    file) runs first, and if any file's matched count exceeds
-    ``_DV_WRITE_FILE_CAP`` or the total exceeds ``_DV_WRITE_TOTAL_CAP``
-    the collect never happens — returns None and the caller falls back to
-    the rewrite path (where matched rows are that dense, rewriting is the
-    cheaper physics anyway, and the driver never holds an unbounded
-    position list). Returns {} when nothing matched.
+    DV marking, GUARDED by the DV write budget: when any file's matched
+    count exceeds ``_DV_WRITE_FILE_CAP`` or the total exceeds
+    ``_DV_WRITE_TOTAL_CAP`` the collect never happens — returns None and
+    the caller falls back to the rewrite path (where matched rows are
+    that dense, rewriting is the cheaper physics anyway, and the driver
+    never holds an unbounded position list). Returns {} when nothing
+    matched.
 
     ``row_bound`` = (max rows in any touched file, total rows across the
-    touched files), when the caller already knows it from the add
-    actions' stats. Matched counts can never exceed the files' row
-    counts, so bounds inside the caps PROVE the probe redundant — the
-    positions collect becomes the only job (one scan, no persist) instead
-    of a persist + probe + collect pair of jobs (r15, guide §2.4 via
-    metadata the driver already holds). The probe path stays for
-    unbounded/unknown inputs — the 100 TB safety rail is unchanged."""
-    if row_bound is not None and (
-        row_bound[0] <= _DV_WRITE_FILE_CAP
-        and row_bound[1] <= _DV_WRITE_TOTAL_CAP
+    touched files) from the add actions' stats (``_files_row_bound``).
+    Matched counts can never exceed the files' row counts, so bounds
+    inside the caps PROVE the budget holds — the positions collect is the
+    only job (one scan, no persist). Bounds past the caps run a per-file
+    count aggregate over the persisted matches first — the 100 TB safety
+    rail."""
+    if (
+        row_bound[0] > _DV_WRITE_FILE_CAP
+        or row_bound[1] > _DV_WRITE_TOTAL_CAP
     ):
-        by_file: dict[str, list[int]] = {}
-        for r in matched.select("__fb", "__ri").collect():
-            by_file.setdefault(r["__fb"], []).append(int(r["__ri"]))
-        return by_file
-    matched = matched.persist()
-    try:
-        counts = (
-            matched.groupBy("__fb").agg(F.count(F.lit(1)).alias("__n")).collect()
-        )
-        if not counts:
-            return {}
-        if (
-            max(int(r["__n"]) for r in counts) > _DV_WRITE_FILE_CAP
-            or sum(int(r["__n"]) for r in counts) > _DV_WRITE_TOTAL_CAP
-        ):
-            return None
-        by_file: dict[str, list[int]] = {}
-        for r in matched.select("__fb", "__ri").collect():
-            by_file.setdefault(r["__fb"], []).append(int(r["__ri"]))
-        return by_file
-    finally:
-        matched.unpersist()
+        matched = matched.persist()
+        try:
+            counts = [
+                int(r["__n"])
+                for r in matched.groupBy("__fb")
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .collect()
+            ]
+            if not counts:
+                return {}
+            if max(counts) > _DV_WRITE_FILE_CAP or sum(counts) > _DV_WRITE_TOTAL_CAP:
+                return None
+            return _collect_dv_marks(matched, (0, 0))  # counts proved in budget
+        finally:
+            matched.unpersist()
+    by_file: dict[str, list[int]] = {}
+    for r in matched.select("__fb", "__ri").collect():
+        by_file.setdefault(r["__fb"], []).append(int(r["__ri"]))
+    return by_file
 
 
 def _delete_with_dvs(
@@ -4198,12 +3819,12 @@ def _delete_with_dvs(
     counts exceed the DV write budget (broad predicate → the caller's
     rewrite path is the right physics)."""
     files = {p: snap.files[p] for p in touched}
-    scan = _scan_with_rowpos(spark, path, snap, files)
+    scan = _scan(spark, path, snap, files, address=True)
     cond = skipping.conds_filter(list(conds))
     matched = scan.filter(cond)
     # matched ⊆ the touched files' rows (a pure filter), so the files'
     # numRecords — already on the driver via stats — bound the probe
-    by_file = _collect_dv_marks(matched, row_bound=_files_row_bound(path, files))
+    by_file = _collect_dv_marks(matched, _files_row_bound(path, files))
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     if not by_file:
@@ -4223,30 +3844,21 @@ def _delete_with_dvs(
         else []
     )
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": "DELETE",
-        "operationParameters": {
-            "predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)
-        },
-        "operationMetrics": _op_metrics(
+    actions = _dv_mark_actions(path, snap, touched, by_file, now)
+    actions += [{"cdc": c} for c in cdcs]
+    return _commit(
+        path,
+        latest + 1,
+        now,
+        "DELETE",
+        {"predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)},
+        actions,
+        snap.configuration,
+        metrics=_op_metrics(
             numDeletedRows=sum(len(v) for v in by_file.values()),
             numDeletionVectorsAdded=len(by_file),
         ),
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
-    actions += [{"cdc": c} for c in cdcs]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
     )
-    version = latest + 1
-    _claim_version(_log_dir(path), version, payload)
-    return version
 
 
 def _update_with_dvs(
@@ -4268,19 +3880,19 @@ def _update_with_dvs(
     tracked = _row_tracking_enabled(snap)
     if tracked:
         _require_stamped(files, path, "UPDATE")
-    scan = _scan_with_rowpos(spark, path, snap, files, with_row_ids=tracked)
+    scan = _scan(spark, path, snap, files, address=True, row_ids=tracked)
     cond = skipping.conds_filter(list(conds))
     matched = scan.filter(cond)
     # matched ⊆ the touched files' rows (a pure filter) — see _delete_with_dvs
-    by_file = _collect_dv_marks(matched, row_bound=_files_row_bound(path, files))
+    by_file = _collect_dv_marks(matched, _files_row_bound(path, files))
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     if not by_file:
         return latest
     version = latest + 1
     logical_names = [f.name for f in _strip_metadata(snap.schema).fields]
-    pre = matched.drop("__fb", "__ri", "__rowid")
-    post = matched.drop("__fb", "__ri")
+    pre = matched.select(*logical_names)
+    post = matched
     for name, expr in assignments.items():
         post = post.withColumn(name, expr)
     keep = list(logical_names)
@@ -4289,7 +3901,7 @@ def _update_with_dvs(
         # row's OLD id (and this commit as its row commit version) into
         # the new image file, shadowing the file's fresh baseRowId range
         rid_col, rcv_col = _materialized_rt_cols(snap, path, "UPDATE")
-        post = post.withColumn(rid_col, F.col("__rowid")).withColumn(
+        post = post.withColumn(rid_col, F.col("_row_id")).withColumn(
             rcv_col, F.lit(version).cast("bigint")
         )
         keep += [rid_col, rcv_col]
@@ -4319,24 +3931,7 @@ def _update_with_dvs(
         else []
     )
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": "UPDATE",
-        "operationParameters": {
-            "predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)
-        },
-        "operationMetrics": _op_metrics(
-            adds,
-            numUpdatedRows=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
-        ),
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
+    actions = _dv_mark_actions(path, snap, touched, by_file, now)
     # row tracking: updated rows KEEP their ids (materialized above);
     # the new file still needs a fresh baseRowId range per spec — the
     # materialized values shadow it on read. Untouched rows keep theirs
@@ -4346,11 +3941,93 @@ def _update_with_dvs(
         actions.append(dm)
     actions += [{"add": a} for a in adds]
     actions += [{"cdc": c} for c in cdcs]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path,
+        version,
+        now,
+        "UPDATE",
+        {"predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)},
+        actions,
+        snap.configuration,
+        metrics=_op_metrics(
+            adds,
+            numUpdatedRows=sum(len(v) for v in by_file.values()),
+            numDeletionVectorsAdded=len(by_file),
+        ),
     )
-    _claim_version(_log_dir(path), version, payload)
-    return version
+
+
+def _merge_changes(
+    pre: DataFrame, target: DataFrame, source: DataFrame, keys: list[str]
+) -> DataFrame:
+    """CDF rows of an ``update_all`` MERGE: the matched targets' images
+    (``pre``) as preimages, the source rows that replace them as
+    postimages, the rest of the source as inserts."""
+    tkeys = target.select(*keys)
+    return (
+        pre.withColumn("_change_type", F.lit("update_preimage"))
+        .unionByName(
+            source.join(tkeys, on=keys, how="left_semi").withColumn(
+                "_change_type", F.lit("update_postimage")
+            ),
+            allowMissingColumns=True,
+        )
+        .unionByName(
+            source.join(tkeys, on=keys, how="left_anti").withColumn(
+                "_change_type", F.lit("insert")
+            ),
+            allowMissingColumns=True,
+        )
+    )
+
+
+def _merge_schema(
+    snap: _Snapshot, rows: DataFrame, changes: DataFrame | None
+) -> tuple[StructType | None, dict | None, DataFrame, DataFrame | None]:
+    """Schema evolution of a MERGE, shared by the rewrite and DV paths:
+    ``(widened schema or None, configuration or None, rows, changes)``.
+    Source columns the table lacks widen it by APPENDING to the original
+    ``snap.schema`` fields — never re-deriving the whole schema from the
+    frame, which would strip field metadata (delta.invariants) and erase
+    NOT NULL markers; on a column-mapped table they mint
+    physicalName/id annotations and bump maxColumnId, exactly like a
+    widening append (the returned configuration). ``rows`` and the CDF
+    ``changes`` are conformed to the merged schema: existing columns cast
+    to their declared types (Delta casts source → target), columns a
+    frame lacks NULL."""
+    have = {f.name for f in snap.schema.fields}
+    new_fields = [
+        StructField(f.name, f.dataType, True)
+        for f in rows.schema.fields
+        if f.name not in have
+    ]
+    conf = None
+    if new_fields and snap.column_mapping != "none":
+        start = int((snap.configuration or {}).get(_MAX_ID_KEY, 0))
+        minted, max_id = _mint_column_mapping(StructType(new_fields), start)
+        new_fields = list(minted.fields)
+        conf = dict(snap.configuration or {})
+        conf[_MAX_ID_KEY] = str(max_id)
+    merged = StructType(list(snap.schema.fields) + new_fields)
+
+    def conform(df: DataFrame, *extra: str) -> DataFrame:
+        cols = set(df.columns)
+        return df.select(
+            *[
+                (F.col(f.name) if f.name in cols else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in merged.fields
+            ],
+            *extra,
+        )
+
+    return (
+        merged if new_fields else None,
+        conf,
+        conform(rows),
+        conform(changes, "_change_type") if changes is not None else None,
+    )
 
 
 def _merge_with_dvs(
@@ -4368,80 +4045,51 @@ def _merge_with_dvs(
     bitmaps and the source lands as new files — cost O(source +
     matched rows); the touched files' carried rows never rewrite.
     Same semantics as the rewrite path (update_all / keep_target),
-    including schema widening and CDF. Returns None when the matched
-    counts exceed the DV write budget (the caller's rewrite path takes
-    over)."""
+    including schema widening and CDF. Only an ``update_all`` merge
+    that touches files can match a target row: the insert-only shapes
+    build no row-addressed scan and collect no marks. Returns None when
+    the matched counts exceed the DV write budget (the caller's rewrite
+    path takes over)."""
     files = {p: snap.files[p] for p in touched}
     tracked = _row_tracking_enabled(snap)
     if tracked:
         _require_stamped(files, path, "MERGE")
-    logical = _strip_metadata(snap.schema)
-    if files:
-        scan = _scan_with_rowpos(spark, path, snap, files, with_row_ids=tracked)
-    else:
-        scan = (
-            spark.createDataFrame([], logical)
-            .withColumn("__fb", F.lit(None).cast("string"))
-            .withColumn("__ri", F.lit(None).cast("bigint"))
-        )
-        if tracked:
-            scan = scan.withColumn("__rowid", F.lit(None).cast("bigint"))
-    target = scan.drop("__fb", "__ri", "__rowid")
+    cdf = _cdf_enabled(snap)
+    by_file: dict[str, list[int]] = {}
     changes = None
     if when_matched == "update_all":
-        matched = scan.join(source.select(*keys), on=keys, how="left_semi")
         new_rows = source
-        if _cdf_enabled(snap):
-            pre = matched.drop("__fb", "__ri", "__rowid")
-            post = source.join(target.select(*keys), on=keys, how="left_semi")
-            ins = source.join(target.select(*keys), on=keys, how="left_anti")
-            changes = (
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post.withColumn("_change_type", F.lit("update_postimage")),
-                    allowMissingColumns=True,
+        if cdf:
+            changes = source.withColumn("_change_type", F.lit("insert"))
+        if files:
+            scan = _scan(spark, path, snap, files, address=True, row_ids=tracked)
+            matched = scan.join(source.select(*keys), on=keys, how="left_semi")
+            # matched ⊆ the touched files' rows (a semi-join filters the
+            # scan) — bounded like DELETE and UPDATE
+            by_file = _collect_dv_marks(matched, _files_row_bound(path, files))
+            if by_file is None:
+                return None  # over budget: fall back to the rewrite path
+            logical_names = [f.name for f in _strip_metadata(snap.schema).fields]
+            if cdf:
+                changes = _merge_changes(
+                    matched.select(*logical_names), scan, source, keys
                 )
-                .unionByName(
-                    ins.withColumn("_change_type", F.lit("insert")),
-                    allowMissingColumns=True,
-                )
-            )
     elif when_matched == "keep_target":  # insert-only merge
-        matched = scan.limit(0)
-        new_rows = source.join(target.select(*keys), on=keys, how="left_anti")
-        if _cdf_enabled(snap):
+        new_rows = (
+            source.join(
+                _scan(spark, path, snap, files).select(*keys), on=keys, how="left_anti"
+            )
+            if files
+            else source
+        )
+        if cdf:
             changes = new_rows.withColumn("_change_type", F.lit("insert"))
     else:
         raise ValueError(f"unknown when_matched={when_matched!r}")
-    by_file = _collect_dv_marks(matched)
-    if by_file is None:
-        return None  # over budget: fall back to the rewrite path
-    # schema widening — identical contract to the rewrite merge
-    existing = {f.name: f for f in snap.schema.fields}
-    new_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in new_rows.schema.fields
-        if f.name not in existing
-    ]
-    conf_override = None
-    if new_fields and snap.column_mapping != "none":
-        start = int((snap.configuration or {}).get(_MAX_ID_KEY, 0))
-        minted, max_id = _mint_column_mapping(StructType(new_fields), start)
-        new_fields = list(minted.fields)
-        conf_override = dict(snap.configuration or {})
-        conf_override[_MAX_ID_KEY] = str(max_id)
-    merged_schema = StructType(list(snap.schema.fields) + new_fields)
-    have = set(new_rows.columns)
-    proj = []
-    for f in merged_schema.fields:
-        if f.name in have:
-            t = existing[f.name].dataType if f.name in existing else f.dataType
-            proj.append(F.col(f.name).cast(t).alias(f.name))
-        else:  # source lacks a nullable target column: appended rows NULL
-            proj.append(F.lit(None).cast(f.dataType).alias(f.name))
+    widened, conf_override, out_rows, changes = _merge_schema(snap, new_rows, changes)
+    merged_schema = widened or snap.schema
     version = latest + 1
-    out_rows = new_rows.select(*proj)
-    if tracked and when_matched == "update_all":
+    if tracked and by_file:
         # delta-spark MERGE preserves matched rows' ids: join the source
         # images back to the matched targets' old ids on the merge key
         # and materialize them (inserts stay NULL — they take the file's
@@ -4452,14 +4100,14 @@ def _merge_with_dvs(
         # with their DV marks.
         rid_col, rcv_col = _materialized_rt_cols(snap, path, "MERGE")
         old_ids = (
-            matched.select(*keys, "__rowid")
+            matched.select(*keys, "_row_id")
             .groupBy(*keys)
-            .agg(F.min("__rowid").alias("__rowid"))
+            .agg(F.min("_row_id").alias("_row_id"))
         )
         out_rows = (
             out_rows.join(old_ids, on=keys, how="left")
-            .withColumn(rid_col, F.col("__rowid"))
-            .drop("__rowid")
+            .withColumn(rid_col, F.col("_row_id"))
+            .drop("_row_id")
             .withColumn(
                 rcv_col,
                 F.when(
@@ -4476,52 +4124,20 @@ def _merge_with_dvs(
     )
     cdcs = (
         _write_cdc_files(
-            _to_physical_frame(
-                spark.createDataFrame([], _strip_metadata(merged_schema))
-                .withColumn("_change_type", F.lit(None).cast("string"))
-                .unionByName(changes, allowMissingColumns=True),
-                snap.column_mapping,
-                merged_schema,
-            ),
-            path,
+            _to_physical_frame(changes, snap.column_mapping, merged_schema), path
         )
-        if changes is not None and _cdf_enabled(snap)
+        if changes is not None
         else []
     )
     now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": "MERGE",
-        "operationParameters": {
-            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
-            "matchedAction": when_matched,
-        },
-        "operationMetrics": _op_metrics(
-            adds,
-            numTargetRowsMatched=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
-        ),
-        "engineInfo": "delta-lite",
-    }
-    ict = _ict_for_commit(path, snap.configuration, latest, now)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    if new_fields:
+    actions: list[dict] = []
+    if widened is not None:
         actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": merged_schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": (
-                        conf_override
-                        if conf_override is not None
-                        else snap.configuration
-                    ),
-                }
-            }
+            _metadata_action(
+                widened.json(),
+                snap.partition_columns,
+                conf_override if conf_override is not None else snap.configuration,
+            )
         )
     actions += _dv_mark_actions(path, snap, touched, by_file, now)
     # row tracking: matched images keep their ids (materialized above),
@@ -4532,11 +4148,23 @@ def _merge_with_dvs(
         actions.append(dm)
     actions += [{"add": a} for a in adds]
     actions += [{"cdc": c} for c in cdcs]
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path,
+        version,
+        now,
+        "MERGE",
+        {
+            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
+            "matchedAction": when_matched,
+        },
+        actions,
+        snap.configuration,
+        metrics=_op_metrics(
+            adds,
+            numTargetRowsMatched=sum(len(v) for v in by_file.values()),
+            numDeletionVectorsAdded=len(by_file),
+        ),
     )
-    _claim_version(_log_dir(path), version, payload)
-    return version
 
 
 def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
@@ -4566,7 +4194,7 @@ def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
         if v is not None:
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
-    scan = _scan_files(spark, path, snap, {p: snap.files[p] for p in touched})
+    scan = _scan(spark, path, snap, {p: snap.files[p] for p in touched})
     cond = skipping.conds_filter(list(conds))
     survivors = scan.filter(~cond)
     return _commit_rewrite(
@@ -4630,7 +4258,7 @@ def delta_update_where(
         if v is not None:
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
-    scan = _scan_files(spark, path, snap, {p: snap.files[p] for p in touched})
+    scan = _scan(spark, path, snap, {p: snap.files[p] for p in touched})
     cond = skipping.conds_filter(list(conds))
     df = scan
     for name, expr in assignments.items():
@@ -4679,25 +4307,12 @@ def _commit_metadata_change(
     already derived it (the ICT-enabling commit must stamp the SAME
     value into the enablement-provenance property). ``extra_actions``
     ride after the metaData (domainMetadata, backfill re-adds)."""
-    now = int(time.time() * 1000)
-    ci: dict[str, Any] = {
-        "timestamp": now,
-        "operation": op,
-        "operationParameters": params,
-        "engineInfo": "delta-lite",
-    }
-    ict = (
-        ict_value
-        if ict_value is not None
-        else _ict_for_commit(path, configuration, latest, now)
-    )
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    cur_mw = (snap.protocol or {}).get("minWriterVersion", 1)
+    actions: list[dict] = []
     if protocol is not None:
         actions.append({"protocol": protocol})
-    elif min_writer is not None and cur_mw < min_writer:
+    elif min_writer is not None and (snap.protocol or {}).get(
+        "minWriterVersion", 1
+    ) < min_writer:
         actions.append(
             {
                 "protocol": {
@@ -4709,25 +4324,17 @@ def _commit_metadata_change(
             }
         )
     actions.append(
-        {
-            "metaData": {
-                "id": uuid.uuid4().hex,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": (
-                    schema_json if schema_json is not None else snap.schema.json()
-                ),
-                "partitionColumns": snap.partition_columns,
-                "configuration": configuration,
-            }
-        }
+        _metadata_action(
+            schema_json if schema_json is not None else snap.schema.json(),
+            snap.partition_columns,
+            configuration,
+        )
     )
     actions += list(extra_actions or [])
-    payload = (
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    return _commit(
+        path, latest + 1, int(time.time() * 1000), op, params, actions,
+        configuration, ict=ict_value,
     )
-    version = latest + 1
-    _claim_version(_log_dir(path), version, payload)
-    return version
 
 
 def delta_add_constraint(
@@ -5487,7 +5094,7 @@ def delta_read_changes(
                 "after it, as delta-spark requires."
             )
         if adds:
-            frames.append(stamp(_scan_files(spark, path, snap, adds), "insert"))
+            frames.append(stamp(_scan(spark, path, snap, adds), "insert"))
         if removes:
             missing = [
                 p for p in removes if not os.path.isfile(_abs_data_path(path, p))
@@ -5498,7 +5105,7 @@ def delta_read_changes(
                     f"({missing[:3]}...) — its deletes cannot be replayed"
                 )
             prev = _replay(path, v - 1) if v else snap
-            frames.append(stamp(_scan_files(spark, path, prev, removes), "delete"))
+            frames.append(stamp(_scan(spark, path, prev, removes), "delete"))
     if not frames:
         schema = _strip_metadata(_replay(path, end).schema)
         empty = spark.createDataFrame([], schema)

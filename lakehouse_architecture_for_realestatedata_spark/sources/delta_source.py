@@ -52,6 +52,7 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass, field
+from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -70,22 +71,20 @@ from pyspark.sql.types import StructType
 
 from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
     CHECKPOINT_INTERVAL,
-    _checkpoint_interval,
     ConcurrentDeltaCommitError,
     DeltaProtocolError,
     _append_schema_delta,
-    _carry_row_ids,
-    _claim_version,
-    _ict_for_commit,
+    _commit,
     _footer_stats_json,
     _latest_version,
     _log_dir,
+    _metadata_action,
     _pruned_files,
+    _remove_action,
     _replay,
     _stamp_row_ids,
     _strip_metadata,
     _table_constraints,
-    _write_checkpoint,
     _writer_gate,
     version_at_timestamp,
 )
@@ -542,7 +541,6 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
         return _write_task_parquet(self.path, iterator)
 
     def commit(self, messages) -> None:
-        import json as _json
         import time as _time
 
         adds = [a for m in messages if m is not None for a in m.adds]
@@ -571,65 +569,22 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
                         snap, self.schema, self.merge_schema
                     )  # config part is colmap-only; colmap is refused here
             now = int(_time.time() * 1000)
-            ci: dict = {
-                "timestamp": now,
-                "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "OVERWRITE" if self.overwrite else "APPEND"
-                },
-                "engineInfo": "delta-lite",
-            }
-            ict = _ict_for_commit(
-                self.path, snap.configuration if snap else None, latest, now
-            )
-            if ict is not None:
-                ci["inCommitTimestamp"] = ict
-            actions: list[dict] = [{"commitInfo": ci}]
+            actions: list[dict] = []
             if version == 0:
                 actions.append(
                     {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
                 )
                 actions.append(
-                    {
-                        "metaData": {
-                            "id": uuid.uuid4().hex,
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": _strip_metadata(self.schema).json(),
-                            "partitionColumns": [],
-                            "configuration": {},
-                            "createdTime": now,
-                        }
-                    }
+                    _metadata_action(
+                        _strip_metadata(self.schema).json(), [], {}, created_time=now
+                    )
                 )
             if meta_schema_json is not None:
                 actions.append(
-                    {
-                        "metaData": {
-                            "id": uuid.uuid4().hex,
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": meta_schema_json,
-                            "partitionColumns": [],
-                            "configuration": snap.configuration,
-                        }
-                    }
+                    _metadata_action(meta_schema_json, [], snap.configuration)
                 )
             if self.overwrite and snap is not None:
-                actions += [
-                    {
-                        "remove": _carry_row_ids(
-                            {
-                                "path": p,
-                                "deletionTimestamp": now,
-                                "dataChange": True,
-                                "partitionValues": a.get(
-                                    "partitionValues", {}
-                                ),
-                            },
-                            a,
-                        )
-                    }
-                    for p, a in snap.files.items()
-                ]
+                actions += [_remove_action(p, a, now) for p, a in snap.files.items()]
             # row tracking: stamped per attempt against the snapshot this
             # commit rebases onto (same discipline as delta_write)
             dm = (
@@ -640,26 +595,22 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
             if dm is not None:
                 actions.append(dm)
             actions += [{"add": a} for a in adds]
-            payload = (
-                "\n".join(_json.dumps(a, separators=(",", ":")) for a in actions)
-                + "\n"
-            )
-            eff_interval = _checkpoint_interval(  # pre-claim, see delta_write
-                snap.configuration if snap is not None else None,
-                CHECKPOINT_INTERVAL,
-            )
             try:
-                _claim_version(_log_dir(self.path), version, payload)
+                _commit(
+                    self.path,
+                    version,
+                    now,
+                    "WRITE",
+                    {"mode": "OVERWRITE" if self.overwrite else "APPEND"},
+                    actions,
+                    snap.configuration if snap is not None else None,
+                    spark=SparkSession.getActiveSession(),
+                    checkpoint_interval=CHECKPOINT_INTERVAL,
+                )
             except ConcurrentDeltaCommitError:
                 if self.overwrite or attempt == 20:
                     raise
                 continue  # blind append: rebase and re-claim
-            if version and version % eff_interval == 0:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    _write_checkpoint(spark, self.path, version)
             return
         raise ConcurrentDeltaCommitError("gave up after 20 retries")
 
@@ -718,7 +669,6 @@ class _DeltaLiteStreamWriter(DataSourceStreamArrowWriter):
         return _write_task_parquet(self.path, iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        import json as _json
         import time as _time
 
         adds = [a for m in messages if m is not None for a in m.adds]
@@ -736,35 +686,15 @@ class _DeltaLiteStreamWriter(DataSourceStreamArrowWriter):
                     return
             version = 0 if latest is None else latest + 1
             now = int(_time.time() * 1000)
-            ci: dict = {
-                "timestamp": now,
-                "operation": "STREAMING UPDATE",
-                "operationParameters": {
-                    "outputMode": "Append",
-                    "epochId": batchId,
-                },
-                "engineInfo": "delta-lite",
-            }
-            conf = snap.configuration if snap is not None else None
-            ict = _ict_for_commit(self.path, conf, latest, now)
-            if ict is not None:
-                ci["inCommitTimestamp"] = ict
-            actions: list[dict] = [{"commitInfo": ci}]
+            actions: list[dict] = []
             if version == 0:
                 actions.append(
                     {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
                 )
                 actions.append(
-                    {
-                        "metaData": {
-                            "id": uuid.uuid4().hex,
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": _strip_metadata(self.schema).json(),
-                            "partitionColumns": [],
-                            "configuration": {},
-                            "createdTime": now,
-                        }
-                    }
+                    _metadata_action(
+                        _strip_metadata(self.schema).json(), [], {}, created_time=now
+                    )
                 )
             if self.txn_app_id is not None:
                 actions.append(
@@ -780,26 +710,22 @@ class _DeltaLiteStreamWriter(DataSourceStreamArrowWriter):
             if dm is not None:
                 actions.append(dm)
             actions += [{"add": a} for a in adds]
-            payload = (
-                "\n".join(_json.dumps(a, separators=(",", ":")) for a in actions)
-                + "\n"
-            )
-            eff_interval = _checkpoint_interval(  # pre-claim, see delta_write
-                snap.configuration if snap is not None else None,
-                CHECKPOINT_INTERVAL,
-            )
             try:
-                _claim_version(_log_dir(self.path), version, payload)
+                _commit(
+                    self.path,
+                    version,
+                    now,
+                    "STREAMING UPDATE",
+                    {"outputMode": "Append", "epochId": batchId},
+                    actions,
+                    snap.configuration if snap is not None else None,
+                    spark=SparkSession.getActiveSession(),
+                    checkpoint_interval=CHECKPOINT_INTERVAL,
+                )
             except ConcurrentDeltaCommitError:
                 if attempt == 20:
                     raise
                 continue  # blind append: re-check the txn watermark, re-claim
-            if version and version % eff_interval == 0:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    _write_checkpoint(spark, self.path, version)
             return
         raise ConcurrentDeltaCommitError("gave up after 20 retries")
 
@@ -867,8 +793,6 @@ class DeltaLiteDataSource(DataSource):
         # Spark refuses a reader that defines pushFilters when the Python
         # pushdown conf is off — pick the capability by the live conf
         # (driver-side; get_spark enables it)
-        from pyspark.sql import SparkSession
-
         spark = SparkSession.getActiveSession()
         enabled = (
             spark is not None

@@ -2946,6 +2946,180 @@ def test_dv_literal_map_capped_by_file_count(spark, tmp_path, monkeypatch):
     assert sorted(r["id"] for r in got.collect()) == expect
 
 
+def _expected_rows(dl, t):
+    """id -> (p, s, _row_id, _row_commit_version) of the live rows, computed
+    in Python straight from the log and the data files: each file's rows in
+    parquet order, minus its deletion vector, with the protocol's row-id
+    rule (materialized value, else baseRowId + row index /
+    defaultRowCommitVersion)."""
+    snap = dl._replay(t, None)
+    phys = {
+        lf.name: pf.name
+        for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
+    }
+    rid_col = snap.configuration[dl._ROW_ID_COL_KEY]
+    rcv_col = snap.configuration[dl._ROW_CV_COL_KEY]
+    out = {}
+    for rel, add in snap.files.items():
+        rows = pq.ParquetFile(dl._abs_data_path(t, rel)).read().to_pylist()
+        dead = set(
+            dl._load_deletion_vector(t, add["deletionVector"])
+            if add.get("deletionVector")
+            else []
+        )
+        for pos, r in enumerate(rows):
+            if pos in dead:
+                continue
+            rid = r.get(rid_col)
+            rcv = r.get(rcv_col)
+            out[r[phys["id"]]] = (
+                int(add["partitionValues"][phys["p"]]),
+                r[phys["s"]],
+                add["baseRowId"] + pos if rid is None else rid,
+                add["defaultRowCommitVersion"] if rcv is None else rcv,
+            )
+    return out
+
+
+def _read_rows(dl, spark, t):
+    return {
+        r["id"]: (r["p"], r["s"], r["_row_id"], r["_row_commit_version"])
+        for r in dl.delta_read(spark, t, with_row_ids=True).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "caps",
+    [{}, {"_FILE_INFO_MAP_CAP": 1}, {"_DV_READ_PAIRS_CAP": 0}],
+    ids=["default", "file_info_broadcast", "dv_per_file"],
+)
+def test_unified_scan_rows_and_row_ids(spark, tmp_path, monkeypatch, caps):
+    """One scan builder serves plain reads, row-id reads and the DV
+    writers. On a partitioned, column-mapped, row-tracked table holding
+    both DV'd and plain files, every read and DV DELETE/UPDATE gives the
+    rows and row ids computed in Python from the log and data files —
+    under the literal file-info maps, the broadcast file-info join, and
+    per-file DV application."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    for name, value in caps.items():
+        monkeypatch.setattr(dl, name, value)
+    t = str(tmp_path / "scan")
+    schema = "id bigint, p bigint, s string"
+    for lo in (0, 15):  # two commits: every partition holds two files
+        rows = [(i, i % 3, f"s{i}") for i in range(lo, lo + 15)]
+        dl.delta_write(
+            spark.createDataFrame(rows, schema).coalesce(1), t,
+            partition_by=["p"] if lo == 0 else None,
+            column_mapping="name" if lo == 0 else "none",
+        )
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_enable_row_tracking(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "between", (3, 5)))  # first commit's files
+    snap = dl._replay(t, None)
+    assert len(snap.files) == 6
+    assert sum(1 for a in snap.files.values() if a.get("deletionVector")) == 3
+    want = _expected_rows(dl, t)
+    assert sorted(want) == [i for i in range(30) if not 3 <= i <= 5]
+    assert all(want[i][:2] == (i % 3, f"s{i}") for i in want)
+    assert len({v[2] for v in want.values()}) == len(want)  # ids unique
+    assert _read_rows(dl, spark, t) == want
+    plain = {tuple(r) for r in dl.delta_read(spark, t).collect()}
+    assert plain == {(i, p, s) for i, (p, s, _, _) in want.items()}
+
+    dl.delta_delete_where(spark, t, ("id", "between", (15, 16)))  # plain files
+    assert set(dl._replay(t, None).files) == set(snap.files)  # DVs, no rewrite
+    for i in (15, 16):
+        del want[i]
+    assert _expected_rows(dl, t) == want
+    assert _read_rows(dl, spark, t) == want
+
+    v = dl.delta_update_where(spark, t, {"s": F.lit("u")}, ("id", "between", (6, 17)))
+    for i in want:
+        if 6 <= i <= 17:  # the DV path keeps updated rows' ids, stamped v
+            want[i] = (want[i][0], "u", want[i][2], v)
+    got = _expected_rows(dl, t)
+    if "_DV_READ_PAIRS_CAP" in caps:
+        # DVs past the read-pairs budget send the UPDATE down the rewrite
+        # path, whose rewritten rows take fresh ids
+        assert {i: r[:2] for i, r in got.items()} == {i: r[:2] for i, r in want.items()}
+        assert len({r[2] for r in got.values()}) == len(got)
+    else:
+        assert got == want
+    assert _read_rows(dl, spark, t) == got
+
+
+def _spy_dv_marks(dl, monkeypatch):
+    calls = []
+    real = dl._collect_dv_marks
+
+    def spy(matched, row_bound):
+        calls.append(row_bound)
+        return real(matched, row_bound)
+
+    monkeypatch.setattr(dl, "_collect_dv_marks", spy)
+    return calls
+
+
+def _committed_dvs(dl, t, version):
+    with open(os.path.join(t, "_delta_log", f"{version:020d}.json")) as fh:
+        actions = [json.loads(line) for line in fh if line.strip()]
+    return [a for a in actions if (a.get("add") or {}).get("deletionVector")]
+
+
+def test_dv_merge_update_all_marks_under_row_bound(spark, tmp_path, monkeypatch):
+    """An update_all MERGE on a DV table collects its marks under the
+    touched files' numRecords bound (one collect job, no count probe) and
+    reads back exactly what the rewrite path produces."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    schema = "id bigint, v string"
+    base = spark.createDataFrame([(i, "old") for i in range(40)], schema).repartition(4)
+    src = spark.createDataFrame([(i, "new") for i in range(30, 50)], schema)
+    dv_t, rw_t = str(tmp_path / "dv"), str(tmp_path / "rw")
+    for t in (dv_t, rw_t):
+        dl.delta_write(base, t)
+    dl.delta_enable_dvs(spark, dv_t)
+    calls = _spy_dv_marks(dl, monkeypatch)
+    v = dl.delta_merge(src, dv_t, "id")
+    dl.delta_merge(src, rw_t, "id")
+    assert len(calls) == 1
+    n_max, n_total = calls[0]
+    assert 0 < n_max <= n_total == 40
+    assert _committed_dvs(dl, dv_t, v)  # the DV path marked the matches
+    got = sorted(map(tuple, dl.delta_read(spark, dv_t).collect()))
+    assert got == sorted(map(tuple, dl.delta_read(spark, rw_t).collect()))
+    assert got == [(i, "old") for i in range(30)] + [(i, "new") for i in range(30, 50)]
+
+
+def test_insert_only_dv_merges_collect_no_marks(spark, tmp_path, monkeypatch):
+    """Neither insert-only merge shape can match a target row, so neither
+    builds a row-addressed scan or collects marks: a keep_target merge,
+    and an update_all merge whose keys overlap no file. No deletionVector
+    is committed and the rows are right."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    schema = "id bigint, v string"
+    t = str(tmp_path / "ins")
+    dl.delta_write(
+        spark.createDataFrame([(i, "old") for i in range(20)], schema).coalesce(1), t
+    )
+    dl.delta_enable_dvs(spark, t)
+    calls = _spy_dv_marks(dl, monkeypatch)
+    keep = spark.createDataFrame([(i, "new") for i in range(15, 25)], schema)
+    v1 = dl.delta_merge(keep, t, "id", when_matched="keep_target")
+    fresh = spark.createDataFrame([(i, "new") for i in range(100, 105)], schema)
+    v2 = dl.delta_merge(fresh, t, "id")
+    assert calls == []
+    assert _committed_dvs(dl, t, v1) == [] and _committed_dvs(dl, t, v2) == []
+    got = sorted(map(tuple, dl.delta_read(spark, t).collect()))
+    assert got == (
+        [(i, "old") for i in range(20)]
+        + [(i, "new") for i in range(20, 25)]
+        + [(i, "new") for i in range(100, 105)]
+    )
+
+
 def test_decimal_columns_write_stats_and_skip(spark, tmp_path):
     """Decimals of precision <= 18 are INT32/INT64-backed in Spark's parquet
     layout, and pyarrow cannot decode their logical footer stats. The shared

@@ -1,10 +1,15 @@
-"""Import boundary between the two table formats.
+"""Code-layout guards for the two table formats.
 
 ``sources/tables.py`` (manifest tables) and ``sources/delta_lite.py`` /
 ``sources/delta_source.py`` (Delta tables) share their data-skipping code
 through ``sources/skipping.py`` only. Neither side may import the other,
 at module level or inside a function, so private helpers cannot couple
-them again."""
+them again.
+
+Within the Delta side, every commit goes through one log writer and every
+row-addressed read through one scan builder: the ``engineInfo`` stamp and
+the ``_metadata.row_index`` read each appear once, so neither can be
+copied into a second hand-built commit or scan."""
 
 from __future__ import annotations
 
@@ -58,3 +63,54 @@ def test_boundary_check_sees_function_local_and_relative_imports(tmp_path):
         f"from {PKG}.sources import skipping\n"
     )
     assert _imported_sources_modules(src) == {"tables", "delta_lite", "skipping"}
+
+
+DELTA_FILES = ("delta_lite.py", "delta_source.py")
+
+
+def _code_strings(path: Path) -> list[str]:
+    """Every string constant of a file except its docstrings."""
+    tree = ast.parse(path.read_text())
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docs
+    ]
+
+
+def _hits(paths, needle: str) -> int:
+    return sum(needle in s for p in paths for s in _code_strings(p))
+
+
+@pytest.mark.parametrize(
+    "needle, owner",
+    [("engineInfo", "the commit writer _commit"),
+     ("_metadata.row_index", "the scan builder _scan")],
+)
+def test_delta_commits_and_row_addressed_scans_have_one_owner(needle, owner):
+    n = _hits([SOURCES / f for f in DELTA_FILES], needle)
+    assert n == 1, f"{needle!r} appears {n} times; only {owner} may spell it"
+
+
+def test_single_owner_check_sees_copies_and_skips_docstrings(tmp_path):
+    src = tmp_path / "probe.py"
+    src.write_text(
+        'def f():\n'
+        '    """Reads _metadata.row_index; stamps engineInfo."""\n'
+        '    ci = {"engineInfo": "delta-lite"}\n'
+        '    return F.col("_metadata.row_index"), F.expr("_metadata.row_index + 1")\n'
+    )
+    assert _hits([src], "engineInfo") == 1
+    assert _hits([src], "_metadata.row_index") == 2
