@@ -502,8 +502,7 @@ class MedallionPipeline:
         if self.catalog is None:
             return
         for db, _attr, name, _part in self._TABLES:
-            if self.catalog.table(db, name).exists():
-                self.catalog.refresh(db, name)
+            self.catalog.refresh(db, name)
 
     def ingest_bronze(self, raw: DataFrame) -> None:
         """S7 semantics: append with schema merge."""

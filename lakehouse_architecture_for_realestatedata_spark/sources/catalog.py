@@ -11,27 +11,32 @@ Without a metastore service in this image, the same contract is met with:
     {path, partition_by} — the persistent, cross-session half;
   - Spark's built-in session catalog (``CREATE DATABASE`` + ``CREATE OR
     REPLACE VIEW db.tbl``) — the SQL-resolvable half, rebuilt per session by
-    ``attach()``. Views are defined over the table's CURRENT snapshot data
-    dirs (null-filling columns a dir predates, i.e. mergeSchema), so
-    ``spark.sql("SELECT ... FROM bronze.properties")`` reads exactly what
-    ``ParquetTable.read()`` reads.
+    ``attach()``. A view's body is ``ParquetTable.view_sql()``: the table's
+    CURRENT snapshot rendered by the same scan builder ``ParquetTable.read()``
+    uses, so ``spark.sql("SELECT ... FROM bronze.properties")`` reads
+    exactly what ``read()`` reads.
 
 ``refresh`` re-binds a view to the newest snapshot — the honest analogue of
 ``REFRESH TABLE`` under snapshot-pointer storage (and what the reference
 achieves by restarting its whole Thrift server,
-airflow/dags/end_to_end_pipeline.py:209-244).
+airflow/dags/end_to_end_pipeline.py:209-244). A table registered but not
+yet written has no view; ``refresh`` and ``attach`` skip it.
 
-Scale: the registry is a tiny JSON document (thousands of entries ≪ 1 MB);
-every data operation stays on the ParquetTable path — the catalog never
-touches data files.
+Scale: the registry is a tiny JSON document (thousands of entries ≪ 1 MB),
+edited under an exclusive ``flock`` on a sidecar lock file so concurrent
+DDL from several processes or threads never loses an entry; every data
+operation stays on the ParquetTable path — the catalog never touches data
+files.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import re
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -73,12 +78,24 @@ class Catalog:
             json.dump(state, fh, indent=1, sort_keys=True)
         os.replace(tmp, self._path)  # atomic, same discipline as ParquetTable
 
+    @contextmanager
+    def _edit(self):
+        """Yield the registry for a read-modify-write and save it after,
+        holding an exclusive ``flock`` on ``.catalog.lock`` throughout: a
+        concurrent edit (another process, or another thread — each opens
+        its own lock description) waits instead of saving a stale copy over
+        this one. The OS releases the lock if the holder dies."""
+        with open(os.path.join(self.root, ".catalog.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            state = self._load()
+            yield state
+            self._save(state)
+
     # ----------------------------------------------------------------- DDL
     def create_database(self, db: str) -> None:
         """CREATE DATABASE IF NOT EXISTS analogue, persisted + session."""
-        state = self._load()
-        state.setdefault(_check(db), {})
-        self._save(state)
+        with self._edit() as state:
+            state.setdefault(_check(db), {})
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
 
     def create_table(
@@ -92,23 +109,21 @@ class Catalog:
         re-register, idempotently) a table root and expose it to SQL. The
         table may already hold data (external-table registration) or be
         written afterwards via the returned handle."""
-        self.create_database(db)
-        state = self._load()
+        _check(db)
         entry = {
             "path": path or os.path.join(self.root, db, _check(table)),
             "partition_by": partition_by or [],
         }
-        state[db][table] = entry
-        self._save(state)
+        with self._edit() as state:
+            state.setdefault(db, {})[table] = entry
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = ParquetTable(self.spark, entry["path"], partition_by=entry["partition_by"])
-        if t.exists():
-            self._bind_view(db, table, t)
+        self._bind_view(db, table, t)
         return t
 
     def drop_table(self, db: str, table: str, purge: bool = False) -> None:
-        state = self._load()
-        entry = state.get(db, {}).pop(table, None)
-        self._save(state)
+        with self._edit() as state:
+            entry = state.get(db, {}).pop(table, None)
         self.spark.sql(f"DROP VIEW IF EXISTS {_check(db)}.{_check(table)}")
         if purge and entry:
             import shutil
@@ -156,7 +171,8 @@ class Catalog:
     def refresh(self, db: str, table: str) -> None:
         """REFRESH TABLE analogue: re-bind the SQL view to the table's
         current snapshot (a write commits a new pointer; views pin the dirs
-        they were built over, so refresh after out-of-band writes)."""
+        they were built over, so refresh after out-of-band writes). A no-op
+        on a registered table that holds no data yet."""
         self._bind_view(db, table, self.table(db, table))
 
     def attach(self) -> None:
@@ -167,9 +183,7 @@ class Catalog:
         for db in sorted(state):
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {_check(db)}")
             for table in sorted(state[db]):
-                t = self.table(db, table)
-                if t.exists():
-                    self._bind_view(db, table, t)
+                self._bind_view(db, table, self.table(db, table))
 
     def sql(self, text: str) -> DataFrame:
         """The ad-hoc SQL front door over cataloged names (in-process
@@ -178,30 +192,13 @@ class Catalog:
         return self.spark.sql(text)
 
     def _bind_view(self, db: str, table: str, t: ParquetTable) -> None:
-        """CREATE OR REPLACE VIEW db.table over the current snapshot: one
-        SELECT per data dir, missing columns null-filled (mergeSchema), glued
-        with UNION ALL — the exact frame ``ParquetTable.read()`` yields."""
-        merged = t.read().schema
-        selects = []
-        for d in t.data_dirs():
-            have = {f.name for f in self.spark.read.parquet(d).schema.fields}
-            cols = ", ".join(
-                f"`{f.name}`"
-                if f.name in have
-                else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
-                for f in merged.fields
+        """CREATE OR REPLACE VIEW db.table AS the current snapshot's body
+        from ``ParquetTable.view_sql()`` — the relation ``read()`` yields;
+        nothing to bind until the table holds data."""
+        if t.exists():
+            self.spark.sql(
+                f"CREATE OR REPLACE VIEW {_check(db)}.{_check(table)} AS {t.view_sql()}"
             )
-            selects.append(f"SELECT {cols} FROM parquet.`{d}`")
-        if not selects:  # zero-row snapshot: typed empty relation
-            cols = ", ".join(
-                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
-                for f in merged.fields
-            )
-            selects = [f"SELECT {cols} WHERE 1 = 0"]
-        body = " UNION ALL ".join(selects)
-        self.spark.sql(
-            f"CREATE OR REPLACE VIEW {_check(db)}.{_check(table)} AS {body}"
-        )
 
 
 def serve(

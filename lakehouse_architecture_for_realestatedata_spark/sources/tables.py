@@ -28,11 +28,20 @@ A snapshot is a *list of references* to immutable data directories, so:
     caches (reference: airflow/dags/end_to_end_pipeline.py:209-244): a
     re-read simply resolves the new pointer.
 
+One scan builder (``_scan``) defines the snapshot relation: each data dir's
+scan conformed to the manifest schema (columns it predates null-filled,
+types cast, manifest column order), unioned. ``read``, ``read_where``,
+``read_changes``, the MERGE / DELETE / UPDATE targets and ``compact`` take
+its DataFrame; ``view_sql`` renders the same relation as the SQL body the
+``Catalog`` binds its views to. So every reader of a snapshot sees the same
+columns whichever dirs pruning keeps.
+
 Concurrency: optimistic, Delta-style. A commit CLAIMS its version by
 hard-linking the manifest into place — ``link(2)`` is create-exclusive, so
 exactly one writer wins ``v=n+1`` and every loser gets
 ``ConcurrentCommitError`` (the same protocol as Delta's
-put-if-absent ``n.json``). Blind writes rebase and retry automatically:
+put-if-absent ``n.json``). A won claim runs the auto-vacuum (``retain``
+versions). Blind writes rebase and retry automatically:
 append re-reads the winner's file list (its own data dir is already on
 disk, so the retry is a metadata-only recommit), overwrite just claims the
 next slot. Read-modify-write ops (merge / delete_where / compact) CANNOT
@@ -85,6 +94,16 @@ _LATEST = "_latest"
 #: stall on a large accumulated dir. Past this many files the distributed
 #: aggregate job is the right physics.
 _FOOTER_WALK_CAP = 1024
+
+
+def _conformed(field, have: str | None) -> str:
+    """SQL select item giving manifest ``field`` from a dir scan whose
+    column of that name has type ``have`` (None: the dir lacks it)."""
+    name = "`" + field.name.replace("`", "``") + "`"
+    want = field.dataType.simpleString()
+    if have == want:
+        return name
+    return f"CAST({'NULL' if have is None else name} AS {want}) AS {name}"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -182,7 +201,6 @@ class ParquetTable:
         schema_json: str,
         stats: dict | None = None,
         op: str = "WRITE",
-        blooms: dict | None = None,
     ) -> None:
         """Claim ``version`` with create-exclusive semantics, then advance
         the pointer. The manifest is written to a temp name and hard-linked
@@ -192,18 +210,14 @@ class ParquetTable:
         manifest; the next writer's _next_version skips past it. The schema
         rides in the manifest so an all-rows-deleted table still reads back
         empty with its columns intact; per-dir min/max column stats ride
-        alongside for data skipping (``read_where``)."""
+        alongside for data skipping (``read_where``). A won claim then
+        auto-vacuums to ``retain`` versions — the one place every write
+        does."""
         os.makedirs(self.root, exist_ok=True)
         tmp = os.path.join(self.root, f".manifest.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             json.dump(
-                {
-                    "dirs": rel_dirs,
-                    "schema": schema_json,
-                    "stats": stats or {},
-                    "blooms": {k: v for k, v in (blooms or {}).items() if v},
-                    "op": op,
-                },
+                {"dirs": rel_dirs, "schema": schema_json, "stats": stats or {}, "op": op},
                 fh,
                 default=str,
             )
@@ -225,33 +239,50 @@ class ParquetTable:
             with open(tmp, "w") as fh:
                 fh.write(str(version))
             os.replace(tmp, os.path.join(self.root, _LATEST))  # atomic swap
+        self._vacuum(self.retain)
 
     # ---------------------------------------------------------------- read
-    def read(self, version: int | None = None) -> DataFrame:
-        """Union of the snapshot's data-dir scans. Each dir self-describes
-        its partition layout, filters/pruning push into every scan, and
-        ``unionByName(allowMissingColumns)`` realizes mergeSchema semantics
-        across appends that widened the schema.
+    def _scan(
+        self, manifest: dict, rels: list[str] | None = None
+    ) -> tuple[DataFrame, str]:
+        """The snapshot relation over data dirs ``rels`` (default: all of
+        ``manifest``'s), as a DataFrame and as the SQL text of the same
+        query. Each dir's scan self-describes its partition layout (filters
+        push into every scan) and is projected onto the MANIFEST schema:
+        columns the dir predates are null-filled (mergeSchema), a column
+        whose scanned type differs (a narrower type an append widened, an
+        inferred partition type) is cast, and columns take the manifest's
+        order. The projected scans are unioned.
 
-        The MANIFEST schema governs: a snapshot whose schema was widened by
-        an append that contributed zero data files (a legitimately empty
-        batch) still exposes the new columns, null-filled — without this,
-        the same pipeline run reads different schemas depending on whether
-        a batch happened to carry rows."""
+        So the relation's schema is the manifest's whichever dirs are
+        scanned: a ``read_where`` that prunes the dir holding a newer
+        column, a snapshot widened by an append that contributed zero data
+        files, and a zero-row snapshot (a typed empty relation) all expose
+        the same columns as a full read."""
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        frames, selects = [], []
+        for rel in manifest["dirs"] if rels is None else rels:
+            path = os.path.join(self.root, rel)
+            df = self.spark.read.parquet(path)
+            have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+            cols = [_conformed(f, have.get(f.name)) for f in schema.fields]
+            frames.append(df.selectExpr(*cols))
+            selects.append(f"SELECT {', '.join(cols)} FROM parquet.`{path}`")
+        if not frames:
+            empty = ", ".join(_conformed(f, None) for f in schema.fields)
+            return self.spark.createDataFrame([], schema), f"SELECT {empty} WHERE 1 = 0"
+        return reduce(DataFrame.union, frames), " UNION ALL ".join(selects)
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Snapshot ``version`` (default: latest) — see ``_scan``."""
         v = self.version() if version is None else version
-        with open(self._manifest_path(v)) as fh:
-            schema = StructType.fromJson(json.loads(json.load(fh)["schema"]))
-        dirs = self.data_dirs(v)
-        if not dirs:  # zero-row snapshot: schema comes from the manifest
-            return self.spark.createDataFrame([], schema)
-        dfs = [self.spark.read.parquet(d) for d in dirs]
-        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-        missing = [f for f in schema.fields if f.name not in out.columns]
-        if missing:
-            out = out.withColumns(
-                {f.name: F.lit(None).cast(f.dataType) for f in missing}
-            )
-        return out
+        return self._scan(self._manifest(v))[0]
+
+    def view_sql(self) -> str:
+        """The SQL body of the latest snapshot: one ``SELECT`` per data dir
+        over ``parquet.`<dir>```, glued with ``UNION ALL`` — the relation
+        ``read()`` returns, for a ``CREATE VIEW ... AS``."""
+        return self._scan(self._manifest(self.version()))[1]
 
     def read_where(self, *conds: tuple) -> DataFrame:
         """Data-skipping scan (Delta zonemap analogue): each condition is a
@@ -267,10 +298,8 @@ class ParquetTable:
         identical to ``read().filter(...)`` — skipping is purely a scan
         reduction. Conditions on columns without stats simply don't prune.
         """
-        v = self.version()
-        m = self._manifest(v)
-        kept = self._matching_dirs(m, conds)
-        df = self._read_rel_dirs(m, kept)
+        m = self._manifest(self.version())
+        df = self._scan(m, self._matching_dirs(m, conds))[0]
         return df.filter(skipping.conds_filter(conds))
 
     def _matching_dirs(self, manifest: dict, conds) -> list[str]:
@@ -282,15 +311,6 @@ class ParquetTable:
             for rel in manifest["dirs"]
             if skipping.may_match(stats.get(rel, {}), conds)
         ]
-
-    def _read_rel_dirs(self, manifest: dict, rels: list[str]) -> DataFrame:
-        """Scan of exactly ``rels`` (mergeSchema union); empty list → empty
-        frame with the manifest's schema."""
-        if not rels:
-            schema = StructType.fromJson(json.loads(manifest["schema"]))
-            return self.spark.createDataFrame([], schema)
-        dfs = [self.spark.read.parquet(os.path.join(self.root, d)) for d in rels]
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
     def read_changes(self, since: int, to: int | None = None) -> DataFrame:
         """Incremental consumption (Delta Change Data Feed analogue for the
@@ -324,8 +344,7 @@ class ParquetTable:
                 )
         m = self._manifest(hi)
         old = set(self._manifest(since)["dirs"])
-        new = [rel for rel in m["dirs"] if rel not in old]
-        return self._read_rel_dirs(m, new)
+        return self._scan(m, [rel for rel in m["dirs"] if rel not in old])[0]
 
     # --------------------------------------------------------------- write
     def _write_data(self, df: DataFrame) -> tuple[str | None, dict | None]:
@@ -391,157 +410,6 @@ class ParquetTable:
             return {}
         row = df.agg(*skipping.minmax_aggs(cols)).collect()[0]
         return skipping.zonemap_of(row, cols)
-
-    # ---------------------------------------------------------- properties
-    _PROPS = "_props.json"
-
-    def props(self) -> dict:
-        """Table properties (Delta ``TBLPROPERTIES`` analogue) — writer-side
-        settings that govern FUTURE writes, stored in a side file like
-        constraints. Known keys: ``bloom_cols`` (list of columns to build
-        per-dir bloom filters for) and ``cluster`` (write-time clustering
-        spec, see ``set_clustering``)."""
-        try:
-            with open(os.path.join(self.root, self._PROPS)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
-
-    def set_props(self, **updates) -> None:
-        """Merge ``updates`` into the table properties (atomic replace;
-        single-writer DDL like ``add_constraint``). A key set to None is
-        removed."""
-        cur = self.props()
-        for k, v in updates.items():
-            if v is None:
-                cur.pop(k, None)
-            else:
-                cur[k] = v
-        os.makedirs(self.root, exist_ok=True)
-        tmp = os.path.join(self.root, f".props.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(cur, fh)
-        os.replace(tmp, os.path.join(self.root, self._PROPS))
-
-    def set_bloom_filter(self, cols: list[str] | None) -> None:
-        """Delta bloom-filter-index analogue: future writes build a per-dir
-        bloom filter over each named column, stored in the manifest next to
-        the zonemap stats. Zonemaps prune by [min,max] RANGE — useless for
-        point lookups on high-cardinality unordered keys (a uuid/md5 doc_id
-        spans the whole keyspace in every dir); the bloom answers "can this
-        dir contain THIS key" with ~0.1% false positives at 2 bytes/key, so
-        ``read_where(("doc_id", "=", k))`` and keyed MERGE touch only the
-        dirs that actually hold the key. Existing dirs are not back-filled —
-        run ``compact()`` to index history (same as Delta's bloom index
-        applying to new files only)."""
-        self.set_props(bloom_cols=list(cols) if cols else None)
-
-    # Bloom sizing: m = 16 bits/key → with k=6 probes FPR ≈ 0.1%. The build
-    # is one narrow Spark agg over the new dir per column (explode k probe
-    # positions → bit_or per 64-bit lane) — O(new data), distributed, no
-    # per-row Python. Probes hash driver-side values through the SAME JVM
-    # xxhash64 via a 1-row local-relation job, so build and probe can never
-    # drift (Spark's xxhash64 output depends on the column's physical type).
-    _BLOOM_K = 6
-    _BLOOM_BITS_PER_KEY = 16
-    _BLOOM_MIN_BITS = 1 << 10
-    _BLOOM_MAX_BITS = 1 << 20  # 128 KiB of manifest per (dir, col) at most
-    _BLOOM_PROBE_CAP = 10_000  # driver-side membership tests per dir
-
-    def _dir_blooms(self, rel: str | None) -> dict:
-        """{col: {"m": bits, "k": probes, "b64": packed lanes}} for a freshly
-        written data dir — empty unless ``bloom_cols`` is set."""
-        import base64
-        import struct
-
-        cols = self.props().get("bloom_cols", [])
-        if not cols or rel is None:
-            return {}
-        df = self.spark.read.parquet(os.path.join(self.root, rel))
-        cols = [c for c in cols if c in df.columns]
-        if not cols:
-            return {}
-        ndv = df.agg(
-            *[F.approx_count_distinct(c).alias(f"__n{i}") for i, c in enumerate(cols)]
-        ).collect()[0]
-        out: dict = {}
-        for i, c in enumerate(cols):
-            target = max(
-                self._BLOOM_MIN_BITS, int(ndv[f"__n{i}"]) * self._BLOOM_BITS_PER_KEY
-            )
-            m = min(self._BLOOM_MAX_BITS, 1 << (target - 1).bit_length())
-            rows = (
-                df.select(F.col(c).alias("v"))
-                .where(F.col("v").isNotNull())
-                .select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.pmod(F.xxhash64(F.col("v"), F.lit(s)), F.lit(m))
-                                for s in range(self._BLOOM_K)
-                            ]
-                        )
-                    ).alias("p")
-                )
-                .select(
-                    (F.col("p") / F.lit(64)).cast("long").alias("lane"),
-                    F.shiftleft(
-                        F.lit(1).cast("bigint"), (F.col("p") % 64).cast("int")
-                    ).alias("bit"),
-                )
-                .groupBy("lane")
-                .agg(F.bit_or("bit").alias("bits"))
-                .collect()
-            )
-            packed = bytearray(m // 8)
-            for r in rows:
-                struct.pack_into("<q", packed, int(r["lane"]) * 8, int(r["bits"]))
-            out[c] = {"m": m, "k": self._BLOOM_K, "b64": base64.b64encode(bytes(packed)).decode()}
-        return out
-
-    def _bloom_hashes(self, values: list, dtype) -> list[list[int]] | None:
-        """Per-value [k raw xxhash64 hashes], order-aligned with ``values``
-        (which must be non-null), computed by the JVM over a local relation
-        (no scan, one tiny job for ALL values). Per-dir positions are
-        ``hash % m`` — Python ``%`` on a positive modulus matches Spark's
-        ``pmod`` exactly. Returns None (= cannot prune) if the values don't
-        coerce to the column type. An explicit row index carries the
-        alignment so no assumption about collect() order is needed."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        if not values:
-            return []
-        try:
-            sdf = self.spark.createDataFrame(
-                [(i, v) for i, v in enumerate(values)],
-                StructType(
-                    [StructField("i", LongType()), StructField("v", dtype)]
-                ),
-            )
-            rows = sdf.select(
-                "i",
-                *[
-                    F.xxhash64(F.col("v"), F.lit(s)).alias(f"h{s}")
-                    for s in range(self._BLOOM_K)
-                ],
-            ).collect()
-        except Exception:
-            return None
-        by_i = {r["i"]: [r[f"h{s}"] for s in range(self._BLOOM_K)] for r in rows}
-        return [by_i[i] for i in range(len(values))]
-
-    @staticmethod
-    def _bloom_may_contain(bloom: dict, hashes: list[int]) -> bool:
-        import base64
-        import struct
-
-        m = bloom["m"]
-        lanes = struct.unpack(f"<{m // 64}q", base64.b64decode(bloom["b64"]))
-        for h in hashes:
-            p = h % m
-            if not (lanes[p // 64] >> (p % 64)) & 1:
-                return False
-        return True
 
     # ---------------------------------------------------------- constraints
     _CONSTRAINTS = "_constraints.json"
@@ -639,22 +507,18 @@ class ParquetTable:
         the data dir is already on disk, so a retry is metadata-only."""
         rel, zonemap = self._write_data(df)
         self._validate_rel(rel)
-        stats = {rel: zonemap} if rel else {}
-        blooms = {rel: self._dir_blooms(rel)} if rel else {}
         while True:
             try:
                 self._commit(
                     self._next_version(),
                     [rel] if rel else [],
                     df.schema.json(),
-                    stats,
+                    {rel: zonemap} if rel else {},
                     op="OVERWRITE",
-                    blooms=blooms,
                 )
-                break
+                return
             except ConcurrentCommitError:
                 continue
-        self._vacuum(self.retain)
 
     def append(self, df: DataFrame, merge_schema: bool = True) -> None:
         """S7: file-additive append — writes ONLY the new rows (O(new data)
@@ -675,131 +539,88 @@ class ParquetTable:
         rel, zonemap = self._write_data(df)
         self._validate_rel(rel)
         new_stats = {rel: zonemap} if rel else {}
-        new_blooms = {rel: self._dir_blooms(rel)} if rel else {}
         while True:
             # Rebase onto whatever snapshot is newest RIGHT NOW: carry its
             # file list plus our (already-written) data dir. Losing the CAS
             # race costs one metadata re-read, never a data rewrite.
             base = self._next_version() - 1
-            prior = [os.path.relpath(d, self.root) for d in self.data_dirs(base)]
+            m = self._manifest(base)
             merged_schema = (
                 self.read(base).unionByName(df, allowMissingColumns=True).schema.json()
                 if merge_schema
                 else df.schema.json()
             )
-            stats = {**self._manifest(base).get("stats", {}), **new_stats}
-            blooms = {**self._manifest(base).get("blooms", {}), **new_blooms}
             try:
                 self._commit(
                     base + 1,
-                    prior + ([rel] if rel else []),
+                    m["dirs"] + ([rel] if rel else []),
                     merged_schema,
-                    stats,
+                    {**m.get("stats", {}), **new_stats},
                     op="APPEND",
-                    blooms=blooms,
                 )
-                break
+                return
             except ConcurrentCommitError:
                 continue
-        self._vacuum(self.retain)
-
-    def _overwrite_expecting(
-        self, df: DataFrame, base: int, op: str = "OVERWRITE", validate: bool = False
-    ) -> None:
-        """Commit ``df`` as ``base + 1`` or abort. For read-modify-write ops:
-        ``df`` was computed against snapshot ``base``, so if any other writer
-        has claimed ``base + 1`` the output is stale — surface
-        ConcurrentCommitError (Delta's ConcurrentAppendException analogue)
-        instead of silently dropping the other writer's rows. ``validate``
-        only for ops that can INTRODUCE constraint violations (UPDATE) —
-        DELETE/OPTIMIZE re-emit rows that already passed."""
-        rel, zonemap = self._write_data(df)
-        if validate:
-            self._validate_rel(rel)
-        stats = {rel: zonemap} if rel else {}
-        blooms = {rel: self._dir_blooms(rel)} if rel else {}
-        try:
-            self._commit(
-                base + 1,
-                [rel] if rel else [],
-                df.schema.json(),
-                stats,
-                op=op,
-                blooms=blooms,
-            )
-        except ConcurrentCommitError:
-            if rel:  # drop the orphaned output dir before re-raising
-                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            raise
-        self._vacuum(self.retain)
 
     def merge(
         self,
         source: DataFrame,
         key: str | list[str],
         when_matched: str = "update_all",
-        prune: Column | None = None,
     ) -> None:
-        """S9: keyed upsert — update-all matched rows, insert-all new rows.
+        """S9: keyed upsert — update-all matched rows, insert-all new rows
+        (``when_matched="keep_target"``: insert-only, matched rows keep the
+        target's values).
 
         Requires the source to be unique per key (the reference pre-dedups
         with a row_number window before every merge — enforce upstream with
         ``operators.dedup.dedup_latest``; a duplicate-key source makes
         "update-all" ill-defined, which is exactly why Delta errors on it).
 
-        ``prune``: optional predicate limiting which target rows can match
-        (partition-prune analogue); rows failing ``prune`` are carried over
-        untouched without joining.
-
         File-pruned like Delta's merge: the distinct source keys (or the
         per-column envelope for multi-key/huge sources) are tested against
         each data dir's manifest zonemap, and dirs that cannot contain a
         source key are carried into the new snapshot BY REFERENCE — only
-        overlapping dirs are read, anti-joined, and rewritten. A target row matching a source key necessarily lives in
-        an overlapping dir, so the join over just those dirs is exact (for
-        insert-only mode too: the source-vs-target anti-join only needs the
-        dirs that could hold a matching key). An upsert of one day's keys
-        into a date-keyed 100 TB table rewrites one day's files.
+        overlapping dirs are read, anti-joined, and rewritten. A target row
+        matching a source key necessarily lives in an overlapping dir, so
+        the join over just those dirs is exact (for insert-only mode too:
+        the source-vs-target anti-join only needs the dirs that could hold a
+        matching key). An upsert of one day's keys into a date-keyed 100 TB
+        table rewrites one day's files. The committed schema is the
+        manifest's (the target scan carries every column, untouched dirs'
+        included) plus any new source columns.
         """
         keys = [key] if isinstance(key, str) else list(key)
         if not self.exists():
             return self.overwrite(source)
         base = self._next_version() - 1
         m = self._manifest(base)
-
         stats = m.get("stats", {})
         touched = skipping.overlapping_units(
             ((rel, stats.get(rel, {})) for rel in m["dirs"]), keys, source
         )
-        untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
-        target = self._read_rel_dirs(m, touched)
-
-        if prune is not None:
-            frozen = target.filter(~prune)
-            target = target.filter(prune)
-
+        target = self._scan(m, touched)[0]
         if when_matched == "update_all":
-            kept = target.join(source.select(*keys), on=keys, how="left_anti")
+            target = target.join(source.select(*keys), on=keys, how="left_anti")
         elif when_matched == "keep_target":  # insert-only merge
             source = source.join(target.select(*keys), on=keys, how="left_anti")
-            kept = target
         else:
             raise ValueError(f"unknown when_matched={when_matched!r}")
-
-        out = kept.unionByName(source, allowMissingColumns=True)
-        if prune is not None:
-            out = frozen.unionByName(out, allowMissingColumns=True)
-        # Full post-merge schema: every target column (from the manifest,
-        # untouched dirs included) plus any new source columns.
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        merged_schema = (
-            self.spark.createDataFrame([], schema)
-            .unionByName(out.limit(0), allowMissingColumns=True)
-            .schema
-        )
+        out = target.unionByName(source, allowMissingColumns=True)
         self._commit_rewrite(
-            base, m, untouched, out, merged_schema.json(), op="MERGE", validate=True
+            base, m, touched, out, "MERGE", out.schema.json(), validate=True
         )
+
+    def _rewrite_scope(
+        self, manifest: dict, predicate: Column | tuple, more: tuple
+    ) -> tuple[list[str], Column]:
+        """The dirs a DELETE / UPDATE rewrites and its row condition: every
+        dir for a Column predicate; for ``(col, op, value)`` tuples only the
+        dirs the zonemaps cannot prove untouched."""
+        if isinstance(predicate, Column):
+            return list(manifest["dirs"]), predicate
+        conds = [predicate, *more]
+        return self._matching_dirs(manifest, conds), skipping.conds_filter(conds)
 
     def delete_where(self, predicate: Column | tuple, *more: tuple) -> None:
         """Delete matching rows (Delta DELETE analogue). With a Column
@@ -809,21 +630,12 @@ class ParquetTable:
         matching row are rewritten — a retention delete on a time-keyed
         table costs O(expired slice), not O(table)."""
         base = self._next_version() - 1
-        if isinstance(predicate, Column):
-            self._overwrite_expecting(
-                self.read(base).filter(~predicate), base, op="DELETE"
-            )
-            return
-        conds = [predicate, *more]
         m = self._manifest(base)
-        touched = self._matching_dirs(m, conds)
+        touched, cond = self._rewrite_scope(m, predicate, more)
         if not touched:
             return  # zonemaps prove no row matches: nothing to do
-        untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
-        survivors = self._read_rel_dirs(m, touched).filter(
-            ~skipping.conds_filter(conds)
-        )
-        self._commit_rewrite(base, m, untouched, survivors, m["schema"], op="DELETE")
+        survivors = self._scan(m, touched)[0].filter(~cond)
+        self._commit_rewrite(base, m, touched, survivors, "DELETE")
 
     def update_where(
         self,
@@ -839,72 +651,60 @@ class ParquetTable:
         keep the old schema, so a type change would fork the table schema)."""
         base = self._next_version() - 1
         m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        known = {f.name for f in schema.fields}
+        known = {f.name for f in StructType.fromJson(json.loads(m["schema"])).fields}
         bad = set(assignments) - known
         if bad:
             raise ValueError(f"update_where: unknown columns {sorted(bad)}")
-
-        def apply(df: DataFrame, cond: Column) -> DataFrame:
-            for name, expr in assignments.items():
-                df = df.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))
-            return df
-
-        if isinstance(predicate, Column):
-            self._overwrite_expecting(
-                apply(self.read(base), predicate), base, op="UPDATE", validate=True
-            )
-            return
-        conds = [predicate, *more]
-        touched = self._matching_dirs(m, conds)
+        touched, cond = self._rewrite_scope(m, predicate, more)
         if not touched:
             return
-        untouched = [rel for rel in m["dirs"] if rel not in set(touched)]
-        out = apply(self._read_rel_dirs(m, touched), skipping.conds_filter(conds))
-        self._commit_rewrite(
-            base, m, untouched, out, m["schema"], op="UPDATE", validate=True
-        )
+        out = self._scan(m, touched)[0]
+        for name, expr in assignments.items():
+            out = out.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))
+        self._commit_rewrite(base, m, touched, out, "UPDATE", validate=True)
 
     def _commit_rewrite(
         self,
         base: int,
         manifest: dict,
-        untouched: list[str],
+        touched: list[str],
         rewritten: DataFrame,
-        schema_json: str,
-        op: str = "REWRITE",
+        op: str,
+        schema_json: str | None = None,
         validate: bool = False,
     ) -> None:
-        """Commit a partial rewrite: carry ``untouched`` dirs (and their
-        stats) by reference, write ``rewritten`` as one new dir. Aborts with
-        ConcurrentCommitError on conflict (read-modify-write cannot rebase)
-        and GCs its orphaned output dir, like ``_overwrite_expecting``.
-        ``validate`` enforces CHECK constraints on the rewritten dir (MERGE /
-        UPDATE — ops whose output contains NEW values)."""
+        """Commit ``rewritten`` — computed from the ``touched`` dirs of
+        snapshot ``base`` — as ``base + 1``: write it as one new dir, carry
+        every other dir (and its stats) by reference. A rewrite of every dir
+        (``compact``, a Column-predicate DELETE / UPDATE) carries none.
+        ``schema_json`` defaults to the manifest's. Read-modify-write cannot
+        rebase: if another writer claimed ``base + 1`` the output is stale,
+        so its dir is GC'd and ConcurrentCommitError raised (Delta's
+        ConcurrentAppendException analogue) instead of silently dropping
+        the other writer's rows. ``validate`` enforces CHECK constraints on
+        the rewritten dir (MERGE / UPDATE — ops whose output contains NEW
+        values; DELETE / OPTIMIZE re-emit rows that already passed)."""
         rel, zonemap = self._write_data(rewritten)
         if validate:
             self._validate_rel(rel)
+        dropped = set(touched)
+        untouched = [r for r in manifest["dirs"] if r not in dropped]
         old_stats = manifest.get("stats", {})
         stats = {r: old_stats[r] for r in untouched if r in old_stats}
-        old_blooms = manifest.get("blooms", {})
-        blooms = {r: old_blooms[r] for r in untouched if r in old_blooms}
         if rel:
             stats[rel] = zonemap
-            blooms[rel] = self._dir_blooms(rel)
         try:
             self._commit(
                 base + 1,
                 untouched + ([rel] if rel else []),
-                schema_json,
+                schema_json or manifest["schema"],
                 stats,
                 op=op,
-                blooms=blooms,
             )
         except ConcurrentCommitError:
-            if rel:
+            if rel:  # drop the orphaned output dir before re-raising
                 shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
             raise
-        self._vacuum(self.retain)
 
     # -------------------------------------------------------------- hygiene
     def file_stats(self) -> dict:
@@ -962,23 +762,19 @@ class ParquetTable:
         """
         stats = self.file_stats()
         base = self._next_version() - 1
+        m = self._manifest(base)
         n = max(1, -(-stats["total_bytes"] // target_bytes))  # ceil
         if not cluster_cols:
-            df = self.read(base)
-            if self.partition_by:
-                df = df.repartition(n, *self.partition_by)
-            else:
-                df = df.repartition(n)
+            df = self._scan(m)[0].repartition(n, *self.partition_by)
             # Abort-on-conflict: a concurrent append between our read and
             # commit would otherwise be silently dropped by the rewrite.
-            self._overwrite_expecting(df, base, op="OPTIMIZE")
+            self._commit_rewrite(base, m, m["dirs"], df, "OPTIMIZE")
             return self.file_stats()
 
         from lakehouse_architecture_for_realestatedata_spark.plans.layout import cluster_by
 
-        m = self._manifest(base)
         n = n_dirs or n
-        df = cluster_by(self.read(base), cluster_cols, n_partitions=n, zorder=zorder)
+        df = cluster_by(self._scan(m)[0], cluster_cols, n_partitions=n, zorder=zorder)
         # Tag each range bucket with its partition id and let ONE distributed
         # write fan the buckets into hive subdirs; each subdir is then
         # promoted (a driver-side rename) to a first-class data dir.
@@ -1014,7 +810,6 @@ class ParquetTable:
             for rel in rels:
                 shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
             raise
-        self._vacuum(self.retain)
         return self.file_stats()
 
     def history(self) -> list[dict]:
@@ -1057,12 +852,10 @@ class ParquetTable:
                     m["schema"],
                     m.get("stats", {}),
                     op="RESTORE",
-                    blooms=m.get("blooms", {}),
                 )
-                break
+                return
             except ConcurrentCommitError:
                 continue
-        self._vacuum(self.retain)
 
     def vacuum(self, keep: int | None = None) -> None:
         """Explicit VACUUM: shrink retention to ``keep`` versions right now
@@ -1071,7 +864,7 @@ class ParquetTable:
         a RESTORE you do not want to be able to re-undo."""
         self._vacuum(self.retain if keep is None else max(1, keep))
 
-    def _vacuum(self, keep: int = 2) -> None:
+    def _vacuum(self, keep: int) -> None:
         """Drop manifests older than the last ``keep`` versions and the data
         dirs that only those dropped manifests referenced (Delta VACUUM
         analogue). Deliberately GCs ONLY dirs some expired manifest

@@ -59,6 +59,82 @@ def test_view_merges_schema_like_read(spark, tmp_path):
     via_sql = {r["id"]: r["extra"] for r in cat.sql("SELECT id, extra FROM bronze.drift").collect()}
     assert via_sql == {1: None, 2: 9.5}
 
+    # A zero-row snapshot binds as a typed empty relation.
+    empty = cat.create_table("bronze", "empty")
+    empty.overwrite(spark.createDataFrame([], "id int, val string"))
+    # A partitioned table widened by a non-empty and by an empty append.
+    part = cat.create_table("gold", "widened", partition_by=["g"])
+    part.overwrite(spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "id int, g int, val string"))
+    part.append(spark.createDataFrame([(3, 1, "c", 2.5)], "id int, g int, val string, extra double"))
+    part.append(spark.createDataFrame([], "id int, g int, val string, extra double, note string"))
+    for db, name, tbl in [("bronze", "drift", t), ("bronze", "empty", empty), ("gold", "widened", part)]:
+        cat.refresh(db, name)
+        view, read = spark.table(f"{db}.{name}"), tbl.read()
+        assert view.dtypes == read.dtypes, name
+        assert sorted(map(tuple, view.collect()), key=repr) == sorted(
+            map(tuple, read.collect()), key=repr
+        ), name
+
+
+def test_view_bind_scans_each_dir_once(spark, tmp_path, monkeypatch):
+    """Binding a view over an N-dir snapshot builds one parquet scan per dir
+    (the view body comes from the frames ``read()`` unions); the catalog
+    itself opens no data dir."""
+    cat = Catalog(spark, str(tmp_path / "cat_jobs"))
+    t = cat.create_table("silver", "dirs")
+    t.overwrite(spark.createDataFrame([(1, "a")], "id int, val string"))
+    t.append(spark.createDataFrame([(2, "b")], "id int, val string"))
+    t.append(spark.createDataFrame([(3, "c", 1.0)], "id int, val string, x double"))
+    assert len(t.data_dirs()) == 3
+
+    reader = type(spark.read)
+    real, calls = reader.parquet, []
+
+    def spy(self, *paths, **kw):
+        calls.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(reader, "parquet", spy)
+    cat.refresh("silver", "dirs")
+    monkeypatch.undo()
+    assert sorted(calls) == sorted(t.data_dirs())
+    assert cat.sql("SELECT count(x) AS n FROM silver.dirs").collect()[0]["n"] == 1
+
+
+def test_refresh_of_registered_empty_table_is_a_noop(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "cat_empty"))
+    cat.create_table("silver", "later")
+    cat.refresh("silver", "later")  # no data yet: nothing to bind
+    assert not spark.catalog.tableExists("silver.later")
+
+
+def test_concurrent_create_table_keeps_both_registrations(spark, tmp_path, monkeypatch):
+    """A second ``create_table`` that runs between the first one's registry
+    load and save must not be lost: the registry edit is locked, so the
+    second waits and then edits the first one's saved state."""
+    import threading
+
+    root = str(tmp_path / "cat_race")
+    done = threading.Event()
+    real_load, seen = Catalog._load, []
+
+    def second():
+        Catalog(spark, root).create_table("bronze", "second")
+        done.set()
+
+    def load_with_race(self):
+        state = real_load(self)
+        if not seen:  # the first load: let the other writer try to run now
+            seen.append(1)
+            threading.Thread(target=second, daemon=True).start()
+            done.wait(timeout=3)
+        return state
+
+    monkeypatch.setattr(Catalog, "_load", load_with_race)
+    Catalog(spark, root).create_table("bronze", "first")
+    assert done.wait(timeout=60)
+    assert Catalog(spark, root).show_tables() == ["bronze.first", "bronze.second"]
+
 
 def test_catalog_persists_across_sessions(spark, tmp_path):
     """A new Catalog object over the same root (the new-session stand-in)

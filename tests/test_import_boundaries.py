@@ -9,7 +9,12 @@ them again.
 Within the Delta side, every commit goes through one log writer and every
 row-addressed read through one scan builder: the ``engineInfo`` stamp and
 the ``_metadata.row_index`` read each appear once, so neither can be
-copied into a second hand-built commit or scan."""
+copied into a second hand-built commit or scan.
+
+On the manifest side, the snapshot relation is built only in
+``tables.py`` (``catalog.py`` opens no parquet data and spells no
+``parquet.`…``` relation), and ``ParquetTable`` auto-vacuums only from its
+commit."""
 
 from __future__ import annotations
 
@@ -114,3 +119,87 @@ def test_single_owner_check_sees_copies_and_skips_docstrings(tmp_path):
     )
     assert _hits([src], "engineInfo") == 1
     assert _hits([src], "_metadata.row_index") == 2
+
+
+# The snapshot relation (data dirs unioned and conformed to the manifest
+# schema) is defined once, by ``ParquetTable._scan``: the catalog binds its
+# views to ``ParquetTable.view_sql()`` and opens no data dir itself.
+
+
+def _parquet_reads(path: Path) -> int:
+    """``<x>.read.parquet(...)`` calls in a file."""
+    return sum(
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
+        for node in ast.walk(ast.parse(path.read_text()))
+    )
+
+
+def test_catalog_defines_no_snapshot_relation():
+    cat = SOURCES / "catalog.py"
+    assert _parquet_reads(cat) == 0, "catalog.py reads parquet itself"
+    assert _hits([cat], "parquet.`") == 0, "catalog.py spells a parquet.` relation"
+
+
+def test_snapshot_relation_check_sees_reads_and_sql(tmp_path):
+    src = tmp_path / "probe.py"
+    src.write_text(
+        'def f(spark, d):\n'
+        '    """Not counted: parquet.`docstring`."""\n'
+        '    spark.read.parquet(d).schema\n'
+        '    return spark.sql(f"SELECT * FROM parquet.`{d}`"), spark.read.json(d)\n'
+    )
+    assert _parquet_reads(src) == 1
+    assert _hits([src], "parquet.`") == 1
+
+
+# ``ParquetTable`` auto-vacuums in one place, after a won commit claim:
+# besides the explicit ``vacuum()`` entry point, ``_vacuum`` has exactly one
+# caller, ``_commit``.
+
+
+def _vacuum_callers(path: Path) -> list[str]:
+    """Name of the enclosing function of each ``_vacuum(...)`` call outside
+    the public ``vacuum`` method."""
+    out = []
+    for fn in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name == "vacuum":
+            continue
+        nested = {
+            id(n)
+            for inner in ast.walk(fn)
+            if inner is not fn and isinstance(inner, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for n in ast.walk(inner)
+        }
+        out += [
+            fn.name
+            for node in ast.walk(fn)
+            if id(node) not in nested
+            and isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "_vacuum"
+        ]
+    return out
+
+
+def test_auto_vacuum_runs_only_from_commit():
+    assert _vacuum_callers(SOURCES / "tables.py") == ["_commit"]
+
+
+def test_vacuum_caller_check_sees_every_call(tmp_path):
+    src = tmp_path / "probe.py"
+    src.write_text(
+        "class T:\n"
+        "    def vacuum(self, keep=None):\n"
+        "        self._vacuum(keep)\n"
+        "    def _commit(self):\n"
+        "        self._vacuum(2)\n"
+        "    def overwrite(self):\n"
+        "        def retry():\n"
+        "            _vacuum(1)\n"
+        "        self._commit()\n"
+        "        self._vacuum(2)\n"
+    )
+    assert sorted(_vacuum_callers(src)) == ["_commit", "overwrite", "retry"]

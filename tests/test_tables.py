@@ -779,3 +779,36 @@ def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
     agg = t._dir_stats(rel)
     assert agg["p"] == footer["p"] and agg["q"] == footer["q"]
     assert agg["id"] == footer["id"] == [1, 3]
+
+
+def test_pruned_scans_keep_the_snapshot_schema(spark, tmp_path):
+    """``read_where`` and ``read_changes`` expose ``read()``'s columns, in
+    its order and with its types, whichever dirs the zonemaps keep: here
+    after an append that added a column and widened ``a`` from int to
+    bigint, and an empty append that added another column."""
+    t = ParquetTable(spark, str(tmp_path / "sch"), retain=3)
+    t.overwrite(spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string"))
+    t.append(spark.createDataFrame([(10, "z", 1.5)], "a bigint, b string, c double"))
+    t.append(spark.createDataFrame([], "a bigint, b string, c double, d string"))
+    full = t.read()
+    assert full.dtypes == [("a", "bigint"), ("b", "string"), ("c", "double"), ("d", "string")]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    for conds, col in [
+        ([("a", ">=", 0)], F.col("a") >= 0),  # every dir kept
+        ([("a", ">", 1000)], F.col("a") > 1000),  # every dir pruned
+        ([("a", "=", 1)], F.col("a") == 1),  # the older dir only
+        ([("a", "=", 10), ("c", ">", 1.0)], (F.col("a") == 10) & (F.col("c") > 1.0)),
+    ]:
+        out = t.read_where(*conds)
+        assert out.dtypes == full.dtypes, conds
+        assert rows(out) == rows(full.filter(col)), conds
+
+    added = t.read_changes(0)  # the widening dir plus the empty append
+    assert added.dtypes == full.dtypes
+    assert rows(added) == [(10, "z", 1.5, None)]
+    nothing = t.read_changes(1, 2)  # only the empty append: zero dirs
+    assert nothing.dtypes == t.read(2).dtypes == full.dtypes
+    assert nothing.count() == 0
