@@ -16,11 +16,22 @@ Without a metastore service in this image, the same contract is met with:
     uses, so ``spark.sql("SELECT ... FROM bronze.properties")`` reads
     exactly what ``read()`` reads.
 
+The view reads each data dir through an EXTERNAL, schema-declared table
+in the private database ``_lakeflow_dirs`` (``tables.DIR_DB``), the way the
+reference's metastore carries each Delta table's schema: neither binding a
+view nor resolving it in a query re-derives a schema, so a bind runs no
+Spark job. That database is the engine's, not a user namespace; its tables
+are named after table roots and data dirs and come and go with them.
+``tables.py`` renders every statement, the catalog only executes them.
+
 ``refresh`` re-binds a view to the newest snapshot — the honest analogue of
 ``REFRESH TABLE`` under snapshot-pointer storage (and what the reference
 achieves by restarting its whole Thrift server,
-airflow/dags/end_to_end_pipeline.py:209-244). A table registered but not
-yet written has no view; ``refresh`` and ``attach`` skip it.
+airflow/dags/end_to_end_pipeline.py:209-244) — and drops the dir tables of
+data dirs vacuum has removed (live ones stay: a query on the previous view
+may still resolve them). ``drop_table`` drops all of the table's dir
+tables; they are EXTERNAL, so no data goes with them. A table registered
+but not yet written has no view; ``refresh`` and ``attach`` skip it.
 
 Scale: the registry is a tiny JSON document (thousands of entries ≪ 1 MB),
 edited under an exclusive ``flock`` on a sidecar lock file so concurrent
@@ -40,7 +51,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+from lakehouse_architecture_for_realestatedata_spark.sources.tables import DIR_DB, ParquetTable
 
 _NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -122,9 +133,15 @@ class Catalog:
         return t
 
     def drop_table(self, db: str, table: str, purge: bool = False) -> None:
+        """Unregister ``db.table`` and drop its view and its dir tables;
+        ``purge`` also deletes the table's files."""
         with self._edit() as state:
             entry = state.get(db, {}).pop(table, None)
         self.spark.sql(f"DROP VIEW IF EXISTS {_check(db)}.{_check(table)}")
+        if entry:
+            t = ParquetTable(self.spark, entry["path"])
+            for stmt in t.drop_dir_tables_sql(self._dir_tables(t), gone_only=False):
+                self.spark.sql(stmt)
         if purge and entry:
             import shutil
 
@@ -193,12 +210,28 @@ class Catalog:
 
     def _bind_view(self, db: str, table: str, t: ParquetTable) -> None:
         """CREATE OR REPLACE VIEW db.table AS the current snapshot's body
-        from ``ParquetTable.view_sql()`` — the relation ``read()`` yields;
-        nothing to bind until the table holds data."""
-        if t.exists():
-            self.spark.sql(
-                f"CREATE OR REPLACE VIEW {_check(db)}.{_check(table)} AS {t.view_sql()}"
-            )
+        from ``ParquetTable.view_sql()`` — the relation ``read()`` yields —
+        after creating the dir tables it reads that do not exist yet, then
+        drop the dir tables of data dirs vacuum has removed; nothing to bind
+        until the table holds data. Runs no Spark job."""
+        if not t.exists():
+            return
+        tables, body = t.view_sql()
+        listed = self._dir_tables(t)
+        if not listed:  # the table's first bind: DIR_DB may not exist yet
+            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {DIR_DB}")
+        for name, ddl in tables.items():
+            if name not in listed:
+                self.spark.sql(ddl)
+        self.spark.sql(f"CREATE OR REPLACE VIEW {_check(db)}.{_check(table)} AS {body}")
+        for stmt in t.drop_dir_tables_sql(listed, gone_only=True):
+            self.spark.sql(stmt)
+
+    def _dir_tables(self, t: ParquetTable) -> list[str]:
+        """Names of ``t``'s dir tables in ``DIR_DB``."""
+        if not self.spark.catalog.databaseExists(DIR_DB):
+            return []
+        return [r.tableName for r in self.spark.sql(t.dir_tables_sql()).collect()]
 
 
 def serve(

@@ -32,9 +32,21 @@ One scan builder (``_scan``) defines the snapshot relation: each data dir's
 scan conformed to the manifest schema (columns it predates null-filled,
 types cast, manifest column order), unioned. ``read``, ``read_where``,
 ``read_changes``, the MERGE / DELETE / UPDATE targets and ``compact`` take
-its DataFrame; ``view_sql`` renders the same relation as the SQL body the
-``Catalog`` binds its views to. So every reader of a snapshot sees the same
-columns whichever dirs pruning keeps.
+its DataFrame; ``view_sql`` renders the same relation as the SQL the
+``Catalog`` binds its views to: each data dir bound once as an EXTERNAL
+table in the private database ``DIR_DB``, and a ``UNION ALL`` over those.
+So every reader of a snapshot sees the same columns whichever dirs pruning
+keeps.
+
+No read infers a schema. A data dir is opened with the schema it was
+written with, which the Spark writer stores in each parquet footer and the
+driver reads without a Spark job (``_dir_schema``); its ``k=v`` partition
+columns take the manifest's types. ``append`` merges schemas from the
+manifest alone, and the reads of a freshly written dir (stats fallback,
+CHECK validation, clustered compaction) declare the written frame's
+schema. So building a relation, or binding a view, costs no Spark job
+whatever the number of dirs, and a ``string`` partition value such as
+``007`` reads back as written.
 
 Concurrency: optimistic, Delta-style. A commit CLAIMS its version by
 hard-linking the manifest into place — ``link(2)`` is create-exclusive, so
@@ -75,19 +87,28 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import uuid
 from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from lakehouse_architecture_for_realestatedata_spark.sources import skipping
 
 _LATEST = "_latest"
+
+#: The private database the ``Catalog`` binds data dirs in: one EXTERNAL
+#: table per data dir (see ``ParquetTable.view_sql``). Not a user namespace.
+DIR_DB = "_lakeflow_dirs"
+
+#: The footer key under which Spark's parquet writer stores the row schema.
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 #: Driver-side footer-walk budget for ``_footer_pass``: per-file footer
 #: reads are serial driver Python — bounded for a fresh write's file set, a
@@ -194,6 +215,10 @@ class ParquetTable:
         with open(self._manifest_path(version)) as fh:
             return json.load(fh)
 
+    @staticmethod
+    def _schema(manifest: dict) -> StructType:
+        return StructType.fromJson(json.loads(manifest["schema"]))
+
     def _commit(
         self,
         version: int,
@@ -242,47 +267,116 @@ class ParquetTable:
         self._vacuum(self.retain)
 
     # ---------------------------------------------------------------- read
+    def _dir_schema(self, path: str, schema: StructType) -> StructType:
+        """The schema data dir ``path`` was written with, read on the driver
+        from its first committed footer (no Spark job): the data columns
+        from the Spark row schema the writer stores there, then the dir's
+        ``k=v`` partition columns typed as in ``schema`` (the manifest's).
+        All nullable, as a parquet scan reads them. A dir is immutable, so
+        this never changes for a given manifest schema."""
+        types = {f.name: f.dataType for f in schema.fields}
+        for dirpath, _name, md in skipping.committed_footers(path):
+            own = StructType.fromJson(json.loads((md.metadata or {})[_ROW_METADATA]))
+            parts = [
+                unquote(c.split("=", 1)[0])
+                for c in os.path.relpath(dirpath, path).split(os.sep)
+                if "=" in c
+            ]
+            return StructType(
+                [StructField(f.name, f.dataType) for f in own.fields]
+                + [StructField(k, types.get(k, StringType())) for k in parts]
+            )
+        raise FileNotFoundError(f"data dir {path} holds no committed parquet file")
+
+    def _dir_table(self, rel: str, own: StructType) -> str:
+        """Name, in ``DIR_DB``, of the table over data dir ``rel`` read as
+        ``own``: the table root's key, the dir's name (``data/<name>``, as
+        every writer here mints it) and the declared schema's key, so one
+        name always means one location read one way."""
+        key = hashlib.sha1(own.json().encode()).hexdigest()[:8]
+        return f"{self._dir_prefix}{os.path.basename(rel)}_{key}"
+
+    @property
+    def _dir_prefix(self) -> str:
+        root = os.path.abspath(self.root).encode()
+        return f"t{hashlib.sha1(root).hexdigest()[:12]}_"
+
     def _scan(
         self, manifest: dict, rels: list[str] | None = None
-    ) -> tuple[DataFrame, str]:
+    ) -> tuple[DataFrame, dict[str, str], str]:
         """The snapshot relation over data dirs ``rels`` (default: all of
-        ``manifest``'s), as a DataFrame and as the SQL text of the same
-        query. Each dir's scan self-describes its partition layout (filters
-        push into every scan) and is projected onto the MANIFEST schema:
-        columns the dir predates are null-filled (mergeSchema), a column
-        whose scanned type differs (a narrower type an append widened, an
-        inferred partition type) is cast, and columns take the manifest's
-        order. The projected scans are unioned.
+        ``manifest``'s), as a DataFrame and as SQL: ``{name: CREATE TABLE
+        statement}`` of the table that binds each dir in ``DIR_DB``, and the
+        query over those tables. Each dir is read with its own written schema
+        (``_dir_schema``: declared, so opening a dir runs no inference job,
+        and a ``k=v`` value such as ``007`` keeps its written type) and
+        projected onto the MANIFEST schema: columns the dir predates are
+        null-filled (mergeSchema), a column whose type an append widened is
+        cast, and columns take the manifest's order. The projected scans
+        are unioned. The manifest schema is not declared on the dirs
+        directly: Spark's parquet reader cannot widen bigint to double, int
+        to string or date to timestamp, which ``append`` produces.
 
         So the relation's schema is the manifest's whichever dirs are
         scanned: a ``read_where`` that prunes the dir holding a newer
         column, a snapshot widened by an append that contributed zero data
         files, and a zero-row snapshot (a typed empty relation) all expose
         the same columns as a full read."""
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
-        frames, selects = [], []
+        schema = self._schema(manifest)
+        frames, tables, selects = [], {}, []
         for rel in manifest["dirs"] if rels is None else rels:
             path = os.path.join(self.root, rel)
-            df = self.spark.read.parquet(path)
-            have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+            own = self._dir_schema(path, schema)
+            have = {f.name: f.dataType.simpleString() for f in own.fields}
             cols = [_conformed(f, have.get(f.name)) for f in schema.fields]
-            frames.append(df.selectExpr(*cols))
-            selects.append(f"SELECT {', '.join(cols)} FROM parquet.`{path}`")
+            frames.append(self.spark.read.schema(own).parquet(path).selectExpr(*cols))
+            name = self._dir_table(rel, own)
+            loc = os.path.abspath(path).replace("\\", "\\\\").replace("'", "\\'")
+            tables[name] = (
+                f"CREATE TABLE IF NOT EXISTS {DIR_DB}.{name} ({own.toDDL()}) "
+                f"USING parquet LOCATION '{loc}'"
+            )
+            selects.append(f"SELECT {', '.join(cols)} FROM {DIR_DB}.{name}")
         if not frames:
             empty = ", ".join(_conformed(f, None) for f in schema.fields)
-            return self.spark.createDataFrame([], schema), f"SELECT {empty} WHERE 1 = 0"
-        return reduce(DataFrame.union, frames), " UNION ALL ".join(selects)
+            return self.spark.createDataFrame([], schema), {}, f"SELECT {empty} WHERE 1 = 0"
+        return reduce(DataFrame.union, frames), tables, " UNION ALL ".join(selects)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot ``version`` (default: latest) — see ``_scan``."""
         v = self.version() if version is None else version
         return self._scan(self._manifest(v))[0]
 
-    def view_sql(self) -> str:
-        """The SQL body of the latest snapshot: one ``SELECT`` per data dir
-        over ``parquet.`<dir>```, glued with ``UNION ALL`` — the relation
-        ``read()`` returns, for a ``CREATE VIEW ... AS``."""
-        return self._scan(self._manifest(self.version()))[1]
+    def view_sql(self) -> tuple[dict[str, str], str]:
+        """The latest snapshot as SQL, for a ``CREATE VIEW ... AS``:
+        ``{name: CREATE TABLE statement}`` binding each of its data dirs
+        once as an EXTERNAL, schema-declared table in the private
+        ``DIR_DB`` (a dir is immutable, so its table never goes stale and
+        need only be created once, and Spark's relation cache keeps its
+        file listing across queries), and the view body, the relation
+        ``read()`` returns as one ``SELECT`` per dir table glued with
+        ``UNION ALL``. Neither opens a dir to infer its schema."""
+        _df, tables, body = self._scan(self._manifest(self.version()))
+        return tables, body
+
+    def dir_tables_sql(self) -> str:
+        """``SHOW TABLES`` over this table's dir tables in ``DIR_DB``."""
+        return f"SHOW TABLES IN {DIR_DB} LIKE '{self._dir_prefix}*'"
+
+    def drop_dir_tables_sql(self, names: list[str], gone_only: bool) -> list[str]:
+        """``DROP TABLE`` statements for this table's dir tables among
+        ``names`` (as ``dir_tables_sql`` lists them): only those whose data
+        dir is gone (vacuumed; a query on an older view may still resolve a
+        live one), or all of them. Dir tables are EXTERNAL, so a drop never
+        deletes data."""
+        prefix, out = self._dir_prefix, []
+        for name in names:
+            if not name.startswith(prefix):
+                continue
+            rel = os.path.join("data", name[len(prefix) :].rsplit("_", 1)[0])
+            if not gone_only or not os.path.isdir(os.path.join(self.root, rel)):
+                out.append(f"DROP TABLE IF EXISTS {DIR_DB}.{name}")
+        return out
 
     def read_where(self, *conds: tuple) -> DataFrame:
         """Data-skipping scan (Delta zonemap analogue): each condition is a
@@ -366,7 +460,7 @@ class ParquetTable:
             path, None if self.partition_by else skipping.stats_cols(df.schema)
         )
         if has_rows:
-            return rel, zonemap if zonemap is not None else self._dir_stats(rel)
+            return rel, zonemap if zonemap is not None else self._dir_stats(rel, df.schema)
         # Dropping the dir keeps idempotent no-op appends from growing the
         # manifest by one empty dir per re-run.
         shutil.rmtree(path, ignore_errors=True)
@@ -401,10 +495,11 @@ class ParquetTable:
             zonemap[c] = [s.lo, s.hi]  # [None, None]: an all-NULL column
         return True, zonemap
 
-    def _dir_stats(self, rel: str) -> dict:
-        """A data dir's zonemap from one narrow aggregate job over the dir:
-        the fallback when its footers cannot serve it (same values)."""
-        df = self.spark.read.parquet(os.path.join(self.root, rel))
+    def _dir_stats(self, rel: str, schema: StructType) -> dict:
+        """A data dir's zonemap from one narrow aggregate job over the dir,
+        read as ``schema`` (the frame just written into it): the fallback
+        when its footers cannot serve it (same values)."""
+        df = self.spark.read.schema(schema).parquet(os.path.join(self.root, rel))
         cols = skipping.stats_cols(df.schema)
         if not cols:
             return {}
@@ -484,18 +579,18 @@ class ParquetTable:
             if int(row[i] or 0) > 0
         }
 
-    def _validate_rel(self, rel: str | None) -> None:
+    def _validate_rel(self, rel: str | None, schema: StructType) -> None:
         """Enforce CHECK constraints on a freshly-written data dir BEFORE it
         is committed: O(written data) — only the new/rewritten rows are
-        re-read (columnar, footer-pruned to the constrained columns), never
-        the rest of the table. On violation the orphan dir is GC'd and
-        ``ConstraintViolationError`` raised; the previous snapshot stays
-        live."""
+        re-read (columnar, footer-pruned to the constrained columns, as
+        ``schema``, the frame just written), never the rest of the table.
+        On violation the orphan dir is GC'd and ``ConstraintViolationError``
+        raised; the previous snapshot stays live."""
         cons = self.constraints()
         if not cons or rel is None:
             return
         bad = self._violation_counts(
-            self.spark.read.parquet(os.path.join(self.root, rel)), cons
+            self.spark.read.schema(schema).parquet(os.path.join(self.root, rel)), cons
         )
         if bad:
             shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
@@ -506,7 +601,7 @@ class ParquetTable:
         A blind write: on commit conflict it just claims the next slot —
         the data dir is already on disk, so a retry is metadata-only."""
         rel, zonemap = self._write_data(df)
-        self._validate_rel(rel)
+        self._validate_rel(rel, df.schema)
         while True:
             try:
                 self._commit(
@@ -525,11 +620,13 @@ class ParquetTable:
         I/O); the new snapshot's manifest references every prior data dir
         byte-identical. With ``merge_schema`` new columns null-fill old rows
         at read time (Delta ``mergeSchema`` semantics); without it a schema
-        mismatch raises instead of silently widening."""
+        mismatch raises instead of silently widening. Both are decided
+        from the manifest schema: an append opens no existing data dir."""
         if not self.exists():
             return self.overwrite(df)
         if not merge_schema:
-            cur = {f.name: f.dataType for f in self.read().schema.fields}
+            m = self._manifest(self.version())
+            cur = {f.name: f.dataType for f in self._schema(m).fields}
             new = {f.name: f.dataType for f in df.schema.fields}
             if cur != new:
                 raise ValueError(
@@ -537,7 +634,7 @@ class ParquetTable:
                     f"{sorted(cur)}, frame has {sorted(new)}"
                 )
         rel, zonemap = self._write_data(df)
-        self._validate_rel(rel)
+        self._validate_rel(rel, df.schema)
         new_stats = {rel: zonemap} if rel else {}
         while True:
             # Rebase onto whatever snapshot is newest RIGHT NOW: carry its
@@ -546,7 +643,9 @@ class ParquetTable:
             base = self._next_version() - 1
             m = self._manifest(base)
             merged_schema = (
-                self.read(base).unionByName(df, allowMissingColumns=True).schema.json()
+                self.spark.createDataFrame([], self._schema(m))
+                .unionByName(df, allowMissingColumns=True)
+                .schema.json()
                 if merge_schema
                 else df.schema.json()
             )
@@ -651,7 +750,7 @@ class ParquetTable:
         keep the old schema, so a type change would fork the table schema)."""
         base = self._next_version() - 1
         m = self._manifest(base)
-        known = {f.name for f in StructType.fromJson(json.loads(m["schema"])).fields}
+        known = {f.name for f in self._schema(m).fields}
         bad = set(assignments) - known
         if bad:
             raise ValueError(f"update_where: unknown columns {sorted(bad)}")
@@ -686,7 +785,7 @@ class ParquetTable:
         values; DELETE / OPTIMIZE re-emit rows that already passed)."""
         rel, zonemap = self._write_data(rewritten)
         if validate:
-            self._validate_rel(rel)
+            self._validate_rel(rel, rewritten.schema)
         dropped = set(touched)
         untouched = [r for r in manifest["dirs"] if r not in dropped]
         old_stats = manifest.get("stats", {})
@@ -786,7 +885,7 @@ class ParquetTable:
         writer.parquet(staging)
 
         # One pass over the written output for all per-bucket zonemaps.
-        written = self.spark.read.parquet(staging)
+        written = self.spark.read.schema(staged.schema).parquet(staging)
         cols = skipping.stats_cols(written.drop("__zb").schema)
         by_bucket: dict[int, dict] = {}
         if cols:

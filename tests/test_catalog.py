@@ -108,6 +108,118 @@ def test_refresh_of_registered_empty_table_is_a_noop(spark, tmp_path):
     assert not spark.catalog.tableExists("silver.later")
 
 
+def _spark_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted with a job
+    group once the status listener has caught up."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _three_dir_table(spark, cat, db, name):
+    t = cat.create_table(db, name, partition_by=["g"])
+    t.retain = 5  # keeps v0 for read_changes(0)
+    t.overwrite(spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "id int, g int, val string"))
+    t.append(spark.createDataFrame([(3, 1, "c")], "id int, g int, val string"))
+    t.append(spark.createDataFrame([(4, 2, "d", 1.0)], "id int, g int, val string, x double"))
+    assert len(t.data_dirs()) == 3
+    return t
+
+
+def test_building_snapshot_relations_runs_no_spark_job(spark, tmp_path):
+    """Every data dir is opened with its declared schema: building
+    ``read()``, ``read_where`` and ``read_changes`` over a 3-dir table, and
+    binding its view, run no Spark job, and a query through the view runs
+    as many jobs as the same query on ``read()``."""
+    cat = Catalog(spark, str(tmp_path / "cat_nojobs"))
+    t = _three_dir_table(spark, cat, "silver", "nojobs")
+    for build in (t.read, lambda: t.read_where(("id", ">=", 2)), lambda: t.read_changes(0)):
+        _df, n = _spark_jobs(spark, build)
+        assert n == 0
+    _none, n = _spark_jobs(spark, lambda: cat.refresh("silver", "nojobs"))
+    assert n == 0
+    via_read, n_read = _spark_jobs(spark, lambda: t.read().count())
+    via_view, n_view = _spark_jobs(
+        spark, lambda: spark.sql("SELECT count(*) FROM silver.nojobs").collect()[0][0]
+    )
+    assert via_read == via_view == 4
+    assert n_view == n_read
+
+
+def test_string_partition_values_read_back_exactly(spark, tmp_path):
+    """A ``string`` partition column keeps values that look like numbers:
+    the dir's partition columns are declared with the manifest's types, not
+    inferred from the directory names."""
+    cat = Catalog(spark, str(tmp_path / "cat_codes"))
+    t = cat.create_table("gold", "codes", partition_by=["code"])
+    t.overwrite(spark.createDataFrame([(1, "007"), (2, "1e3")], "id int, code string"))
+    cat.refresh("gold", "codes")
+    want = [(1, "007"), (2, "1e3")]
+    assert sorted(map(tuple, t.read().collect())) == want
+    assert [tuple(r) for r in t.read_where(("code", "=", "007")).collect()] == [(1, "007")]
+    view = spark.table("gold.codes")
+    assert view.dtypes == [("id", "int"), ("code", "string")]
+    assert sorted(map(tuple, view.collect())) == want
+
+
+def test_appends_that_widen_types_read_as_the_manifest(spark, tmp_path):
+    """``append`` widens int to string, bigint to double and date to
+    timestamp; a parquet scan cannot read an old dir as the wider type, so
+    each dir is read as written and cast. ``read()`` and the view both carry
+    the manifest types and the same rows."""
+    import datetime
+
+    cat = Catalog(spark, str(tmp_path / "cat_widen"))
+    t = cat.create_table("bronze", "widen")
+    t.overwrite(spark.createDataFrame(
+        [(1, 10, datetime.date(2024, 1, 2))], "a int, b bigint, c date"))
+    t.append(spark.createDataFrame(
+        [("x", 2.5, datetime.datetime(2024, 1, 3, 4, 5, 6))], "a string, b double, c timestamp"))
+    cat.refresh("bronze", "widen")
+    want = [("a", "string"), ("b", "double"), ("c", "timestamp")]
+    read, view = t.read(), spark.table("bronze.widen")
+    assert read.dtypes == view.dtypes == want
+    rows = sorted(map(tuple, read.collect()), key=repr)
+    assert rows == sorted(map(tuple, view.collect()), key=repr)
+    assert rows == [
+        ("1", 10.0, datetime.datetime(2024, 1, 2)),
+        ("x", 2.5, datetime.datetime(2024, 1, 3, 4, 5, 6)),
+    ]
+
+
+def test_dir_tables_follow_vacuum_and_drop(spark, tmp_path):
+    """A rebind drops the dir tables of data dirs vacuum removed and keeps
+    the rest; ``drop_table`` drops them all. Dir tables are EXTERNAL, so
+    dropping one leaves its files."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "cat_life"))
+    t = cat.create_table("gold", "life")  # the default retain=2
+    t.overwrite(spark.createDataFrame([(0, "v0")], "id int, val string"))
+    cat.refresh("gold", "life")
+    for i in range(1, 7):
+        t.merge(spark.createDataFrame([(0, f"v{i}"), (i, "new")], "id int, val string"), key="id")
+        cat.refresh("gold", "life")
+        # the current dir and the previous version's (still live) have
+        # tables; the dir vacuum removed has none
+        bound = {n.split("_")[1] for n in cat._dir_tables(t)}
+        assert bound == set(os.listdir(os.path.join(t.root, "data"))), i
+    assert cat.sql("SELECT val FROM gold.life WHERE id = 0").collect()[0][0] == "v6"
+
+    files = {os.path.join(dp, f) for dp, _d, fs in os.walk(t.root) for f in fs if f.endswith(".parquet")}
+    cat.drop_table("gold", "life")
+    assert cat._dir_tables(t) == []
+    assert files and all(os.path.exists(f) for f in files)
+    assert t.read().count() == 7
+
+
 def test_concurrent_create_table_keeps_both_registrations(spark, tmp_path, monkeypatch):
     """A second ``create_table`` that runs between the first one's registry
     load and save must not be lost: the registry edit is locked, so the

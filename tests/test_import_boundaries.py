@@ -12,9 +12,10 @@ the ``_metadata.row_index`` read each appear once, so neither can be
 copied into a second hand-built commit or scan.
 
 On the manifest side, the snapshot relation is built only in
-``tables.py`` (``catalog.py`` opens no parquet data and spells no
-``parquet.`…``` relation), and ``ParquetTable`` auto-vacuums only from its
-commit."""
+``tables.py`` (``catalog.py`` opens no parquet data), every parquet read
+there declares its schema (no ``read.parquet`` call infers one), neither
+file spells a ``parquet.`…``` relation, and ``ParquetTable`` auto-vacuums
+only from its commit."""
 
 from __future__ import annotations
 
@@ -123,11 +124,15 @@ def test_single_owner_check_sees_copies_and_skips_docstrings(tmp_path):
 
 # The snapshot relation (data dirs unioned and conformed to the manifest
 # schema) is defined once, by ``ParquetTable._scan``: the catalog binds its
-# views to ``ParquetTable.view_sql()`` and opens no data dir itself.
+# views to ``ParquetTable.view_sql()`` and opens no data dir itself. Every
+# parquet read in ``tables.py`` declares its schema
+# (``read.schema(s).parquet(d)``), so none runs a schema-inference job, and
+# no view body spells ``parquet.`<dir>```, which infers at every resolution.
 
 
 def _parquet_reads(path: Path) -> int:
-    """``<x>.read.parquet(...)`` calls in a file."""
+    """``<x>.read.parquet(...)`` calls in a file: reads that infer the
+    schema (a ``read.schema(s).parquet(...)`` chain declares it)."""
     return sum(
         isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
@@ -144,12 +149,19 @@ def test_catalog_defines_no_snapshot_relation():
     assert _hits([cat], "parquet.`") == 0, "catalog.py spells a parquet.` relation"
 
 
+def test_snapshot_reads_declare_their_schema():
+    tables = SOURCES / "tables.py"
+    assert _parquet_reads(tables) == 0, "tables.py infers a parquet schema"
+    assert _hits([tables], "parquet.`") == 0, "tables.py spells a parquet.` relation"
+
+
 def test_snapshot_relation_check_sees_reads_and_sql(tmp_path):
     src = tmp_path / "probe.py"
     src.write_text(
         'def f(spark, d):\n'
         '    """Not counted: parquet.`docstring`."""\n'
         '    spark.read.parquet(d).schema\n'
+        '    spark.read.schema(s).parquet(d)\n'
         '    return spark.sql(f"SELECT * FROM parquet.`{d}`"), spark.read.json(d)\n'
     )
     assert _parquet_reads(src) == 1

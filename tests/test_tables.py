@@ -75,6 +75,43 @@ def test_append_empty_increment_keeps_snapshot(spark, tmp_path):
     assert t.read().count() == 1
 
 
+def test_append_opens_no_existing_dir(spark, tmp_path, monkeypatch):
+    """An append decides the merged schema (and the ``merge_schema=False``
+    check) from the manifest alone: neither a parquet read nor a footer
+    schema read touches a dir the table already holds."""
+    t = ParquetTable(spark, str(tmp_path / "noscan"))
+    t.overwrite(_df(spark, [(1, "a", None)]))
+    t.append(_df(spark, [(2, "b", None)]))
+    t.append(spark.createDataFrame([(3, "c", None, 1.5)], "id int, val string, ts timestamp, x double"))
+    old = t.data_dirs()
+    assert len(old) == 3
+
+    reader = type(spark.read)
+    real_parquet, real_schema, seen = reader.parquet, ParquetTable._dir_schema, []
+
+    def spy_parquet(self, *paths, **kw):
+        seen.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    def spy_schema(self, path, schema):
+        seen.append(path)
+        return real_schema(self, path, schema)
+
+    monkeypatch.setattr(reader, "parquet", spy_parquet)
+    monkeypatch.setattr(ParquetTable, "_dir_schema", spy_schema)
+    t.append(spark.createDataFrame([(4, "d", None, "n")], "id int, val string, ts timestamp, note string"))
+    wide = "id int, val string, ts timestamp, x double, note string"
+    t.append(spark.createDataFrame([(5, "e", None, 2.5, None)], wide), merge_schema=False)
+    with pytest.raises(ValueError, match="schema mismatch"):
+        t.append(_df(spark, [(6, "f", None)]), merge_schema=False)
+    monkeypatch.undo()
+    assert not set(seen) & set(old)
+    assert t.read().dtypes == [
+        ("id", "int"), ("val", "string"), ("ts", "timestamp"), ("x", "double"), ("note", "string")
+    ]
+    assert t.read().count() == 5
+
+
 def test_append_schema_mismatch_raises_without_merge(spark, tmp_path):
     import pytest
 
@@ -776,7 +813,7 @@ def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(T, "_FOOTER_WALK_CAP", 0)
     has_rows, capped = t._footer_pass(path, stats_cols(df.schema))
     assert has_rows and capped is None  # cap: yields to the agg job
-    agg = t._dir_stats(rel)
+    agg = t._dir_stats(rel, df.schema)
     assert agg["p"] == footer["p"] and agg["q"] == footer["q"]
     assert agg["id"] == footer["id"] == [1, 3]
 
