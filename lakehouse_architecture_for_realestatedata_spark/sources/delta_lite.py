@@ -78,8 +78,19 @@ reader consults ``_last_checkpoint`` and reads ONE parquet checkpoint +
 the JSON deltas after it, exactly like Delta; a 100 TB table with 10⁶
 files replays metadata only, the data scan is handed to the ordinary
 parquet reader with the active file list (predicate pushdown and column
-pruning intact). Checkpoints are written every ``checkpoint_interval``
-commits by the writer.
+pruning intact).
+
+Writes: every data commit (``delta_write``, the format sinks, the
+rewrites, the deletion-vector DELETE/UPDATE/MERGE and OPTIMIZE) builds
+its log actions in one function, ``_commit_data``, in one order:
+``protocol``, ``metaData``, ``txn``, the ``remove``s or DV remove+add
+pairs, the row-id ``domainMetadata``, the ``add``s and the ``cdc``s.
+Blind writes (appends and overwrites) claim their version through one
+rebase loop, ``_blind_write``. Every commit, whatever its operation,
+goes through the one log writer ``_commit``, and the checkpoint rule
+lives there: a commit whose version is a multiple of the table's
+``delta.checkpointInterval`` (default ``CHECKPOINT_INTERVAL``) writes a
+checkpoint, so replay never reads more than that many JSON commits.
 """
 
 from __future__ import annotations
@@ -87,6 +98,7 @@ from __future__ import annotations
 import base64
 import datetime
 import decimal
+import itertools
 import json
 import math
 import os
@@ -95,6 +107,7 @@ import struct
 import time
 import uuid
 import zlib
+from collections.abc import Sequence
 from dataclasses import dataclass, replace as _dc_replace
 from functools import reduce
 from typing import Any
@@ -288,7 +301,12 @@ _ROW_CV_COL_KEY = "delta.rowTracking.materializedRowCommitVersionColumnName"
 #: columns (PROTOCOL.md "Clustered Table").
 _CLUSTERING_DOMAIN = "delta.clustering"
 
+#: Default ``delta.checkpointInterval``: every commit at a multiple of it
+#: writes a checkpoint.
 CHECKPOINT_INTERVAL = 10
+#: How many times a blind append rebases onto a racing writer's commit and
+#: claims again before the lost race is raised.
+_COMMIT_RETRIES = 20
 
 
 class DeltaProtocolError(RuntimeError):
@@ -2195,8 +2213,7 @@ def _commit(
     conf: dict | None,
     metrics: dict[str, str] | None = None,
     ict: int | None = None,
-    spark: SparkSession | None = None,
-    checkpoint_interval: int = 0,
+    checkpoint_interval: int = CHECKPOINT_INTERVAL,
 ) -> int:
     """The one commit writer: ``commitInfo`` (operation, parameters,
     optional ``operationMetrics``, ``engineInfo``, and the
@@ -2205,11 +2222,14 @@ def _commit(
     already derived it) followed by ``actions`` in order, one JSON line
     each, claimed put-if-absent as ``version`` (``_claim_version``). A
     lost race raises ``ConcurrentDeltaCommitError``; whether to rebase
-    and retry is the caller's call. ``checkpoint_interval`` (0: never)
-    checkpoints every N-th version, overridden by the table's
-    ``delta.checkpointInterval`` — validated BEFORE the claim, so a
-    nonsense value fails the write cleanly instead of committing and then
-    raising (a retrying caller would append twice). Returns ``version``."""
+    and retry is the caller's call.
+
+    The checkpoint rule, for every operation: a version that is a
+    multiple of the table's ``delta.checkpointInterval`` (``conf``; else
+    ``checkpoint_interval``) is checkpointed right after its claim. The
+    property is validated BEFORE the claim, so a nonsense value fails the
+    write cleanly instead of committing and then raising (a retrying
+    caller would append twice). Returns ``version``."""
     ci: dict[str, Any] = {
         "timestamp": now,
         "operation": op,
@@ -2222,16 +2242,14 @@ def _commit(
         ict = _ict_for_commit(path, conf, version - 1 if version else None, now)
     if ict is not None:
         ci["inCommitTimestamp"] = ict
-    every = (
-        _checkpoint_interval(conf, checkpoint_interval) if checkpoint_interval else 0
-    )
+    every = _checkpoint_interval(conf, checkpoint_interval)
     payload = "".join(
         json.dumps(a, separators=(",", ":")) + "\n"
         for a in [{"commitInfo": ci}, *actions]
     )
     _claim_version(_log_dir(path), version, payload)
-    if every and version and version % every == 0:
-        _write_checkpoint(spark, path, version)
+    if version and version % every == 0:
+        _write_checkpoint(SparkSession.getActiveSession(), path, version)
     return version
 
 
@@ -2620,6 +2638,114 @@ def _metadata_action(
     if created_time is not None:
         md["createdTime"] = created_time
     return {"metaData": md}
+
+
+def _commit_data(
+    path: str,
+    snap: _Snapshot,
+    op: str,
+    params: dict,
+    adds: list[dict],
+    *,
+    touched: Sequence[str] = (),
+    marks: dict[str, list[int]] | None = None,
+    cdcs: Sequence[dict] = (),
+    schema_json: str | None = None,
+    configuration: dict | None = None,
+    txn: tuple[str, int] | None = None,
+    data_change: bool = True,
+    checkpoint_interval: int = CHECKPOINT_INTERVAL,
+    **metrics: int,
+) -> int:
+    """Build a data commit's actions and commit them as the version after
+    ``snap`` (version -1 for a table being created: ``_blind_write``
+    passes the new table's snapshot). The actions, in order:
+
+    - ``protocol`` and ``metaData`` (with ``createdTime``) when creating;
+      otherwise a ``metaData`` when ``schema_json`` changes the schema,
+      carrying ``configuration`` in place of the table's when given;
+    - the ``txn`` watermark (appId, version) of an idempotent writer;
+    - for each ``touched`` file, a ``remove``, or, with ``marks``
+      (basename → row indexes), the deletion-vector remove+add pair of
+      each marked file (``_dv_mark_actions``);
+    - the row-id ``domainMetadata`` of a row-tracked table, which also
+      stamps the ``adds`` (``_stamp_row_ids``);
+    - the ``adds``, then the ``cdcs``.
+
+    ``data_change=False`` (OPTIMIZE) marks the removes and adds as moving
+    no rows. ``operationMetrics`` count the adds' files and rows and the
+    removed files, plus the caller's ``metrics``. A lost race raises
+    ``ConcurrentDeltaCommitError``. Returns the committed version."""
+    version = snap.version + 1
+    now = int(time.time() * 1000)
+    conf = configuration if configuration is not None else snap.configuration
+    actions: list[dict] = []
+    if version == 0:
+        actions.append({"protocol": snap.protocol})
+        actions.append(
+            _metadata_action(
+                snap.schema.json(), snap.partition_columns, conf, created_time=now
+            )
+        )
+    elif schema_json is not None:
+        actions.append(_metadata_action(schema_json, snap.partition_columns, conf))
+    if txn is not None:
+        actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
+    if marks is None:
+        actions += [
+            _remove_action(p, snap.files[p], now, data_change) for p in touched
+        ]
+    else:
+        actions += _dv_mark_actions(path, snap, touched, marks, now)
+    dm = _stamp_row_ids(path, snap, adds, version)
+    if dm is not None:
+        actions.append(dm)
+    actions += [{"add": a | {"dataChange": data_change}} for a in adds]
+    actions += [{"cdc": c} for c in cdcs]
+    return _commit(
+        path, version, now, op, params, actions, conf,
+        metrics=_op_metrics(
+            adds, removed=len(touched) if marks is None else 0, **metrics
+        ),
+        checkpoint_interval=checkpoint_interval,
+    )
+
+
+def _write_rows(
+    snap: _Snapshot,
+    path: str,
+    rows: DataFrame | None,
+    changes: DataFrame | None = None,
+    annotated: StructType | None = None,
+) -> tuple[list[dict], list[dict]]:
+    """The rows-to-files step of a data commit. ``rows`` (None: no data
+    files) and the CDF ``changes`` (table columns + ``_change_type``)
+    re-derive every generated column (GENERATED ALWAYS: a frame assembled
+    from target and source rows carries no trustworthy value); ``rows``
+    must satisfy the table's constraints and are written as data files
+    under the table's physical names and partitioning; ``changes`` are
+    written as CDC files when the table enables the change data feed.
+    ``annotated`` is the schema governing physical names (default the
+    table's; the widened one when this commit widens a column-mapped
+    table). Returns ``(adds, cdcs)``."""
+    if annotated is None:
+        annotated = snap.schema
+    adds: list[dict] = []
+    if rows is not None:
+        rows = _apply_generated(snap, rows, recompute=True)
+        _enforce_constraints(snap, rows)
+        adds = _write_data_files(
+            _to_physical_frame(rows, snap.column_mapping, annotated),
+            path,
+            snap.physical_partition_columns,
+        )
+    cdcs: list[dict] = []
+    if changes is not None and _cdf_enabled(snap):
+        changes = _apply_generated(snap, changes, recompute=True)
+        cdcs = _write_cdc_files(
+            _to_physical_frame(changes, snap.column_mapping, annotated), path
+        )
+    return adds, cdcs
 
 
 def _write_checkpoint(spark: SparkSession, path: str, version: int) -> None:
@@ -3032,58 +3158,228 @@ def _apply_generated(
     return df
 
 
-def _append_schema_delta(
-    snap: _Snapshot, df_schema: StructType, merge_schema: bool
-) -> tuple[str | None, dict[str, str] | None]:
-    """Delta's append schema enforcement: the source must match the table
-    by name and type (nullability aside); columns the source lacks must
-    be nullable in the table (readers fill NULL); NEW source columns are
-    rejected unless ``merge_schema``, which widens the table schema in
-    the same commit. Returns ``(schemaString, configuration)`` — both
-    None when nothing widens; configuration is set only on column-mapped
-    tables, whose new fields mint fresh physicalName/id annotations and
-    bump ``maxColumnId``."""
-    logical = _strip_metadata(snap.schema)
-    table = {f.name: f for f in logical.fields}
-    conflicts = [
-        (f.name, table[f.name].dataType.simpleString(), f.dataType.simpleString())
-        for f in df_schema.fields
-        if f.name in table and f.dataType != table[f.name].dataType
-    ]
-    if conflicts:
-        raise ValueError(
-            "append schema type conflicts (col, table, source): "
-            f"{conflicts} — Delta rejects type changes on append"
-        )
-    present = {f.name for f in df_schema.fields}
-    required = [
-        f.name for f in logical.fields if not f.nullable and f.name not in present
-    ]
-    if required:
-        raise ValueError(
-            f"append is missing non-nullable table columns {required}"
-        )
-    new = [f for f in df_schema.fields if f.name not in table]
-    if not new:
-        return None, None
-    if not merge_schema:
-        raise ValueError(
-            f"append adds new columns {[f.name for f in new]} — pass "
-            "merge_schema=True to widen the table (Delta's mergeSchema)"
-        )
-    # widen by APPENDING to the ORIGINAL fields (not the stripped logical
-    # view) so field metadata (delta.invariants, physicalName) and the
-    # original nullability markers survive the rewrite of schemaString
-    new_fields = [StructField(f.name, f.dataType, True) for f in new]
+def _widen(
+    snap: _Snapshot, fields: list[StructField]
+) -> tuple[StructType, dict[str, str] | None]:
+    """``snap``'s schema with ``fields`` appended as nullable columns, and
+    the configuration the widening commit carries (None unless the table
+    is column-mapped: its new fields mint physicalName/id annotations and
+    bump ``maxColumnId``). Appending to the ORIGINAL fields, never
+    re-deriving the schema from a frame, keeps field metadata
+    (delta.invariants, physicalName) and NOT NULL markers."""
+    new_fields = [StructField(f.name, f.dataType, True) for f in fields]
     conf = None
-    if snap.column_mapping != "none":
+    if new_fields and snap.column_mapping != "none":
         start = int((snap.configuration or {}).get(_MAX_ID_KEY, 0))
         minted, max_id = _mint_column_mapping(StructType(new_fields), start)
         new_fields = list(minted.fields)
         conf = dict(snap.configuration or {})
         conf[_MAX_ID_KEY] = str(max_id)
-    widened = StructType(list(snap.schema.fields) + new_fields)
-    return widened.json(), conf
+    return StructType(list(snap.schema.fields) + new_fields), conf
+
+
+def _write_schema(
+    path: str, snap: _Snapshot, schema: StructType, overwrite: bool,
+    merge_schema: bool,
+) -> tuple[str | None, dict[str, str] | None]:
+    """Delta's schema contract for a blind write of ``schema`` onto
+    ``snap``: ``(schemaString, configuration)`` of the metaData action the
+    commit carries, both None when the table schema stands.
+
+    An append must match the table by name and type (nullability aside);
+    columns it lacks must be nullable in the table (readers fill NULL);
+    NEW columns are rejected unless ``merge_schema``, which widens the
+    table in the same commit (``_widen``). An overwrite replaces a
+    changed schema (the whole table is rewritten, so there is nothing to
+    fork — Delta's overwriteSchema, implicit here), except on a
+    column-mapped table: replacing its schemaString would strip or
+    re-mint the physicalName annotations carried columns depend on, so a
+    schema-changing overwrite is refused instead of corrupting."""
+    if not overwrite:
+        table = {f.name: f for f in _strip_metadata(snap.schema).fields}
+        conflicts = [
+            (f.name, table[f.name].dataType.simpleString(), f.dataType.simpleString())
+            for f in schema.fields
+            if f.name in table and f.dataType != table[f.name].dataType
+        ]
+        if conflicts:
+            raise ValueError(
+                "append schema type conflicts (col, table, source): "
+                f"{conflicts} — Delta rejects type changes on append"
+            )
+        present = {f.name for f in schema.fields}
+        required = [
+            n for n, f in table.items() if not f.nullable and n not in present
+        ]
+        if required:
+            raise ValueError(
+                f"append is missing non-nullable table columns {required}"
+            )
+        new = [f for f in schema.fields if f.name not in table]
+        if not new:
+            return None, None
+        if not merge_schema:
+            raise ValueError(
+                f"append adds new columns {[f.name for f in new]} — pass "
+                "merge_schema=True to widen the table (Delta's mergeSchema)"
+            )
+        widened, conf = _widen(snap, new)
+        return widened.json(), conf
+    if snap.column_mapping != "none":
+        cur = [(f.name, f.dataType) for f in _strip_metadata(snap.schema).fields]
+        new = [(f.name, f.dataType) for f in _strip_metadata(schema).fields]
+        if cur != new:
+            raise DeltaProtocolError(
+                f"{path}: schema-changing overwrite of a column-mapped "
+                "table is not implemented — align the frame to the table "
+                "schema or recreate the table"
+            )
+        return None, None
+    new_json = schema.json()
+    return (new_json if new_json != _strip_metadata(snap.schema).json() else None), None
+
+
+def _blind_write(
+    path: str,
+    op: str,
+    params: dict,
+    *,
+    df: DataFrame | None = None,
+    adds: list[dict] | None = None,
+    schema: StructType | None = None,
+    overwrite: bool = False,
+    merge_schema: bool = False,
+    partition_by: list[str] | None = None,
+    column_mapping: str = "none",
+    txn: tuple[str, int] | None = None,
+    checkpoint_interval: int = CHECKPOINT_INTERVAL,
+) -> int | None:
+    """The rebase loop of a blind write: ``delta_write``'s frame ``df``, or
+    the files a format sink's tasks already wrote (``adds``, unpartitioned
+    and unmapped, of ``schema``). Returns the committed version.
+
+    Each attempt replays the latest snapshot and derives the commit
+    against it: the writer gate, Delta's schema contract
+    (``_write_schema``) and, for ``df``, its generated and identity
+    columns. ``df``'s data files are written once (``_write_rows``); an
+    attempt that finds the identity high-water mark moved re-mints and
+    writes them again (the stale files are orphans for ``delta_vacuum``).
+    A lost race rebases an APPEND, whose adds are blind (valid against any
+    snapshot), up to ``_COMMIT_RETRIES`` times; a lost OVERWRITE raises
+    ``ConcurrentDeltaCommitError``, its removes having been computed
+    against a snapshot that is no longer latest (Delta's
+    ConcurrentAppendException contract — the caller re-runs).
+
+    ``txn`` (appId, version) rides the commit as the idempotent writer's
+    watermark; a snapshot whose watermark already covers it ends the loop
+    without a commit and returns None."""
+    mode = "overwrite" if overwrite else "append"
+    layout = None if adds is None else ([], "none")  # of the written files
+    rows = df
+    identity_patch: dict[str, int] | None = None
+    identity_bases: dict[str, int | None] = {}
+    for attempt in itertools.count():
+        try:
+            latest = _latest_version(path)  # JSON commits AND checkpoints
+        except FileNotFoundError:
+            latest = None
+        schema_json = configuration = None
+        if latest is None:
+            written = df.schema if df is not None else schema
+            if column_mapping != "none":
+                # what delta-spark 2.x mints for columnMapping tables (both
+                # modes are the legacy reader-2/writer-5 feature; mode=id
+                # also stamps parquet field ids into every data file — see
+                # _to_physical_frame)
+                annotated, max_id = _mint_column_mapping(written)
+                conf = {
+                    "delta.columnMapping.mode": column_mapping,
+                    _MAX_ID_KEY: str(max_id),
+                }
+                protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
+            else:
+                annotated, conf = written, {}
+                protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
+            snap = _Snapshot(
+                version=-1,
+                schema=annotated,
+                partition_columns=list(partition_by or []),
+                files={},
+                configuration=conf,
+                column_mapping=column_mapping,
+                protocol=protocol,
+            )
+        else:
+            snap = _replay(path, latest)
+            if txn is not None and (snap.txns or {}).get(txn[0], -1) >= txn[1]:
+                return None
+            if partition_by is not None and list(partition_by) != snap.partition_columns:
+                raise ValueError(
+                    f"partition_by {partition_by} != table's {snap.partition_columns}"
+                )
+            # writer protocol gate, declared row predicates and the schema
+            # contract — all BEFORE any file is written
+            _writer_gate(
+                snap,
+                path,
+                removes_data=overwrite and bool(snap.files),
+                op=f"{op} ({mode})",
+                generated_ok=df is not None,
+                identity_ok=df is not None and not overwrite,
+            )
+            if df is not None and (
+                adds is None or _identity_mint_stale(snap, identity_bases)
+            ):
+                # compute absent generated columns / validate provided ones
+                # before the schema contract (they are table columns);
+                # identity columns mint from the pristine frame so a re-mint
+                # never sees its own previous values
+                rows = _apply_generated(snap, df)
+                rows, identity_patch, identity_bases = _apply_identity(snap, rows)
+                adds = None
+            written = rows.schema if df is not None else schema
+            schema_json, configuration = _write_schema(
+                path, snap, written, overwrite, merge_schema
+            )
+            if identity_patch:
+                # the minted high-water mark rides this commit's metaData
+                # so the next writer continues past it
+                schema_json = _patch_identity_hwm(
+                    StructType.fromJson(json.loads(schema_json))
+                    if schema_json
+                    else snap.schema,
+                    identity_patch,
+                ).json()
+        if adds is None:
+            # the schema governing THIS write's physical names: the
+            # widened one when this commit widens a column-mapped table
+            annotated = (
+                StructType.fromJson(json.loads(schema_json))
+                if snap.column_mapping != "none" and schema_json
+                else snap.schema
+            )
+            adds, _ = _write_rows(snap, path, rows, annotated=annotated)
+            layout = (snap.partition_columns, snap.column_mapping)
+        elif layout != (snap.partition_columns, snap.column_mapping):
+            # a racing creator established a different partitioning or
+            # column-mapping mode after our files were laid out
+            raise ConcurrentDeltaCommitError(
+                f"table layout changed (partitioning, mapping) {layout} -> "
+                f"{(snap.partition_columns, snap.column_mapping)} while "
+                "committing already-written files"
+            )
+        try:
+            return _commit_data(
+                path, snap, op, params, adds,
+                touched=list(snap.files) if overwrite else [],
+                schema_json=schema_json,
+                configuration=configuration,
+                txn=txn,
+                checkpoint_interval=checkpoint_interval,
+            )
+        except ConcurrentDeltaCommitError:
+            if overwrite or attempt == _COMMIT_RETRIES:
+                raise
 
 
 def delta_write(
@@ -3093,7 +3389,6 @@ def delta_write(
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
     checkpoint_interval: int = CHECKPOINT_INTERVAL,
-    max_retries: int = 20,
     column_mapping: str = "none",
 ) -> int:
     """Commit ``df`` to a Delta table at ``path`` (creating it if absent).
@@ -3112,210 +3407,26 @@ def delta_write(
     (whatever engine created it) resolve logical→physical from the schema
     annotations automatically — the param only matters at creation.
 
-    Concurrency (the ``sources/tables.py`` discipline): data files are
-    written ONCE, then the commit loop claims a version with put-if-absent.
-    A losing APPEND rebases automatically — its adds are blind (valid
-    against any snapshot), so the retry just re-reads the winner's state
-    and re-claims; a metadata-only recommit, the data files never move
-    again. A losing OVERWRITE raises ``ConcurrentDeltaCommitError``: its
-    remove set was computed against a snapshot that is no longer latest
-    (Delta's ConcurrentAppendException contract — caller re-runs)."""
+    Concurrency (the ``sources/tables.py`` discipline, ``_blind_write``):
+    data files are written ONCE, then the commit loop claims a version
+    with put-if-absent. A losing APPEND rebases automatically and
+    re-claims; a losing OVERWRITE raises ``ConcurrentDeltaCommitError``."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if column_mapping not in ("none", "name", "id"):
         raise ValueError(
             f"column_mapping must be none|name|id, got {column_mapping!r}"
         )
-    spark = df.sparkSession
     os.makedirs(path, exist_ok=True)
-    adds: list[dict] | None = None
-    df0 = df  # pristine frame: identity re-mints restart from it
-    identity_patch: dict[str, int] | None = None
-    identity_bases: dict[str, int | None] = {}
-    for attempt in range(max_retries + 1):
-        try:
-            latest = _latest_version(path)  # JSON commits AND checkpoints
-        except FileNotFoundError:
-            latest = None
-        existing = latest is not None
-        version = (latest + 1) if existing else 0
-        prior_partitioning: list[str] = []
-        prior_files: dict[str, dict] = {}
-        if existing:
-            snap = _replay(path, latest)
-            prior_partitioning = snap.partition_columns
-            prior_files = snap.files
-            if partition_by is not None and list(partition_by) != prior_partitioning:
-                raise ValueError(
-                    f"partition_by {partition_by} != table's {prior_partitioning}"
-                )
-            # writer protocol gate + declared row predicates + Delta's
-            # append schema contract — all BEFORE any file is written
-            _writer_gate(
-                snap,
-                path,
-                removes_data=(mode == "overwrite" and bool(snap.files)),
-                op=f"WRITE ({mode})",
-                generated_ok=True,
-                identity_ok=(mode == "append"),
-            )
-            if adds is not None and _identity_mint_stale(snap, identity_bases):
-                # a concurrent writer advanced the identity high-water mark
-                # past the base our cached files minted from — their values
-                # may collide; re-mint against the new snapshot (the stale
-                # files become unreferenced orphans, delta_vacuum's case)
-                adds = None
-            if adds is None:
-                # compute absent generated columns / validate provided ones
-                # BEFORE the schema contract (they are table columns) and
-                # constraint checks (which may reference them); identity
-                # columns mint from the pristine frame so a re-mint never
-                # sees its own previous values
-                df = _apply_generated(snap, df0)
-                df, identity_patch, identity_bases = _apply_identity(snap, df)
-                _enforce_constraints(snap, df)
-            conf_override = None
-            if mode == "append":
-                meta_schema_json, conf_override = _append_schema_delta(
-                    snap, df.schema, merge_schema
-                )
-                if identity_patch:
-                    # the minted high-water mark rides this commit's
-                    # metaData so the next writer continues past it
-                    base_schema = (
-                        StructType.fromJson(json.loads(meta_schema_json))
-                        if meta_schema_json
-                        else snap.schema
-                    )
-                    meta_schema_json = _patch_identity_hwm(
-                        base_schema, identity_patch
-                    ).json()
-            elif snap.column_mapping != "none":
-                # overwrite keeps a column-mapped table's schema: replacing
-                # schemaString would strip/re-mint the physicalName
-                # annotations carried columns depend on — refuse a
-                # schema-changing overwrite instead of corrupting
-                cur_nt = [
-                    (f.name, f.dataType)
-                    for f in _strip_metadata(snap.schema).fields
-                ]
-                new_nt = [
-                    (f.name, f.dataType)
-                    for f in _strip_metadata(df.schema).fields
-                ]
-                if cur_nt != new_nt:
-                    raise DeltaProtocolError(
-                        f"{path}: schema-changing overwrite of a column-"
-                        "mapped table is not implemented — align the frame "
-                        "to the table schema or recreate the table"
-                    )
-                meta_schema_json = None
-            else:  # overwrite replaces the schema when it changed (the
-                # whole table is rewritten, so there is nothing to fork —
-                # Delta's overwriteSchema, implicit here)
-                cur = _strip_metadata(snap.schema).json()
-                meta_schema_json = (
-                    df.schema.json() if df.schema.json() != cur else None
-                )
-            meta_configuration = (
-                conf_override if conf_override is not None else snap.configuration
-            )
-            eff_mapping = snap.column_mapping
-            # the schema governing THIS write's physical names: the widened
-            # one when this commit widens a column-mapped table
-            annotated = (
-                StructType.fromJson(json.loads(meta_schema_json))
-                if eff_mapping != "none" and meta_schema_json
-                else snap.schema
-            )
-            create_protocol = None
-        else:
-            meta_schema_json = None
-            eff_mapping = column_mapping
-            if eff_mapping in ("name", "id"):
-                annotated, max_id = _mint_column_mapping(df.schema)
-                meta_configuration = {
-                    "delta.columnMapping.mode": eff_mapping,
-                    _MAX_ID_KEY: str(max_id),
-                }
-                # what delta-spark 2.x mints for columnMapping tables
-                # (both modes are the legacy reader-2/writer-5 feature;
-                # mode=id additionally stamps parquet field ids into
-                # every data file — see _to_physical_frame)
-                create_protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
-            else:
-                annotated = df.schema
-                meta_configuration = {}
-                create_protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-        pcols = list(partition_by or prior_partitioning)
-        phys_pcols = pcols
-        if eff_mapping != "none":
-            l2p = {
-                lf.name: pf.name
-                for lf, pf in zip(
-                    annotated.fields, _physical_struct(annotated).fields
-                )
-            }
-            phys_pcols = [l2p.get(c, c) for c in pcols]
-        if adds is None:  # data files are written exactly once
-            adds = _write_data_files(
-                _to_physical_frame(df, eff_mapping, annotated), path, phys_pcols
-            )
-            written_pcols = pcols
-            written_mapping = eff_mapping
-        elif pcols != written_pcols or eff_mapping != written_mapping:
-            # a racing creator established a different partitioning or
-            # column-mapping mode after our files were laid out — the
-            # layout no longer matches
-            raise ConcurrentDeltaCommitError(
-                f"table layout changed (partitioning {written_pcols}->"
-                f"{pcols}, mapping {written_mapping}->{eff_mapping}) "
-                "while committing already-written files"
-            )
-        now = int(time.time() * 1000)
-        actions: list[dict] = []
-        if version == 0:
-            actions.append({"protocol": create_protocol})
-            actions.append(
-                _metadata_action(
-                    annotated.json(), pcols, meta_configuration, created_time=now
-                )
-            )
-        elif meta_schema_json is not None:
-            # schema evolution rides the same commit (mergeSchema widen on
-            # append; implicit overwriteSchema on overwrite) — table
-            # configuration (incl. constraints) is preserved
-            actions.append(
-                _metadata_action(meta_schema_json, pcols, meta_configuration)
-            )
-        if mode == "overwrite":
-            actions += [_remove_action(p, a, now) for p, a in prior_files.items()]
-        # row tracking: every add on a tracked table gets a fresh row-id
-        # range; the high-water-mark domain action rides the same commit.
-        # Stamped per attempt — a lost race re-reads the winner's mark.
-        dm = (
-            _stamp_row_ids(path, snap, adds, version) if existing else None
-        )
-        if dm is not None:
-            actions.append(dm)
-        actions += [{"add": a} for a in adds]
-        try:
-            # delta.checkpointInterval (the property delta-spark honors)
-            # overrides the caller's default when the table sets it
-            return _commit(
-                path, version, now, "WRITE", {"mode": mode.upper()}, actions,
-                meta_configuration,
-                metrics=_op_metrics(
-                    adds, removed=len(prior_files) if mode == "overwrite" else 0
-                ),
-                spark=spark,
-                checkpoint_interval=checkpoint_interval,
-            )
-        except ConcurrentDeltaCommitError:
-            if mode != "append" or attempt == max_retries:
-                raise
-            # blind append: rebase on the winner's state and re-claim
-    raise ConcurrentDeltaCommitError(f"gave up after {max_retries} retries")
+    return _blind_write(
+        path, "WRITE", {"mode": mode.upper()},
+        df=df,
+        overwrite=mode == "overwrite",
+        merge_schema=merge_schema,
+        partition_by=partition_by,
+        column_mapping=column_mapping,
+        checkpoint_interval=checkpoint_interval,
+    )
 
 
 def delta_optimize(
@@ -3442,6 +3553,8 @@ def delta_optimize(
         df = df.coalesce(1)
     else:
         df = df.repartition(n)
+    # compaction copies rows unchanged: no generated-column or constraint
+    # pass (``_write_rows``) is needed before the write
     adds = _write_data_files(
         _to_physical_frame(df, snap.column_mapping, snap.schema),
         path,
@@ -3452,20 +3565,12 @@ def delta_optimize(
         # carry clusteringProvider — the marker incremental runs use to
         # skip already-clustered files
         adds = [a | {"clusteringProvider": "liquid"} for a in adds]
-    now = int(time.time() * 1000)
-    version = latest + 1
-    actions = [_remove_action(p, a, now, data_change=False) for p, a in rewrite.items()]
-    # the compacted files still need fresh baseRowId ranges (every add on
+    # the compacted files still get fresh baseRowId ranges (every add on
     # a tracked table must carry one, and materialized values take
     # precedence on read — the fresh range is never observed)
-    dm = _stamp_row_ids(path, snap, adds, version)
-    if dm is not None:
-        actions.append(dm)
-    actions += [{"add": a | {"dataChange": False}} for a in adds]
-    return _commit(
+    return _commit_data(
         path,
-        version,
-        now,
+        snap,
         "OPTIMIZE",
         {
             "targetBytes": target_bytes,
@@ -3474,10 +3579,9 @@ def delta_optimize(
             "curve": curve if cluster_cols else None,
             "incremental": bool(incremental),
         },
-        actions,
-        snap.configuration,
-        metrics=_op_metrics(adds, removed=len(rewrite)),
-        spark=spark,
+        adds,
+        touched=list(rewrite),
+        data_change=False,
         checkpoint_interval=checkpoint_interval,
     )
 
@@ -3493,9 +3597,7 @@ def _files_overlapping_keys(
 
 
 def _commit_rewrite(
-    spark: SparkSession,
     path: str,
-    latest: int,
     snap: _Snapshot,
     touched: list[str],
     out: DataFrame,
@@ -3511,14 +3613,20 @@ def _commit_rewrite(
     a lost race raises ``ConcurrentDeltaCommitError`` — the rewrite was
     computed against a snapshot that is no longer latest (Delta's
     ConcurrentAppendException contract; caller re-runs). Orphans from a
-    lost race are unreferenced and collected by ``delta_vacuum``."""
+    lost race are unreferenced and collected by ``delta_vacuum``.
+
+    Row tracking: every row this rewrite writes, carried or changed, gets
+    a FRESH id from the new files' baseRowId ranges (protocol-legal; ids
+    are not preserved here). The DV paths preserve them — unmatched rows
+    stay in their files and DV UPDATE/MERGE materialize matched rows' old
+    ids — so a DV table loses ids only when an operation falls back here
+    (over the DV write budget, colliding basenames, or DVs past the
+    read-pairs budget)."""
     _writer_gate(
         snap, path, removes_data=bool(touched), op=op, generated_ok=True,
         identity_ok=True,  # rewrites carry/filter existing rows; entry points
         # (delta_merge refuses, delta_update_where forbids assigning) gate
     )
-    out = _apply_generated(snap, out, recompute=True)
-    _enforce_constraints(snap, out)
     # the schema governing physical names: the widened one when this
     # commit widens a column-mapped table's schema
     annotated = (
@@ -3526,45 +3634,13 @@ def _commit_rewrite(
         if snap.column_mapping != "none" and schema_json
         else snap.schema
     )
-    adds = _write_data_files(
-        _to_physical_frame(out, snap.column_mapping, annotated),
-        path,
-        snap.physical_partition_columns,
-    )
-    cdcs = (
-        _write_cdc_files(
-            _to_physical_frame(changes, snap.column_mapping, annotated), path
-        )
-        if changes is not None and _cdf_enabled(snap)
-        else []
-    )
-    now = int(time.time() * 1000)
-    actions: list[dict] = []
-    if schema_json is not None and schema_json != snap.schema.json():
-        actions.append(
-            _metadata_action(
-                schema_json,
-                snap.partition_columns,
-                configuration if configuration is not None else snap.configuration,
-            )
-        )
-    actions += [_remove_action(p, snap.files[p], now) for p in touched]
-    version = latest + 1
-    # row tracking: every row this rewrite writes, carried or changed,
-    # gets a FRESH id from the new files' baseRowId ranges (protocol-
-    # legal; ids are not preserved here). The DV paths preserve them —
-    # unmatched rows stay in their files and DV UPDATE/MERGE materialize
-    # matched rows' old ids — so a DV table loses ids only when an
-    # operation falls back here (over the DV write budget, colliding
-    # basenames, or DVs past the read-pairs budget).
-    dm = _stamp_row_ids(path, snap, adds, version)
-    if dm is not None:
-        actions.append(dm)
-    actions += [{"add": a} for a in adds]
-    actions += [{"cdc": c} for c in cdcs]
-    return _commit(
-        path, version, now, op, operation_parameters or {}, actions,
-        snap.configuration, metrics=_op_metrics(adds, removed=len(touched)),
+    adds, cdcs = _write_rows(snap, path, out, changes, annotated)
+    return _commit_data(
+        path, snap, op, operation_parameters or {}, adds,
+        touched=touched,
+        cdcs=cdcs,
+        schema_json=schema_json,
+        configuration=configuration,
     )
 
 
@@ -3617,7 +3693,7 @@ def delta_merge(
     if _dv_write_path_ok(snap, touched):
         _writer_gate(snap, path, removes_data=True, op="MERGE", generated_ok=True)
         v = _merge_with_dvs(
-            spark, path, latest, snap, touched, source, keys, when_matched
+            spark, path, snap, touched, source, keys, when_matched
         )
         if v is not None:
             return v
@@ -3644,9 +3720,7 @@ def delta_merge(
         snap, kept.unionByName(source, allowMissingColumns=True), changes
     )
     return _commit_rewrite(
-        spark,
         path,
-        latest,
         snap,
         touched,
         out,
@@ -3805,7 +3879,6 @@ def _collect_dv_marks(
 def _delete_with_dvs(
     spark: SparkSession,
     path: str,
-    latest: int,
     snap: _Snapshot,
     touched: list[str],
     conds: list[tuple],
@@ -3828,43 +3901,26 @@ def _delete_with_dvs(
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     if not by_file:
-        return latest  # stats admitted the files, but no row matches
-    cdcs = (
-        _write_cdc_files(
-            _to_physical_frame(
-                matched.drop("__fb", "__ri").withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                snap.column_mapping,
-                snap.schema,
-            ),
-            path,
-        )
-        if _cdf_enabled(snap)
-        else []
+        return snap.version  # stats admitted the files, but no row matches
+    _, cdcs = _write_rows(
+        snap, path, None,
+        matched.drop("__fb", "__ri").withColumn("_change_type", F.lit("delete")),
     )
-    now = int(time.time() * 1000)
-    actions = _dv_mark_actions(path, snap, touched, by_file, now)
-    actions += [{"cdc": c} for c in cdcs]
-    return _commit(
-        path,
-        latest + 1,
-        now,
-        "DELETE",
+    return _commit_data(
+        path, snap, "DELETE",
         {"predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)},
-        actions,
-        snap.configuration,
-        metrics=_op_metrics(
-            numDeletedRows=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
-        ),
+        [],
+        touched=touched,
+        marks=by_file,
+        cdcs=cdcs,
+        numDeletedRows=sum(len(v) for v in by_file.values()),
+        numDeletionVectorsAdded=len(by_file),
     )
 
 
 def _update_with_dvs(
     spark: SparkSession,
     path: str,
-    latest: int,
     snap: _Snapshot,
     touched: list[str],
     assignments: dict[str, Any],
@@ -3888,8 +3944,8 @@ def _update_with_dvs(
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     if not by_file:
-        return latest
-    version = latest + 1
+        return snap.version
+    version = snap.version + 1
     logical_names = [f.name for f in _strip_metadata(snap.schema).fields]
     pre = matched.select(*logical_names)
     post = matched
@@ -3906,54 +3962,27 @@ def _update_with_dvs(
         )
         keep += [rid_col, rcv_col]
     post = post.select(*keep)
-    post = _apply_generated(snap, post, recompute=True)
-    _enforce_constraints(snap, post)
-    adds = _write_data_files(
-        _to_physical_frame(post, snap.column_mapping, snap.schema),
-        path,
-        snap.physical_partition_columns,
-    )
-    cdcs = (
-        _write_cdc_files(
-            _to_physical_frame(
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post.select(*logical_names).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                snap.column_mapping,
-                snap.schema,
-            ),
-            path,
-        )
-        if _cdf_enabled(snap)
-        else []
-    )
-    now = int(time.time() * 1000)
-    actions = _dv_mark_actions(path, snap, touched, by_file, now)
-    # row tracking: updated rows KEEP their ids (materialized above);
-    # the new file still needs a fresh baseRowId range per spec — the
-    # materialized values shadow it on read. Untouched rows keep theirs
-    # via the marked files' re-adds carrying the original baseRowId.
-    dm = _stamp_row_ids(path, snap, adds, version)
-    if dm is not None:
-        actions.append(dm)
-    actions += [{"add": a} for a in adds]
-    actions += [{"cdc": c} for c in cdcs]
-    return _commit(
-        path,
-        version,
-        now,
-        "UPDATE",
-        {"predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)},
-        actions,
-        snap.configuration,
-        metrics=_op_metrics(
-            adds,
-            numUpdatedRows=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
+    adds, cdcs = _write_rows(
+        snap, path, post,
+        pre.withColumn("_change_type", F.lit("update_preimage")).unionByName(
+            post.select(*logical_names).withColumn(
+                "_change_type", F.lit("update_postimage")
+            )
         ),
+    )
+    # row tracking: updated rows KEEP their ids (materialized above); the
+    # new file's fresh baseRowId range is shadowed by them on read.
+    # Untouched rows keep theirs via the marked files' re-adds carrying
+    # the original baseRowId.
+    return _commit_data(
+        path, snap, "UPDATE",
+        {"predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)},
+        adds,
+        touched=touched,
+        marks=by_file,
+        cdcs=cdcs,
+        numUpdatedRows=sum(len(v) for v in by_file.values()),
+        numDeletionVectorsAdded=len(by_file),
     )
 
 
@@ -3986,29 +4015,14 @@ def _merge_schema(
 ) -> tuple[StructType | None, dict | None, DataFrame, DataFrame | None]:
     """Schema evolution of a MERGE, shared by the rewrite and DV paths:
     ``(widened schema or None, configuration or None, rows, changes)``.
-    Source columns the table lacks widen it by APPENDING to the original
-    ``snap.schema`` fields — never re-deriving the whole schema from the
-    frame, which would strip field metadata (delta.invariants) and erase
-    NOT NULL markers; on a column-mapped table they mint
-    physicalName/id annotations and bump maxColumnId, exactly like a
-    widening append (the returned configuration). ``rows`` and the CDF
+    Source columns the table lacks widen it exactly like a widening
+    append (``_widen``). ``rows`` and the CDF
     ``changes`` are conformed to the merged schema: existing columns cast
     to their declared types (Delta casts source → target), columns a
     frame lacks NULL."""
     have = {f.name for f in snap.schema.fields}
-    new_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in rows.schema.fields
-        if f.name not in have
-    ]
-    conf = None
-    if new_fields and snap.column_mapping != "none":
-        start = int((snap.configuration or {}).get(_MAX_ID_KEY, 0))
-        minted, max_id = _mint_column_mapping(StructType(new_fields), start)
-        new_fields = list(minted.fields)
-        conf = dict(snap.configuration or {})
-        conf[_MAX_ID_KEY] = str(max_id)
-    merged = StructType(list(snap.schema.fields) + new_fields)
+    new_fields = [f for f in rows.schema.fields if f.name not in have]
+    merged, conf = _widen(snap, new_fields)
 
     def conform(df: DataFrame, *extra: str) -> DataFrame:
         cols = set(df.columns)
@@ -4033,7 +4047,6 @@ def _merge_schema(
 def _merge_with_dvs(
     spark: SparkSession,
     path: str,
-    latest: int,
     snap: _Snapshot,
     touched: list[str],
     source: DataFrame,
@@ -4087,8 +4100,7 @@ def _merge_with_dvs(
     else:
         raise ValueError(f"unknown when_matched={when_matched!r}")
     widened, conf_override, out_rows, changes = _merge_schema(snap, new_rows, changes)
-    merged_schema = widened or snap.schema
-    version = latest + 1
+    version = snap.version + 1
     if tracked and by_file:
         # delta-spark MERGE preserves matched rows' ids: join the source
         # images back to the matched targets' old ids on the merge key
@@ -4115,55 +4127,24 @@ def _merge_with_dvs(
                 ).cast("bigint"),
             )
         )
-    out_rows = _apply_generated(snap, out_rows, recompute=True)
-    _enforce_constraints(snap, out_rows)
-    adds = _write_data_files(
-        _to_physical_frame(out_rows, snap.column_mapping, merged_schema),
-        path,
-        snap.physical_partition_columns,
-    )
-    cdcs = (
-        _write_cdc_files(
-            _to_physical_frame(changes, snap.column_mapping, merged_schema), path
-        )
-        if changes is not None
-        else []
-    )
-    now = int(time.time() * 1000)
-    actions: list[dict] = []
-    if widened is not None:
-        actions.append(
-            _metadata_action(
-                widened.json(),
-                snap.partition_columns,
-                conf_override if conf_override is not None else snap.configuration,
-            )
-        )
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
+    adds, cdcs = _write_rows(snap, path, out_rows, changes, widened)
     # row tracking: matched images keep their ids (materialized above),
     # inserts take the new file's fresh baseRowId range; carried files'
     # re-adds keep their original baseRowId (untouched rows' ids stable)
-    dm = _stamp_row_ids(path, snap, adds, version)
-    if dm is not None:
-        actions.append(dm)
-    actions += [{"add": a} for a in adds]
-    actions += [{"cdc": c} for c in cdcs]
-    return _commit(
-        path,
-        version,
-        now,
-        "MERGE",
+    return _commit_data(
+        path, snap, "MERGE",
         {
             "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
             "matchedAction": when_matched,
         },
-        actions,
-        snap.configuration,
-        metrics=_op_metrics(
-            adds,
-            numTargetRowsMatched=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
-        ),
+        adds,
+        touched=touched,
+        marks=by_file,
+        cdcs=cdcs,
+        schema_json=widened.json() if widened is not None else None,
+        configuration=conf_override,
+        numTargetRowsMatched=sum(len(v) for v in by_file.values()),
+        numDeletionVectorsAdded=len(by_file),
     )
 
 
@@ -4190,7 +4171,7 @@ def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
             snap, path, removes_data=True, op="DELETE", generated_ok=True,
             identity_ok=True,  # survivors keep their minted values
         )
-        v = _delete_with_dvs(spark, path, latest, snap, touched, list(conds))
+        v = _delete_with_dvs(spark, path, snap, touched, list(conds))
         if v is not None:
             return v
         # matched rows exceed the DV write budget: rewrite is cheaper
@@ -4198,9 +4179,7 @@ def delta_delete_where(spark: SparkSession, path: str, *conds: tuple) -> int:
     cond = skipping.conds_filter(list(conds))
     survivors = scan.filter(~cond)
     return _commit_rewrite(
-        spark,
         path,
-        latest,
         snap,
         touched,
         survivors,
@@ -4253,7 +4232,7 @@ def delta_update_where(
             identity_ok=True,  # assigning an identity column is refused above
         )
         v = _update_with_dvs(
-            spark, path, latest, snap, touched, assignments, list(conds)
+            spark, path, snap, touched, assignments, list(conds)
         )
         if v is not None:
             return v
@@ -4273,9 +4252,7 @@ def delta_update_where(
             "_change_type", F.lit("update_preimage")
         ).unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
     return _commit_rewrite(
-        spark,
         path,
-        latest,
         snap,
         touched,
         df,

@@ -26,12 +26,15 @@ Scale shape:
     partitions — the same skipping as ``delta_read(where=...)``. Every
     filter is returned to Spark as unsupported, so Spark still applies
     them row-level: pruning is purely a scan reduction;
-  - the batch writer maps Delta's commit protocol onto the V2 writer
-    contract 1:1 — each TASK writes its parquet file and returns the add
-    payload as its commit message; the DRIVER claims the version
-    put-if-absent (append losers rebase — blind adds are valid against
-    any snapshot; overwrite losers raise). Task files from failed/aborted
-    jobs are unreferenced and collected by ``delta_vacuum``;
+  - the batch and stream writers map Delta's commit protocol onto the V2
+    writer contract 1:1 — each TASK writes its parquet file and returns
+    the add payload as its commit message; the DRIVER commits them
+    through ``delta_lite`` (``_blind_write``, the loop ``delta_write``
+    commits through: same actions, operationMetrics, row-id stamping and
+    checkpoints; append losers rebase — blind adds are valid against any
+    snapshot; overwrite losers raise). This module builds no log action.
+    Task files from failed/aborted jobs are unreferenced and collected by
+    ``delta_vacuum``;
   - the stream reader's offsets ARE log versions ({"version": N}), so a
     micro-batch reads exactly the dataChange adds of commits
     (start, end] — OPTIMIZE rewrites (dataChange:false) are skipped for
@@ -70,21 +73,16 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
-    CHECKPOINT_INTERVAL,
-    ConcurrentDeltaCommitError,
     DeltaProtocolError,
-    _append_schema_delta,
-    _commit,
+    _blind_write,
     _footer_stats_json,
     _latest_version,
     _log_dir,
-    _metadata_action,
     _pruned_files,
-    _remove_action,
     _replay,
-    _stamp_row_ids,
     _strip_metadata,
     _table_constraints,
+    _write_schema,
     _writer_gate,
     version_at_timestamp,
 )
@@ -487,13 +485,57 @@ def _write_task_parquet(path: str, iterator) -> _AddsMessage:
     return _AddsMessage([add])
 
 
+def _check_sink_target(
+    path: str, schema: StructType, overwrite: bool, merge_schema: bool,
+    op: str, constraints_hint: str,
+) -> None:
+    """The refusals both sinks make BEFORE any task writes a file: a
+    column-mapped or partitioned table, the writer gate, CHECK
+    constraints (tasks cannot enforce them; ``constraints_hint`` names the
+    surface that does), and Delta's schema contract (fail fast; the commit
+    re-derives it against the snapshot it actually lands on — a streaming
+    epoch must never commit columns no reader can see)."""
+    try:
+        snap = _replay(path, None)
+    except FileNotFoundError:
+        return
+    if snap.column_mapping != "none":
+        raise DeltaProtocolError(f"{path}: refusing to write to a column-mapped table")
+    if snap.partition_columns:
+        raise ValueError(
+            f"{path}: format writes are unpartitioned; this table is "
+            f"partitioned on {snap.partition_columns} — use "
+            "delta_write(partition_by=...)"
+        )
+    _writer_gate(snap, path, removes_data=overwrite and bool(snap.files), op=op)
+    if _table_constraints(snap):
+        raise DeltaProtocolError(
+            f"{path}: this sink does not enforce the table's CHECK "
+            f"constraints task-side — {constraints_hint}"
+        )
+    _write_schema(path, snap, schema, overwrite, merge_schema)
+
+
+def _unlink_task_files(path: str, messages) -> None:
+    """Delete the files a job's tasks wrote that the log will never
+    reference: an aborted job's, or a replayed epoch's duplicates."""
+    for m in messages or []:
+        if m is None:
+            continue
+        for a in m.adds:
+            try:
+                os.unlink(os.path.join(path, a["path"]))
+            except FileNotFoundError:
+                pass
+
+
 class _DeltaLiteWriter(DataSourceArrowWriter):
     """V2 writer mapped onto the Delta commit protocol: tasks write
     immutable parquet files and SAY what they wrote (the add payloads in
-    their commit messages); only the driver talks to the log, claiming
-    the next version put-if-absent. A losing APPEND rebases (blind adds
-    are valid against any snapshot); a losing OVERWRITE raises. Aborted
-    jobs leave unreferenced files for ``delta_vacuum``."""
+    their commit messages); only the driver talks to the log, committing
+    them through ``delta_lite``'s blind-write loop (a losing APPEND
+    rebases, a losing OVERWRITE raises). Aborted jobs' files are
+    deleted."""
 
     def __init__(
         self,
@@ -503,126 +545,29 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
         merge_schema: bool = False,
     ):
         self.path = path
-        self.schema = schema
+        self.schema = _strip_metadata(schema)
         self.overwrite = overwrite
         self.merge_schema = merge_schema
-        try:
-            snap = _replay(path, None)
-        except FileNotFoundError:
-            snap = None
-        if snap is not None:
-            if snap.column_mapping != "none":
-                raise DeltaProtocolError(
-                    f"{path}: refusing to write to a column-mapped table"
-                )
-            if snap.partition_columns:
-                raise ValueError(
-                    f"{path}: format writes are unpartitioned; this table "
-                    f"is partitioned on {snap.partition_columns} — use "
-                    "delta_write(partition_by=...)"
-                )
-            _writer_gate(
-                snap, path, removes_data=overwrite and bool(snap.files),
-                op="WRITE (format)",
-            )
-            if _table_constraints(snap):
-                raise DeltaProtocolError(
-                    f"{path}: the format sink does not enforce this "
-                    "table's CHECK constraints task-side — write through "
-                    "delta_write, which validates pre-commit"
-                )
-            if not overwrite:
-                # Delta's append schema contract, validated BEFORE any
-                # task writes a file (fail fast; commit() re-derives it
-                # against the snapshot it actually rebases onto)
-                _append_schema_delta(snap, schema, merge_schema)
+        _check_sink_target(
+            path, self.schema, overwrite, merge_schema, "WRITE (format)",
+            "write through delta_write, which validates pre-commit",
+        )
 
     def write(self, iterator) -> _AddsMessage:
         return _write_task_parquet(self.path, iterator)
 
     def commit(self, messages) -> None:
-        import time as _time
-
-        adds = [a for m in messages if m is not None for a in m.adds]
-        for attempt in range(21):
-            try:
-                latest = _latest_version(self.path)
-            except FileNotFoundError:
-                latest = None
-            version = 0 if latest is None else latest + 1
-            # Schema reconciliation against the snapshot THIS attempt
-            # commits onto (a rebased append revalidates): appends run the
-            # Delta append contract (refuse type conflicts; widen via a
-            # metaData action under mergeSchema); overwrite replaces the
-            # schemaString when the written schema changed (delta_write's
-            # implicit overwriteSchema) so declared schema and data never
-            # disagree.
-            snap = _replay(self.path, latest) if latest is not None else None
-            meta_schema_json = None
-            if snap is not None:
-                if self.overwrite:
-                    new = _strip_metadata(self.schema).json()
-                    if new != _strip_metadata(snap.schema).json():
-                        meta_schema_json = new
-                else:
-                    meta_schema_json, _ = _append_schema_delta(
-                        snap, self.schema, self.merge_schema
-                    )  # config part is colmap-only; colmap is refused here
-            now = int(_time.time() * 1000)
-            actions: list[dict] = []
-            if version == 0:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-                )
-                actions.append(
-                    _metadata_action(
-                        _strip_metadata(self.schema).json(), [], {}, created_time=now
-                    )
-                )
-            if meta_schema_json is not None:
-                actions.append(
-                    _metadata_action(meta_schema_json, [], snap.configuration)
-                )
-            if self.overwrite and snap is not None:
-                actions += [_remove_action(p, a, now) for p, a in snap.files.items()]
-            # row tracking: stamped per attempt against the snapshot this
-            # commit rebases onto (same discipline as delta_write)
-            dm = (
-                _stamp_row_ids(self.path, snap, adds, version)
-                if snap is not None
-                else None
-            )
-            if dm is not None:
-                actions.append(dm)
-            actions += [{"add": a} for a in adds]
-            try:
-                _commit(
-                    self.path,
-                    version,
-                    now,
-                    "WRITE",
-                    {"mode": "OVERWRITE" if self.overwrite else "APPEND"},
-                    actions,
-                    snap.configuration if snap is not None else None,
-                    spark=SparkSession.getActiveSession(),
-                    checkpoint_interval=CHECKPOINT_INTERVAL,
-                )
-            except ConcurrentDeltaCommitError:
-                if self.overwrite or attempt == 20:
-                    raise
-                continue  # blind append: rebase and re-claim
-            return
-        raise ConcurrentDeltaCommitError("gave up after 20 retries")
+        _blind_write(
+            self.path, "WRITE",
+            {"mode": "OVERWRITE" if self.overwrite else "APPEND"},
+            adds=[a for m in messages if m is not None for a in m.adds],
+            schema=self.schema,
+            overwrite=self.overwrite,
+            merge_schema=self.merge_schema,
+        )
 
     def abort(self, messages) -> None:
-        for m in messages or []:
-            if m is None:
-                continue
-            for a in m.adds:
-                try:
-                    os.unlink(os.path.join(self.path, a["path"]))
-                except FileNotFoundError:
-                    pass
+        _unlink_task_files(self.path, messages)
 
 
 class _DeltaLiteStreamWriter(DataSourceStreamArrowWriter):
@@ -637,107 +582,31 @@ class _DeltaLiteStreamWriter(DataSourceStreamArrowWriter):
 
     def __init__(self, path: str, schema: StructType, txn_app_id: str | None):
         self.path = path
-        self.schema = schema
+        self.schema = _strip_metadata(schema)
         self.txn_app_id = txn_app_id
-        try:
-            snap = _replay(path, None)
-        except FileNotFoundError:
-            snap = None
-        if snap is not None:
-            if snap.column_mapping != "none":
-                raise DeltaProtocolError(
-                    f"{path}: refusing to write to a column-mapped table"
-                )
-            if snap.partition_columns:
-                raise ValueError(
-                    f"{path}: format writes are unpartitioned; this table "
-                    f"is partitioned on {snap.partition_columns}"
-                )
-            _writer_gate(snap, path, removes_data=False, op="STREAMING UPDATE")
-            if _table_constraints(snap):
-                raise DeltaProtocolError(
-                    f"{path}: the streaming sink does not enforce this "
-                    "table's CHECK constraints task-side — use a "
-                    "foreachBatch delta_write sink instead"
-                )
-            # Delta's append contract: refuse type conflicts and columns
-            # the table does not declare (a streaming epoch must never
-            # commit files whose extra columns no reader can see)
-            _append_schema_delta(snap, schema, merge_schema=False)
+        _check_sink_target(
+            path, self.schema, False, False, "STREAMING UPDATE",
+            "use a foreachBatch delta_write sink instead",
+        )
 
     def write(self, iterator) -> _AddsMessage:
         return _write_task_parquet(self.path, iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        import time as _time
-
-        adds = [a for m in messages if m is not None for a in m.adds]
-        for attempt in range(21):
-            try:
-                latest = _latest_version(self.path)
-            except FileNotFoundError:
-                latest = None
-            snap = _replay(self.path, latest) if latest is not None else None
-            if self.txn_app_id is not None and snap is not None:
-                if (snap.txns or {}).get(self.txn_app_id, -1) >= batchId:
-                    # epoch already committed (this is the recovery replay):
-                    # drop our duplicate files and do nothing — exactly-once
-                    self.abort(messages, batchId)
-                    return
-            version = 0 if latest is None else latest + 1
-            now = int(_time.time() * 1000)
-            actions: list[dict] = []
-            if version == 0:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-                )
-                actions.append(
-                    _metadata_action(
-                        _strip_metadata(self.schema).json(), [], {}, created_time=now
-                    )
-                )
-            if self.txn_app_id is not None:
-                actions.append(
-                    {"txn": {"appId": self.txn_app_id, "version": batchId}}
-                )
-            # row tracking: the exactly-once sink stamps too (same
-            # per-attempt discipline as the batch sink)
-            dm = (
-                _stamp_row_ids(self.path, snap, adds, version)
-                if snap is not None
-                else None
-            )
-            if dm is not None:
-                actions.append(dm)
-            actions += [{"add": a} for a in adds]
-            try:
-                _commit(
-                    self.path,
-                    version,
-                    now,
-                    "STREAMING UPDATE",
-                    {"outputMode": "Append", "epochId": batchId},
-                    actions,
-                    snap.configuration if snap is not None else None,
-                    spark=SparkSession.getActiveSession(),
-                    checkpoint_interval=CHECKPOINT_INTERVAL,
-                )
-            except ConcurrentDeltaCommitError:
-                if attempt == 20:
-                    raise
-                continue  # blind append: re-check the txn watermark, re-claim
-            return
-        raise ConcurrentDeltaCommitError("gave up after 20 retries")
+        v = _blind_write(
+            self.path, "STREAMING UPDATE",
+            {"outputMode": "Append", "epochId": batchId},
+            adds=[a for m in messages if m is not None for a in m.adds],
+            schema=self.schema,
+            txn=(self.txn_app_id, batchId) if self.txn_app_id is not None else None,
+        )
+        if v is None:
+            # epoch already committed (this is the recovery replay): drop
+            # our duplicate files — exactly-once
+            _unlink_task_files(self.path, messages)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            if m is None:
-                continue
-            for a in m.adds:
-                try:
-                    os.unlink(os.path.join(self.path, a["path"]))
-                except FileNotFoundError:
-                    pass
+        _unlink_task_files(self.path, messages)
 
 
 class DeltaLiteDataSource(DataSource):

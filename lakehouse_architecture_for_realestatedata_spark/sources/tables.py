@@ -288,64 +288,64 @@ class ParquetTable:
             )
         raise FileNotFoundError(f"data dir {path} holds no committed parquet file")
 
-    def _dir_table(self, rel: str, own: StructType) -> str:
-        """Name, in ``DIR_DB``, of the table over data dir ``rel`` read as
+    def _dir_table(self, path: str, own: StructType) -> str:
+        """Name, in ``DIR_DB``, of the table over data dir ``path`` read as
         ``own``: the table root's key, the dir's name (``data/<name>``, as
         every writer here mints it) and the declared schema's key, so one
         name always means one location read one way."""
         key = hashlib.sha1(own.json().encode()).hexdigest()[:8]
-        return f"{self._dir_prefix}{os.path.basename(rel)}_{key}"
+        return f"{self._dir_prefix}{os.path.basename(path)}_{key}"
 
     @property
     def _dir_prefix(self) -> str:
         root = os.path.abspath(self.root).encode()
         return f"t{hashlib.sha1(root).hexdigest()[:12]}_"
 
-    def _scan(
+    def _dir_selects(
         self, manifest: dict, rels: list[str] | None = None
-    ) -> tuple[DataFrame, dict[str, str], str]:
+    ) -> list[tuple[str, StructType, list[str]]]:
+        """Per data dir of ``rels`` (default: all of ``manifest``'s), its
+        path, the schema it was written with (``_dir_schema``: declared, so
+        opening a dir runs no inference job, and a ``k=v`` value such as
+        ``007`` keeps its written type) and the select list projecting it
+        onto the MANIFEST schema: columns the dir predates are null-filled
+        (mergeSchema), a column whose type an append widened is cast, and
+        columns take the manifest's order. The manifest schema is not
+        declared on the dirs directly: Spark's parquet reader cannot widen
+        bigint to double, int to string or date to timestamp, which
+        ``append`` produces. Both forms of the snapshot relation, ``_scan``
+        and ``view_sql``, are built from this list."""
+        schema = self._schema(manifest)
+        out = []
+        for rel in manifest["dirs"] if rels is None else rels:
+            path = os.path.join(self.root, rel)
+            own = self._dir_schema(path, schema)
+            have = {f.name: f.dataType.simpleString() for f in own.fields}
+            out.append((path, own, [_conformed(f, have.get(f.name)) for f in schema.fields]))
+        return out
+
+    def _scan(self, manifest: dict, rels: list[str] | None = None) -> DataFrame:
         """The snapshot relation over data dirs ``rels`` (default: all of
-        ``manifest``'s), as a DataFrame and as SQL: ``{name: CREATE TABLE
-        statement}`` of the table that binds each dir in ``DIR_DB``, and the
-        query over those tables. Each dir is read with its own written schema
-        (``_dir_schema``: declared, so opening a dir runs no inference job,
-        and a ``k=v`` value such as ``007`` keeps its written type) and
-        projected onto the MANIFEST schema: columns the dir predates are
-        null-filled (mergeSchema), a column whose type an append widened is
-        cast, and columns take the manifest's order. The projected scans
-        are unioned. The manifest schema is not declared on the dirs
-        directly: Spark's parquet reader cannot widen bigint to double, int
-        to string or date to timestamp, which ``append`` produces.
+        ``manifest``'s): each dir's declared scan projected onto the
+        manifest schema (``_dir_selects``), unioned.
 
         So the relation's schema is the manifest's whichever dirs are
         scanned: a ``read_where`` that prunes the dir holding a newer
         column, a snapshot widened by an append that contributed zero data
         files, and a zero-row snapshot (a typed empty relation) all expose
         the same columns as a full read."""
-        schema = self._schema(manifest)
-        frames, tables, selects = [], {}, []
-        for rel in manifest["dirs"] if rels is None else rels:
-            path = os.path.join(self.root, rel)
-            own = self._dir_schema(path, schema)
-            have = {f.name: f.dataType.simpleString() for f in own.fields}
-            cols = [_conformed(f, have.get(f.name)) for f in schema.fields]
-            frames.append(self.spark.read.schema(own).parquet(path).selectExpr(*cols))
-            name = self._dir_table(rel, own)
-            loc = os.path.abspath(path).replace("\\", "\\\\").replace("'", "\\'")
-            tables[name] = (
-                f"CREATE TABLE IF NOT EXISTS {DIR_DB}.{name} ({own.toDDL()}) "
-                f"USING parquet LOCATION '{loc}'"
-            )
-            selects.append(f"SELECT {', '.join(cols)} FROM {DIR_DB}.{name}")
+        frames = [
+            self.spark.read.schema(own).parquet(path).selectExpr(*cols)
+            for path, own, cols in self._dir_selects(manifest, rels)
+        ]
         if not frames:
-            empty = ", ".join(_conformed(f, None) for f in schema.fields)
-            return self.spark.createDataFrame([], schema), {}, f"SELECT {empty} WHERE 1 = 0"
-        return reduce(DataFrame.union, frames), tables, " UNION ALL ".join(selects)
+            return self.spark.createDataFrame([], self._schema(manifest))
+        return reduce(DataFrame.union, frames)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot ``version`` (default: latest) — see ``_scan``."""
         v = self.version() if version is None else version
-        return self._scan(self._manifest(v))[0]
+        return self._scan(self._manifest(v))
 
     def view_sql(self) -> tuple[dict[str, str], str]:
         """The latest snapshot as SQL, for a ``CREATE VIEW ... AS``:
@@ -355,9 +355,22 @@ class ParquetTable:
         need only be created once, and Spark's relation cache keeps its
         file listing across queries), and the view body, the relation
         ``read()`` returns as one ``SELECT`` per dir table glued with
-        ``UNION ALL``. Neither opens a dir to infer its schema."""
-        _df, tables, body = self._scan(self._manifest(self.version()))
-        return tables, body
+        ``UNION ALL``. Neither opens a dir to infer its schema, and no
+        DataFrame is built."""
+        m = self._manifest(self.version())
+        tables, selects = {}, []
+        for path, own, cols in self._dir_selects(m):
+            name = self._dir_table(path, own)
+            loc = os.path.abspath(path).replace("\\", "\\\\").replace("'", "\\'")
+            tables[name] = (
+                f"CREATE TABLE IF NOT EXISTS {DIR_DB}.{name} ({own.toDDL()}) "
+                f"USING parquet LOCATION '{loc}'"
+            )
+            selects.append(f"SELECT {', '.join(cols)} FROM {DIR_DB}.{name}")
+        if not selects:
+            empty = ", ".join(_conformed(f, None) for f in self._schema(m).fields)
+            return {}, f"SELECT {empty} WHERE 1 = 0"
+        return tables, " UNION ALL ".join(selects)
 
     def dir_tables_sql(self) -> str:
         """``SHOW TABLES`` over this table's dir tables in ``DIR_DB``."""
@@ -393,7 +406,7 @@ class ParquetTable:
         reduction. Conditions on columns without stats simply don't prune.
         """
         m = self._manifest(self.version())
-        df = self._scan(m, self._matching_dirs(m, conds))[0]
+        df = self._scan(m, self._matching_dirs(m, conds))
         return df.filter(skipping.conds_filter(conds))
 
     def _matching_dirs(self, manifest: dict, conds) -> list[str]:
@@ -438,7 +451,7 @@ class ParquetTable:
                 )
         m = self._manifest(hi)
         old = set(self._manifest(since)["dirs"])
-        return self._scan(m, [rel for rel in m["dirs"] if rel not in old])[0]
+        return self._scan(m, [rel for rel in m["dirs"] if rel not in old])
 
     # --------------------------------------------------------------- write
     def _write_data(self, df: DataFrame) -> tuple[str | None, dict | None]:
@@ -698,7 +711,7 @@ class ParquetTable:
         touched = skipping.overlapping_units(
             ((rel, stats.get(rel, {})) for rel in m["dirs"]), keys, source
         )
-        target = self._scan(m, touched)[0]
+        target = self._scan(m, touched)
         if when_matched == "update_all":
             target = target.join(source.select(*keys), on=keys, how="left_anti")
         elif when_matched == "keep_target":  # insert-only merge
@@ -733,7 +746,7 @@ class ParquetTable:
         touched, cond = self._rewrite_scope(m, predicate, more)
         if not touched:
             return  # zonemaps prove no row matches: nothing to do
-        survivors = self._scan(m, touched)[0].filter(~cond)
+        survivors = self._scan(m, touched).filter(~cond)
         self._commit_rewrite(base, m, touched, survivors, "DELETE")
 
     def update_where(
@@ -757,7 +770,7 @@ class ParquetTable:
         touched, cond = self._rewrite_scope(m, predicate, more)
         if not touched:
             return
-        out = self._scan(m, touched)[0]
+        out = self._scan(m, touched)
         for name, expr in assignments.items():
             out = out.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))
         self._commit_rewrite(base, m, touched, out, "UPDATE", validate=True)
@@ -864,7 +877,7 @@ class ParquetTable:
         m = self._manifest(base)
         n = max(1, -(-stats["total_bytes"] // target_bytes))  # ceil
         if not cluster_cols:
-            df = self._scan(m)[0].repartition(n, *self.partition_by)
+            df = self._scan(m).repartition(n, *self.partition_by)
             # Abort-on-conflict: a concurrent append between our read and
             # commit would otherwise be silently dropped by the rewrite.
             self._commit_rewrite(base, m, m["dirs"], df, "OPTIMIZE")
@@ -873,7 +886,7 @@ class ParquetTable:
         from lakehouse_architecture_for_realestatedata_spark.plans.layout import cluster_by
 
         n = n_dirs or n
-        df = cluster_by(self._scan(m)[0], cluster_cols, n_partitions=n, zorder=zorder)
+        df = cluster_by(self._scan(m), cluster_cols, n_partitions=n, zorder=zorder)
         # Tag each range bucket with its partition id and let ONE distributed
         # write fan the buckets into hive subdirs; each subdir is then
         # promoted (a driver-side rename) to a first-class data dir.

@@ -86,6 +86,39 @@ def test_checkpoint_replay(spark, tmp_path):
     )
 
 
+def test_every_operation_checkpoints_at_the_interval(spark, tmp_path):
+    """The checkpoint rule holds for every commit, not only for delta_write
+    and OPTIMIZE: 24 MERGE + deletion-vector DELETE pairs on a DV table
+    (versions 2-49) checkpoint at v10, v20, v30 and v40, and a read that
+    replays from the v40 checkpoint alone returns the expected rows."""
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_delete_where,
+        delta_enable_dvs,
+        delta_merge,
+    )
+
+    schema = "id bigint, v string"
+    t = str(tmp_path / "ops")
+    delta_write(
+        spark.createDataFrame([(i, "base") for i in range(48)], schema).coalesce(1), t
+    )
+    delta_enable_dvs(spark, t)
+    for i in range(24):
+        delta_merge(
+            spark.createDataFrame([(i, "new"), (100 + i, "ins")], schema), t, "id"
+        )
+        delta_delete_where(spark, t, ("id", "=", 47 - i))
+    log = os.path.join(t, "_delta_log")
+    assert delta_versions(t)[-1] == 49
+    assert sorted(f for f in os.listdir(log) if ".checkpoint." in f) == [
+        f"{v:020d}.checkpoint.parquet" for v in (10, 20, 30, 40)
+    ]
+    for v in range(41):
+        os.unlink(os.path.join(log, f"{v:020d}.json"))
+    want = sorted([(i, "new") for i in range(24)] + [(100 + i, "ins") for i in range(24)])
+    assert sorted(map(tuple, delta_read(spark, t).collect())) == want
+
+
 def test_commit_claim_is_put_if_absent(spark, tmp_path):
     t = str(tmp_path / "race")
     delta_write(_df(spark, [(1, "a", 1.0)]), t)
@@ -1538,6 +1571,51 @@ def test_generated_columns_evaluated_on_write(spark, tmp_path):
         spark.createDataFrame([(6,)], "id bigint").write.format(
             "delta_lite"
         ).mode("append").save(t)
+
+
+def test_cdf_change_rows_carry_recomputed_generated_columns(spark, tmp_path):
+    """A rewrite UPDATE or MERGE re-derives a generated column in the rows
+    it writes, and its change-feed postimages carry the same value, not
+    the pre-assignment one or the source's."""
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        _claim_version,
+        delta_merge,
+        delta_read_changes,
+        delta_update_where,
+    )
+
+    t = str(tmp_path / "gencdf")
+    delta_write(spark.createDataFrame([(1, 2), (2, 4)], "id bigint, twice bigint"), t)
+    fields = [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+        {"name": "twice", "type": "long", "nullable": True,
+         "metadata": {"delta.generationExpression": "id * 2"}},
+    ]
+    _claim_version(
+        os.path.join(t, "_delta_log"), 1,
+        json.dumps({"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}})
+        + "\n"
+        + json.dumps({"metaData": {
+            "id": "g", "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps({"type": "struct", "fields": fields}),
+            "partitionColumns": [],
+            "configuration": {"delta.enableChangeDataFeed": "true"},
+        }})
+        + "\n",
+    )
+
+    def postimages(v):
+        return sorted(
+            (r["id"], r["twice"])
+            for r in delta_read_changes(spark, t, v, v)
+            .filter("_change_type = 'update_postimage'").collect()
+        )
+
+    v = delta_update_where(spark, t, {"id": F.col("id") + 10}, ("id", "=", 1))
+    assert postimages(v) == [(11, 22)]
+    v = delta_merge(spark.createDataFrame([(2, 999)], "id bigint, twice bigint"), t, "id")
+    assert postimages(v) == [(2, 4)]
+    assert sorted(map(tuple, delta_read(spark, t).collect())) == [(2, 4), (11, 22)]
 
 
 def test_checkpoint_replay_then_rewrite_unpartitioned(spark, tmp_path):

@@ -663,3 +663,105 @@ def test_format_row_ids_null_rcv_parity_and_stream_refusal(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
+
+
+def _commit_action_keys(t):
+    """Per log version, each action's key in file order, with a run of one
+    kind collapsed to one entry (file counts follow Spark's partitioning;
+    the order of kinds is what a reader depends on)."""
+    log = os.path.join(t, "_delta_log")
+    out = []
+    for f in sorted(x for x in os.listdir(log) if x.endswith(".json") and x[0].isdigit()):
+        with open(os.path.join(log, f)) as fh:
+            keys = [next(iter(json.loads(line))) for line in fh if line.strip()]
+        out.append([k for i, k in enumerate(keys) if i == 0 or keys[i - 1] != k])
+    return out
+
+
+def test_data_commits_keep_their_action_order(spark, tmp_path):
+    """Every data-commit shape writes its actions in one order: protocol,
+    metaData, txn, removes (or DV remove+add pairs), the row-id
+    domainMetadata, adds, cdcs. The expected lists are those of the
+    writer before the action builder was shared, over one sequence that
+    reaches each shape."""
+    import pyarrow as pa
+
+    from lakehouse_architecture_for_realestatedata_spark.sources import (
+        delta_lite as dl,
+        delta_source as dsrc,
+    )
+
+    cols = "id bigint, city string, price double, n int"
+
+    def df(rows, schema=cols):
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    t = str(tmp_path / "golden")
+    dl.delta_write(df([(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
+                      "id bigint, city string, price double"), t)
+    dl.delta_enable_cdf(spark, t)
+    dl.delta_write(df([(4, "d", 4.0, 1)]), t, mode="append", merge_schema=True)
+    dl.delta_write(df([(i, c, float(i), i) for i, c in enumerate("abcd", 1)]), t,
+                   mode="overwrite")
+    dl.delta_merge(df([(2, "B", 20.0, 2), (5, "e", 5.0, 5)]), t, "id")
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "=", 1))
+    dl.delta_update_where(spark, t, {"price": F.lit(0.0)}, ("id", "=", 3))
+    dl.delta_merge(df([(4, "D", 40.0, 4), (6, "f", 6.0, 6)]), t, "id")
+    dl.delta_enable_row_tracking(spark, t)
+    dl.delta_optimize(spark, t)
+    df([(7, "g", 7.0, 7)]).write.format("delta_lite").mode("append").save(t)
+    w = dsrc._DeltaLiteStreamWriter(t, dl.delta_read(spark, t).schema, "app")
+    batch = pa.record_batch({
+        "id": pa.array([8], pa.int64()), "city": pa.array(["h"]),
+        "price": pa.array([8.0]), "n": pa.array([8], pa.int32()),
+    })
+    w.commit([dsrc._write_task_parquet(t, iter([batch]))], batchId=0)
+
+    ci = "commitInfo"
+    assert _commit_action_keys(t) == [
+        [ci, "protocol", "metaData", "add"],  # create
+        [ci, "protocol", "metaData"],  # enable CDF
+        [ci, "metaData", "add"],  # mergeSchema append
+        [ci, "remove", "add"],  # overwrite
+        [ci, "remove", "add", "cdc"],  # rewrite MERGE
+        [ci, "protocol", "metaData"],  # enable DVs
+        [ci, "remove", "add", "cdc"],  # DV DELETE
+        [ci, "remove", "add", "cdc"],  # DV UPDATE
+        [ci, "remove", "add", "cdc"],  # DV MERGE
+        [ci, "protocol", "metaData", "add", "domainMetadata"],  # row tracking
+        [ci, "remove", "domainMetadata", "add"],  # OPTIMIZE
+        [ci, "domainMetadata", "add"],  # format append
+        [ci, "txn", "domainMetadata", "add"],  # stream epoch
+    ]
+    assert sorted(map(tuple, dl.delta_read(spark, t).collect())) == [
+        (2, "B", 20.0, 2), (3, "c", 0.0, 3), (4, "D", 40.0, 4), (5, "e", 5.0, 5),
+        (6, "f", 6.0, 6), (7, "g", 7.0, 7), (8, "h", 8.0, 8),
+    ]
+
+
+def test_sink_commits_carry_operation_metrics(spark, tmp_path):
+    """Format-sink commits record delta_write's operationMetrics: files
+    and rows added, files removed."""
+    import pyarrow as pa
+
+    from lakehouse_architecture_for_realestatedata_spark.sources import (
+        delta_source as dsrc,
+    )
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_history,
+    )
+
+    t = str(tmp_path / "metrics")
+    spark.range(0, 3).coalesce(1).write.format("delta_lite").mode("append").save(t)
+    spark.range(0, 5).coalesce(1).write.format("delta_lite").mode("overwrite").save(t)
+    w = dsrc._DeltaLiteStreamWriter(t, delta_read(spark, t).schema, "app")
+    batch = pa.record_batch({"id": pa.array([7, 8], pa.int64())})
+    w.commit([dsrc._write_task_parquet(t, iter([batch]))], batchId=0)
+    got = [(h["operation"], h["operationMetrics"]) for h in delta_history(t)]
+    assert got == [
+        ("WRITE", {"numFiles": "1", "numOutputRows": "3", "numRemovedFiles": "0"}),
+        ("WRITE", {"numFiles": "1", "numOutputRows": "5", "numRemovedFiles": "1"}),
+        ("STREAMING UPDATE",
+         {"numFiles": "1", "numOutputRows": "2", "numRemovedFiles": "0"}),
+    ]

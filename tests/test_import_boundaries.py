@@ -9,7 +9,10 @@ them again.
 Within the Delta side, every commit goes through one log writer and every
 row-addressed read through one scan builder: the ``engineInfo`` stamp and
 the ``_metadata.row_index`` read each appear once, so neither can be
-copied into a second hand-built commit or scan.
+copied into a second hand-built commit or scan. Every data commit's
+actions are built by one function (row ids stamped and CDC files written
+from one caller each), and the format sinks import none of the
+action-building helpers.
 
 On the manifest side, the snapshot relation is built only in
 ``tables.py`` (``catalog.py`` opens no parquet data), every parquet read
@@ -173,12 +176,12 @@ def test_snapshot_relation_check_sees_reads_and_sql(tmp_path):
 # caller, ``_commit``.
 
 
-def _vacuum_callers(path: Path) -> list[str]:
-    """Name of the enclosing function of each ``_vacuum(...)`` call outside
-    the public ``vacuum`` method."""
+def _callers(path: Path, name: str, exclude: tuple[str, ...] = ()) -> list[str]:
+    """Name of the enclosing function of each ``name(...)`` call (plain or
+    as a method) in a file, outside the functions named in ``exclude``."""
     out = []
     for fn in ast.walk(ast.parse(path.read_text())):
-        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name == "vacuum":
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name in exclude:
             continue
         nested = {
             id(n)
@@ -191,9 +194,13 @@ def _vacuum_callers(path: Path) -> list[str]:
             for node in ast.walk(fn)
             if id(node) not in nested
             and isinstance(node, ast.Call)
-            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "_vacuum"
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == name
         ]
     return out
+
+
+def _vacuum_callers(path: Path) -> list[str]:
+    return _callers(path, "_vacuum", exclude=("vacuum",))
 
 
 def test_auto_vacuum_runs_only_from_commit():
@@ -215,3 +222,61 @@ def test_vacuum_caller_check_sees_every_call(tmp_path):
         "        self._vacuum(2)\n"
     )
     assert sorted(_vacuum_callers(src)) == ["_commit", "overwrite", "retry"]
+
+
+# Every Delta data commit (``delta_write``, the format sinks, rewrites, the
+# deletion-vector DELETE/UPDATE/MERGE and OPTIMIZE) builds its log actions
+# in ``delta_lite._commit_data`` and writes its rows through
+# ``delta_lite._write_rows``: row ids are stamped, and CDC files written,
+# from one function each. The format sinks in ``delta_source.py`` build no
+# log action, so they import none of the helpers that do.
+
+SINK_FORBIDDEN = {
+    "_commit", "_metadata_action", "_remove_action", "_stamp_row_ids",
+    "_append_schema_delta", "CHECKPOINT_INTERVAL",
+}
+
+
+@pytest.mark.parametrize(
+    "helper, owner",
+    [("_stamp_row_ids", "_commit_data"), ("_write_cdc_files", "_write_rows")],
+)
+def test_delta_data_commits_have_one_builder(helper, owner):
+    callers = [c for f in DELTA_FILES for c in _callers(SOURCES / f, helper)]
+    assert callers == [owner], f"{helper} is called from {callers}"
+
+
+def _names_from(path: Path, module: str) -> set[str]:
+    """Names a file imports from ``module`` or reads as its attributes."""
+    tree = ast.parse(path.read_text())
+    out = {
+        a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and (node.module or "").endswith(module)
+        for a in node.names
+    }
+    return out | {
+        node.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and node.value.id in {module, "dl"}
+    }
+
+
+def test_format_sinks_build_no_log_action():
+    bad = _names_from(SOURCES / "delta_source.py", "delta_lite") & SINK_FORBIDDEN
+    assert not bad, f"delta_source.py uses delta_lite.{sorted(bad)}"
+
+
+def test_sink_import_check_sees_imports_and_attributes(tmp_path):
+    src = tmp_path / "probe.py"
+    src.write_text(
+        f"from {PKG}.sources.delta_lite import _commit, delta_read\n"
+        f"from {PKG}.sources import delta_lite as dl\n"
+        "def f():\n"
+        "    return dl._stamp_row_ids(), delta_lite.CHECKPOINT_INTERVAL\n"
+    )
+    assert _names_from(src, "delta_lite") & SINK_FORBIDDEN == {
+        "_commit", "_stamp_row_ids", "CHECKPOINT_INTERVAL",
+    }
