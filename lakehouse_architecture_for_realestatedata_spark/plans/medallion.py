@@ -299,7 +299,9 @@ def dim_legal_status(stg: DataFrame) -> DataFrame:
     statuses = (
         stg.filter(F.col("data_quality_flag") == "VALID")
         .select(F.coalesce(F.col("legal_status"), F.lit(UNKNOWN_LEGAL)).alias("legal_status"))
-        .union(stg.sparkSession.createDataFrame([(UNKNOWN_LEGAL,)], "legal_status string"))
+        # the default row is built in the JVM: a createDataFrame row would
+        # run Python-worker tasks in every job that reads this frame
+        .union(stg.sparkSession.range(1).select(F.lit(UNKNOWN_LEGAL).alias("legal_status")))
         .distinct()
     )
     low = F.lower(F.col("legal_status"))

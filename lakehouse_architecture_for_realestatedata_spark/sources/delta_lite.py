@@ -96,6 +96,7 @@ checkpoint, so replay never reads more than that many JSON commits.
 from __future__ import annotations
 
 import base64
+import contextlib
 import datetime
 import decimal
 import itertools
@@ -107,12 +108,13 @@ import struct
 import time
 import uuid
 import zlib
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, replace as _dc_replace
 from functools import reduce
 from typing import Any
 from urllib.parse import quote, unquote, urlparse
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, MapType, StructField, StructType
@@ -1941,7 +1943,7 @@ def delta_restore(spark: SparkSession, path: str, version: int) -> int:
             actions.append({"add": t_add | {"dataChange": True}})
     return _commit(
         path, latest + 1, now, "RESTORE", {"version": version}, actions,
-        snap.configuration,
+        snap.configuration, base=snap,
     )
 
 
@@ -2176,12 +2178,16 @@ def delta_history(path: str) -> list[dict]:
     return out
 
 
-def _claim_version(log: str, version: int, payload: str) -> None:
+def _claim_version(
+    log: str, version: int, payload: str, base: _Snapshot | None = None
+) -> None:
     """Put-if-absent commit: write to a temp file, then ``link(2)`` it to
     the versioned name — creation is exclusive, exactly one writer wins
     (the same optimistic protocol sources/tables.py pins for manifests).
     A best-effort ``<version>.crc`` VersionChecksum rides every won
-    claim (delta-spark interop; see _write_version_checksum)."""
+    claim (delta-spark interop; see _write_version_checksum, which
+    derives it from ``base``, the committer's snapshot of the version
+    before, when given)."""
     os.makedirs(log, exist_ok=True)
     tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
@@ -2195,7 +2201,7 @@ def _claim_version(log: str, version: int, payload: str) -> None:
     finally:
         os.unlink(tmp)
     try:
-        _write_version_checksum(log, version, payload)
+        _write_version_checksum(log, version, payload, base)
     except Exception:  # noqa: BLE001 — the checksum is best-effort
         # like delta-spark's: a commit must never fail (or be retried)
         # because its advisory checksum could not be computed — e.g. a
@@ -2214,6 +2220,7 @@ def _commit(
     metrics: dict[str, str] | None = None,
     ict: int | None = None,
     checkpoint_interval: int = CHECKPOINT_INTERVAL,
+    base: _Snapshot | None = None,
 ) -> int:
     """The one commit writer: ``commitInfo`` (operation, parameters,
     optional ``operationMetrics``, ``engineInfo``, and the
@@ -2222,7 +2229,9 @@ def _commit(
     already derived it) followed by ``actions`` in order, one JSON line
     each, claimed put-if-absent as ``version`` (``_claim_version``). A
     lost race raises ``ConcurrentDeltaCommitError``; whether to rebase
-    and retry is the caller's call.
+    and retry is the caller's call. ``base`` is the snapshot the commit
+    was derived from, when the caller holds it: the advisory checksum is
+    then computed from it and the actions, without a replay.
 
     The checkpoint rule, for every operation: a version that is a
     multiple of the table's ``delta.checkpointInterval`` (``conf``; else
@@ -2247,13 +2256,15 @@ def _commit(
         json.dumps(a, separators=(",", ":")) + "\n"
         for a in [{"commitInfo": ci}, *actions]
     )
-    _claim_version(_log_dir(path), version, payload)
+    _claim_version(_log_dir(path), version, payload, base)
     if version and version % every == 0:
         _write_checkpoint(SparkSession.getActiveSession(), path, version)
     return version
 
 
-def _write_version_checksum(log: str, version: int, payload: str) -> None:
+def _write_version_checksum(
+    log: str, version: int, payload: str, base: _Snapshot | None = None
+) -> None:
     """``<version>.crc`` VersionChecksum (delta-spark interop,
     VERDICT r11 #6): a per-commit summary of the POST-commit table state
     — tableSizeBytes / numFiles / numDeletionVectorsOpt plus the
@@ -2262,11 +2273,10 @@ def _write_version_checksum(log: str, version: int, payload: str) -> None:
     ``delta_fsck`` verifies these against its own replay; foreign logs
     without them are tolerated everywhere (the files are advisory).
 
-    Cost: commitInfo/txn-only commits copy the previous checksum
-    forward (O(1)); state-changing commits replay the just-committed
-    version — the same checkpoint-anchored O(retained tail) the commit
-    itself already paid for its pre-write snapshot, so the asymptotics
-    of a 10⁶-commit table are unchanged."""
+    Cost: commits without removes update the previous checksum
+    incrementally (O(actions)). Any other commit folds its actions onto
+    ``base``, the committer's snapshot of the version before (O(files)),
+    and only a caller without one replays the just-committed version."""
     crc_path = os.path.join(log, f"{version:020d}.crc")
     if os.path.exists(crc_path):
         return
@@ -2345,35 +2355,46 @@ def _write_version_checksum(log: str, version: int, payload: str) -> None:
             crc["metadata"] = meta_act
         _apply_txn_domains(crc)
     else:
-        snap = _replay(os.path.dirname(log), version)
+        if base is not None and base.version == version - 1:
+            # the post-commit state is the committer's snapshot plus this
+            # commit's actions — exactly what a replay would fold
+            st = {
+                "files": dict(base.files),
+                "protocol": base.protocol,
+                "txns": dict(base.txns or {}),
+                "domains": dict(base.domains or {}),
+            }
+            for a in actions:
+                _apply_action(st, a)
+        else:
+            st = vars(_replay(os.path.dirname(log), version))
+        files = st["files"]
         crc = {
-            "tableSizeBytes": sum(
-                int(a.get("size") or 0) for a in snap.files.values()
-            ),
-            "numFiles": len(snap.files),
+            "tableSizeBytes": sum(int(a.get("size") or 0) for a in files.values()),
+            "numFiles": len(files),
             "numDeletionVectorsOpt": sum(
-                1 for a in snap.files.values() if a.get("deletionVector")
+                1 for a in files.values() if a.get("deletionVector")
             ),
             "numMetadata": 1,
             "numProtocol": 1,
         }
-        if snap.protocol is not None:
-            crc["protocol"] = snap.protocol
+        if st["protocol"] is not None:
+            crc["protocol"] = st["protocol"]
         meta = meta_act
         if meta is None and prev is not None:
             meta = prev.get("metadata")
         if meta is not None:
             crc["metadata"] = meta
-        # replayed state already folds every txn/domain action in
-        if snap.txns:
+        # the folded state already holds every txn/domain action
+        if st["txns"]:
             crc["setTransactions"] = [
                 {"appId": k, "version": v}
-                for k, v in sorted(snap.txns.items())
+                for k, v in sorted(st["txns"].items())
             ]
-        if snap.domains:
+        if st["domains"]:
             crc["domainMetadata"] = [
                 {"domain": d, "configuration": c, "removed": False}
-                for d, c in sorted(snap.domains.items())
+                for d, c in sorted(st["domains"].items())
             ]
     tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.crc")
     with open(tmp, "w") as fh:
@@ -2708,6 +2729,7 @@ def _commit_data(
             adds, removed=len(touched) if marks is None else 0, **metrics
         ),
         checkpoint_interval=checkpoint_interval,
+        base=snap,
     )
 
 
@@ -3644,6 +3666,23 @@ def _commit_rewrite(
     )
 
 
+@contextlib.contextmanager
+def _materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted for the body of the ``with`` and released after
+    it, so every Spark job of the body reads one evaluation of it. A
+    frame already in the cache is used as it is and stays cached:
+    ``storageLevel`` asks the CacheManager, so this also holds for an
+    equal-plan frame the caller cached through another object."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
 def delta_merge(
     source: DataFrame,
     path: str,
@@ -3670,7 +3709,14 @@ def delta_merge(
     'update-all' ill-defined — Delta itself errors; pre-dedup with
     ``operators.dedup.dedup_latest``). New source columns widen the
     schema (metaData action in the same commit); untouched files read
-    NULL for them, Delta's own evolution semantics."""
+    NULL for them, Delta's own evolution semantics.
+
+    The source is evaluated once: it is persisted before the key probe,
+    so the probe, the deletion-vector marks, the written rows and a
+    fallback rewrite all read the same materialized rows (delta-spark's
+    ``merge.materializeSource``), and it is released when the merge
+    returns or raises. A source the caller already cached is read from
+    that cache and left in it."""
     keys = [key] if isinstance(key, str) else list(key)
     spark = source.sparkSession
     try:
@@ -3689,52 +3735,54 @@ def delta_merge(
             "implemented (inserted rows would need minting) — append new "
             "rows via delta_write(mode='append')"
         )
-    touched = _files_overlapping_keys(snap, keys, source)
-    if _dv_write_path_ok(snap, touched):
-        _writer_gate(snap, path, removes_data=True, op="MERGE", generated_ok=True)
-        v = _merge_with_dvs(
-            spark, path, snap, touched, source, keys, when_matched
-        )
-        if v is not None:
-            return v
-        # matched rows exceed the DV write budget: rewrite is cheaper
-    target = _scan(spark, path, snap, {p: snap.files[p] for p in touched})
-    changes = None
-    if when_matched == "update_all":
-        kept = target.join(source.select(*keys), on=keys, how="left_anti")
-        if _cdf_enabled(snap):
-            changes = _merge_changes(
-                target.join(source.select(*keys), on=keys, how="left_semi"),
-                target,
-                source,
-                keys,
+    with _materialized(source) as source:
+        touched = _files_overlapping_keys(snap, keys, source)
+        if _dv_write_path_ok(snap, touched):
+            _writer_gate(snap, path, removes_data=True, op="MERGE", generated_ok=True)
+            v = _merge_with_dvs(
+                spark, path, snap, touched, source, keys, when_matched
             )
-    elif when_matched == "keep_target":  # insert-only merge
-        source = source.join(target.select(*keys), on=keys, how="left_anti")
-        kept = target
-        if _cdf_enabled(snap):
-            changes = source.withColumn("_change_type", F.lit("insert"))
-    else:
-        raise ValueError(f"unknown when_matched={when_matched!r}")
-    widened, conf_override, out, changes = _merge_schema(
-        snap, kept.unionByName(source, allowMissingColumns=True), changes
-    )
-    return _commit_rewrite(
-        path,
-        snap,
-        touched,
-        out,
-        op="MERGE",
-        # metaData is emitted ONLY when the merge actually added columns;
-        # a no-new-columns merge must leave schemaString byte-identical
-        schema_json=widened.json() if widened is not None else None,
-        operation_parameters={
-            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
-            "matchedAction": when_matched,
-        },
-        changes=changes,
-        configuration=conf_override,
-    )
+            if v is not None:
+                return v
+            # matched rows exceed the DV write budget: rewrite is cheaper
+        target = _scan(spark, path, snap, {p: snap.files[p] for p in touched})
+        changes = None
+        if when_matched == "update_all":
+            # a sort-merge join whatever the source's size estimate: a
+            # broadcast of the (cached, so well-estimated) source keeps the
+            # target scan's partitioning and so writes more, smaller files
+            # than AQE's coalesced shuffle
+            kept = target.join(
+                source.select(*keys).hint("merge"), on=keys, how="left_anti"
+            )
+            if _cdf_enabled(snap):
+                changes = _merge_changes(target, source, keys)
+        elif when_matched == "keep_target":  # insert-only merge
+            source = source.join(target.select(*keys), on=keys, how="left_anti")
+            kept = target
+            if _cdf_enabled(snap):
+                changes = source.withColumn("_change_type", F.lit("insert"))
+        else:
+            raise ValueError(f"unknown when_matched={when_matched!r}")
+        widened, conf_override, out, changes = _merge_schema(
+            snap, kept.unionByName(source, allowMissingColumns=True), changes
+        )
+        return _commit_rewrite(
+            path,
+            snap,
+            touched,
+            out,
+            op="MERGE",
+            # metaData is emitted ONLY when the merge actually added columns;
+            # a no-new-columns merge must leave schemaString byte-identical
+            schema_json=widened.json() if widened is not None else None,
+            operation_parameters={
+                "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
+                "matchedAction": when_matched,
+            },
+            changes=changes,
+            configuration=conf_override,
+        )
 
 
 def _dv_mark_actions(
@@ -3987,12 +4035,15 @@ def _update_with_dvs(
 
 
 def _merge_changes(
-    pre: DataFrame, target: DataFrame, source: DataFrame, keys: list[str]
+    target: DataFrame, source: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """CDF rows of an ``update_all`` MERGE: the matched targets' images
-    (``pre``) as preimages, the source rows that replace them as
-    postimages, the rest of the source as inserts."""
+    """CDF rows of an ``update_all`` MERGE: the ``target`` rows a source
+    key matches as preimages, the source rows that replace them as
+    postimages, the rest of the source as inserts. The preimage join is
+    sort-merge whatever the source's size estimate, so the CDC files of a
+    merge do not depend on whether its source is cached."""
     tkeys = target.select(*keys)
+    pre = target.join(source.select(*keys).hint("merge"), on=keys, how="left_semi")
     return (
         pre.withColumn("_change_type", F.lit("update_preimage"))
         .unionByName(
@@ -4082,11 +4133,9 @@ def _merge_with_dvs(
             by_file = _collect_dv_marks(matched, _files_row_bound(path, files))
             if by_file is None:
                 return None  # over budget: fall back to the rewrite path
-            logical_names = [f.name for f in _strip_metadata(snap.schema).fields]
             if cdf:
-                changes = _merge_changes(
-                    matched.select(*logical_names), scan, source, keys
-                )
+                logical_names = [f.name for f in _strip_metadata(snap.schema).fields]
+                changes = _merge_changes(scan.select(*logical_names), source, keys)
     elif when_matched == "keep_target":  # insert-only merge
         new_rows = (
             source.join(
@@ -4310,7 +4359,7 @@ def _commit_metadata_change(
     actions += list(extra_actions or [])
     return _commit(
         path, latest + 1, int(time.time() * 1000), op, params, actions,
-        configuration, ict=ict_value,
+        configuration, ict=ict_value, base=snap,
     )
 
 

@@ -4952,3 +4952,138 @@ def test_delta_profile_coerces_foreign_json_int_stats(spark, tmp_path):
         dl.delta_profile(spark, t, ["v"])
     # the untouched column still profiles
     assert dl.delta_profile(spark, t, ["k"]).first()["n_rows"] == 104
+
+
+def _counted_source(spark, rows, schema):
+    """A merge source built from Python rows (like a CDC batch) whose every
+    evaluation bumps an accumulator once per row."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def seen(r):
+        evals.add(1)
+        return r
+
+    rdd = spark.sparkContext.parallelize(rows, 2).map(seen)
+    return spark.createDataFrame(rdd, schema), evals
+
+
+@pytest.mark.parametrize(
+    "shape", ["dv_update_all", "rewrite", "rewrite_cdf", "keep_target", "dv_over_budget"]
+)
+def test_merge_evaluates_its_source_once(spark, tmp_path, monkeypatch, shape):
+    """Every pass of a MERGE (the key probe, the deletion-vector marks, the
+    written rows, the CDF rows and a rewrite fallback) reads one evaluation
+    of the source: after the merge the source's rows were computed once
+    each, and the table holds the upserted rows."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    schema = "id bigint, v string"
+    t = str(tmp_path / shape)
+    dl.delta_write(
+        spark.createDataFrame([(i, "old") for i in range(40)], schema).repartition(4), t
+    )
+    if shape in ("dv_update_all", "keep_target", "dv_over_budget"):
+        dl.delta_enable_dvs(spark, t)
+    if shape in ("rewrite_cdf", "keep_target", "dv_over_budget"):
+        dl.delta_enable_cdf(spark, t)
+    if shape == "dv_over_budget":
+        monkeypatch.setattr(dl, "_DV_WRITE_FILE_CAP", 1)
+    rows = [(i, "new") for i in range(30, 50)]
+    src, evals = _counted_source(spark, rows, schema)
+    keep = shape == "keep_target"
+    v = dl.delta_merge(src, t, "id", when_matched="keep_target" if keep else "update_all")
+    assert evals.value == len(rows)
+    want = [(i, "old") for i in range(40 if keep else 30)] + [
+        (i, "new") for i in range(40 if keep else 30, 50)
+    ]
+    assert sorted(map(tuple, dl.delta_read(spark, t).collect())) == want
+    # the shape took the path it names
+    dvs = _committed_dvs(dl, t, v)
+    assert bool(dvs) == (shape == "dv_update_all")
+
+
+def _cache_state(spark):
+    """(persisted RDD ids, CacheManager entries) of the session."""
+    jsc = spark.sparkContext._jsc
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return set(dict(jsc.getPersistentRDDs())), cm.numCachedEntries()
+
+
+def test_merge_leaves_the_cache_as_it_found_it(spark, tmp_path):
+    """A merge materializes its source for its own passes and releases it,
+    whether it commits or raises; a source the caller cached (or an
+    equal-plan frame the caller cached through another object) is read
+    from that cache and stays cached."""
+    from pyspark import StorageLevel
+
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    schema = "id bigint, v bigint"
+    t = str(tmp_path / "hyg")
+    dl.delta_write(spark.createDataFrame([(i, i) for i in range(40)], schema), t)
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_add_constraint(spark, t, "v_nonneg", "v >= 0")
+
+    before = _cache_state(spark)
+    dl.delta_merge(spark.createDataFrame([(i, 1) for i in range(30, 50)], schema), t, "id")
+    assert _cache_state(spark) == before
+    bad = spark.createDataFrame([(35, -5)], schema)
+    with pytest.raises(dl.DeltaConstraintError):
+        dl.delta_merge(bad, t, "id")
+    assert _cache_state(spark) == before
+    assert bad.storageLevel == StorageLevel.NONE
+
+    def batch():
+        return spark.range(45, 60).select("id", F.lit(2).cast("bigint").alias("v"))
+
+    cached = batch().cache()
+    cached.count()
+    held = _cache_state(spark)
+    dl.delta_merge(cached, t, "id")
+    other = batch()  # an equal plan, not the cached object
+    dl.delta_merge(other, t, "id")
+    assert cached.is_cached and cached.storageLevel != StorageLevel.NONE
+    assert _cache_state(spark) == held
+    cached.unpersist(blocking=True)
+    assert _cache_state(spark) == before
+    got = dict(map(tuple, dl.delta_read(spark, t).collect()))
+    assert len(got) == 60
+    assert {got[i] for i in range(30, 45)} == {1} and {got[i] for i in range(45, 60)} == {2}
+
+
+def test_dv_merge_and_delete_replay_the_log_once(spark, tmp_path, monkeypatch):
+    """A deletion-vector MERGE or DELETE replays the log once, for its own
+    snapshot: the commit's advisory ``.crc`` is derived from that snapshot
+    and the commit's actions, and still matches a full replay."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    schema = "id bigint, v string"
+    t = str(tmp_path / "replays")
+    dl.delta_write(spark.createDataFrame([(i, "old") for i in range(40)], schema), t)
+    dl.delta_enable_dvs(spark, t)
+    replays = []
+    real = dl._replay
+
+    def spy(path, version):
+        replays.append(version)
+        return real(path, version)
+
+    monkeypatch.setattr(dl, "_replay", spy)
+    src = spark.createDataFrame([(i, "new") for i in range(30, 50)], schema)
+    v_merge = dl.delta_merge(src, t, "id")
+    n_merge = len(replays)
+    v_delete = dl.delta_delete_where(spark, t, ("id", "between", (0, 4)))
+    n_delete = len(replays) - n_merge
+    monkeypatch.setattr(dl, "_replay", real)
+    assert (v_merge, v_delete) == (2, 3)
+    assert _committed_dvs(dl, t, v_merge) and _committed_dvs(dl, t, v_delete)
+    assert (n_merge, n_delete) == (1, 1)
+    assert dl.delta_fsck(t) == []
+    with open(os.path.join(t, "_delta_log", f"{v_delete:020d}.crc")) as fh:
+        crc = json.load(fh)
+    snap = real(t, v_delete)
+    assert crc["numFiles"] == len(snap.files)
+    assert crc["numDeletionVectorsOpt"] == sum(
+        1 for a in snap.files.values() if a.get("deletionVector")
+    ) > 0
+    assert crc["tableSizeBytes"] == sum(a["size"] for a in snap.files.values())
