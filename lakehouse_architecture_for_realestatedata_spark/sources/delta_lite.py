@@ -97,6 +97,7 @@ from __future__ import annotations
 
 import base64
 import contextlib
+import copy
 import datetime
 import decimal
 import itertools
@@ -105,9 +106,12 @@ import math
 import os
 import re
 import struct
+import threading
 import time
+import unicodedata
 import uuid
 import zlib
+from collections import Counter, OrderedDict
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, replace as _dc_replace
 from functools import reduce
@@ -115,7 +119,7 @@ from typing import Any
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, MapType, StructField, StructType
 
@@ -901,15 +905,8 @@ def _latest_version(path: str) -> int:
     return max(versions)
 
 
-def _replay(path: str, version: int | None) -> _Snapshot:
-    log = _log_dir(path)
-    latest = _latest_version(path)
-    target = latest if version is None else version
-    if target > latest or target < 0:
-        raise ValueError(f"version {target} not in [0, {latest}]")
-
-    # start from the newest checkpoint at or below the target version
-    snap: dict = {
+def _empty_state() -> dict:
+    return {
         "schema": None,
         "partition_columns": [],
         "files": {},
@@ -919,11 +916,59 @@ def _replay(path: str, version: int | None) -> _Snapshot:
         "txns": {},
         "domains": {},
     }
+
+
+#: Folded checkpoint states, least recently used first, keyed by (table,
+#: checkpoint version, the checkpoint files' names, sizes and mtimes).
+#: Checkpoints are immutable, so a key that still matches the listing
+#: names the same actions; a rewritten or cleaned-up checkpoint changes
+#: the key. Bounded: a long-lived session touching many tables keeps only
+#: the last few.
+_CHECKPOINT_STATES: OrderedDict = OrderedDict()
+_CHECKPOINT_STATES_MAX = 8
+_CHECKPOINT_STATES_LOCK = threading.Lock()
+
+
+def _checkpoint_state(path: str, version: int, files: list[str]) -> dict:
+    """The replay state folded from checkpoint ``version`` (``files`` as
+    ``_checkpoint_files`` lists them), read and folded once per key and
+    handed out as a deep copy, so the JSON tail folded onto it — or a
+    caller mutating the snapshot — never changes the cached state."""
+    log = _log_dir(path)
+    stats = [os.stat(os.path.join(log, f)) for f in files]
+    key = (
+        os.path.realpath(path),
+        version,
+        tuple((f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)),
+    )
+    with _CHECKPOINT_STATES_LOCK:
+        state = _CHECKPOINT_STATES.get(key)
+        if state is not None:
+            _CHECKPOINT_STATES.move_to_end(key)
+    if state is None:
+        state = _empty_state()
+        _read_checkpoint(path, version, state, files)
+        with _CHECKPOINT_STATES_LOCK:
+            _CHECKPOINT_STATES[key] = state
+            while len(_CHECKPOINT_STATES) > _CHECKPOINT_STATES_MAX:
+                _CHECKPOINT_STATES.popitem(last=False)
+    return copy.deepcopy(state)
+
+
+def _replay(path: str, version: int | None) -> _Snapshot:
+    log = _log_dir(path)
+    latest = _latest_version(path)
+    target = latest if version is None else version
+    if target > latest or target < 0:
+        raise ValueError(f"version {target} not in [0, {latest}]")
+
+    # start from the newest checkpoint at or below the target version
+    snap = _empty_state()
     start = 0
     cps = _checkpoint_files(log)
     usable = sorted(v for v in cps if v <= target)
     if usable:
-        _read_checkpoint(path, usable[-1], snap, cps[usable[-1]])
+        snap = _checkpoint_state(path, usable[-1], cps[usable[-1]])
         start = usable[-1] + 1
     for f in sorted(f for f in os.listdir(log) if f.endswith(".json") and f[0].isdigit()):
         v = _version_of(f)
@@ -1185,13 +1230,15 @@ def delta_read(
     prune.
 
     Replays the transaction log to the active file set, then hands that
-    list to the ordinary parquet reader — pushdown/pruning untouched.
-    Partition columns (not stored in the data files, per protocol) are
-    restored from each add action's ``partitionValues``, cast to the
-    schema's declared types: by Spark's own partition discovery when the
-    files sit in Hive directories that agree with the log (one parquet
-    relation for the whole table), else by per-file values (see
-    ``_scan``).
+    list to ONE parquet relation — pushdown/pruning untouched — with ONE
+    filter: the files' deletion vectors, as a row-index lookup on the
+    scan's hidden file-name and row-index columns, ANDed with ``where``
+    (see ``_scan`` for the fallbacks). Partition columns (not stored in
+    the data files, per protocol) are restored from each add action's
+    ``partitionValues``, cast to the schema's declared types: by Spark's
+    own partition discovery when the files sit in Hive directories that
+    agree with the log (one parquet relation for the whole table), else
+    by per-file values (see ``_relations``).
 
     Column-mapped tables (mode ``name`` — what the reference's bronze
     writer produces, load_bronze_to_table.py:93) scan under the
@@ -1213,10 +1260,8 @@ def delta_read(
         version = version_at_timestamp(path, timestamp_millis)
     snap = _replay(path, version)
     active = _pruned_files(snap, where)
-    df = _scan(spark, path, snap, active, row_ids=with_row_ids)
-    if where:
-        df = df.filter(skipping.conds_filter(where))
-    return df
+    cond = skipping.conds_filter(where) if where else None
+    return _scan(spark, path, snap, active, row_ids=with_row_ids, cond=cond)
 
 
 #: RoaringBitmapArray "portable" serialization magic (delta PROTOCOL.md,
@@ -1236,19 +1281,30 @@ _DV_ISIN_CAP = 100_000
 _FILE_INFO_MAP_CAP = 256
 
 
+def _dv_literal_ok(dv_files: dict[str, dict]) -> bool:
+    """True when a DV set is small enough to apply as the literal map
+    filter: at most ``_DV_ISIN_CAP`` marked rows (by the descriptors'
+    cardinality, so no bitmap is loaded to decide) over at most
+    ``_FILE_INFO_MAP_CAP`` files."""
+    marked = sum(
+        int((a["deletionVector"] or {}).get("cardinality") or 0)
+        for a in dv_files.values()
+    )
+    return marked <= _DV_ISIN_CAP and len(dv_files) <= _FILE_INFO_MAP_CAP
+
+
 def _dv_pairs_literal_hit(deleted_of: dict[str, list]):
-    """Predicate: this row's (file basename, row index) is deletion-vector
-    marked — spelled as per-file row-index ARRAY LITERALS behind one
-    basename-keyed map lookup, so small DV sets apply as a codegen'd
-    filter with no pair relation and no broadcast anti-join. None when a
-    basename cannot be a SQL literal."""
+    """Predicate: this row's address (``_ROW_FILE``, ``_ROW_INDEX``) is
+    deletion-vector marked — spelled as per-file row-index ARRAY LITERALS
+    behind one file-key map lookup, so small DV sets apply as a codegen'd
+    filter with no pair relation and no broadcast anti-join. It reads the
+    scan's hidden metadata columns, so it applies on the scan relation or
+    any projection of it."""
     entries = []
     for p, deleted in deleted_of.items():
         if not deleted:  # cardinality-0 descriptor: nothing to mark (and an
             continue  # empty array literal would break the map's value type)
-        fb = _basename(p)
-        if "'" in fb or "\\" in fb:  # foreign layout with a hostile
-            return None  # basename: caller keeps the relation path
+        fb = _file_key(p).replace("\\", "\\\\").replace("'", "\\'")
         arr = ",".join(f"{int(i)}L" for i in deleted)
         entries.append(f"'{fb}', array({arr})")
     if not entries:
@@ -1258,20 +1314,18 @@ def _dv_pairs_literal_hit(deleted_of: dict[str, list]):
     # time (the simhash_md5_fingerprints lesson, r14) — the parser builds
     # the same tree in one call.
     return F.expr(
-        "coalesce(array_contains(map("
-        + ", ".join(entries)
-        + ")[`__fb`], `__ri`), false)"
+        f"coalesce(array_contains(map({', '.join(entries)})[{_ROW_FILE}], "
+        f"{_ROW_INDEX}), false)"
     )
 
 
 def _dv_anti_filter(
     spark: SparkSession, df: DataFrame, path: str, dv_files: dict[str, dict]
 ) -> DataFrame:
-    """``df`` (carrying ``__fb``/``__ri``) without its DV-marked rows. A
-    small DV set — at most ``_DV_ISIN_CAP`` marked rows over at most
-    ``_FILE_INFO_MAP_CAP`` files — applies as the literal map filter;
-    otherwise as ONE broadcast anti-join against the (file, row) pairs.
-    Past ``_DV_READ_PAIRS_CAP`` marked rows in total each file's bitmap
+    """``df`` (a row-addressed scan, carrying ``__fb``/``__ri``) without
+    its DV-marked rows. A small DV set (``_dv_literal_ok``) applies as the
+    literal map filter; otherwise as ONE broadcast anti-join against the
+    (file, row) pairs. Past ``_DV_READ_PAIRS_CAP`` marked rows in total each file's bitmap
     applies on its own (literal filter or anti-join), so peak driver
     memory is ONE file's bitmap instead of the union of all of them —
     bounded physics on a table whose DVs have grown huge between OPTIMIZE
@@ -1290,13 +1344,10 @@ def _dv_anti_filter(
             p: _load_deletion_vector(path, a["deletionVector"])
             for p, a in sorted(group.items())
         }
-        marked = sum(len(d) for d in deleted_of.values())
-        if marked <= _DV_ISIN_CAP and len(group) <= _FILE_INFO_MAP_CAP:
-            hit = _dv_pairs_literal_hit(deleted_of)
-            if hit is not None:
-                df = df.filter(~hit)
-                continue
-        pairs = [(_basename(p), int(i)) for p, d in deleted_of.items() for i in d]
+        if _dv_literal_ok(group):
+            df = df.filter(~_dv_pairs_literal_hit(deleted_of))
+            continue
+        pairs = [(_file_key(p), int(i)) for p, d in deleted_of.items() for i in d]
         if pairs:
             dv_df = spark.createDataFrame(pairs, "__fb string, __ri bigint")
             df = df.join(F.broadcast(dv_df), ["__fb", "__ri"], "left_anti")
@@ -1596,12 +1647,31 @@ def _load_deletion_vector(table_path: str, desc: dict) -> list[int]:
     return _parse_rbm_array(data)
 
 
-def _basename(p: str) -> str:
-    """A log path's file basename — the key row-addressed scans match
-    ``_metadata.file_path`` on (UUID-named part files: unique by
-    construction for this writer and delta-spark; the URI spelling of
-    ``_metadata.file_path`` is never reproduced driver-side)."""
-    return unquote(p).rsplit("/", 1)[-1]
+#: The row address a deletion vector marks: the file's key (its basename
+#: as Spark spells it — see ``_file_key``) and the row's parquet index.
+#: Hidden metadata columns of a file scan; they resolve through the
+#: projections above it, but not through a union or an aggregate.
+_ROW_FILE = "_metadata.file_name"
+_ROW_INDEX = "_metadata.row_index"
+
+
+def _file_key(p: str) -> str:
+    """A log path's file basename in the spelling of ``_ROW_FILE``: the
+    key the row address, the DV marks and the per-file values all match
+    on. Spark renders the name as Hadoop's ``Path.toUri`` (java.net.URI
+    quoting): ASCII outside the URI path set — space and '%' included —
+    is percent-encoded, other characters stay literal unless they are
+    C1 controls or Unicode separators. Part files are UUID-named, so the
+    key is unique per file for this writer and delta-spark; a foreign
+    layout may repeat a basename across directories."""
+    name = unquote(p).rsplit("/", 1)[-1]
+    if name.isascii():
+        return quote(name, safe=_PATH_SAFE)
+    return "".join(
+        c if ord(c) > 0x9F and not unicodedata.category(c).startswith("Z")
+        else quote(c, safe=_PATH_SAFE)
+        for c in name
+    )
 
 
 def _scan_to_logical(df: DataFrame, snap: _Snapshot, *extra: str) -> DataFrame:
@@ -1632,8 +1702,8 @@ def _attach_file_info(
     info: dict[str, tuple[str, list]],
 ) -> DataFrame:
     """Attach per-file values to a row-addressed scan, keyed by its
-    ``__fb`` basename: ``info`` maps a column name to (SQL type, one value
-    per basename in ``fbs``). Up to ``_FILE_INFO_MAP_CAP`` files the
+    ``__fb`` file key: ``info`` maps a column name to (SQL type, one value
+    per key in ``fbs``). Up to ``_FILE_INFO_MAP_CAP`` files the
     values are LITERAL map lookups — a pure projection, no parallelize
     job, no broadcast exchange (r15, guide §4). A larger file set joins a
     broadcast relation of one row per file: a 10⁶-file table must not
@@ -1650,6 +1720,43 @@ def _attach_file_info(
     return df
 
 
+def _relations(
+    spark: SparkSession, path: str, snap: _Snapshot, files: dict[str, dict]
+) -> list[DataFrame]:
+    """Plain parquet relations over ``files`` under the snapshot's
+    PHYSICAL schema, partition columns restored. ONE relation when the
+    table is unpartitioned, or when every file's directory re-derives
+    exactly the log's partitionValues (the layout Spark and delta-spark
+    both write): basePath partition discovery then restores the columns,
+    with native partition pruning, one FileScan node regardless of
+    partition count. Foreign layouts whose directory names are not
+    authoritative (e.g. relocated files) get one relation per partition
+    tuple with the values restored as typed literals."""
+    phys = snap.physical_schema
+    phys_parts = snap.physical_partition_columns
+    data_schema = StructType([f for f in phys.fields if f.name not in phys_parts])
+    if not phys_parts:
+        paths = [_abs_data_path(path, p) for p in files]
+        return [spark.read.schema(data_schema).parquet(*paths)]
+    if _hive_layout_consistent(snap, phys_parts, files):
+        paths = [_abs_data_path(path, p) for p in files]
+        return [spark.read.schema(phys).option("basePath", path).parquet(*paths)]
+    types = {f.name: f.dataType for f in phys.fields}
+    by_pv: dict[tuple, list[str]] = {}
+    for p, add in files.items():
+        pv = add.get("partitionValues") or {}
+        key = tuple(pv.get(c) for c in phys_parts)
+        by_pv.setdefault(key, []).append(_abs_data_path(path, p))
+    out = []
+    for key, group in sorted(by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))):
+        one = spark.read.schema(data_schema).parquet(*group)
+        for c, raw in zip(phys_parts, key):
+            # protocol stores strings; null stays null
+            one = one.withColumn(c, F.lit(raw).cast(types[c]))
+        out.append(one)
+    return out
+
+
 def _scan(
     spark: SparkSession,
     path: str,
@@ -1657,37 +1764,40 @@ def _scan(
     files: dict[str, dict],
     address: bool = False,
     row_ids: bool = False,
+    cond: Column | None = None,
 ) -> DataFrame:
     """Scan of exactly ``files`` (a subset of the snapshot's file set)
     under the snapshot's LOGICAL schema, deletion vectors applied — the
     one read engine under ``delta_read``, OPTIMIZE, the change feed, the
-    rewrite paths and the deletion-vector writers.
+    rewrite paths and the deletion-vector writers. ``cond`` (a Column
+    over logical names) filters the rows, in the same filter as the
+    deletion vectors where the scan has one.
 
-    ``address`` appends ``__fb`` / ``__ri`` (file basename, parquet row
+    A plain scan is ONE parquet relation over every file, clean and DV'd
+    alike (``_relations``), with ONE filter: the DV marks as a literal
+    map lookup on the row address (``_dv_pairs_literal_hit``) ANDed with
+    ``cond``. No address column is projected and nothing is unioned, so
+    the scan is a reader and a filter (plus a column-mapped table's
+    logical projection) however many files carry DVs. Fallbacks keep the result and change only the plan:
+    foreign partition layouts filter each per-tuple relation; a DV set
+    past the literal caps (``_dv_literal_ok``), or a DV'd file whose
+    basename another file repeats, reads the DV'd files row-addressed
+    (below) with the broadcast anti-join or one piece per file, unioned
+    with the clean files' relations.
+
+    ``address`` appends ``__fb`` / ``__ri`` (file key, parquet row
     index): the row addressing DV writes mark by. ``row_ids`` (row-tracked
     tables, every file stamped) appends ``_row_id`` /
     ``_row_commit_version`` by PROTOCOL.md's Row Tracking read rule: the
     file's MATERIALIZED value when the row was copied in by OPTIMIZE or a
     DV UPDATE/MERGE, else ``baseRowId + row_index`` /
     ``defaultRowCommitVersion``. Either asks for the ROW-ADDRESSED form:
-    ONE scan relation over every file carrying ``_metadata.file_path``'s
-    basename and ``_metadata.row_index``, per-file partitionValues /
-    baseRowId / defaultRowCommitVersion attached by ``_attach_file_info``,
-    DV-marked rows removed by ``_dv_anti_filter`` — a 10⁴-file table stays
-    a single FileScan node, never a 10⁴-way union. Files are keyed by
-    basename, so a layout with colliding basenames is refused.
-
-    Otherwise files WITHOUT a deletion vector take the plain scan, and
-    DV'd files the row-addressed form with the address dropped (one piece
-    per file when a foreign layout's basenames collide — the one input a
-    basename key cannot address). The plain scan of a partitioned table
-    hands the whole file list to one relation with basePath partition
-    discovery when every file's directory re-derives exactly the log's
-    partitionValues (the layout Spark and delta-spark both write: native
-    partition pruning, one FileScan node regardless of partition count);
-    foreign layouts whose directory names are not authoritative (e.g.
-    relocated files) read one relation per partition tuple with the
-    values restored as typed literals, unioned."""
+    ONE scan relation over every file projecting the row address
+    (``_ROW_FILE``, ``_ROW_INDEX``), per-file partitionValues / baseRowId
+    / defaultRowCommitVersion attached by ``_attach_file_info``, DV-marked
+    rows removed by ``_dv_anti_filter`` — a 10⁴-file table stays a single
+    FileScan node, never a 10⁴-way union. Files are keyed by
+    basename, so a layout with colliding basenames is refused."""
     if snap.column_mapping == "id":
         # mode=id: bind parquet columns by field id, not name — Spark's
         # native resolution (SPARK-38094) keyed off the parquet.field.id
@@ -1709,56 +1819,50 @@ def _scan(
                 for c in extra
             ],
         )
+    if not extra:
+        dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
+        n_of = Counter(map(_file_key, files)) if dv_files else {}
+        if all(n_of[_file_key(p)] == 1 for p in dv_files) and _dv_literal_ok(dv_files):
+            if dv_files:
+                keep = ~_dv_pairs_literal_hit(
+                    {
+                        p: _load_deletion_vector(path, a["deletionVector"])
+                        for p, a in sorted(dv_files.items())
+                    }
+                )
+                cond = keep if cond is None else keep & cond
+            pieces = [_scan_to_logical(r, snap) for r in _relations(spark, path, snap, files)]
+            if cond is not None:
+                pieces = [df.filter(cond) for df in pieces]
+            return reduce(DataFrame.unionByName, pieces)
+        plain = {p: a for p, a in files.items() if p not in dv_files}
+        pieces = (
+            [_scan_to_logical(r, snap) for r in _relations(spark, path, snap, plain)]
+            if plain
+            else []
+        )
+        # No union against an empty relation when EVERY file carries
+        # a DV: createDataFrame([], schema) is a defaultParallelism-
+        # partition PYTHON RDD, serialized through ONE task under a
+        # downstream coalesce(1) (r15: an OPTIMIZE went 0.3 → 8.5 s).
+        groups = (
+            [dv_files]
+            if len({_file_key(p) for p in dv_files}) == len(dv_files)
+            else [{p: a} for p, a in sorted(dv_files.items())]
+        )
+        pieces += [
+            _scan(spark, path, snap, g, address=True).drop("__fb", "__ri")
+            for g in groups
+        ]
+        df = reduce(DataFrame.unionByName, pieces)
+        return df if cond is None else df.filter(cond)
+
     phys = snap.physical_schema
     phys_parts = snap.physical_partition_columns
     types = {f.name: f.dataType for f in phys.fields}
     data_fields = [f for f in phys.fields if f.name not in phys_parts]
-
-    if not extra:
-        dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
-        plain = {p: a for p, a in files.items() if p not in dv_files}
-        pieces: list[DataFrame] = []
-        if plain:
-            paths = [_abs_data_path(path, p) for p in plain]
-            if not phys_parts:
-                df = spark.read.schema(StructType(data_fields)).parquet(*paths)
-            elif _hive_layout_consistent(snap, phys_parts, plain):
-                df = spark.read.schema(phys).option("basePath", path).parquet(*paths)
-            else:
-                by_pv: dict[tuple, list[str]] = {}
-                for p, add in plain.items():
-                    pv = add.get("partitionValues") or {}
-                    key = tuple(pv.get(c) for c in phys_parts)
-                    by_pv.setdefault(key, []).append(_abs_data_path(path, p))
-                parts = []
-                for key, group in sorted(
-                    by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))
-                ):
-                    one = spark.read.schema(StructType(data_fields)).parquet(*group)
-                    for c, raw in zip(phys_parts, key):
-                        # protocol stores strings; null stays null
-                        one = one.withColumn(c, F.lit(raw).cast(types[c]))
-                    parts.append(one)
-                df = reduce(DataFrame.unionByName, parts)
-            pieces.append(_scan_to_logical(df, snap))
-        if dv_files:
-            # No union against an empty relation when EVERY file carries
-            # a DV: createDataFrame([], schema) is a defaultParallelism-
-            # partition PYTHON RDD, serialized through ONE task under a
-            # downstream coalesce(1) (r15: an OPTIMIZE went 0.3 → 8.5 s).
-            groups = (
-                [dv_files]
-                if len({_basename(p) for p in dv_files}) == len(dv_files)
-                else [{p: a} for p, a in sorted(dv_files.items())]
-            )
-            pieces += [
-                _scan(spark, path, snap, g, address=True).drop("__fb", "__ri")
-                for g in groups
-            ]
-        return reduce(DataFrame.unionByName, pieces)
-
     ordered = sorted(files)
-    fbs = [_basename(p) for p in ordered]
+    fbs = [_file_key(p) for p in ordered]
     if len(set(fbs)) != len(fbs):
         raise DeltaProtocolError(
             f"{path}: a row-addressed read keys files by basename; this "
@@ -1799,14 +1903,13 @@ def _scan(
         *[_abs_data_path(path, p) for p in ordered]
     ).select(
         "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__fb"),
-        F.col("_metadata.row_index").alias("__ri"),
+        F.col(_ROW_FILE).alias("__fb"), F.col(_ROW_INDEX).alias("__ri")
     )
-    if info:
-        df = _attach_file_info(spark, df, fbs, info)
     dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
     if dv_files:
         df = _dv_anti_filter(spark, df, path, dv_files)
+    if info:
+        df = _attach_file_info(spark, df, fbs, info)
     for i, c in enumerate(phys_parts):
         df = df.withColumn(c, F.col(f"__pv{i}").cast(types[c]))
     if row_ids:
@@ -1819,7 +1922,8 @@ def _scan(
         df = df.withColumn("_row_id", rid.cast("bigint")).withColumn(
             "_row_commit_version", rcv.cast("bigint")
         )
-    return _scan_to_logical(df, snap, *extra)
+    df = _scan_to_logical(df, snap, *extra)
+    return df if cond is None else df.filter(cond)
 
 
 def _pruned_files(snap: _Snapshot, where: list[tuple] | None) -> dict[str, dict]:
@@ -3569,9 +3673,12 @@ def delta_optimize(
         # single-file compaction needs no balancing: coalesce(1) merges
         # the scan partitions WITHOUT the round-robin exchange (and its
         # sort-before-repartition) that repartition(1) pays — one whole
-        # shuffle stage removed from the rewrite (r15, guide §2.4). Rows
-        # arrive in deterministic file order (coalesce concatenates
-        # parent partitions in index order over the sorted file list).
+        # shuffle stage removed from the rewrite (r15, guide §2.4).
+        # coalesce concatenates the scan's partitions in index order, so
+        # each source file's rows stay one run in row order; the files
+        # come in the order Spark packs them into partitions, largest
+        # first — not by name. Nothing relies on that order: row ids
+        # ride along as materialized columns.
         df = df.coalesce(1)
     else:
         df = df.repartition(n)
@@ -3792,14 +3899,14 @@ def _dv_mark_actions(
     by_file: dict[str, list[int]],
     now: int,
 ) -> list[dict]:
-    """remove+add action pairs marking ``by_file`` (basename → row
+    """remove+add action pairs marking ``by_file`` (file key → row
     indexes) deleted via fresh per-file deletion vectors, UNIONED with
     each file's existing DV (DVs are absolute per file version).
     Basenames resolve against the TOUCHED files only — resolving against
     the whole snapshot could attach a DV to an untouched file that
     happens to share a basename (``_dv_write_path_ok`` only checks
     uniqueness among the touched set)."""
-    fb_to_rel = {_basename(p): p for p in touched}
+    fb_to_rel = {_file_key(p): p for p in touched}
     actions: list[dict] = []
     for fb in sorted(by_file):
         rel = fb_to_rel[fb]
@@ -3867,7 +3974,7 @@ def _dv_write_path_ok(snap: _Snapshot, touched: list[str]) -> bool:
         > _DV_READ_PAIRS_CAP
     ):
         return False
-    return len({_basename(p) for p in touched}) == len(touched)
+    return len({_file_key(p) for p in touched}) == len(touched)
 
 
 def _files_row_bound(path: str, files: dict[str, dict]) -> tuple[int, int]:
@@ -3883,7 +3990,7 @@ def _files_row_bound(path: str, files: dict[str, dict]) -> tuple[int, int]:
 def _collect_dv_marks(
     matched: DataFrame, row_bound: tuple[int, int]
 ) -> dict[str, list[int]] | None:
-    """Collect the matched rows' (file basename, row index) positions for
+    """Collect the matched rows' (file key, row index) positions for
     DV marking, GUARDED by the DV write budget: when any file's matched
     count exceeds ``_DV_WRITE_FILE_CAP`` or the total exceeds
     ``_DV_WRITE_TOTAL_CAP`` the collect never happens — returns None and

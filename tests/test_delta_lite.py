@@ -5087,3 +5087,267 @@ def test_dv_merge_and_delete_replay_the_log_once(spark, tmp_path, monkeypatch):
         1 for a in snap.files.values() if a.get("deletionVector")
     ) > 0
     assert crc["tableSizeBytes"] == sum(a["size"] for a in snap.files.values())
+
+
+# ------------------------------------------- one-relation deletion-vector reads
+
+
+def _oracle_rows(dl, t):
+    """Live rows computed in Python from the log and the data files: each
+    active file's rows in parquet order minus its deletion vector, the
+    partition values from the log, physical names mapped back. Sorted
+    tuples in the snapshot's logical column order."""
+    snap = dl._replay(t, None)
+    phys = snap.physical_schema.fields
+    out = []
+    for rel, add in snap.files.items():
+        dead = (
+            set(dl._load_deletion_vector(t, add["deletionVector"]))
+            if add.get("deletionVector")
+            else set()
+        )
+        pv = add.get("partitionValues") or {}
+        rows = pq.ParquetFile(dl._abs_data_path(t, rel)).read().to_pylist()
+        for pos, r in enumerate(rows):
+            if pos not in dead:
+                out.append(tuple(pv[f.name] if f.name in pv else r[f.name] for f in phys))
+    return sorted(out)
+
+
+def _relocate(t, rel, new_rel, logged=None):
+    """Move a data file to ``new_rel`` and point every JSON commit's path
+    at it (spelled ``logged``, default ``new_rel``)."""
+    os.makedirs(os.path.dirname(os.path.join(t, new_rel)), exist_ok=True)
+    os.rename(os.path.join(t, rel), os.path.join(t, new_rel))
+    log = os.path.join(t, "_delta_log")
+    for f in sorted(os.listdir(log)):
+        if f.endswith(".json"):
+            p = os.path.join(log, f)
+            with open(p) as fh:
+                text = fh.read()
+            with open(p, "w") as fh:
+                fh.write(text.replace(json.dumps(rel), json.dumps(logged or new_rel)))
+
+
+def _dv_table(spark, dl, t, layout):
+    """Three appends of ten rows (one file each, per partition), deletion
+    vectors on some files and not on others."""
+    parts = None if layout in ("plain", "id") else ["region"]
+    mapping = layout if layout in ("name", "id") else "none"
+    for lo in (0, 10, 20):
+        rows = [(i, "north" if i % 10 < 5 else "south", str(i)) for i in range(lo, lo + 10)]
+        df = spark.createDataFrame(rows, "id bigint, region string, s string")
+        dl.delta_write(df.coalesce(1).sortWithinPartitions("id"), t,
+                       partition_by=parts, column_mapping=mapping)
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "between", (3, 6)))
+    dl.delta_delete_where(spark, t, ("id", "=", 28))
+    if layout == "foreign":  # a clean file outside its Hive directory
+        clean = sorted(p for p, a in dl._replay(t, None).files.items()
+                       if not a.get("deletionVector"))[0]
+        _relocate(t, clean, "elsewhere/" + clean.rsplit("/", 1)[-1])
+    snap = dl._replay(t, None)
+    dv = [p for p, a in snap.files.items() if a.get("deletionVector")]
+    assert dv and len(dv) < len(snap.files)
+    return snap
+
+
+@pytest.mark.parametrize("layout", ["plain", "hive", "foreign", "name", "id"])
+def test_dv_read_is_one_relation_per_layout(spark, tmp_path, layout):
+    """A file set with clean and DV'd files reads as one parquet relation
+    with the deletion vectors and the ``where`` in one filter: no union
+    and no second scan (foreign partition layouts: one relation per
+    partition tuple). Rows equal the log-and-files reference."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / layout)
+    _dv_table(spark, dl, t, layout)
+    expect = _oracle_rows(dl, t)
+    assert len(expect) == 25
+    got = dl.delta_read(spark, t)
+    assert sorted(map(tuple, got.collect())) == expect
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    if layout == "foreign":
+        assert plan.count("Scan parquet") == 2, plan  # north, south tuples
+    else:
+        assert plan.count("Scan parquet") == 1 and "Union" not in plan, plan
+    where = dl.delta_read(spark, t, where=[("id", ">=", 5), ("region", "=", "south")])
+    assert sorted(map(tuple, where.collect())) == [
+        r for r in expect if r[0] >= 5 and r[1] == "south"
+    ]
+
+
+def test_dv_read_fallbacks_return_the_same_rows(spark, tmp_path, monkeypatch):
+    """The read's fallbacks change the plan, not the rows: a DV set past
+    the literal caps takes the broadcast anti-join, and a DV'd file whose
+    basename another file repeats reads as its own piece."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "caps")
+    _dv_table(spark, dl, t, "plain")
+    expect = _oracle_rows(dl, t)
+    for cap in ("_DV_ISIN_CAP", "_FILE_INFO_MAP_CAP"):
+        with monkeypatch.context() as m:
+            m.setattr(dl, cap, 0)
+            got = dl.delta_read(spark, t)
+            assert sorted(map(tuple, got.collect())) == expect
+            assert "BroadcastHashJoin" in got._jdf.queryExecution().executedPlan().toString()
+
+    # colliding basenames: the south file of the first append renamed to
+    # the north file's basename, then DV-marked
+    t2 = str(tmp_path / "collide")
+    df = spark.createDataFrame(
+        [(i, "north" if i < 5 else "south") for i in range(10)], "id bigint, region string"
+    )
+    dl.delta_write(df.coalesce(1).sortWithinPartitions("id"), t2, partition_by=["region"])
+    files = sorted(dl._replay(t2, None).files)
+    north, south = files
+    _relocate(t2, south, south.rsplit("/", 1)[0] + "/" + north.rsplit("/", 1)[-1])
+    dl.delta_enable_dvs(spark, t2)
+    dl.delta_delete_where(spark, t2, ("id", "=", 7))
+    snap = dl._replay(t2, None)
+    assert len({p.rsplit("/", 1)[-1] for p in snap.files}) == 1
+    assert sum(1 for a in snap.files.values() if a.get("deletionVector")) == 1
+    got = dl.delta_read(spark, t2)
+    assert sorted(map(tuple, got.collect())) == _oracle_rows(dl, t2)
+    assert sorted(r["id"] for r in got.collect()) == [0, 1, 2, 3, 4, 5, 6, 8, 9]
+
+
+def test_dv_read_row_ids_and_change_feed(spark, tmp_path):
+    """``with_row_ids`` over clean and DV'd files keeps the protocol's
+    ids (baseRowId + row index), and the change feed across a DV commit
+    returns the inserts and the marked rows' deletes."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "rt")
+    for lo in (0, 10):
+        dl.delta_write(spark.range(lo, lo + 10).coalesce(1).sortWithinPartitions("id"), t)
+    dl.delta_enable_row_tracking(spark, t)
+    dl.delta_enable_cdf(spark, t)
+    dl.delta_enable_dvs(spark, t)
+    v_dv = dl.delta_delete_where(spark, t, ("id", "between", (2, 4)))
+    assert _committed_dvs(dl, t, v_dv)
+    snap = dl._replay(t, None)
+    want = {}
+    for rel, add in snap.files.items():
+        dead = set(dl._load_deletion_vector(t, add["deletionVector"])) \
+            if add.get("deletionVector") else set()
+        ids = pq.ParquetFile(dl._abs_data_path(t, rel)).read().column("id").to_pylist()
+        want.update({k: add["baseRowId"] + pos for pos, k in enumerate(ids) if pos not in dead})
+    got = {r["id"]: r["_row_id"] for r in dl.delta_read(spark, t, with_row_ids=True).collect()}
+    assert got == want and sorted(got) == [i for i in range(20) if not 2 <= i <= 4]
+    v_app = dl.delta_write(spark.range(20, 22).coalesce(1), t)
+    changes = dl.delta_read_changes(spark, t, v_dv, v_app).collect()
+    assert sorted((r["_change_type"], r["id"]) for r in changes) == [
+        ("delete", 2), ("delete", 3), ("delete", 4), ("insert", 20), ("insert", 21)
+    ]
+
+
+@pytest.mark.parametrize(
+    "name, quoted",
+    [("part x%41.parquet", "part%20x%2541.parquet"),
+     ("it's x%41.parquet", "it's%20x%2541.parquet")],
+)
+def test_dv_on_basename_needing_uri_encoding(spark, tmp_path, name, quoted):
+    """Spark spells a file's name URI-encoded in the row address; a
+    basename with a space and a '%' (and a quote, which the SQL literal
+    escapes) still keys its deletion vector: a foreign DV is applied on
+    read, and a DV DELETE and a DV MERGE mark and commit, leaving a clean
+    table."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "enc")
+    dl.delta_write(spark.range(0, 10).coalesce(1).sortWithinPartitions("id"), t)
+    dl.delta_enable_dvs(spark, t)
+    (rel,) = dl._replay(t, None).files
+    assert dl._encode_path(name) == quoted  # the log holds the quoted path
+    _relocate(t, rel, name, logged=quoted)
+    add = dl._replay(t, None).files[quoted]
+    assert dl._file_key(quoted) == quoted
+    v = dl._latest_version(t) + 1
+    acts = [
+        {"commitInfo": {"timestamp": 1, "operation": "DELETE",
+                        "operationParameters": {}, "engineInfo": "test"}},
+        {"remove": {"path": quoted, "deletionTimestamp": 1, "dataChange": True}},
+        {"add": add | {"deletionVector": dl._write_dv_file(t, [0, 2])}},
+    ]
+    dl._claim_version(os.path.join(t, "_delta_log"), v,
+                      "\n".join(json.dumps(a) for a in acts) + "\n")
+
+    def ids():
+        return sorted(r["id"] for r in dl.delta_read(spark, t).collect())
+
+    assert ids() == [1, 3, 4, 5, 6, 7, 8, 9]
+    v_del = dl.delta_delete_where(spark, t, ("id", "=", 5))
+    assert _committed_dvs(dl, t, v_del)
+    assert ids() == [1, 3, 4, 6, 7, 8, 9]
+    v_merge = dl.delta_merge(
+        spark.createDataFrame([(7,), (42,)], "id bigint"), t, "id"
+    )
+    assert _committed_dvs(dl, t, v_merge)
+    assert ids() == [1, 3, 4, 6, 7, 8, 9, 42]
+    assert dl.delta_fsck(t) == []
+
+
+def test_replay_folds_each_checkpoint_once(spark, tmp_path, monkeypatch):
+    """Replays past a checkpoint reuse its folded state: two replays read
+    the checkpoint once, a JSON tail or a caller's mutation never leaks
+    into the cached state, and a new or rewritten checkpoint is read
+    again. The cache keeps a bounded number of checkpoints."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "cp")
+    dl.delta_write(spark.range(0, 5).coalesce(1), t)
+    dl.delta_write(spark.range(5, 10).coalesce(1), t)
+    dl._write_checkpoint(spark, t, 1)
+    reads = []
+    real = pq.read_table
+    monkeypatch.setattr(pq, "read_table", lambda *a, **k: reads.append(a[0]) or real(*a, **k))
+    dl._CHECKPOINT_STATES.clear()
+    first = dl._replay(t, None)
+    second = dl._replay(t, None)
+    assert len(reads) == 1 and first.files == second.files and len(first.files) == 2
+    first.files.clear()
+    next(iter(second.files.values()))["size"] = -1
+    second.configuration["leak"] = "yes"
+    dl.delta_write(spark.range(10, 12).coalesce(1), t)  # v2, a JSON tail
+    tail = dl._replay(t, None)
+    assert len(tail.files) == 3 and len(reads) == 1
+    at_cp = dl._replay(t, 1)
+    assert len(at_cp.files) == 2 and "leak" not in at_cp.configuration
+    assert all(a["size"] > 0 for a in at_cp.files.values())
+    assert len(reads) == 1
+    dl._write_checkpoint(spark, t, 2)  # a new checkpoint is read
+    assert len(dl._replay(t, None).files) == 3 and len(reads) == 2
+    # a cleaned-up checkpoint written again is read again
+    cp = os.path.join(t, "_delta_log", f"{2:020d}.checkpoint.parquet")
+    mtime = os.stat(cp).st_mtime_ns
+    os.remove(cp)
+    dl._write_checkpoint(spark, t, 2)
+    os.utime(cp, ns=(mtime + 10**9, mtime + 10**9))
+    assert len(dl._replay(t, None).files) == 3 and len(reads) == 3
+    monkeypatch.setattr(dl, "_CHECKPOINT_STATES_MAX", 1)
+    t2 = str(tmp_path / "cp2")
+    dl.delta_write(spark.range(0, 3).coalesce(1), t2)
+    dl._write_checkpoint(spark, t2, 0)
+    dl._replay(t2, None)
+    assert len(dl._CHECKPOINT_STATES) == 1
+
+
+def test_single_file_optimize_keeps_each_file_contiguous(spark, tmp_path):
+    """A single-file OPTIMIZE coalesces the one scan's partitions: each
+    source file's surviving rows stay one run in their row order, and the
+    files come in the scan's packing order, largest first."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "opt")
+    for lo, n in ((0, 5), (100, 400), (1000, 50)):
+        dl.delta_write(
+            spark.range(lo, lo + n).select("id", F.lit("x" * 10).alias("s")).coalesce(1), t
+        )
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "=", 1001))
+    dl.delta_optimize(spark, t)
+    (rel,) = dl._replay(t, None).files
+    ids = pq.read_table(os.path.join(t, rel)).column("id").to_pylist()
+    assert ids == list(range(100, 500)) + [1000] + list(range(1002, 1050)) + list(range(5))

@@ -7,9 +7,10 @@ at module level or inside a function, so private helpers cannot couple
 them again.
 
 Within the Delta side, every commit goes through one log writer and every
-row-addressed read through one scan builder: the ``engineInfo`` stamp and
-the ``_metadata.row_index`` read each appear once, so neither can be
-copied into a second hand-built commit or scan. Every data commit's
+row address is spelled once: the ``engineInfo`` stamp, the
+``_metadata.row_index`` read and the file key (``_metadata.file_name`` or
+``_metadata.file_path``) each appear once, so none can be copied into a
+second hand-built commit, scan or deletion-vector filter. Every data commit's
 actions are built by one function (row ids stamped and CDC files written
 from one caller each), and the format sinks import none of the
 action-building helpers.
@@ -106,7 +107,9 @@ def _hits(paths, needle: str) -> int:
 @pytest.mark.parametrize(
     "needle, owner",
     [("engineInfo", "the commit writer _commit"),
-     ("_metadata.row_index", "the scan builder _scan")],
+     ("_metadata.row_index", "the row address _ROW_INDEX"),
+     # the file key: _metadata.file_name or _metadata.file_path
+     ("_metadata.file_", "the row address _ROW_FILE")],
 )
 def test_delta_commits_and_row_addressed_scans_have_one_owner(needle, owner):
     n = _hits([SOURCES / f for f in DELTA_FILES], needle)
