@@ -290,6 +290,15 @@ def _next_batch_id(state_dir: str) -> int:
     return max(ids) + 1 if ids else 0
 
 
+def _version(path: str) -> int:
+    """Latest version of the Delta state table at ``path``, -1 if none."""
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_versions,
+    )
+
+    return (delta_versions(path) or [-1])[-1]
+
+
 def _marker_path(state_dir: str) -> str:
     import os as _os
 
@@ -302,7 +311,7 @@ def _recover_incomplete_batch(spark, state_dir: str) -> None:
     in-progress marker recording each table's pre-batch version BEFORE
     writing, and removes it only after all three writes land. A crash in
     between leaves the marker; the next call restores prepared/index to
-    their recorded snapshots (metadata-only — ParquetTable.restore) and
+    their recorded versions (metadata-only — ``delta_restore``) and
     deletes the batch's bucket partition subtree, so the resubmitted batch
     replays against a consistent state: no silent duplicates (kept rows
     always have index entries) and no silent drops (index entries never
@@ -311,7 +320,9 @@ def _recover_incomplete_batch(spark, state_dir: str) -> None:
     import os as _os
     import shutil as _shutil
 
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_restore,
+    )
 
     mp = _marker_path(state_dir)
     if not _os.path.exists(mp):
@@ -320,13 +331,12 @@ def _recover_incomplete_batch(spark, state_dir: str) -> None:
         marker = _json.load(fh)
     for name in ("prepared", "index"):
         pre = marker[f"{name}_version"]
-        table = ParquetTable(spark, f"{state_dir}/{name}")
+        path = f"{state_dir}/{name}"
         if pre < 0:
             # table did not exist before the failed batch: drop it entirely
-            if table.exists():
-                _shutil.rmtree(table.root, ignore_errors=True)
-        elif table.version() != pre:
-            table.restore(pre)
+            _shutil.rmtree(path, ignore_errors=True)
+        elif _version(path) != pre:
+            delta_restore(spark, path, pre)
     bdir = _os.path.join(_buckets_dir(state_dir), f"batch_id={marker['batch_id']}")
     _shutil.rmtree(bdir, ignore_errors=True)
     _os.remove(mp)
@@ -350,10 +360,10 @@ def prepare_corpus_incremental(
     against the HISTORY MinHash bucket index, then within-batch, and only
     then appended. State under ``state_dir``:
 
-      prepared/  — every kept row (+ split) — the serving table (ParquetTable)
+      prepared/  — every kept row (+ split) — the serving table (Delta)
       index/     — (doc_id, fp, h) per kept doc: content fingerprint and
                    hashed shingle set, so history verification never
-                   re-reads or re-shingles old text (ParquetTable)
+                   re-reads or re-shingles old text (Delta)
       buckets/   — (doc_id, bucket) slim LSH banded rows of kept docs,
                    HIVE-PARTITIONED by (batch_id, bucket_part): the probe
                    filters on the batch's bucket_part values so partition
@@ -389,12 +399,12 @@ def _batch_kept_plan(
     from lakehouse_architecture_for_realestatedata_spark.functions import sketches
     from lakehouse_architecture_for_realestatedata_spark.operators.dedup import minhash_lsh_pairs
     from lakehouse_architecture_for_realestatedata_spark.operators.graph import keep_canonical
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import delta_read
 
     cfg = cfg or CorpusPrepConfig()
     idc, txt = cfg.id_col, cfg.text_col
     _recover_incomplete_batch(spark, state_dir)
-    index = ParquetTable(spark, f"{state_dir}/index")
+    index = f"{state_dir}/index"
 
     ann = annotate(batch, cfg)
     gate = (F.col("quality") >= cfg.min_quality) & (F.col("n_tokens") >= cfg.min_tokens)
@@ -414,8 +424,8 @@ def _batch_kept_plan(
     # that doesn't fit the cluster's storage memory, executors spill it
     # locally, which still beats a second remote listing+scan.
     hist = None
-    if index.exists():
-        hist = index.read().select("doc_id", "fp", "h").persist()
+    if _version(index) >= 0:
+        hist = delta_read(spark, index).select("doc_id", "fp", "h").persist()
         hist_fp = hist.select(F.col("fp").alias("__fp")).distinct()
         # No broadcast hint: the fingerprint index grows with every batch
         # ever kept, so let AQE broadcast it while small and fall back to a
@@ -517,12 +527,12 @@ def _commit_batch(
 
     from lakehouse_architecture_for_realestatedata_spark.functions import sketches
     from lakehouse_architecture_for_realestatedata_spark.plans.layout import write_partitioned
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import delta_write
 
     cfg = cfg or CorpusPrepConfig()
     idc = cfg.id_col
-    prepared = ParquetTable(spark, f"{state_dir}/prepared")
-    index = ParquetTable(spark, f"{state_dir}/index")
+    prepared = f"{state_dir}/prepared"
+    index = f"{state_dir}/index"
 
     # The three state writes all consume `kept`; materialize it once or the
     # whole funnel (gates, window dedup, history anti-joins, shingle
@@ -538,8 +548,8 @@ def _commit_batch(
     _os.makedirs(state_dir, exist_ok=True)
     marker = {
         "batch_id": batch_id,
-        "prepared_version": prepared.version(),
-        "index_version": index.version(),
+        "prepared_version": _version(prepared),
+        "index_version": _version(index),
     }
     tmp = _marker_path(state_dir) + ".tmp"
     with open(tmp, "w") as fh:
@@ -558,9 +568,9 @@ def _commit_batch(
     idx_rows = kept.select(
         F.col(idc).alias("doc_id"), F.col("__fp").alias("fp"), F.col("__h").alias("h")
     )
-    index.append(idx_rows) if index.exists() else index.overwrite(idx_rows)
+    delta_write(idx_rows, index)
     if _fail_after == "index":
         raise RuntimeError("simulated crash after index write")
-    prepared.append(new_rows) if prepared.exists() else prepared.overwrite(new_rows)
+    delta_write(new_rows, prepared)
     _os.remove(_marker_path(state_dir))
     return new_rows

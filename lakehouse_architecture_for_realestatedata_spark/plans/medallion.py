@@ -1,5 +1,7 @@
 """Medallion pipeline parity: bronze → silver → gold, as pure DataFrame
-functions plus an incremental orchestrator over ``ParquetTable``.
+functions plus an incremental orchestrator over ``ParquetTable`` — the
+medallion's own table store; every other engine table is a Delta table
+(``sources/delta_lite.py``).
 
 Each model function reproduces the semantics of one reference model
 line-for-line (citations per function), but stays a reusable library
@@ -508,7 +510,7 @@ class MedallionPipeline:
 
     def ingest_bronze(self, raw: DataFrame) -> None:
         """S7 semantics: append with schema merge."""
-        self.bronze.append(raw, merge_schema=True)
+        self.bronze.append(raw)
 
     def run(self, created_at: Column | None = None, full_refresh: bool = False) -> None:
         """One incremental cycle (the reference's daily run).

@@ -8,19 +8,28 @@ Why touched-day recompute instead of additive delta-merge: counts and
 decimal sums ARE additive, but count-distinct and min/max-under-deletion
 are not — recomputing whole touched days from the base table is the
 contract that stays correct for every aggregate shape, while still reading
-O(touched days), not the table (the change feed identifies the days as a
-metadata diff; the zonemap-pruned ``read_where`` drops every data dir
-whose stats exclude the span before Spark lists it).
+O(touched days), not the table (the change feed names the days; the
+stats-pruned ``delta_read(where=...)`` drops every file whose stats
+exclude the span before Spark lists it).
+
+Both tables are Delta tables (``sources/delta_lite.py``), named by path.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+    delta_delete_where,
+    delta_merge,
+    delta_read,
+    delta_read_changes,
+    delta_versions,
+    delta_write,
+)
 
 
 def _daily_agg(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
@@ -33,56 +42,54 @@ def _daily_agg(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
 
 
 def refresh_daily_summary(
-    base: ParquetTable,
-    summary: ParquetTable,
+    spark: SparkSession,
+    base: str,
+    summary: str,
     ts_col: str = "ts",
     value_col: str = "value",
     since_version: int | None = None,
 ) -> int:
-    """Bring ``summary`` (day, n_events, n_users, sum_value) up to date with
-    ``base`` and return the base version the summary now reflects.
+    """Bring the Delta table ``summary`` (day, n_events, n_users,
+    sum_value) up to date with the Delta table ``base`` and return the base
+    version the summary now reflects.
 
     ``since_version`` None (or no existing summary) → full rebuild.
-    Otherwise: the rows ADDED since ``since_version`` come from the
-    append-only change feed (a manifest metadata diff), their distinct days
-    are collected (metadata-scale — a batch touches few days), whole
-    touched days are re-aggregated from a zonemap-pruned ``read_where``
-    span scan filtered to exactly those days, and the recomputed day rows
-    MERGE into the summary keyed on ``day``. Includes count-distinct —
-    correct because touched days recompute wholly (an additive delta-merge
-    could not maintain it).
+    Otherwise: the change feed of the versions after ``since_version``
+    names the touched days — from every change type, so a base DELETE,
+    UPDATE or MERGE recomputes the days it took rows from as well as those
+    it wrote to (a base that rewrites rows needs its change feed enabled,
+    ``delta_enable_cdf``) — whole touched days are re-aggregated from a
+    stats-pruned span read filtered to exactly those days, and the
+    recomputed day rows MERGE into the summary keyed on ``day``; a day a
+    removal left with no rows is deleted from it. Includes count-distinct — correct
+    because touched days recompute wholly (an additive delta-merge could
+    not maintain it).
     """
-    current = base.version()
-    if since_version is None or not summary.exists():
-        summary.overwrite(_daily_agg(base.read(), ts_col, value_col))
+    current = delta_versions(base)[-1]
+    if since_version is None or not delta_versions(summary):
+        delta_write(_daily_agg(delta_read(spark, base), ts_col, value_col), summary,
+                    mode="overwrite")
         return current
     if current == since_version:
         return current
-    delta = base.read_changes(since=since_version, to=current)
-    days = [
-        r["day"]
-        for r in delta.select(
-            F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
-        )
-        .distinct()
-        .collect()
-    ]
+    changes = delta_read_changes(spark, base, since_version + 1, current)
+    day = F.date_trunc("day", F.col(ts_col)).cast("date")
+    seen = changes.select(
+        day.alias("day"),
+        F.col("_change_type").isin("delete", "update_preimage").alias("gone"),
+    ).distinct().collect()
+    days = sorted({r["day"] for r in seen})
     if not days:
         return current
-    lo, hi = min(days), max(days)
-    span = base.read_where(
+    lo, hi = days[0], days[-1]
+    span = delta_read(spark, base, where=[
         (ts_col, "between", (dt.datetime.combine(lo, dt.time.min),
                              dt.datetime.combine(hi + dt.timedelta(days=1), dt.time.min)))
-    )
-    touched = span.filter(
-        F.date_trunc("day", F.col(ts_col)).cast("date").isin(days)
-    )
-    # materialized once (bounded: one row per touched day): merge consumes
-    # the source TWICE — the distinct-key dir-pruning collect and the
-    # rewrite itself — and without this the span re-aggregates per
-    # consumer (r15, guide §2.4; the pareto per_cust pattern)
-    summary.merge(
-        _daily_agg(touched, ts_col, value_col).localCheckpoint(eager=False),
-        key="day",
-    )
+    ])
+    touched = span.filter(day.isin(days))
+    delta_merge(_daily_agg(touched, ts_col, value_col), summary, key="day")
+    if any(r["gone"] for r in seen):
+        left = {r["day"] for r in touched.select(day.alias("day")).distinct().collect()}
+        for d in sorted(set(days) - left):
+            delta_delete_where(spark, summary, ("day", "=", d))
     return current

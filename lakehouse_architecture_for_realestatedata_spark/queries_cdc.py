@@ -98,7 +98,7 @@ def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE change_type IS NOT NULL
     """,
     doc="Storage time travel + CDC end-to-end as a hard oracle row: write "
-    "snapshot v1 to a ParquetTable, overwrite with v2 (deletes keys "
+    "snapshot v1 to a Delta table, overwrite with v2 (deletes keys "
     "<= 1000, updates status on 2000-3000, inserts 5000-6000), then diff "
     "the TIME-TRAVELED v1 read against the current read with "
     "snapshot_diff. The oracle replays both states relationally and diffs "
@@ -113,7 +113,10 @@ def q_time_travel_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lakehouse_architecture_for_realestatedata_spark.operators.cdc import snapshot_diff
     from lakehouse_architecture_for_realestatedata_spark.queries import _t
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_read,
+        delta_write,
+    )
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -131,12 +134,13 @@ def q_time_travel_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         f"lakehouse_tt_cdc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
-    t = ParquetTable(spark, f"{root}/orders_tt")
-    t.overwrite(v1)
-    v1_version = t.version()
-    t.overwrite(v2)
-    old = t.read(version=v1_version)
-    return snapshot_diff(old, t.read(), keys=["o_orderkey"], nullable_keys=False)
+    path = f"{root}/orders_tt"
+    v1_version = delta_write(v1, path, mode="overwrite")
+    delta_write(v2, path, mode="overwrite")
+    old = delta_read(spark, path, version=v1_version)
+    return snapshot_diff(
+        old, delta_read(spark, path), keys=["o_orderkey"], nullable_keys=False
+    )
 
 
 @register(
@@ -145,19 +149,20 @@ def q_time_travel_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_orderstatus, o_totalprice
     FROM orders WHERE o_orderkey > 800 AND o_orderkey <= 1400
     """,
-    doc="Change-data-feed read as a hard oracle row: append batch 1 then "
-    "batch 2 to a ParquetTable and read_changes(since=v1) — the rows added "
-    "after snapshot v1 are exactly batch 2, recovered as a METADATA diff "
-    "of the two manifests (data dirs are immutable, append manifests "
-    "strictly additive), scanning O(changed data) never the table "
-    "(sources/tables.py:read_changes; Delta CDF analogue for the "
-    "append-only case).",
+    doc="Change-data-feed read as a hard oracle row: write batch 1 then "
+    "append batch 2 to a Delta table and read its change feed after v1 — "
+    "the rows inserted after version v1 are exactly batch 2, recovered "
+    "from the append commit's add actions, scanning O(changed data) never "
+    "the table (sources/delta_lite.py:delta_read_changes; Delta CDF).",
 )
 def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_read_changes,
+        delta_write,
+    )
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -168,11 +173,10 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         f"lakehouse_cdf_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
-    t = ParquetTable(spark, f"{root}/orders_cdf")
-    t.overwrite(b1)
-    v1 = t.version()
-    t.append(b2)
-    return t.read_changes(since=v1)
+    path = f"{root}/orders_cdf"
+    v1 = delta_write(b1, path, mode="overwrite")
+    delta_write(b2, path)
+    return delta_read_changes(spark, path, v1 + 1).select(*orders.columns)
 
 
 @register(
@@ -189,13 +193,16 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "it; the "
     "merged read null-fills the old rows — unionByName(allowMissing"
     "Columns) semantics at read time, no rewrite of existing data "
-    "(sources/tables.py:append; Delta mergeSchema analogue).",
+    "(sources/delta_lite.py:delta_write; Delta mergeSchema).",
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_read,
+        delta_write,
+    )
 
     orders = _t(spark, sf_dir, "orders")
     b1 = orders.filter(F.col("o_orderkey") <= 800).select("o_orderkey", "o_totalprice")
@@ -206,10 +213,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         f"lakehouse_schevo_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
-    t = ParquetTable(spark, f"{root}/orders_evo")
-    t.overwrite(b1)
-    t.append(b2, merge_schema=True)
-    return t.read().select("o_orderkey", "o_totalprice", "o_orderpriority")
+    path = f"{root}/orders_evo"
+    delta_write(b1, path, mode="overwrite")
+    delta_write(b2, path, merge_schema=True)
+    return delta_read(spark, path).select("o_orderkey", "o_totalprice", "o_orderpriority")
 
 
 @register(
@@ -283,10 +290,10 @@ def q_delta_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND NOT (o_custkey IN (3, 7, 11) OR o_totalprice > 400000)
     """,
     doc="Right-to-be-forgotten / retention delete as a hard oracle row "
-    "(sources/tables.py:delete_where): load orders into a versioned "
-    "table, DELETE a customer id-list (the GDPR erasure shape, Column "
-    "predicate) and then an out-of-range price slice via (col, op, value) "
-    "conditions — the zonemap-pruned path that rewrites only data dirs "
+    "(sources/delta_lite.py:delta_delete_where): load orders into a Delta "
+    "table, DELETE each customer of an id-list (the GDPR erasure shape) "
+    "and then an out-of-range price slice via (col, op, value) "
+    "conditions — the stats-pruned path that rewrites only data files "
     "whose min/max admit a match, O(expired slice) not O(table). The "
     "surviving read must equal the oracle's double-negated predicate.",
 )
@@ -294,7 +301,11 @@ def q_keyed_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_delete_where,
+        delta_read,
+        delta_write,
+    )
 
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1400).select(
         "o_orderkey",
@@ -305,11 +316,12 @@ def q_keyed_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         f"lakehouse_delete_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
-    t = ParquetTable(spark, f"{root}/orders_del")
-    t.overwrite(orders)
-    t.delete_where(F.col("o_custkey").isin(3, 7, 11))
-    t.delete_where(("o_totalprice", ">", 400000.0))
-    return t.read().select(
+    path = f"{root}/orders_del"
+    delta_write(orders, path, mode="overwrite")
+    for cust in (3, 7, 11):
+        delta_delete_where(spark, path, ("o_custkey", "=", cust))
+    delta_delete_where(spark, path, ("o_totalprice", ">", 400000.0))
+    return delta_read(spark, path).select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double").alias("o_totalprice")
     )
 

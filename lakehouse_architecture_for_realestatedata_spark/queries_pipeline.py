@@ -382,9 +382,9 @@ def q_csv_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT * FROM b2
     """,
     doc="S7/S9/J3 storage spine as a driver oracle row (VERDICT r3 #3): "
-    "materialize batch 1 of orders to a ParquetTable in TWO appends (split "
-    "at key 2000, so the merge's zonemap pruning carries the non-"
-    "overlapping dir by reference), MERGE batch 2 (updates for keys "
+    "materialize batch 1 of orders to a Delta table in TWO writes (split "
+    "at key 2000, so the merge's stats pruning carries the non-"
+    "overlapping file by reference), MERGE batch 2 (updates for keys "
     "2000-4000, inserts for 4000-8000) keyed on o_orderkey, and return the "
     "final table. The oracle replays the upsert relationally: batch-1 rows "
     "whose key has no batch-2 match, plus every batch-2 row — the "
@@ -396,7 +396,11 @@ def q_merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from lakehouse_architecture_for_realestatedata_spark.queries import _t
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_merge,
+        delta_read,
+        delta_write,
+    )
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
@@ -405,17 +409,17 @@ def q_merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = orders.filter(F.col("o_orderkey").between(2000, 8000)).withColumn(
         "o_orderstatus", F.lit("U")
     )
-    # deterministic per-SF scratch root; overwrite makes re-runs idempotent
-    # (ParquetTable auto-vacuums old versions, so the dir stays small)
+    # deterministic per-SF, per-process scratch root; the first write
+    # overwrites, so a re-run in the same process starts from batch 1
     root = os.path.join(
         tempfile.gettempdir(),
         f"lakehouse_merge_rt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
-    t = ParquetTable(spark, f"{root}/orders_t")
-    t.overwrite(b1.filter(F.col("o_orderkey") < 2000))
-    t.append(b1.filter(F.col("o_orderkey") >= 2000))
-    t.merge(b2, "o_orderkey")
-    return t.read()
+    path = f"{root}/orders_t"
+    delta_write(b1.filter(F.col("o_orderkey") < 2000), path, mode="overwrite")
+    delta_write(b1.filter(F.col("o_orderkey") >= 2000), path)
+    delta_merge(b2, path, "o_orderkey")
+    return delta_read(spark, path)
 
 
 @register(
@@ -440,7 +444,7 @@ def q_merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="dbt-style schema tests as a read-side report — unique / not_null / "
     "accepted_values per target column with violation counts (reference: "
     "dbt/models/staging/schema.yml tests: unique + not_null on "
-    "property_id; write-time twin: ParquetTable CHECK constraints). Each "
+    "property_id; write-time twin: delta_add_constraint CHECKs). Each "
     "check is one narrow aggregate; the unique check is a groupBy-HAVING "
     "on the key — the declarative dedup-audit shape. A pipeline gates "
     "promotion on violations == 0, exactly like dbt test.",
@@ -499,8 +503,9 @@ def q_dq_schema_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(plans/mviews.py:refresh_daily_summary): load events in two batches "
     "(split at Jan 16), full-build the daily summary after batch 1, then "
     "refresh INCREMENTALLY after batch 2 — the change feed names the "
-    "touched days (metadata diff), whole touched days re-aggregate from a "
-    "zonemap-pruned span scan, and the recomputed rows MERGE keyed on day. "
+    "touched days, whole touched days re-aggregate from a stats-pruned "
+    "span read, and the recomputed rows MERGE keyed on day (all three "
+    "tables are Delta tables). "
     "The oracle is the ONE-SHOT aggregate over all events: equality proves "
     "incremental ≡ full, count-distinct included (which an additive "
     "delta-merge could not maintain). Replaces the reference's rebuild-"
@@ -520,7 +525,10 @@ def q_incremental_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         cached_fixture,
         fixture_work_dir,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_read,
+        delta_write,
+    )
 
     ev = _events(spark, sf_dir).select("ts", "user_id", "value")
     cutoff = "2024-01-16"
@@ -534,24 +542,22 @@ def q_incremental_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench/pytest (ADVICE r13).
     cache = os.path.join(
         tempfile.gettempdir(),
-        f"lakehouse_mview_v3_{os.path.basename(sf_dir.rstrip('/'))}",
+        f"lakehouse_mview_v4_{os.path.basename(sf_dir.rstrip('/'))}",
     )
 
     def _build(b: str) -> str:
-        base0 = ParquetTable(spark, f"{b}/events_base")
-        summary0 = ParquetTable(spark, f"{b}/daily_summary")
-        base0.overwrite(ev.filter(F.col("ts") < cutoff))
-        return json.dumps({"v1": refresh_daily_summary(base0, summary0)})
+        delta_write(ev.filter(F.col("ts") < cutoff), f"{b}/events_base", mode="overwrite")
+        return json.dumps({"v1": refresh_daily_summary(
+            spark, f"{b}/events_base", f"{b}/daily_summary")})
 
     v1 = json.loads(cached_fixture(cache, _build))["v1"]
     work = fixture_work_dir(cache)
     shutil.copytree(f"{cache}/events_base", f"{work}/events_base")
     shutil.copytree(f"{cache}/daily_summary", f"{work}/daily_summary")
-    base = ParquetTable(spark, f"{work}/events_base")
-    summary = ParquetTable(spark, f"{work}/daily_summary")
-    base.append(ev.filter(F.col("ts") >= cutoff))
-    refresh_daily_summary(base, summary, since_version=v1)
-    return summary.read().select("day", "n_events", "n_users", "sum_value")
+    base, summary = f"{work}/events_base", f"{work}/daily_summary"
+    delta_write(ev.filter(F.col("ts") >= cutoff), base)
+    refresh_daily_summary(spark, base, summary, since_version=v1)
+    return delta_read(spark, summary).select("day", "n_events", "n_users", "sum_value")
 
 
 @register(

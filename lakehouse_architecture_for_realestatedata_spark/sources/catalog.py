@@ -1,4 +1,5 @@
-"""Persistent catalog (S12): name → table-root registry over ``ParquetTable``.
+"""Persistent catalog (S12): name → table-root registry over ``ParquetTable``,
+the medallion's table store (``sources/tables.py``).
 
 The reference registers every table in a Hive metastore so any SQL client can
 resolve ``bronze.properties`` by name — ``CREATE DATABASE IF NOT EXISTS``,
@@ -181,7 +182,6 @@ class Catalog:
                 for f in t.read().schema.fields
             ]
             out["files"] = t.file_stats()
-            out["constraints"] = t.constraints()
         return out
 
     # ------------------------------------------------------------- session

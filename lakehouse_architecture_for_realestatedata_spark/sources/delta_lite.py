@@ -5,10 +5,9 @@ PySpark/stdlib reader+writer for the open Delta protocol
 Why this module exists: the reference stores every table as Delta and its
 whole stack reads/writes that format (reference: spark/Dockerfile:16
 installs delta-spark; spark/spark-defaults.conf:15-16 sets the Delta
-catalog/extension). This sandbox has no Delta jars, so the engine's own
-tables use ``sources/tables.py`` (same semantics, custom manifest) — but a
-user migrating from the reference still owns DELTA-FORMATTED directories.
-``delta_lite`` closes that interop gap for the protocol's core: it reads
+catalog/extension). This sandbox has no Delta jars, so ``delta_lite``
+implements the protocol's core itself, and every engine table except the
+medallion's (``sources/tables.py``) is a Delta table written here: it reads
 tables whose ``_delta_log`` was written by any engine (version replay,
 checkpoints, partitioned layouts, time travel, stats-based data skipping
 via ``delta_read(where=...)``) and writes logs any Delta reader can
@@ -643,7 +642,7 @@ def _file_zonemaps(snap: _Snapshot, cols):
     """``(path, zonemap)`` of every active file over the LOGICAL ``cols``:
     partition columns from ``partitionValues`` (``[v, v]``), the rest from
     the add action's ``stats``. A column with neither is absent, so it
-    never prunes (``skipping.may_match``, shared with ``ParquetTable``)."""
+    never prunes (``skipping.may_match``, shared with ``sources/tables.py``)."""
     l2p = {
         lf.name: pf.name
         for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
@@ -1720,6 +1719,29 @@ def _attach_file_info(
     return df
 
 
+#: Hadoop glob metacharacters: Spark expands a read path holding one.
+_GLOB_CHARS = re.compile(r"([\\\[\]{}*?])")
+
+
+def _read_files(reader, paths: list[str]) -> DataFrame:
+    """``reader.parquet`` over on-disk data files the log names, each read
+    as exactly that file. Spark expands a path holding a Hadoop glob
+    character as a pattern, so ``a[1].parquet`` would silently read a
+    neighbouring ``a1.parquet``: those characters are backslash-escaped.
+    (The ``__globPaths__=false`` reader option is no fix: given several
+    paths, it lists every path once more per glob-named one.) A ':' in a
+    file name cannot be read at all, since Hadoop's checksum file system
+    fails to build its ``.crc`` path inside the task, so such a name is
+    refused here, before any job."""
+    bad = [p for p in paths if ":" in os.path.basename(p)]
+    if bad:
+        raise DeltaProtocolError(
+            f"data file {bad[0]!r}: a ':' in a file name is not readable "
+            "through Hadoop paths"
+        )
+    return reader.parquet(*[_GLOB_CHARS.sub(r"\\\1", p) for p in paths])
+
+
 def _relations(
     spark: SparkSession, path: str, snap: _Snapshot, files: dict[str, dict]
 ) -> list[DataFrame]:
@@ -1737,10 +1759,10 @@ def _relations(
     data_schema = StructType([f for f in phys.fields if f.name not in phys_parts])
     if not phys_parts:
         paths = [_abs_data_path(path, p) for p in files]
-        return [spark.read.schema(data_schema).parquet(*paths)]
+        return [_read_files(spark.read.schema(data_schema), paths)]
     if _hive_layout_consistent(snap, phys_parts, files):
         paths = [_abs_data_path(path, p) for p in files]
-        return [spark.read.schema(phys).option("basePath", path).parquet(*paths)]
+        return [_read_files(spark.read.schema(phys).option("basePath", path), paths)]
     types = {f.name: f.dataType for f in phys.fields}
     by_pv: dict[tuple, list[str]] = {}
     for p, add in files.items():
@@ -1749,7 +1771,7 @@ def _relations(
         by_pv.setdefault(key, []).append(_abs_data_path(path, p))
     out = []
     for key, group in sorted(by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        one = spark.read.schema(data_schema).parquet(*group)
+        one = _read_files(spark.read.schema(data_schema), group)
         for c, raw in zip(phys_parts, key):
             # protocol stores strings; null stays null
             one = one.withColumn(c, F.lit(raw).cast(types[c]))
@@ -1899,8 +1921,9 @@ def _scan(
                 for a in adds
             ],
         )
-    df = spark.read.schema(StructType(data_fields)).parquet(
-        *[_abs_data_path(path, p) for p in ordered]
+    df = _read_files(
+        spark.read.schema(StructType(data_fields)),
+        [_abs_data_path(path, p) for p in ordered],
     ).select(
         "*",
         F.col(_ROW_FILE).alias("__fb"), F.col(_ROW_INDEX).alias("__ri")
@@ -5161,7 +5184,7 @@ def delta_read_changes(
         cdcs = [a["cdc"] for a in actions if "cdc" in a]
         if cdcs:
             files = [_abs_data_path(path, c["path"]) for c in cdcs]
-            cdf = spark.read.parquet(*files)
+            cdf = _read_files(spark.read, files)
             snap_v = _replay(path, v)
             if snap_v.column_mapping != "none":
                 # cdc files store PHYSICAL names like data files do —
@@ -5684,23 +5707,3 @@ def delta_fsck(path: str, check_files: bool = True) -> list[str]:
                         "disagrees with replay — checksum/log divergence"
                     )
     return findings
-
-
-def export_table_to_delta(
-    table, path: str, partition_by: list[str] | None = None
-) -> int:
-    """Migrate a ``sources.tables.ParquetTable`` snapshot into a Delta-
-    formatted table (one overwrite commit of the current snapshot) — the
-    exit ramp for a user moving back to a Delta-native stack. Returns the
-    committed Delta version."""
-    return delta_write(
-        table.read(), path, mode="overwrite", partition_by=partition_by
-    )
-
-
-def import_delta_to_table(spark: SparkSession, path: str, table, version: int | None = None):
-    """Migrate a Delta table (any writer's) into a ``ParquetTable`` — the
-    entry ramp from the reference's Delta storage into this engine's
-    versioned tables. Overwrites the target with the chosen snapshot."""
-    table.overwrite(delta_read(spark, path, version=version))
-    return table

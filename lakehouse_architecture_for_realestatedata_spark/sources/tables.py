@@ -1,4 +1,6 @@
-"""Parquet-backed tables with Delta-like write semantics.
+"""The medallion's table store: parquet tables with Delta-like write
+semantics, used by ``plans/medallion.py`` and ``sources/catalog.py`` only.
+Every other engine table is a Delta table (``sources/delta_lite.py``).
 
 The reference stores every table as Delta (Parquet + transaction log) and
 leans on three write modes (SURVEY §2.1):
@@ -7,9 +9,9 @@ leans on three write modes (SURVEY §2.1):
   - S9 keyed MERGE upsert: whenMatchedUpdateAll / whenNotMatchedInsertAll
        (reference: scripts/normalize_bronze_columns.py:145-148)
 
-Delta jars are not in this image, so ``ParquetTable`` re-creates the
-*semantics* on plain parquet with a tiny manifest log — the same
-file-additive design as the Delta transaction log:
+``ParquetTable`` implements exactly those three on plain parquet with a
+tiny manifest log — the same file-additive design as the Delta
+transaction log:
 
     <root>/data/<uuid>/part-*.parquet   immutable data directory (one per write)
     <root>/v=<n>.manifest               JSON list of the data dirs in snapshot n
@@ -18,8 +20,7 @@ file-additive design as the Delta transaction log:
 A snapshot is a *list of references* to immutable data directories, so:
   - APPEND writes only the new rows into a fresh data dir and commits a
     manifest of [old dirs..., new dir] — O(new data) I/O, like Delta's
-    file-additive append, NOT a read-union-rewrite of the table (on a 100 TB
-    bronze table a daily 1 TB append must cost 1 TB, not 101 TB);
+    file-additive append, NOT a read-union-rewrite of the table;
   - prior snapshot files are reused byte-identical (never copied);
   - readers resolve ``_latest`` → manifest → scan exactly those dirs, which
     gives snapshot isolation (a writer never mutates a directory a reader may
@@ -30,9 +31,8 @@ A snapshot is a *list of references* to immutable data directories, so:
 
 One scan builder (``_scan``) defines the snapshot relation: each data dir's
 scan conformed to the manifest schema (columns it predates null-filled,
-types cast, manifest column order), unioned. ``read``, ``read_where``,
-``read_changes``, the MERGE / DELETE / UPDATE targets and ``compact`` take
-its DataFrame; ``view_sql`` renders the same relation as the SQL the
+types cast, manifest column order), unioned. ``read`` and the MERGE target
+take its DataFrame; ``view_sql`` renders the same relation as the SQL the
 ``Catalog`` binds its views to: each data dir bound once as an EXTERNAL
 table in the private database ``DIR_DB``, and a ``UNION ALL`` over those.
 So every reader of a snapshot sees the same columns whichever dirs pruning
@@ -42,8 +42,7 @@ No read infers a schema. A data dir is opened with the schema it was
 written with, which the Spark writer stores in each parquet footer and the
 driver reads without a Spark job (``_dir_schema``); its ``k=v`` partition
 columns take the manifest's types. ``append`` merges schemas from the
-manifest alone, and the reads of a freshly written dir (stats fallback,
-CHECK validation, clustered compaction) declare the written frame's
+manifest alone, and the stats fallback declares the written frame's
 schema. So building a relation, or binding a view, costs no Spark job
 whatever the number of dirs, and a ``string`` partition value such as
 ``007`` reads back as written.
@@ -52,37 +51,29 @@ Concurrency: optimistic, Delta-style. A commit CLAIMS its version by
 hard-linking the manifest into place — ``link(2)`` is create-exclusive, so
 exactly one writer wins ``v=n+1`` and every loser gets
 ``ConcurrentCommitError`` (the same protocol as Delta's
-put-if-absent ``n.json``). A won claim runs the auto-vacuum (``retain``
-versions). Blind writes rebase and retry automatically:
+put-if-absent ``n.json``). A won claim runs the auto-vacuum, which keeps
+the last ``_RETAIN`` versions. Blind writes rebase and retry automatically:
 append re-reads the winner's file list (its own data dir is already on
 disk, so the retry is a metadata-only recommit), overwrite just claims the
-next slot. Read-modify-write ops (merge / delete_where / compact) CANNOT
-silently rebase — their output was computed against a snapshot that is no
-longer latest — so they abort with ``ConcurrentCommitError`` for the caller
-to re-run, exactly Delta's ConcurrentAppendException contract. Readers are
-always safe (they only ever see fully-committed manifests).
+next slot. A merge CANNOT silently rebase — its output was computed
+against a snapshot that is no longer latest — so it aborts with
+``ConcurrentCommitError`` for the caller to re-run, exactly Delta's
+ConcurrentAppendException contract. Readers are always safe (they only
+ever see fully-committed manifests).
 
-Scale notes (100 TB):
+Scale notes:
   - MERGE is implemented as left_anti(target, source) ∪ source — one shuffle
     on the merge key, same join Delta itself plans for a full-table merge.
     Like Delta's file-pruned merge, the per-dir min/max stats in the
     manifest are used to REWRITE ONLY the data dirs whose key range
-    overlaps the source's: on a time-keyed 100 TB table an upsert of one
-    day's keys touches one day's files, not the table. ``delete_where``
-    with ``(col, op, value)`` conditions prunes the same way. The footer
-    stats, the zonemap test and the key-overlap pruning live in
-    ``sources/skipping.py``, shared with the Delta format
-    (``sources/delta_lite.py``); this module keeps only its manifest-side
-    rules (all-or-nothing dir zonemaps, the aggregate-job fallback).
+    overlaps the source's. The footer stats and the key-overlap pruning
+    live in ``sources/skipping.py``, shared with the Delta format; this
+    module keeps only its manifest-side rules (all-or-nothing dir
+    zonemaps, the aggregate-job fallback).
   - ``partition_by`` lays out data for partition pruning on read; the
     reference never partitions its tables (SURVEY §4 calls this out as perf
     left on the table) — we do.
-  - appends accumulate data dirs; ``file_stats`` → ``compact`` bin-packs
-    them back into one dir (Delta OPTIMIZE analogue).
-  - CHECK constraints (``add_constraint``) are enforced pre-commit on the
-    freshly-written dir only — O(new data), one fused aggregate — so a
-    100 TB table pays validation proportional to the write, like Delta's
-    invariant checks, not a full-table audit per write.
+  - appends accumulate data dirs; ``file_stats`` reports them.
 """
 
 from __future__ import annotations
@@ -102,6 +93,11 @@ from pyspark.sql.types import StringType, StructField, StructType
 from lakehouse_architecture_for_realestatedata_spark.sources import skipping
 
 _LATEST = "_latest"
+
+#: Versions the auto-vacuum keeps after each commit: the latest and the one
+#: before it, so a reader that resolved the previous pointer still finds
+#: its dirs.
+_RETAIN = 2
 
 #: The private database the ``Catalog`` binds data dirs in: one EXTERNAL
 #: table per data dir (see ``ParquetTable.view_sql``). Not a user namespace.
@@ -130,26 +126,10 @@ def _conformed(field, have: str | None) -> str:
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed the version this transaction targeted.
 
-    Raised by read-modify-write ops (merge, delete_where, compact) whose
-    computed output is stale — re-run them against the new snapshot. Blind
-    append/overwrite never surface this: they rebase and retry internally.
+    Raised by ``merge``, a read-modify-write whose computed output is
+    stale — re-run it against the new snapshot. Blind append/overwrite
+    never surface this: they rebase and retry internally.
     """
-
-
-class ConstraintViolationError(ValueError):
-    """A write would commit rows violating a table CHECK constraint.
-
-    Carries ``violations``: {constraint_name: n_violating_rows}. Nothing was
-    committed — the offending output dir is GC'd and the table still reads
-    the previous snapshot (Delta's InvariantViolationException contract).
-    """
-
-    def __init__(self, root: str, violations: dict[str, int]):
-        self.violations = violations
-        super().__init__(
-            f"write to {root} violates constraints {violations} — no rows "
-            "committed"
-        )
 
 
 class ParquetTable:
@@ -160,17 +140,10 @@ class ParquetTable:
         spark: SparkSession,
         root: str,
         partition_by: list[str] | None = None,
-        retain: int = 2,
     ):
-        """``retain``: versions kept by the auto-vacuum after each write —
-        the time-travel / ``history()`` / ``restore()`` reach (Delta's
-        ``logRetentionDuration``, counted in versions instead of hours).
-        Retention is metadata-cheap; data dirs shared across snapshots are
-        stored once, so raise it freely on audit-sensitive tables."""
         self.spark = spark
         self.root = root.rstrip("/")
         self.partition_by = partition_by or []
-        self.retain = max(1, retain)
 
     # ---------------------------------------------------------------- meta
     def exists(self) -> bool:
@@ -235,9 +208,8 @@ class ParquetTable:
         manifest; the next writer's _next_version skips past it. The schema
         rides in the manifest so an all-rows-deleted table still reads back
         empty with its columns intact; per-dir min/max column stats ride
-        alongside for data skipping (``read_where``). A won claim then
-        auto-vacuums to ``retain`` versions — the one place every write
-        does."""
+        alongside for merge pruning. A won claim then auto-vacuums to
+        ``_RETAIN`` versions — the one place every write does."""
         os.makedirs(self.root, exist_ok=True)
         tmp = os.path.join(self.root, f".manifest.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
@@ -264,7 +236,7 @@ class ParquetTable:
             with open(tmp, "w") as fh:
                 fh.write(str(version))
             os.replace(tmp, os.path.join(self.root, _LATEST))  # atomic swap
-        self._vacuum(self.retain)
+        self._vacuum(_RETAIN)
 
     # ---------------------------------------------------------------- read
     def _dir_schema(self, path: str, schema: StructType) -> StructType:
@@ -330,7 +302,7 @@ class ParquetTable:
         manifest schema (``_dir_selects``), unioned.
 
         So the relation's schema is the manifest's whichever dirs are
-        scanned: a ``read_where`` that prunes the dir holding a newer
+        scanned: a merge target that prunes the dir holding a newer
         column, a snapshot widened by an append that contributed zero data
         files, and a zero-row snapshot (a typed empty relation) all expose
         the same columns as a full read."""
@@ -390,68 +362,6 @@ class ParquetTable:
             if not gone_only or not os.path.isdir(os.path.join(self.root, rel)):
                 out.append(f"DROP TABLE IF EXISTS {DIR_DB}.{name}")
         return out
-
-    def read_where(self, *conds: tuple) -> DataFrame:
-        """Data-skipping scan (Delta zonemap analogue): each condition is a
-        ``(col, op, value)`` tuple with op in ``= < <= > >= between``
-        (between takes a ``(lo, hi)`` value), combined with AND.
-
-        Data dirs whose manifest min/max stats PROVE the conjunction empty
-        are dropped before Spark ever lists them — at 100 TB a
-        time-range query over an append-mostly table (each append covers a
-        narrow time slice) touches only the dirs that overlap it, on top of
-        the parquet row-group pruning that still applies inside survivors.
-        The same conditions are applied as real filters, so results are
-        identical to ``read().filter(...)`` — skipping is purely a scan
-        reduction. Conditions on columns without stats simply don't prune.
-        """
-        m = self._manifest(self.version())
-        df = self._scan(m, self._matching_dirs(m, conds))
-        return df.filter(skipping.conds_filter(conds))
-
-    def _matching_dirs(self, manifest: dict, conds) -> list[str]:
-        """Rel dirs the zonemaps CANNOT prove empty for the AND of ``conds``
-        — the dirs a scan (or a rewrite of matching rows) must touch."""
-        stats = manifest.get("stats", {})
-        return [
-            rel
-            for rel in manifest["dirs"]
-            if skipping.may_match(stats.get(rel, {}), conds)
-        ]
-
-    def read_changes(self, since: int, to: int | None = None) -> DataFrame:
-        """Incremental consumption (Delta Change Data Feed analogue for the
-        append-only case): the rows ADDED after snapshot ``since``, up to
-        snapshot ``to`` (default: latest). Because data dirs are immutable
-        and an APPEND manifest is strictly additive, the delta is exactly
-        the dirs in ``to``'s manifest that ``since``'s lacks — a metadata
-        diff; the scan reads O(changed data), never the table. This is how a
-        downstream silver/gold build consumes a 100 TB bronze table without
-        rescanning it: persist the version you last processed, then
-        ``read_changes(last_v)`` next run.
-
-        Only APPEND (and metadata-only RESTORE-to-superset) ranges are
-        incremental-safe: OPTIMIZE rewrites the same rows into new dirs and
-        MERGE/DELETE/UPDATE change old rows, so a dir-diff would misreport
-        them. Any such op in the range raises ``ValueError`` — the consumer
-        must fall back to a full re-read (Delta CDF without
-        ``delta.enableChangeDataFeed`` row tracking has the same limit).
-        A vacuumed-away ``since`` manifest raises ``FileNotFoundError`` —
-        raise ``retain`` on tables consumed incrementally.
-        """
-        hi = self.version() if to is None else to
-        if since > hi:
-            raise ValueError(f"since={since} is ahead of to={hi}")
-        for v in range(since + 1, hi + 1):
-            op = self._manifest(v).get("op", "WRITE")
-            if op != "APPEND":
-                raise ValueError(
-                    f"version {v} is {op}, not APPEND — dir-diff changes are "
-                    "only exact for append-only ranges; re-read the snapshot"
-                )
-        m = self._manifest(hi)
-        old = set(self._manifest(since)["dirs"])
-        return self._scan(m, [rel for rel in m["dirs"] if rel not in old])
 
     # --------------------------------------------------------------- write
     def _write_data(self, df: DataFrame) -> tuple[str | None, dict | None]:
@@ -519,102 +429,11 @@ class ParquetTable:
         row = df.agg(*skipping.minmax_aggs(cols)).collect()[0]
         return skipping.zonemap_of(row, cols)
 
-    # ---------------------------------------------------------- constraints
-    _CONSTRAINTS = "_constraints.json"
-
-    def constraints(self) -> dict[str, str]:
-        """{name: boolean SQL expression} CHECK constraints on this table."""
-        try:
-            with open(os.path.join(self.root, self._CONSTRAINTS)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
-
-    def add_constraint(self, name: str, expr: str) -> None:
-        """ALTER TABLE ... ADD CONSTRAINT ... CHECK analogue: ``expr`` is a
-        boolean SQL expression every row must satisfy (standard CHECK
-        semantics — a row passes when the expression is TRUE **or NULL**;
-        express NOT NULL as ``col IS NOT NULL``). Existing rows are validated
-        first — one fused aggregate scan, the same full-table cost Delta pays
-        on ADD CONSTRAINT — and the call raises ``ConstraintViolationError``
-        if any current row violates, leaving the constraint un-added.
-
-        Constraints live in a side file (``_constraints.json``), not in the
-        snapshot manifests: they govern future WRITERS, not any particular
-        snapshot, so time travel / RESTORE read old data without resurrecting
-        old rules. Single-writer DDL (no CAS) — constraint changes are rare,
-        coordinated operations, unlike data commits."""
-        if self.exists():
-            bad = self._violation_counts(self.read(), {name: expr})
-            if bad:
-                raise ConstraintViolationError(self.root, bad)
-        cons = self.constraints()
-        cons[name] = expr
-        tmp = os.path.join(self.root, f".constraints.{uuid.uuid4().hex}")
-        os.makedirs(self.root, exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump(cons, fh)
-        os.replace(tmp, os.path.join(self.root, self._CONSTRAINTS))
-
-    def drop_constraint(self, name: str) -> None:
-        cons = self.constraints()
-        cons.pop(name, None)
-        tmp = os.path.join(self.root, f".constraints.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(cons, fh)
-        os.replace(tmp, os.path.join(self.root, self._CONSTRAINTS))
-
-    def _violation_counts(
-        self, df: DataFrame, cons: dict[str, str]
-    ) -> dict[str, int]:
-        """{name: n_rows where expr is FALSE} in ONE fused aggregate pass
-        (NULL expression results pass, per SQL CHECK semantics). Missing
-        columns evaluate as NULL — a schema-merged append that omits a
-        constrained column passes, exactly like Delta null-filling it."""
-        from pyspark.errors import AnalysisException
-
-        aggs = []
-        for i, (cname, expr) in enumerate(cons.items()):
-            cond = ~F.expr(expr)
-            try:
-                df.select(cond)  # analysis probe, no job
-            except AnalysisException as e:
-                if "UNRESOLVED_COLUMN" in str(e):
-                    continue  # constrained column absent → NULL → row passes
-                raise
-            aggs.append((cname, F.sum(F.when(cond, 1).otherwise(0)).alias(f"__v{i}")))
-        if not aggs:
-            return {}
-        row = df.agg(*[a for _, a in aggs]).collect()[0]
-        return {
-            cname: int(row[i] or 0)
-            for i, (cname, _) in enumerate(aggs)
-            if int(row[i] or 0) > 0
-        }
-
-    def _validate_rel(self, rel: str | None, schema: StructType) -> None:
-        """Enforce CHECK constraints on a freshly-written data dir BEFORE it
-        is committed: O(written data) — only the new/rewritten rows are
-        re-read (columnar, footer-pruned to the constrained columns, as
-        ``schema``, the frame just written), never the rest of the table.
-        On violation the orphan dir is GC'd and ``ConstraintViolationError``
-        raised; the previous snapshot stays live."""
-        cons = self.constraints()
-        if not cons or rel is None:
-            return
-        bad = self._violation_counts(
-            self.spark.read.schema(schema).parquet(os.path.join(self.root, rel)), cons
-        )
-        if bad:
-            shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            raise ConstraintViolationError(self.root, bad)
-
     def overwrite(self, df: DataFrame) -> None:
         """S8: full replace, new schema wins (overwriteSchema semantics).
         A blind write: on commit conflict it just claims the next slot —
         the data dir is already on disk, so a retry is metadata-only."""
         rel, zonemap = self._write_data(df)
-        self._validate_rel(rel, df.schema)
         while True:
             try:
                 self._commit(
@@ -628,26 +447,15 @@ class ParquetTable:
             except ConcurrentCommitError:
                 continue
 
-    def append(self, df: DataFrame, merge_schema: bool = True) -> None:
+    def append(self, df: DataFrame) -> None:
         """S7: file-additive append — writes ONLY the new rows (O(new data)
         I/O); the new snapshot's manifest references every prior data dir
-        byte-identical. With ``merge_schema`` new columns null-fill old rows
-        at read time (Delta ``mergeSchema`` semantics); without it a schema
-        mismatch raises instead of silently widening. Both are decided
-        from the manifest schema: an append opens no existing data dir."""
+        byte-identical. New columns null-fill old rows at read time (Delta
+        ``mergeSchema`` semantics), decided from the manifest schema: an
+        append opens no existing data dir."""
         if not self.exists():
             return self.overwrite(df)
-        if not merge_schema:
-            m = self._manifest(self.version())
-            cur = {f.name: f.dataType for f in self._schema(m).fields}
-            new = {f.name: f.dataType for f in df.schema.fields}
-            if cur != new:
-                raise ValueError(
-                    f"append schema mismatch without merge_schema: table has "
-                    f"{sorted(cur)}, frame has {sorted(new)}"
-                )
         rel, zonemap = self._write_data(df)
-        self._validate_rel(rel, df.schema)
         new_stats = {rel: zonemap} if rel else {}
         while True:
             # Rebase onto whatever snapshot is newest RIGHT NOW: carry its
@@ -659,8 +467,6 @@ class ParquetTable:
                 self.spark.createDataFrame([], self._schema(m))
                 .unionByName(df, allowMissingColumns=True)
                 .schema.json()
-                if merge_schema
-                else df.schema.json()
             )
             try:
                 self._commit(
@@ -674,15 +480,8 @@ class ParquetTable:
             except ConcurrentCommitError:
                 continue
 
-    def merge(
-        self,
-        source: DataFrame,
-        key: str | list[str],
-        when_matched: str = "update_all",
-    ) -> None:
-        """S9: keyed upsert — update-all matched rows, insert-all new rows
-        (``when_matched="keep_target"``: insert-only, matched rows keep the
-        target's values).
+    def merge(self, source: DataFrame, key: str | list[str]) -> None:
+        """S9: keyed upsert — update-all matched rows, insert-all new rows.
 
         Requires the source to be unique per key (the reference pre-dedups
         with a row_number window before every merge — enforce upstream with
@@ -695,9 +494,7 @@ class ParquetTable:
         source key are carried into the new snapshot BY REFERENCE — only
         overlapping dirs are read, anti-joined, and rewritten. A target row
         matching a source key necessarily lives in an overlapping dir, so
-        the join over just those dirs is exact (for insert-only mode too:
-        the source-vs-target anti-join only needs the dirs that could hold a
-        matching key). An upsert of one day's keys into a date-keyed 100 TB
+        the join over just those dirs is exact. An upsert of one day's keys into a date-keyed 100 TB
         table rewrites one day's files. The committed schema is the
         manifest's (the target scan carries every column, untouched dirs'
         included) plus any new source columns.
@@ -711,69 +508,9 @@ class ParquetTable:
         touched = skipping.overlapping_units(
             ((rel, stats.get(rel, {})) for rel in m["dirs"]), keys, source
         )
-        target = self._scan(m, touched)
-        if when_matched == "update_all":
-            target = target.join(source.select(*keys), on=keys, how="left_anti")
-        elif when_matched == "keep_target":  # insert-only merge
-            source = source.join(target.select(*keys), on=keys, how="left_anti")
-        else:
-            raise ValueError(f"unknown when_matched={when_matched!r}")
+        target = self._scan(m, touched).join(source.select(*keys), on=keys, how="left_anti")
         out = target.unionByName(source, allowMissingColumns=True)
-        self._commit_rewrite(
-            base, m, touched, out, "MERGE", out.schema.json(), validate=True
-        )
-
-    def _rewrite_scope(
-        self, manifest: dict, predicate: Column | tuple, more: tuple
-    ) -> tuple[list[str], Column]:
-        """The dirs a DELETE / UPDATE rewrites and its row condition: every
-        dir for a Column predicate; for ``(col, op, value)`` tuples only the
-        dirs the zonemaps cannot prove untouched."""
-        if isinstance(predicate, Column):
-            return list(manifest["dirs"]), predicate
-        conds = [predicate, *more]
-        return self._matching_dirs(manifest, conds), skipping.conds_filter(conds)
-
-    def delete_where(self, predicate: Column | tuple, *more: tuple) -> None:
-        """Delete matching rows (Delta DELETE analogue). With a Column
-        predicate every data dir is rewritten; with ``(col, op, value)``
-        condition tuples (AND-combined, ``read_where`` grammar) the manifest
-        zonemaps prove most dirs untouched and only dirs that may hold a
-        matching row are rewritten — a retention delete on a time-keyed
-        table costs O(expired slice), not O(table)."""
-        base = self._next_version() - 1
-        m = self._manifest(base)
-        touched, cond = self._rewrite_scope(m, predicate, more)
-        if not touched:
-            return  # zonemaps prove no row matches: nothing to do
-        survivors = self._scan(m, touched).filter(~cond)
-        self._commit_rewrite(base, m, touched, survivors, "DELETE")
-
-    def update_where(
-        self,
-        assignments: dict[str, Column],
-        predicate: Column | tuple,
-        *more: tuple,
-    ) -> None:
-        """Delta UPDATE analogue: set ``assignments`` on rows matching the
-        predicate. Same pruning contract as ``delete_where``: a Column
-        predicate rewrites every dir; ``(col, op, value)`` tuples rewrite
-        only dirs the zonemaps cannot prove untouched. Assignments must
-        target existing columns and preserve their types (untouched dirs
-        keep the old schema, so a type change would fork the table schema)."""
-        base = self._next_version() - 1
-        m = self._manifest(base)
-        known = {f.name for f in self._schema(m).fields}
-        bad = set(assignments) - known
-        if bad:
-            raise ValueError(f"update_where: unknown columns {sorted(bad)}")
-        touched, cond = self._rewrite_scope(m, predicate, more)
-        if not touched:
-            return
-        out = self._scan(m, touched)
-        for name, expr in assignments.items():
-            out = out.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))
-        self._commit_rewrite(base, m, touched, out, "UPDATE", validate=True)
+        self._commit_rewrite(base, m, touched, out, "MERGE", out.schema.json())
 
     def _commit_rewrite(
         self,
@@ -782,23 +519,16 @@ class ParquetTable:
         touched: list[str],
         rewritten: DataFrame,
         op: str,
-        schema_json: str | None = None,
-        validate: bool = False,
+        schema_json: str,
     ) -> None:
         """Commit ``rewritten`` — computed from the ``touched`` dirs of
-        snapshot ``base`` — as ``base + 1``: write it as one new dir, carry
-        every other dir (and its stats) by reference. A rewrite of every dir
-        (``compact``, a Column-predicate DELETE / UPDATE) carries none.
-        ``schema_json`` defaults to the manifest's. Read-modify-write cannot
-        rebase: if another writer claimed ``base + 1`` the output is stale,
-        so its dir is GC'd and ConcurrentCommitError raised (Delta's
-        ConcurrentAppendException analogue) instead of silently dropping
-        the other writer's rows. ``validate`` enforces CHECK constraints on
-        the rewritten dir (MERGE / UPDATE — ops whose output contains NEW
-        values; DELETE / OPTIMIZE re-emit rows that already passed)."""
+        snapshot ``base`` — as ``base + 1`` with schema ``schema_json``:
+        write it as one new dir, carry every other dir (and its stats) by
+        reference. Read-modify-write cannot rebase: if another writer
+        claimed ``base + 1`` the output is stale, so its dir is GC'd and
+        ConcurrentCommitError raised (Delta's ConcurrentAppendException
+        analogue) instead of silently dropping the other writer's rows."""
         rel, zonemap = self._write_data(rewritten)
-        if validate:
-            self._validate_rel(rel, rewritten.schema)
         dropped = set(touched)
         untouched = [r for r in manifest["dirs"] if r not in dropped]
         old_stats = manifest.get("stats", {})
@@ -809,7 +539,7 @@ class ParquetTable:
             self._commit(
                 base + 1,
                 untouched + ([rel] if rel else []),
-                schema_json or manifest["schema"],
+                schema_json,
                 stats,
                 op=op,
             )
@@ -824,8 +554,7 @@ class ParquetTable:
         small-file ratio. At 100 TB the failure mode this guards is the
         many-tiny-files table (per-file open/footer cost dominates the scan
         and the driver chokes on listing); file-additive appends drift there
-        naturally, so ``file_stats`` → ``compact`` is the maintenance loop —
-        the analogue of Delta OPTIMIZE's bin-packing."""
+        naturally."""
         v = self.version()
         sizes: list[int] = []
         for d in self.data_dirs(v):
@@ -842,139 +571,6 @@ class ParquetTable:
             "avg_bytes": total // len(sizes) if sizes else 0,
             "max_bytes": max(sizes) if sizes else 0,
         }
-
-    def compact(
-        self,
-        target_bytes: int = 128 << 20,
-        cluster_cols: list[str] | None = None,
-        zorder: bool = False,
-        n_dirs: int | None = None,
-    ) -> dict:
-        """Bin-pack the current snapshot (Delta OPTIMIZE analogue) — also
-        re-merges the data-dir list that appends grow. Snapshot isolation
-        makes this safe online: the rewrite lands in new data dirs and
-        readers flip on commit.
-
-        Without ``cluster_cols``: one output dir, ~``target_bytes`` files
-        (partitioned tables repartition on the partition columns).
-
-        With ``cluster_cols`` (OPTIMIZE ZORDER analogue): ONE range-shuffle
-        on the cluster key (interleaved-bit z-value when ``zorder`` and
-        multiple columns — see ``plans.layout``) writes each range bucket as
-        its OWN data dir, so the manifest zonemaps stay tight and
-        ``read_where`` keeps pruning AFTER compaction — a plain compaction
-        into one dir would collapse every range into a single un-prunable
-        zonemap. Per-dir stats come from one extra pass over the written
-        output (grouped by bucket), not a job per dir. ``n_dirs`` overrides
-        the size-derived bucket count: the dir is the pruning unit, so at
-        real scale size dirs in the GBs and let the writer handle file
-        sizing inside each.
-
-        Returns post-compaction ``file_stats``.
-        """
-        stats = self.file_stats()
-        base = self._next_version() - 1
-        m = self._manifest(base)
-        n = max(1, -(-stats["total_bytes"] // target_bytes))  # ceil
-        if not cluster_cols:
-            df = self._scan(m).repartition(n, *self.partition_by)
-            # Abort-on-conflict: a concurrent append between our read and
-            # commit would otherwise be silently dropped by the rewrite.
-            self._commit_rewrite(base, m, m["dirs"], df, "OPTIMIZE")
-            return self.file_stats()
-
-        from lakehouse_architecture_for_realestatedata_spark.plans.layout import cluster_by
-
-        n = n_dirs or n
-        df = cluster_by(self._scan(m), cluster_cols, n_partitions=n, zorder=zorder)
-        # Tag each range bucket with its partition id and let ONE distributed
-        # write fan the buckets into hive subdirs; each subdir is then
-        # promoted (a driver-side rename) to a first-class data dir.
-        staging_rel = os.path.join("data", f".zstage.{uuid.uuid4().hex}")
-        staging = os.path.join(self.root, staging_rel)
-        staged = df.withColumn("__zb", F.spark_partition_id())
-        writer = staged.write.mode("overwrite")
-        writer = writer.partitionBy("__zb", *self.partition_by)
-        writer.parquet(staging)
-
-        # One pass over the written output for all per-bucket zonemaps.
-        written = self.spark.read.schema(staged.schema).parquet(staging)
-        cols = skipping.stats_cols(written.drop("__zb").schema)
-        by_bucket: dict[int, dict] = {}
-        if cols:
-            rows = written.groupBy("__zb").agg(*skipping.minmax_aggs(cols)).collect()
-            by_bucket = {r["__zb"]: skipping.zonemap_of(r, cols) for r in rows}
-
-        rels: list[str] = []
-        dir_stats: dict[str, dict] = {}
-        for entry in sorted(os.listdir(staging)):
-            if not entry.startswith("__zb="):
-                continue
-            bucket = int(entry.split("=", 1)[1])
-            rel = os.path.join("data", uuid.uuid4().hex)
-            os.rename(os.path.join(staging, entry), os.path.join(self.root, rel))
-            rels.append(rel)
-            dir_stats[rel] = by_bucket.get(bucket, {})
-        shutil.rmtree(staging, ignore_errors=True)
-        try:
-            self._commit(base + 1, rels, m["schema"], dir_stats, op="OPTIMIZE")
-        except ConcurrentCommitError:
-            for rel in rels:
-                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            raise
-        return self.file_stats()
-
-    def history(self) -> list[dict]:
-        """Audit log of the RETAINED versions (DESCRIBE HISTORY analogue):
-        one row per manifest still on disk — version, operation, data-dir
-        count, and commit wall-time (manifest file mtime). ``_vacuum``'s
-        retention window bounds how far back this (and ``restore``) reaches,
-        exactly like Delta's ``delta.logRetentionDuration``."""
-        out = []
-        if not os.path.isdir(self.root):
-            return out
-        for entry in sorted(os.listdir(self.root)):
-            if not entry.startswith("v=") or not entry.endswith(".manifest"):
-                continue
-            v = int(entry[len("v=") : -len(".manifest")])
-            m = self._manifest(v)
-            out.append(
-                {
-                    "version": v,
-                    "op": m.get("op", "WRITE"),
-                    "n_data_dirs": len(m["dirs"]),
-                    "committed_at": os.path.getmtime(
-                        os.path.join(self.root, entry)
-                    ),
-                }
-            )
-        return sorted(out, key=lambda r: r["version"])
-
-    def restore(self, version: int) -> None:
-        """RESTORE TABLE ... TO VERSION AS OF analogue: re-commit an old
-        retained snapshot's exact dir list as the NEW latest version —
-        metadata-only (no data copied; the old dirs are immutable and still
-        referenced, so vacuum keeps them alive)."""
-        m = self._manifest(version)  # FileNotFoundError if vacuumed away
-        while True:
-            try:
-                self._commit(
-                    self._next_version(),
-                    m["dirs"],
-                    m["schema"],
-                    m.get("stats", {}),
-                    op="RESTORE",
-                )
-                return
-            except ConcurrentCommitError:
-                continue
-
-    def vacuum(self, keep: int | None = None) -> None:
-        """Explicit VACUUM: shrink retention to ``keep`` versions right now
-        (default: the table's ``retain`` setting). Auto-vacuum already runs
-        after every write; call this to reclaim history early — e.g. after
-        a RESTORE you do not want to be able to re-undo."""
-        self._vacuum(self.retain if keep is None else max(1, keep))
 
     def _vacuum(self, keep: int) -> None:
         """Drop manifests older than the last ``keep`` versions and the data

@@ -22,7 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+    delta_merge,
+    delta_read,
+    delta_versions,
+    delta_write,
+)
 
 
 def read_file_stream(
@@ -211,19 +216,20 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> St
 
 def stream_merge_into(
     stream: DataFrame,
-    table: ParquetTable,
+    path: str,
     key: str | list[str],
     checkpoint: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> StreamingQuery:
     """Exactly-once streaming upsert: foreachBatch + MERGE (the reference's
-    S9 Delta merge, driven by the stream instead of Airflow). Each micro-batch
+    S9 Delta merge, driven by the stream instead of Airflow) into the Delta
+    table at ``path`` (``delta_merge``). Each micro-batch
     is deduped upstream by the caller's transform if needed; the checkpoint
     makes replayed batches idempotent because MERGE is idempotent per key."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = transform(batch_df) if transform else batch_df
-        table.merge(out, key=key)
+        delta_merge(out, path, key=key)
 
     q = (
         stream.writeStream.foreachBatch(_sink)
@@ -463,16 +469,17 @@ def stream_event_transitions(
 
 def stream_refresh_daily_summary(
     stream: DataFrame,
-    base: "ParquetTable",
-    summary: "ParquetTable",
+    base: str,
+    summary: str,
     checkpoint: str,
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> StreamingQuery:
     """Streaming ingestion driving an incremental materialized view: each
-    micro-batch appends to the versioned ``base`` table, then
+    micro-batch appends to the Delta table ``base``, then
     ``refresh_daily_summary`` recomputes exactly the days the batch touched
-    (change-feed day discovery + zonemap-pruned span scan + keyed MERGE).
+    in the Delta table ``summary`` (change-feed day discovery +
+    stats-pruned span read + keyed MERGE).
     The checkpoint makes replays idempotent at the SUMMARY level too: a
     replayed batch's days recompute from base to the same values, and the
     duplicate base append is the same at-least-once contract as
@@ -487,10 +494,12 @@ def stream_refresh_daily_summary(
     )
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        since = base.version() if base.exists() and summary.exists() else None
-        base.append(batch_df)
+        done = delta_versions(base)
+        since = done[-1] if done and delta_versions(summary) else None
+        delta_write(batch_df, base, mode="append")
         refresh_daily_summary(
-            base, summary, ts_col=ts_col, value_col=value_col, since_version=since
+            batch_df.sparkSession, base, summary, ts_col=ts_col, value_col=value_col,
+            since_version=since,
         )
 
     q = (
@@ -763,7 +772,7 @@ def stream_heavy_hitters(
 
 def stream_cms_rollup(
     stream: DataFrame,
-    sketch_table: "ParquetTable",
+    path: str,
     checkpoint: str,
     key_col: str = "user_id",
     group_col: str = "week",
@@ -772,8 +781,8 @@ def stream_cms_rollup(
 ) -> StreamingQuery:
     """Streaming maintenance of a mergeable Count-Min sketch table: each
     micro-batch builds its own CMS cells (one partial-aggregated pass over
-    the batch) and MERGEs them into the persisted per-group sketch by
-    ADDING counters cell-wise — the additivity that makes CMS (like the
+    the batch) and MERGEs them into the per-group sketch, a Delta table at
+    ``path``, by ADDING counters cell-wise — the additivity that makes CMS (like the
     HLL rollups) a streaming-native summary: per-batch work is O(batch +
     touched cells), the table stays depth×width×#groups rows forever, and
     the final sketch equals the batch-built sketch over the full history
@@ -789,16 +798,16 @@ def stream_cms_rollup(
         batch_sketch = cms_build(
             batch_df, key_col, depth=depth, width=width, group_cols=[group_col]
         )
-        if not sketch_table.exists():
-            sketch_table.overwrite(batch_sketch)
+        if not delta_versions(path):
+            delta_write(batch_sketch, path, mode="overwrite")
             return
-        cur = sketch_table.read()
+        cur = delta_read(batch_df.sparkSession, path)
         merged = (
             cur.unionByName(batch_sketch)
             .groupBy(group_col, "i", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        sketch_table.overwrite(merged)
+        delta_write(merged, path, mode="overwrite")
 
     q = (
         stream.writeStream.foreachBatch(_sink)
@@ -812,7 +821,7 @@ def stream_cms_rollup(
 
 def stream_qsketch_rollup(
     stream: DataFrame,
-    sketch_table: "ParquetTable",
+    path: str,
     checkpoint: str,
     value_col: str = "value",
     group_col: str = "week",
@@ -822,9 +831,9 @@ def stream_qsketch_rollup(
 ) -> StreamingQuery:
     """Streaming maintenance of the mergeable quantile sketch
     (functions/sketches.py:qsketch_build): each micro-batch bins its own
-    values (one partial-aggregated pass) and MERGEs into the persisted
-    per-group sketch by ADDING bin counts — the same additive contract as
-    stream_cms_rollup, completing the streaming-native sketch family
+    values (one partial-aggregated pass) and MERGEs into the per-group
+    sketch, a Delta table at ``path``, by ADDING bin counts — the same
+    additive contract as stream_cms_rollup, completing the streaming-native sketch family
     (HLL distinct / CMS frequency / quantile distribution). The table
     stays <= nbins x #groups rows forever; the final sketch equals the
     batch-built sketch over the full history (pinned in
@@ -839,16 +848,16 @@ def stream_qsketch_rollup(
         batch_sketch = qsketch_build(
             batch_df, value_col, lo=lo, width=width, nbins=nbins, group_cols=[group_col]
         )
-        if not sketch_table.exists():
-            sketch_table.overwrite(batch_sketch)
+        if not delta_versions(path):
+            delta_write(batch_sketch, path, mode="overwrite")
             return
-        cur = sketch_table.read()
+        cur = delta_read(batch_df.sparkSession, path)
         merged = (
             cur.unionByName(batch_sketch)
             .groupBy(group_col, "bin")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        sketch_table.overwrite(merged)
+        delta_write(merged, path, mode="overwrite")
 
     q = (
         stream.writeStream.foreachBatch(_sink)
@@ -911,10 +920,6 @@ def stream_delta_append(
     BEFORE the checkpoint write replays as a duplicate append (Delta's own
     sink closes this with txn app-ids; honest gap, documented — route
     exactly-once needs through ``stream_merge_into``)."""
-    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
-        delta_write,
-    )
-
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = transform(batch_df) if transform else batch_df
         delta_write(out, path, mode="append", partition_by=partition_by)

@@ -127,7 +127,6 @@ def _spark_jobs(spark, fn):
 
 def _three_dir_table(spark, cat, db, name):
     t = cat.create_table(db, name, partition_by=["g"])
-    t.retain = 5  # keeps v0 for read_changes(0)
     t.overwrite(spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "id int, g int, val string"))
     t.append(spark.createDataFrame([(3, 1, "c")], "id int, g int, val string"))
     t.append(spark.createDataFrame([(4, 2, "d", 1.0)], "id int, g int, val string, x double"))
@@ -137,12 +136,12 @@ def _three_dir_table(spark, cat, db, name):
 
 def test_building_snapshot_relations_runs_no_spark_job(spark, tmp_path):
     """Every data dir is opened with its declared schema: building
-    ``read()``, ``read_where`` and ``read_changes`` over a 3-dir table, and
+    ``read()`` of the latest and of the previous snapshot over a 3-dir table, and
     binding its view, run no Spark job, and a query through the view runs
     as many jobs as the same query on ``read()``."""
     cat = Catalog(spark, str(tmp_path / "cat_nojobs"))
     t = _three_dir_table(spark, cat, "silver", "nojobs")
-    for build in (t.read, lambda: t.read_where(("id", ">=", 2)), lambda: t.read_changes(0)):
+    for build in (t.read, lambda: t.read(t.version() - 1)):
         _df, n = _spark_jobs(spark, build)
         assert n == 0
     _none, n = _spark_jobs(spark, lambda: cat.refresh("silver", "nojobs"))
@@ -165,7 +164,7 @@ def test_string_partition_values_read_back_exactly(spark, tmp_path):
     cat.refresh("gold", "codes")
     want = [(1, "007"), (2, "1e3")]
     assert sorted(map(tuple, t.read().collect())) == want
-    assert [tuple(r) for r in t.read_where(("code", "=", "007")).collect()] == [(1, "007")]
+    assert [tuple(r) for r in t.read().filter("code = '007'").collect()] == [(1, "007")]
     view = spark.table("gold.codes")
     assert view.dtypes == [("id", "int"), ("code", "string")]
     assert sorted(map(tuple, view.collect())) == want
@@ -203,7 +202,7 @@ def test_dir_tables_follow_vacuum_and_drop(spark, tmp_path):
     import os
 
     cat = Catalog(spark, str(tmp_path / "cat_life"))
-    t = cat.create_table("gold", "life")  # the default retain=2
+    t = cat.create_table("gold", "life")  # the auto-vacuum keeps 2 versions
     t.overwrite(spark.createDataFrame([(0, "v0")], "id int, val string"))
     cat.refresh("gold", "life")
     for i in range(1, 7):

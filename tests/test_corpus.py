@@ -151,7 +151,7 @@ def test_incremental_equals_oneshot_on_id_ordered_batches(spark, docs, tmp_path)
     keep exactly the same document set as one-shot prepare_corpus on the
     union — the invariant that makes the daily-drop pipeline trustworthy."""
     from lakehouse_architecture_for_realestatedata_spark.plans.corpus import prepare_corpus_incremental
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import delta_read
 
     state = str(tmp_path / "state")
     b1 = docs.filter(F.col("doc_id") < 100)
@@ -166,7 +166,7 @@ def test_incremental_equals_oneshot_on_id_ordered_batches(spark, docs, tmp_path)
     )
     assert got_new == want
     # the persisted prepared table agrees with the returned increments
-    table = ParquetTable(spark, f"{state}/prepared").read()
+    table = delta_read(spark, f"{state}/prepared")
     assert sorted(r["doc_id"] for r in table.collect()) == want
     # split assignment identical to one-shot (pure function of id+salt)
     ws = {(r["doc_id"], r["split"]) for r in oneshot.collect()}
@@ -249,7 +249,7 @@ def test_incremental_recovers_from_partial_commit(spark, docs, tmp_path):
         _marker_path,
         prepare_corpus_incremental,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import delta_read
 
     b1 = docs.filter(F.col("doc_id") < 100)
     b2 = docs.filter(F.col("doc_id") >= 100)
@@ -258,7 +258,7 @@ def test_incremental_recovers_from_partial_commit(spark, docs, tmp_path):
     prepare_corpus_incremental(spark, b1, clean, CFG)
     prepare_corpus_incremental(spark, b2, clean, CFG)
     want = sorted(
-        r["doc_id"] for r in ParquetTable(spark, f"{clean}/prepared").read().collect()
+        r["doc_id"] for r in delta_read(spark, f"{clean}/prepared").collect()
     )
 
     for fail_point in ("buckets", "index"):
@@ -272,12 +272,12 @@ def test_incremental_recovers_from_partial_commit(spark, docs, tmp_path):
         assert not os.path.exists(_marker_path(state))
         got = sorted(
             r["doc_id"]
-            for r in ParquetTable(spark, f"{state}/prepared").read().collect()
+            for r in delta_read(spark, f"{state}/prepared").collect()
         )
         assert got == want, fail_point
         # index and prepared agree doc-for-doc (the ADVICE invariant)
         idx = sorted(
-            r["doc_id"] for r in ParquetTable(spark, f"{state}/index").read().collect()
+            r["doc_id"] for r in delta_read(spark, f"{state}/index").collect()
         )
         assert idx == want, fail_point
 

@@ -226,15 +226,12 @@ def test_remove_action_drops_files(spark, tmp_path):
     assert latest_ids == {2}
 
 
-def test_vacuum_and_migration_bridges(spark, tmp_path):
+def test_vacuum_deletes_only_unreferenced_files(spark, tmp_path):
     """VACUUM deletes only unreferenced files (orphans from crashed
-    writers); the ParquetTable bridges roundtrip a snapshot both ways."""
+    writers)."""
     from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
         delta_vacuum,
-        export_table_to_delta,
-        import_delta_to_table,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
 
     t = str(tmp_path / "v")
     delta_write(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), t)
@@ -248,13 +245,6 @@ def test_vacuum_and_migration_bridges(spark, tmp_path):
     delta_write(_df(spark, [(3, "c", 3.0)]), t, mode="overwrite")
     assert delta_vacuum(spark, t) == []
     assert sorted(r["id"] for r in delta_read(spark, t, version=0).collect()) == [1, 2]
-
-    pt = ParquetTable(spark, str(tmp_path / "pt"))
-    import_delta_to_table(spark, t, pt)
-    assert sorted(r["id"] for r in pt.read().collect()) == [3]
-    out = str(tmp_path / "exported")
-    export_table_to_delta(pt, out)
-    assert sorted(r["id"] for r in delta_read(spark, out).collect()) == [3]
 
 
 def test_concurrent_appends_all_commit(spark, tmp_path):
@@ -5351,3 +5341,36 @@ def test_single_file_optimize_keeps_each_file_contiguous(spark, tmp_path):
     (rel,) = dl._replay(t, None).files
     ids = pq.read_table(os.path.join(t, rel)).column("id").to_pylist()
     assert ids == list(range(100, 500)) + [1000] + list(range(1002, 1050)) + list(range(5))
+
+
+def test_data_file_names_are_read_literally(spark, tmp_path):
+    """A log path holding a glob character names one file, not a pattern:
+    ``a[1].parquet`` reads its own rows, not those of a neighbouring
+    ``a1.parquet`` that no commit adds, on the plain read, a filtered read
+    and a deletion-vector DELETE (the row-addressed scan). A ':' in a file
+    name is refused before any job, naming the file."""
+    import lakehouse_architecture_for_realestatedata_spark.sources.delta_lite as dl
+
+    t = str(tmp_path / "glob")
+    dl.delta_write(spark.range(0, 3).coalesce(1), t)
+    (rel,) = dl._replay(t, None).files
+    spark.range(100, 107).coalesce(1).write.parquet(str(tmp_path / "decoy"))
+    (decoy,) = [f for f in os.listdir(tmp_path / "decoy") if f.endswith(".parquet")]
+    os.rename(tmp_path / "decoy" / decoy, os.path.join(t, "a1.parquet"))
+    _relocate(t, rel, "a[1].parquet", logged=dl._encode_path("a[1].parquet"))
+
+    def ids(**kw):
+        return sorted(r["id"] for r in dl.delta_read(spark, t, **kw).collect())
+
+    assert ids() == [0, 1, 2]
+    assert ids(where=[("id", ">=", 1)]) == [1, 2]
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "=", 1))
+    assert ids() == [0, 2]
+
+    c = str(tmp_path / "colon")
+    dl.delta_write(spark.range(0, 3).coalesce(1), c)
+    (rel,) = dl._replay(c, None).files
+    _relocate(c, rel, "c:d.parquet")
+    with pytest.raises(DeltaProtocolError, match=r"c:d\.parquet"):
+        dl.delta_read(spark, c)

@@ -4,7 +4,10 @@
 ``sources/delta_source.py`` (Delta tables) share their data-skipping code
 through ``sources/skipping.py`` only. Neither side may import the other,
 at module level or inside a function, so private helpers cannot couple
-them again.
+them again. ``ParquetTable`` is the medallion's store: inside the package,
+only ``plans/medallion.py``, ``sources/catalog.py`` and
+``sources/__init__.py`` import ``sources.tables``; every other table is a
+Delta table.
 
 Within the Delta side, every commit goes through one log writer and every
 row address is spelled once: the ``engineInfo`` stamp, the
@@ -73,6 +76,56 @@ def test_boundary_check_sees_function_local_and_relative_imports(tmp_path):
         f"from {PKG}.sources import skipping\n"
     )
     assert _imported_sources_modules(src) == {"tables", "delta_lite", "skipping"}
+
+
+PARQUET_TABLE_USERS = {"plans/medallion.py", "sources/catalog.py", "sources/__init__.py"}
+
+
+def _imports_tables(path: Path, top: Path = SOURCES.parent.parent) -> bool:
+    """Does a package file import ``sources.tables``, however spelled?
+    Relative imports resolve against the file's own package, named by its
+    directories below ``top``."""
+    pkg = ".".join(path.relative_to(top).parent.parts)
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                up = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+                base = ".".join(up + ([base] if base else []))
+            mods = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        if any(m == f"{PKG}.sources.tables" or m.startswith(f"{PKG}.sources.tables.")
+               for m in mods):
+            return True
+    return False
+
+
+def test_only_the_medallion_and_catalog_use_parquet_tables():
+    root = SOURCES.parent
+    users = {
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if p.name != "tables.py" and _imports_tables(p)
+    }
+    assert users == PARQUET_TABLE_USERS, sorted(users ^ PARQUET_TABLE_USERS)
+
+
+def test_parquet_table_import_check_sees_every_spelling(tmp_path):
+    pkg = tmp_path / PKG / "plans"
+    pkg.mkdir(parents=True)
+    probes = {
+        "a.py": f"def f():\n    from {PKG}.sources.tables import ParquetTable\n",
+        "b.py": f"import {PKG}.sources.tables as t\n",
+        "c.py": "from ..sources import tables\n",
+        "d.py": "from ..sources.tables import DIR_DB\n",
+        "e.py": f"from {PKG}.sources import skipping\nfrom ..sources.delta_lite import delta_read\n",
+    }
+    for name, text in probes.items():
+        (pkg / name).write_text(text)
+    hits = [n for n in sorted(probes) if _imports_tables(pkg / n, tmp_path)]
+    assert hits == ["a.py", "b.py", "c.py", "d.py"]
 
 
 DELTA_FILES = ("delta_lite.py", "delta_source.py")
@@ -175,16 +228,15 @@ def test_snapshot_relation_check_sees_reads_and_sql(tmp_path):
 
 
 # ``ParquetTable`` auto-vacuums in one place, after a won commit claim:
-# besides the explicit ``vacuum()`` entry point, ``_vacuum`` has exactly one
-# caller, ``_commit``.
+# ``_vacuum`` has exactly one caller, ``_commit``.
 
 
-def _callers(path: Path, name: str, exclude: tuple[str, ...] = ()) -> list[str]:
+def _callers(path: Path, name: str) -> list[str]:
     """Name of the enclosing function of each ``name(...)`` call (plain or
-    as a method) in a file, outside the functions named in ``exclude``."""
+    as a method) in a file."""
     out = []
     for fn in ast.walk(ast.parse(path.read_text())):
-        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name in exclude:
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
         nested = {
             id(n)
@@ -203,7 +255,7 @@ def _callers(path: Path, name: str, exclude: tuple[str, ...] = ()) -> list[str]:
 
 
 def _vacuum_callers(path: Path) -> list[str]:
-    return _callers(path, "_vacuum", exclude=("vacuum",))
+    return _callers(path, "_vacuum")
 
 
 def test_auto_vacuum_runs_only_from_commit():
@@ -224,7 +276,7 @@ def test_vacuum_caller_check_sees_every_call(tmp_path):
         "        self._commit()\n"
         "        self._vacuum(2)\n"
     )
-    assert sorted(_vacuum_callers(src)) == ["_commit", "overwrite", "retry"]
+    assert sorted(_vacuum_callers(src)) == ["_commit", "overwrite", "retry", "vacuum"]
 
 
 # Every Delta data commit (``delta_write``, the format sinks, rewrites, the

@@ -1,5 +1,6 @@
 """Incremental materialized-view maintenance: touched-day recompute
-correctness, the no-change fast path, and change-feed day discovery."""
+correctness, the no-change fast path, and change-feed day discovery,
+over Delta tables."""
 
 from __future__ import annotations
 
@@ -8,7 +9,14 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_for_realestatedata_spark.plans.mviews import refresh_daily_summary
-from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+    delta_delete_where,
+    delta_enable_cdf,
+    delta_merge,
+    delta_read,
+    delta_versions,
+    delta_write,
+)
 
 
 def _ev(spark, rows):
@@ -20,8 +28,7 @@ def _t(s):
 
 
 def test_incremental_equals_full_and_untouched_days_keep(spark, tmp_path):
-    base = ParquetTable(spark, str(tmp_path / "base"))
-    summary = ParquetTable(spark, str(tmp_path / "sum"))
+    base, summary = str(tmp_path / "base"), str(tmp_path / "sum")
     b1 = _ev(
         spark,
         [
@@ -30,8 +37,8 @@ def test_incremental_equals_full_and_untouched_days_keep(spark, tmp_path):
             (_t("2024-01-02 10:00:00"), 1, 3.0),
         ],
     )
-    base.overwrite(b1)
-    v1 = refresh_daily_summary(base, summary)
+    delta_write(b1, base, mode="overwrite")
+    v1 = refresh_daily_summary(spark, base, summary)
     # batch 2 touches Jan 2 (late data) and adds Jan 3
     b2 = _ev(
         spark,
@@ -40,11 +47,11 @@ def test_incremental_equals_full_and_untouched_days_keep(spark, tmp_path):
             (_t("2024-01-03 10:00:00"), 1, 5.0),
         ],
     )
-    base.append(b2)
-    v2 = refresh_daily_summary(base, summary, since_version=v1)
+    delta_write(b2, base)
+    v2 = refresh_daily_summary(spark, base, summary, since_version=v1)
     got = {
         str(r["day"]): (r["n_events"], r["n_users"], r["sum_value"])
-        for r in summary.read().collect()
+        for r in delta_read(spark, summary).collect()
     }
     assert got == {
         "2024-01-01": (2, 2, 3.0),
@@ -52,9 +59,9 @@ def test_incremental_equals_full_and_untouched_days_keep(spark, tmp_path):
         "2024-01-03": (1, 1, 5.0),
     }
     # no-change fast path: version unchanged, no new summary version
-    sv = summary.version()
-    assert refresh_daily_summary(base, summary, since_version=v2) == v2
-    assert summary.version() == sv
+    sv = delta_versions(summary)
+    assert refresh_daily_summary(spark, base, summary, since_version=v2) == v2
+    assert delta_versions(summary) == sv
 
 
 def test_incremental_matches_full_rebuild(spark, tmp_path):
@@ -69,18 +76,64 @@ def test_incremental_matches_full_rebuild(spark, tmp_path):
         )
         for _ in range(300)
     ]
-    base = ParquetTable(spark, str(tmp_path / "base"))
-    summary = ParquetTable(spark, str(tmp_path / "sum"))
+    base, summary = str(tmp_path / "base"), str(tmp_path / "sum")
     cut = _t("2024-01-05 00:00:00")
-    base.overwrite(_ev(spark, [r for r in rows if r[0] < cut]))
-    v1 = refresh_daily_summary(base, summary)
-    base.append(_ev(spark, [r for r in rows if r[0] >= cut]))
-    refresh_daily_summary(base, summary, since_version=v1)
-    full = ParquetTable(spark, str(tmp_path / "full"))
-    refresh_daily_summary(base, full)  # one-shot
-    a = sorted(map(tuple, summary.read().collect()))
-    b = sorted(map(tuple, full.read().collect()))
-    assert a == b
+    delta_write(_ev(spark, [r for r in rows if r[0] < cut]), base, mode="overwrite")
+    v1 = refresh_daily_summary(spark, base, summary)
+    delta_write(_ev(spark, [r for r in rows if r[0] >= cut]), base)
+    refresh_daily_summary(spark, base, summary, since_version=v1)
+    assert _rows(spark, summary) == _full(spark, base, tmp_path)
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, delta_read(spark, path).collect()))
+
+
+def _full(spark, base, tmp_path):
+    """The summary a one-shot rebuild of ``base`` gives."""
+    full = str(tmp_path / f"full_{len(delta_versions(base))}")
+    refresh_daily_summary(spark, base, full)
+    return _rows(spark, full)
+
+
+def test_base_delete_and_merge_recompute_their_days(spark, tmp_path):
+    """A base DELETE or MERGE between two refreshes rewrites rows, not
+    only adds them: the refresh recomputes every day the change feed names,
+    the days rows left as well as the days they went to, and drops a day
+    left with no rows. Each refresh equals a full rebuild."""
+    base, summary = str(tmp_path / "base"), str(tmp_path / "sum")
+    delta_write(
+        _ev(spark, [
+            (_t("2024-01-01 10:00:00"), 1, 1.0),
+            (_t("2024-01-01 11:00:00"), 2, 2.0),
+            (_t("2024-01-02 10:00:00"), 1, 3.0),
+            (_t("2024-01-03 10:00:00"), 3, 4.0),
+        ]),
+        base, mode="overwrite",
+    )
+    delta_enable_cdf(spark, base)
+    v = refresh_daily_summary(spark, base, summary)
+    delta_delete_where(spark, base, ("user_id", "=", 2))
+    delta_delete_where(spark, base, ("ts", ">=", _t("2024-01-03 00:00:00")))
+    v = refresh_daily_summary(spark, base, summary, since_version=v)
+    assert _rows(spark, summary) == _full(spark, base, tmp_path)
+    assert [r[0] for r in _rows(spark, summary)] == [dt.date(2024, 1, 1), dt.date(2024, 1, 2)]
+    # user 1's Jan 2 event moves to Jan 4, user 5 is new on Jan 1
+    moved = spark.createDataFrame(
+        [(_t("2024-01-04 09:00:00"), 1, 7.0, 3.0), (_t("2024-01-01 12:00:00"), 5, 1.0, 9.0)],
+        "ts timestamp, user_id long, value double, key double",
+    )
+    delta_write(
+        delta_read(spark, base).withColumn("key", F.col("value")), base,
+        mode="overwrite",
+    )
+    v = refresh_daily_summary(spark, base, summary, since_version=v)
+    delta_merge(moved, base, key="key")
+    refresh_daily_summary(spark, base, summary, since_version=v)
+    assert _rows(spark, summary) == _full(spark, base, tmp_path)
+    assert [r[0] for r in _rows(spark, summary)] == [
+        dt.date(2024, 1, 1), dt.date(2024, 1, 4)
+    ]
 
 
 def test_stream_drives_incremental_summary(spark, tmp_path):
@@ -110,14 +163,9 @@ def test_stream_drives_incremental_summary(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "f*"))
     )
-    base = ParquetTable(spark, str(tmp_path / "base"))
-    summary = ParquetTable(spark, str(tmp_path / "sum"))
+    base, summary = str(tmp_path / "base"), str(tmp_path / "sum")
     stream_refresh_daily_summary(
         stream, base, summary, checkpoint=str(tmp_path / "ckpt")
     )
-    full = ParquetTable(spark, str(tmp_path / "full"))
-    refresh_daily_summary(base, full)
-    assert sorted(map(tuple, summary.read().collect())) == sorted(
-        map(tuple, full.read().collect())
-    )
-    assert base.read().count() == 6
+    assert _rows(spark, summary) == _full(spark, base, tmp_path)
+    assert delta_read(spark, base).count() == 6

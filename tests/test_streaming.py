@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import delta_read
 from lakehouse_architecture_for_realestatedata_spark.streaming.ingest import (
     read_file_stream,
     run_to_memory,
@@ -153,14 +153,14 @@ def test_stream_merge_exactly_once(spark, sf_dir, tmp_path):
     re-run with the same checkpoint ingests nothing new (exactly-once)."""
     from lakehouse_architecture_for_realestatedata_spark.operators.dedup import dedup_latest
 
-    table = ParquetTable(spark, str(tmp_path / "events_table"))
+    table = str(tmp_path / "events_table")
     ckpt = str(tmp_path / "ckpt")
 
     def latest_per_user(df):
         return dedup_latest(df, "user_id", [F.col("ts").desc(), F.col("event_id").desc()])
 
     stream_merge_into(_event_stream(spark, sf_dir), table, "user_id", ckpt, latest_per_user)
-    out = table.read()
+    out = delta_read(spark, table)
     n_users = out.count()
     assert n_users == out.select("user_id").distinct().count()  # PK unique
 
@@ -170,7 +170,7 @@ def test_stream_merge_exactly_once(spark, sf_dir, tmp_path):
 
     # second run, same checkpoint: no new files → no change
     stream_merge_into(_event_stream(spark, sf_dir), table, "user_id", ckpt, latest_per_user)
-    assert table.read().count() == n_users
+    assert delta_read(spark, table).count() == n_users
 
 
 def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
@@ -617,7 +617,6 @@ def test_stream_cms_rollup_equals_batch(spark, tmp_path):
         cms_build,
         cms_estimate,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
     from lakehouse_architecture_for_realestatedata_spark.streaming.ingest import stream_cms_rollup
 
     rows = [
@@ -637,7 +636,7 @@ def test_stream_cms_rollup_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "f*"))
     )
-    table = ParquetTable(spark, str(tmp_path / "sketch"))
+    table = str(tmp_path / "sketch")
     stream_cms_rollup(
         stream,
         table,
@@ -648,14 +647,14 @@ def test_stream_cms_rollup_equals_batch(spark, tmp_path):
         width=64,
     )
     direct = cms_build(df, "user_id", depth=4, width=64, group_cols=["week"])
-    assert sorted(map(tuple, table.read().collect())) == sorted(
+    assert sorted(map(tuple, delta_read(spark, table).collect())) == sorted(
         map(tuple, direct.collect())
     )
     probes = df.distinct().select("week", "user_id")
     est = {
         (r["week"], r["user_id"]): r["est"]
         for r in cms_estimate(
-            table.read(), probes, "user_id", depth=4, width=64, group_cols=["week"]
+            delta_read(spark, table), probes, "user_id", depth=4, width=64, group_cols=["week"]
         ).collect()
     }
     true = {
@@ -675,7 +674,6 @@ def test_stream_qsketch_rollup_equals_batch(spark, tmp_path):
         qsketch_build,
         qsketch_quantiles,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
     from lakehouse_architecture_for_realestatedata_spark.streaming.ingest import (
         stream_qsketch_rollup,
     )
@@ -695,7 +693,7 @@ def test_stream_qsketch_rollup_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "f*"))
     )
-    table = ParquetTable(spark, str(tmp_path / "qsketch"))
+    table = str(tmp_path / "qsketch")
     stream_qsketch_rollup(
         stream,
         table,
@@ -707,14 +705,14 @@ def test_stream_qsketch_rollup_equals_batch(spark, tmp_path):
         nbins=32,
     )
     direct = qsketch_build(df, "value", 0.0, 4.0, 32, group_cols=["week"])
-    assert sorted(map(tuple, table.read().collect())) == sorted(
+    assert sorted(map(tuple, delta_read(spark, table).collect())) == sorted(
         map(tuple, direct.collect())
     )
     got = sorted(
         map(
             tuple,
             qsketch_quantiles(
-                table.read(), [0.5, 0.9], 0.0, 4.0, group_cols=["week"]
+                delta_read(spark, table), [0.5, 0.9], 0.0, 4.0, group_cols=["week"]
             ).collect(),
         )
     )

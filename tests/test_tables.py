@@ -76,8 +76,7 @@ def test_append_empty_increment_keeps_snapshot(spark, tmp_path):
 
 
 def test_append_opens_no_existing_dir(spark, tmp_path, monkeypatch):
-    """An append decides the merged schema (and the ``merge_schema=False``
-    check) from the manifest alone: neither a parquet read nor a footer
+    """An append decides the merged schema from the manifest alone: neither a parquet read nor a footer
     schema read touches a dir the table already holds."""
     t = ParquetTable(spark, str(tmp_path / "noscan"))
     t.overwrite(_df(spark, [(1, "a", None)]))
@@ -101,27 +100,13 @@ def test_append_opens_no_existing_dir(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ParquetTable, "_dir_schema", spy_schema)
     t.append(spark.createDataFrame([(4, "d", None, "n")], "id int, val string, ts timestamp, note string"))
     wide = "id int, val string, ts timestamp, x double, note string"
-    t.append(spark.createDataFrame([(5, "e", None, 2.5, None)], wide), merge_schema=False)
-    with pytest.raises(ValueError, match="schema mismatch"):
-        t.append(_df(spark, [(6, "f", None)]), merge_schema=False)
+    t.append(spark.createDataFrame([(5, "e", None, 2.5, None)], wide))
     monkeypatch.undo()
     assert not set(seen) & set(old)
     assert t.read().dtypes == [
         ("id", "int"), ("val", "string"), ("ts", "timestamp"), ("x", "double"), ("note", "string")
     ]
     assert t.read().count() == 5
-
-
-def test_append_schema_mismatch_raises_without_merge(spark, tmp_path):
-    import pytest
-
-    t = ParquetTable(spark, str(tmp_path / "t12"))
-    t.overwrite(spark.createDataFrame([(1, "a")], "id int, val string"))
-    with pytest.raises(ValueError, match="schema mismatch"):
-        t.append(
-            spark.createDataFrame([(2, "b", 1.0)], "id int, val string, extra double"),
-            merge_schema=False,
-        )
 
 
 def test_merge_upsert_update_and_insert(spark, tmp_path):
@@ -151,18 +136,6 @@ def test_merge_idempotent(spark, tmp_path):
     assert sorted(map(tuple, t.read().collect())) == first
 
 
-def test_merge_insert_only(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "t5"))
-    t.overwrite(spark.createDataFrame([(1, "orig")], "id int, val string"))
-    t.merge(
-        spark.createDataFrame([(1, "clobber"), (2, "new")], "id int, val string"),
-        key="id",
-        when_matched="keep_target",
-    )
-    rows = {r["id"]: r["val"] for r in t.read().collect()}
-    assert rows == {1: "orig", 2: "new"}
-
-
 def test_snapshot_isolation_and_time_travel(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t6"))
     t.overwrite(spark.createDataFrame([(1, "v0")], "id int, val string"))
@@ -170,33 +143,6 @@ def test_snapshot_isolation_and_time_travel(spark, tmp_path):
     t.overwrite(spark.createDataFrame([(1, "v1")], "id int, val string"))
     assert t.read(old).collect()[0]["val"] == "v0"
     assert t.read().collect()[0]["val"] == "v1"
-
-
-def test_compact_binpacks_small_files(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "t8"))
-    t.overwrite(spark.range(10000).repartition(16).select(F.col("id"), (F.col("id") % 7).alias("g")))
-    before = t.file_stats()
-    assert before["n_files"] == 16
-    data_before = sorted(map(tuple, t.read().collect()))
-    after = t.compact(target_bytes=1 << 30)  # everything fits one file
-    assert after["n_files"] == 1
-    assert after["version"] == before["version"] + 1
-    assert sorted(map(tuple, t.read().collect())) == data_before
-
-
-def test_compact_preserves_partition_layout(spark, tmp_path):
-    import os
-
-    t = ParquetTable(spark, str(tmp_path / "t9"), partition_by=["g"])
-    t.overwrite(
-        spark.range(2000).repartition(8).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    )
-    assert t.file_stats()["n_files"] > 3  # several files per partition dir
-    t.compact(target_bytes=1 << 30)
-    (snap,) = t.data_dirs()  # compaction re-merges to one data dir
-    dirs = sorted(d for d in os.listdir(snap) if d.startswith("g="))
-    assert dirs == ["g=0", "g=1", "g=2"]  # pruning layout survives compaction
-    assert t.read().count() == 2000
 
 
 def test_high_water_mark(spark, tmp_path):
@@ -279,56 +225,10 @@ def test_crashed_claim_is_skipped(spark, tmp_path):
 # ------------------------------------------------------------- data skipping
 
 
-def test_read_where_skips_disjoint_dirs(spark, tmp_path):
-    """Zonemap pruning: three appends with disjoint id ranges; a range scan
-    must (a) return exactly the matching rows and (b) not even list the
-    files of provably-disjoint dirs."""
-    t = ParquetTable(spark, str(tmp_path / "zm1"))
-    t.append(_df(spark, [(i, "lo", None) for i in range(0, 10)]))
-    t.append(_df(spark, [(i, "mid", None) for i in range(100, 110)]))
-    t.append(_df(spark, [(i, "hi", None) for i in range(200, 210)]))
-
-    out = t.read_where(("id", "between", (100, 109)))
-    assert {r["val"] for r in out.collect()} == {"mid"}
-    # only the mid dir's files were scanned
-    scanned = {"/" + f.split(":", 1)[1].lstrip("/") for f in out.inputFiles()}
-    all_dirs = t.data_dirs()
-    touched = {d for d in all_dirs if any(f.startswith(d + "/") for f in scanned)}
-    assert len(touched) == 1
-
-    # result identical to the unpruned filter
-    assert out.count() == t.read().filter("id between 100 and 109").count()
 
 
-def test_read_where_ops_and_strings(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "zm2"))
-    t.append(_df(spark, [(1, "apple", None), (2, "banana", None)]))
-    t.append(_df(spark, [(3, "yak", None), (4, "zebra", None)]))
-    assert t.read_where(("val", ">=", "yak")).count() == 2
-    assert len(t.read_where(("val", ">=", "yak")).inputFiles()) < len(t.read().inputFiles())
-    assert t.read_where(("id", "<", 2)).count() == 1
-    assert t.read_where(("id", ">", 100)).count() == 0
-    assert t.read_where(("val", "=", "banana")).count() == 1
 
 
-def test_read_where_schema_drift_and_nulls(spark, tmp_path):
-    """Dirs written before a column existed have no stats for it — they must
-    be kept (and null-filtered), never wrongly skipped; an all-NULL dir is
-    provably skippable for any comparison."""
-    t = ParquetTable(spark, str(tmp_path / "zm3"))
-    t.append(_df(spark, [(1, "old", None)]))
-    t.append(
-        spark.createDataFrame([(2, "new", None, 7.5)], "id int, val string, ts timestamp, score double")
-    )
-    out = t.read_where(("score", ">", 5.0))
-    assert [r["val"] for r in out.collect()] == ["new"]
-    # all-null dir: skipped outright
-    t2 = ParquetTable(spark, str(tmp_path / "zm4"))
-    t2.append(spark.createDataFrame([(1, None)], "id int, score double"))
-    t2.append(spark.createDataFrame([(2, 9.0)], "id int, score double"))
-    out2 = t2.read_where(("score", ">=", 0.0))
-    assert out2.count() == 1
-    assert len(out2.inputFiles()) < len(t2.read().inputFiles())
 
 
 # ------------------------------------------------- file-pruned merge/delete
@@ -358,21 +258,6 @@ def test_merge_rewrites_only_overlapping_dirs(spark, tmp_path):
     assert rows[0] == "lo" and rows[200] == "hi" and rows[100] == "mid"
 
 
-def test_merge_insert_only_pruned(spark, tmp_path):
-    t = _three_band_table(spark, tmp_path, "pm2")
-    before = set(t.data_dirs())
-    t.merge(
-        _df(spark, [(105, "CLOBBER", None), (106, "NEW", None)]),
-        key="id",
-        when_matched="keep_target",
-    )
-    assert len(before & set(t.data_dirs())) == 2
-    rows = {r["id"]: r["val"] for r in t.read().collect()}
-    assert rows[105] == "mid"  # existing row kept
-    assert rows[106] == "mid"  # key existed → source row dropped
-    assert len(rows) == 30
-
-
 def test_merge_all_null_source_keys_is_pure_insert(spark, tmp_path):
     t = _three_band_table(spark, tmp_path, "pm3")
     before = set(t.data_dirs())
@@ -384,35 +269,16 @@ def test_merge_all_null_source_keys_is_pure_insert(spark, tmp_path):
 def test_nan_bounds_never_prune(spark, tmp_path):
     """Spark writes a NaN max into the parquet footer, and its max()
     aggregate returns NaN, so a dir holding NaN gets a NaN bound. It proves
-    nothing (NaN sorts above every number): neither a filtered read nor
-    a keyed MERGE may skip the dir."""
+    nothing (NaN sorts above every number): a keyed MERGE may not skip the
+    dir."""
     t = ParquetTable(spark, str(tmp_path / "nan"))
     t.overwrite(
         spark.createDataFrame(
             [(1, 1.0), (2, float("nan")), (3, 5.0)], "id int, x double"
         ).coalesce(1)
     )
-    assert t.read_where(("x", "=", 5.0)).count() == 1
-    assert t.read_where(("x", ">", 3.0)).count() == 2  # 5.0 and NaN
     t.merge(spark.createDataFrame([(30, 5.0)], "id int, x double"), key="x")
     assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 30]
-
-
-def test_delete_where_conds_prunes_dirs(spark, tmp_path):
-    t = _three_band_table(spark, tmp_path, "pd1")
-    before = set(t.data_dirs())
-    t.delete_where(("id", "between", (100, 104)))
-    after = set(t.data_dirs())
-    assert len(before & after) == 2  # lo + hi untouched
-    assert t.read().count() == 25
-    assert t.read().filter("id between 100 and 104").count() == 0
-    # provably-no-match delete is a metadata no-op: no new version
-    v = t.version()
-    t.delete_where(("id", ">", 100000))
-    assert t.version() == v
-    # Column-predicate path still works (full rewrite)
-    t.delete_where(F.col("val") == "hi")
-    assert t.read().count() == 15
 
 
 def test_merge_schema_widening_survives_pruning(spark, tmp_path):
@@ -429,267 +295,6 @@ def test_merge_schema_widening_survives_pruning(spark, tmp_path):
     assert got[105] == 9.9 and got[0] is None
 
 
-def test_update_where_pruned_and_full(spark, tmp_path):
-    t = _three_band_table(spark, tmp_path, "pu1")
-    before = set(t.data_dirs())
-    t.update_where({"val": F.lit("FIXED")}, ("id", "between", (102, 104)))
-    assert len(before & set(t.data_dirs())) == 2  # lo + hi untouched
-    rows = {r["id"]: r["val"] for r in t.read().collect()}
-    assert rows[103] == "FIXED" and rows[105] == "mid" and rows[0] == "lo"
-    # Column-predicate path (full rewrite), and unknown-column rejection
-    t.update_where({"val": F.lit("HI")}, F.col("val") == "hi")
-    assert {r["val"] for r in t.read().filter("id >= 200").collect()} == {"HI"}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown columns"):
-        t.update_where({"nope": F.lit(1)}, ("id", "=", 1))
-    # provably-no-match update is a metadata no-op
-    v = t.version()
-    t.update_where({"val": F.lit("X")}, ("id", ">", 99999))
-    assert t.version() == v
-
-
-def test_history_and_restore(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "hr1"))
-    t.overwrite(_df(spark, [(1, "a", None)]))
-    t.append(_df(spark, [(2, "b", None)]))
-    t.delete_where(("id", "=", 1))
-    h = t.history()
-    assert [r["op"] for r in h[-2:]] == ["APPEND", "DELETE"]
-    assert t.read().count() == 1
-    # restore to the pre-delete version: metadata-only, rows come back
-    pre_delete = h[-2]["version"]
-    t.restore(pre_delete)
-    assert t.read().count() == 2
-    assert t.history()[-1]["op"] == "RESTORE"
-
-
-def test_compact_clustered_keeps_pruning(spark, tmp_path):
-    """OPTIMIZE-ZORDER analogue: after a clustered compaction the table has
-    n range-bucketed dirs, total rows intact, and read_where still skips
-    non-overlapping dirs — a plain compact would collapse to 1 dir and kill
-    data skipping."""
-    t = ParquetTable(spark, str(tmp_path / "zc1"))
-    # interleaved appends so each original dir spans the whole id range
-    t.append(_df(spark, [(i, "a", None) for i in range(0, 300, 3)]))
-    t.append(_df(spark, [(i, "b", None) for i in range(1, 300, 3)]))
-    t.append(_df(spark, [(i, "c", None) for i in range(2, 300, 3)]))
-    # pre-compaction: every dir overlaps any id range → no pruning possible
-    assert len(t.read_where(("id", "between", (0, 9))).inputFiles()) == len(
-        t.read().inputFiles()
-    )
-    t.compact(cluster_cols=["id"], n_dirs=4)
-    assert t.history()[-1]["op"] == "OPTIMIZE"
-    assert len(t.data_dirs()) == 4
-    assert t.read().count() == 300
-    out = t.read_where(("id", "between", (0, 9)))
-    assert out.count() == 10
-    assert len(out.inputFiles()) < len(t.read().inputFiles())
-
-
-def test_compact_clustered_partitioned_table(spark, tmp_path):
-    import os
-
-    t = ParquetTable(spark, str(tmp_path / "zc2"), partition_by=["g"])
-    t.overwrite(
-        spark.range(900).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    )
-    t.compact(cluster_cols=["id"], n_dirs=3)
-    assert t.read().count() == 900
-    # each promoted dir keeps the hive layout for partition pruning
-    for d in t.data_dirs():
-        assert any(e.startswith("g=") for e in os.listdir(d))
-    # zonemap pruning on the cluster key still works
-    assert len(t.read_where(("id", "<", 100)).inputFiles()) < len(
-        t.read().inputFiles()
-    )
-
-
-def test_compact_clustered_zorder_two_cols(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "zc3"))
-    t.overwrite(
-        spark.range(4096).select(
-            (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("int").alias("y")
-        )
-    )
-    t.compact(cluster_cols=["x", "y"], zorder=True, n_dirs=8)
-    assert t.read().count() == 4096
-    # a box query in (x, y) space touches a subset of dirs
-    out = t.read_where(("x", "between", (0, 7)), ("y", "between", (0, 7)))
-    assert out.count() == 8 * 8
-    assert len(out.inputFiles()) < len(t.read().inputFiles())
-
-
-def test_check_constraint_blocks_bad_append(spark, tmp_path):
-    """Delta CHECK-constraint analogue: violating writes commit NOTHING, the
-    previous snapshot stays live, and the orphan data dir is GC'd."""
-    import pytest as _pytest
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ConstraintViolationError
-
-    t = ParquetTable(spark, str(tmp_path / "c1"))
-    t.overwrite(_df(spark, [(1, "a", None)]))
-    t.add_constraint("id_positive", "id > 0")
-    t.add_constraint("val_known", "val IN ('a', 'b')")
-    v = t.version()
-    with _pytest.raises(ConstraintViolationError) as ei:
-        t.append(_df(spark, [(2, "b", None), (-1, "zzz", None)]))
-    assert ei.value.violations == {"id_positive": 1, "val_known": 1}
-    assert t.version() == v and t.read().count() == 1
-    # orphan dir was GC'd: only the committed snapshot's dirs remain on disk
-    import os
-
-    data_root = os.path.join(str(tmp_path / "c1"), "data")
-    on_disk = {os.path.join(data_root, d) for d in os.listdir(data_root)}
-    assert on_disk == set(t.data_dirs())
-    # conforming append goes through
-    t.append(_df(spark, [(2, "b", None)]))
-    assert t.read().count() == 2
-
-
-def test_check_constraint_null_passes_and_not_null_form(spark, tmp_path):
-    """SQL CHECK semantics: NULL expression result passes; NOT NULL is its
-    own constraint form."""
-    import pytest as _pytest
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ConstraintViolationError
-
-    t = ParquetTable(spark, str(tmp_path / "c2"))
-    t.overwrite(_df(spark, [(1, "a", None)]))
-    t.add_constraint("id_positive", "id > 0")
-    t.append(_df(spark, [(None, "x", None)], "id int, val string, ts timestamp"))
-    assert t.read().count() == 2  # NULL id: `NULL > 0` is NULL -> passes CHECK
-    with _pytest.raises(ConstraintViolationError):
-        t.add_constraint("id_not_null", "id IS NOT NULL")  # a NULL exists
-    # on a clean table the same constraint then blocks NULL writes
-    t2 = ParquetTable(spark, str(tmp_path / "c2b"))
-    t2.overwrite(_df(spark, [(1, "a", None)]))
-    t2.add_constraint("id_not_null", "id IS NOT NULL")
-    with _pytest.raises(ConstraintViolationError):
-        t2.append(_df(spark, [(None, "x", None)], "id int, val string, ts timestamp"))
-
-
-def test_add_constraint_validates_existing_rows(spark, tmp_path):
-    import pytest as _pytest
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ConstraintViolationError
-
-    t = ParquetTable(spark, str(tmp_path / "c3"))
-    t.overwrite(_df(spark, [(-5, "a", None)]))
-    with _pytest.raises(ConstraintViolationError):
-        t.add_constraint("id_positive", "id > 0")
-    assert t.constraints() == {}  # refused, not registered
-    t.drop_constraint("never_there")  # no-op
-
-
-def test_check_constraint_merge_and_update_enforced(spark, tmp_path):
-    import pytest as _pytest
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ConstraintViolationError
-
-    t = ParquetTable(spark, str(tmp_path / "c4"))
-    t.overwrite(_df(spark, [(1, "a", None), (2, "b", None)]))
-    t.add_constraint("val_known", "val IN ('a', 'b', 'c')")
-    with _pytest.raises(ConstraintViolationError):
-        t.merge(_df(spark, [(2, "ILLEGAL", None)]), key="id")
-    t.merge(_df(spark, [(2, "c", None)]), key="id")
-    assert {r["val"] for r in t.read().collect()} == {"a", "c"}
-    with _pytest.raises(ConstraintViolationError):
-        t.update_where({"val": F.lit("NOPE")}, ("id", "=", 1))
-    # delete never validates (cannot introduce violations) and still works
-    t.delete_where(("id", "=", 2))
-    assert t.read().count() == 1
-
-
-def test_check_constraint_schema_merge_missing_column_passes(spark, tmp_path):
-    """An appended frame missing a constrained column null-fills it at read
-    time — CHECK over NULL passes, mirroring Delta's mergeSchema + invariant
-    interplay."""
-    t = ParquetTable(spark, str(tmp_path / "c5"))
-    t.overwrite(spark.createDataFrame([(1, 5.0)], "id int, score double"))
-    t.add_constraint("score_range", "score BETWEEN 0 AND 10")
-    t.append(spark.createDataFrame([(2,)], "id int"))  # no score column
-    assert t.read().count() == 2
-    # a present-and-bad score still fails
-    import pytest as _pytest
-
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ConstraintViolationError
-
-    with _pytest.raises(ConstraintViolationError):
-        t.append(spark.createDataFrame([(3, 99.0)], "id int, score double"))
-
-
-def test_check_constraint_dropped_allows_write(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "c6"))
-    t.overwrite(_df(spark, [(1, "a", None)]))
-    t.add_constraint("id_positive", "id > 0")
-    t.drop_constraint("id_positive")
-    t.append(_df(spark, [(-1, "x", None)]))
-    assert t.read().count() == 2
-
-
-def test_retention_window_and_public_vacuum(spark, tmp_path):
-    """retain=N keeps N versions live for history()/restore()/time travel;
-    public vacuum() shrinks history on demand."""
-    t = ParquetTable(spark, str(tmp_path / "r1"), retain=4)
-    for i in range(4):
-        t.append(_df(spark, [(i, f"v{i}", None)]))
-    assert [h["version"] for h in t.history()] == [0, 1, 2, 3]
-    # time travel across the retained window
-    assert t.read(0).count() == 1 and t.read(3).count() == 4
-    t.restore(0)
-    assert t.read().count() == 1
-    t.vacuum(keep=1)
-    assert [h["version"] for h in t.history()] == [4]
-    # old snapshot manifests are gone; data dir of v4 (== v0's dir) survives
-    assert t.read().count() == 1
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        t.read(2)
-
-
-def test_read_changes_append_only(spark, tmp_path):
-    """CDF analogue: dir-diff between snapshots returns exactly the appended
-    rows, O(changed data) — the incremental-consumer contract."""
-    t = ParquetTable(spark, str(tmp_path / "cdf1"), retain=10)
-    t.overwrite(_df(spark, [(1, "a", None)]))          # v0
-    t.append(_df(spark, [(2, "b", None)]))             # v1
-    t.append(_df(spark, [(3, "c", None), (4, "d", None)]))  # v2
-    assert sorted(r["id"] for r in t.read_changes(0).collect()) == [2, 3, 4]
-    assert sorted(r["id"] for r in t.read_changes(1).collect()) == [3, 4]
-    assert sorted(r["id"] for r in t.read_changes(0, to=1).collect()) == [2]
-    # no-change range: empty frame, schema intact
-    empty = t.read_changes(2)
-    assert empty.count() == 0 and "val" in empty.columns
-
-
-def test_read_changes_rejects_rewrite_ops(spark, tmp_path):
-    import pytest as _pytest
-
-    t = ParquetTable(spark, str(tmp_path / "cdf2"), retain=10)
-    t.overwrite(_df(spark, [(1, "a", None)]))                      # v0
-    t.append(_df(spark, [(2, "b", None)]))                         # v1
-    t.merge(_df(spark, [(2, "B", None)]), key="id")                # v2 MERGE
-    with _pytest.raises(ValueError, match="MERGE"):
-        t.read_changes(0)
-    # a range strictly after the rewrite is fine again
-    t.append(_df(spark, [(5, "e", None)]))                         # v3
-    assert [r["id"] for r in t.read_changes(2).collect()] == [5]
-    with _pytest.raises(ValueError, match="ahead"):
-        t.read_changes(9)
-
-
-def test_read_changes_vacuumed_base_raises(spark, tmp_path):
-    import pytest as _pytest
-
-    t = ParquetTable(spark, str(tmp_path / "cdf3"), retain=2)
-    for i in range(5):
-        t.append(_df(spark, [(i, "x", None)]))
-    with _pytest.raises(FileNotFoundError):
-        t.read_changes(0)
-
-
 def test_empty_append_still_widens_read_schema(spark, tmp_path):
     """An append that contributes ZERO rows (legitimately empty batch) but a
     wider schema must still widen the read: the MANIFEST schema governs,
@@ -701,7 +306,7 @@ def test_empty_append_still_widens_read_schema(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.createDataFrame([(1, 10.0)], "k long, v double"))
     empty_wide = spark.createDataFrame([], "k long, v double, extra string")
-    t.append(empty_wide, merge_schema=True)
+    t.append(empty_wide)
     out = t.read()
     assert set(out.columns) == {"k", "v", "extra"}
     rows = out.collect()
@@ -710,18 +315,14 @@ def test_empty_append_still_widens_read_schema(spark, tmp_path):
 
 
 def test_merge_schema_drift_update_all_with_constraints(spark, tmp_path):
-    """VERDICT r5 #7 — Delta `whenMatchedUpdateAll` + `mergeSchema` parity:
-    MERGE a source carrying a NEW column into a constrained table. Matched
-    rows take the source's widened row (update-all), unmatched old rows are
-    NULL-padded on the new column, CHECK constraints keep enforcing on the
-    rewritten data — including a constraint ON the new column added
-    afterwards — and a violating widened merge commits NOTHING."""
+    """Delta `whenMatchedUpdateAll` + `mergeSchema` parity: MERGE a source
+    carrying a NEW column. Matched rows take the source's widened row
+    (update-all), unmatched old rows are NULL-padded on the new column, and
+    a later source that lacks it and adds another widens again."""
     t = ParquetTable(spark, str(tmp_path / "drift1"))
     t.overwrite(
         spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], "id int, val string")
     )
-    t.add_constraint("id_positive", "id > 0")
-    t.add_constraint("val_known", "val IN ('a', 'b', 'c')")
 
     # widened source: updates id=1, inserts id=4, adds `score`
     widened = spark.createDataFrame(
@@ -731,27 +332,11 @@ def test_merge_schema_drift_update_all_with_constraints(spark, tmp_path):
     rows = {r["id"]: (r["val"], r["score"]) for r in t.read().collect()}
     assert rows == {1: ("c", 0.5), 2: ("b", None), 3: ("a", None), 4: ("b", 1.5)}
 
-    # constraints still live on the widened table: a violating merge aborts
-    # atomically (no partial rows, version unchanged)
-    v = t.version()
-    bad = spark.createDataFrame([(5, "zzz", 2.0)], "id int, val string, score double")
-    with pytest.raises(Exception, match="val_known|constraint"):
-        t.merge(bad, key="id")
-    assert t.version() == v and t.read().count() == 4
-
-    # a constraint on the DRIFTED column enforces too (NULL passes, per SQL
-    # CHECK semantics — the padded old rows stay legal)
-    t.add_constraint("score_range", "score >= 0 AND score <= 10")
     t.merge(
         spark.createDataFrame([(6, "a", 3.0)], "id int, val string, score double"),
         key="id",
     )
     assert t.read().count() == 5
-    with pytest.raises(Exception, match="score_range|constraint"):
-        t.merge(
-            spark.createDataFrame([(7, "a", -1.0)], "id int, val string, score double"),
-            key="id",
-        )
     # second drift: ANOTHER new column on a source that also misses `score`
     # (both directions of allowMissingColumns in one merge)
     t.merge(spark.createDataFrame([(8, "b", "x")], "id int, val string, tag string"), key="id")
@@ -777,7 +362,7 @@ def test_attempt_named_partitions_and_roots_keep_their_rows(spark, tmp_path):
         assert sorted(map(tuple, t.read().select("attempt_no", "val").collect())) == [
             (1, "a"), (2, "b"), (3, "c")
         ]
-        assert t.read_where(("attempt_no", "=", 2)).count() == 1
+        assert t.read().filter("attempt_no = 2").count() == 1
 
 
 def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
@@ -816,36 +401,3 @@ def test_footer_stats_decimal_and_walk_cap(spark, tmp_path, monkeypatch):
     agg = t._dir_stats(rel, df.schema)
     assert agg["p"] == footer["p"] and agg["q"] == footer["q"]
     assert agg["id"] == footer["id"] == [1, 3]
-
-
-def test_pruned_scans_keep_the_snapshot_schema(spark, tmp_path):
-    """``read_where`` and ``read_changes`` expose ``read()``'s columns, in
-    its order and with its types, whichever dirs the zonemaps keep: here
-    after an append that added a column and widened ``a`` from int to
-    bigint, and an empty append that added another column."""
-    t = ParquetTable(spark, str(tmp_path / "sch"), retain=3)
-    t.overwrite(spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string"))
-    t.append(spark.createDataFrame([(10, "z", 1.5)], "a bigint, b string, c double"))
-    t.append(spark.createDataFrame([], "a bigint, b string, c double, d string"))
-    full = t.read()
-    assert full.dtypes == [("a", "bigint"), ("b", "string"), ("c", "double"), ("d", "string")]
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()), key=repr)
-
-    for conds, col in [
-        ([("a", ">=", 0)], F.col("a") >= 0),  # every dir kept
-        ([("a", ">", 1000)], F.col("a") > 1000),  # every dir pruned
-        ([("a", "=", 1)], F.col("a") == 1),  # the older dir only
-        ([("a", "=", 10), ("c", ">", 1.0)], (F.col("a") == 10) & (F.col("c") > 1.0)),
-    ]:
-        out = t.read_where(*conds)
-        assert out.dtypes == full.dtypes, conds
-        assert rows(out) == rows(full.filter(col)), conds
-
-    added = t.read_changes(0)  # the widening dir plus the empty append
-    assert added.dtypes == full.dtypes
-    assert rows(added) == [(10, "z", 1.5, None)]
-    nothing = t.read_changes(1, 2)  # only the empty append: zero dirs
-    assert nothing.dtypes == t.read(2).dtypes == full.dtypes
-    assert nothing.count() == 0

@@ -255,20 +255,22 @@ def prof_incr_summary(p: P):
         cached_fixture,
         fixture_work_dir,
     )
-    from lakehouse_architecture_for_realestatedata_spark.sources.tables import ParquetTable
+    from lakehouse_architecture_for_realestatedata_spark.sources.delta_lite import (
+        delta_read,
+        delta_write,
+    )
 
     ev = _events(spark, SF_DIR).select("ts", "user_id", "value")
     cutoff = "2024-01-16"
     cache = os.path.join(
         tempfile.gettempdir(),
-        f"lakehouse_mview_v3_{os.path.basename(SF_DIR.rstrip('/'))}",
+        f"lakehouse_mview_v4_{os.path.basename(SF_DIR.rstrip('/'))}",
     )
 
     def _build(b):
-        base0 = ParquetTable(spark, f"{b}/events_base")
-        summary0 = ParquetTable(spark, f"{b}/daily_summary")
-        base0.overwrite(ev.filter(F.col("ts") < cutoff))
-        return json.dumps({"v1": refresh_daily_summary(base0, summary0)})
+        delta_write(ev.filter(F.col("ts") < cutoff), f"{b}/events_base", mode="overwrite")
+        return json.dumps({"v1": refresh_daily_summary(
+            spark, f"{b}/events_base", f"{b}/daily_summary")})
 
     v1 = json.loads(cached_fixture(cache, _build))["v1"]
     p.mark("fixture (cached)")
@@ -276,13 +278,12 @@ def prof_incr_summary(p: P):
     shutil.copytree(f"{cache}/events_base", f"{work}/events_base")
     shutil.copytree(f"{cache}/daily_summary", f"{work}/daily_summary")
     p.mark("copytree x2")
-    base = ParquetTable(spark, f"{work}/events_base")
-    summary = ParquetTable(spark, f"{work}/daily_summary")
-    base.append(ev.filter(F.col("ts") >= cutoff))
+    base, summary = f"{work}/events_base", f"{work}/daily_summary"
+    delta_write(ev.filter(F.col("ts") >= cutoff), base)
     p.mark("append batch 2")
-    refresh_daily_summary(base, summary, since_version=v1)
+    refresh_daily_summary(spark, base, summary, since_version=v1)
     p.mark("incremental refresh")
-    out = summary.read().select("day", "n_events", "n_users", "sum_value")
+    out = delta_read(spark, summary).select("day", "n_events", "n_users", "sum_value")
     noop(out)
     p.mark("read summary")
 
